@@ -27,7 +27,8 @@ from .modularity import modularity
 def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
     """Driver-local FastRP over the bipartite rating graph, skipping the
     string-keyed graph materialization: ``(ids, final, user_ids, user_mat)``
-    or ``None`` when the doubled edge count exceeds the local gate.
+    or ``None`` when the doubled edge count exceeds the local gate or an
+    isbn key does not round-trip its int64 parse.
 
     Bit-identical to ``fastrp(*bipartite_rating_graph(ratings))`` on this
     graph family (pinned by test_pipeline_local_arrays_match_generic_path):
@@ -42,7 +43,9 @@ def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
       output column is independent of the ordinal scheme), so users/books
       map through numeric searchsorted instead of the generic path's
       2·|E| string-hash lookups — the isbn key is ``CAST(partkey AS
-      VARCHAR)`` (sources/views.py), so the int64 parse round-trips;
+      VARCHAR)`` (sources/views.py), so the int64 parse round-trips; a
+      key that does not (non-digit, zero-padded) returns ``None`` and the
+      caller takes the generic path;
     - bipartite graphs built from the rating list have no isolated nodes
       by construction (every node id comes from a rating row), matching
       the generic path's ``has_isolated == False`` branch.
@@ -63,20 +66,29 @@ def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
         "user_id", "isbn", F.col("rating").cast("double").alias("weight")
     ).toPandas()
     users = ep["user_id"].to_numpy(dtype=np.int64)
-    books = ep["isbn"].to_numpy(dtype=np.int64)  # digit strings by construction
+    isbn = ep["isbn"].to_numpy()
+    try:
+        books = isbn.astype(np.int64)
+    except (TypeError, ValueError, OverflowError):
+        return None  # a non-digit key: the generic string-keyed path takes it
     w_dir = ep["weight"].to_numpy(dtype=np.float64)
     u_sorted = np.unique(users)
     b_sorted = np.unique(books)
+    b_keys = b_sorted.astype("U")
     nb = len(b_sorted)
     u_ord = nb + np.searchsorted(u_sorted, users)
     b_ord = np.searchsorted(b_sorted, books)
+    # every key must round-trip its parse: "0123" parses to 123, but its
+    # node is b:0123, not b:123
+    if not (b_keys[b_ord] == isbn).all():
+        return None
     # doubled edges in the generic path's collected row order
     src = np.concatenate([u_ord, b_ord])
     dst = np.concatenate([b_ord, u_ord])
     w = np.concatenate([w_dir, w_dir])
     ids = np.concatenate(
         [
-            np.char.add("b:", b_sorted.astype("U")),
+            np.char.add("b:", b_keys),
             np.char.add("u:", u_sorted.astype("U")),
         ]
     ).astype(object)

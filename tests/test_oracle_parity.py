@@ -749,6 +749,7 @@ def test_driver_side_materialization_sites_are_classified():
         "plans/louvain.py::_local_move": (1, "scalar move-count per sweep"),
         "plans/louvain.py::louvain": (2, "coarsened-graph gate + scalar convergence"),
         "plans/modularity.py::modularity": (1, "scalar Q"),
+        "plans/pipeline.py::_bipartite_fastrp_arrays": (1, "gated driver-local path: <= LOCAL_MAX_EDGES doubled edges"),
         "recommender.py::_records": (1, "API edge: Bolt-style dict rows (reference parity)"),
         "registry.py::_bpe_segment_q": (1, "bounded merge table binding"),
         "registry.py::_mix_fractions_q": (1, "|sources|-bounded fractions"),

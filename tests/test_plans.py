@@ -630,3 +630,42 @@ def test_pipeline_local_arrays_match_generic_path(spark):
     assert sim_old == sim_new
     ue.unpersist(blocking=False)
     ratings.unpersist(blocking=False)
+
+
+def test_pipeline_falls_back_on_non_canonical_isbn(spark, monkeypatch):
+    """An isbn that does not round-trip its int64 parse — a non-digit key,
+    or a zero-padded one that would silently become another node ("0123"
+    -> b:123) — makes the bipartite arrays path decline, and run_pipeline's
+    embeddings come from the generic string-keyed path instead."""
+    from types import SimpleNamespace
+
+    from graph_database_application_for_recommendations_spark.plans import (
+        fastrp as _fastrp,
+    )
+    from graph_database_application_for_recommendations_spark.plans import pipeline
+    from graph_database_application_for_recommendations_spark.plans.graphs import (
+        bipartite_rating_graph,
+    )
+
+    ratings = spark.createDataFrame(
+        [(1, "0123", 5), (1, "X12", 3), (2, "0123", 4), (2, "77", 2),
+         (3, "77", 1), (3, "X12", 4)],
+        "user_id bigint, isbn string, rating int",
+    )
+    for bad in ("0123", "X12"):  # either key alone makes the path decline
+        only = ratings.filter(F.col("isbn").isin(bad, "77"))
+        assert pipeline._bipartite_fastrp_arrays(only, 16, 7) is None
+    nodes, edges = bipartite_rating_graph(ratings)
+    generic = _fastrp.fastrp(nodes, edges, dim=16, seed=7)
+    assert {"b:0123", "b:X12"} <= {r["node_id"] for r in generic.collect()}
+    want = {
+        r["user_id"]: r["embedding"]
+        for r in _fastrp.user_embeddings_from_fastrp(generic).collect()
+    }
+    monkeypatch.setattr(
+        pipeline, "load_ref_tables", lambda spark, sf_dir: SimpleNamespace(ratings=ratings)
+    )
+    res = pipeline.run_pipeline(spark, "unused", dim=16, seed=7)
+    got = {r["user_id"]: r["embedding"] for r in res.embeddings.collect()}
+    assert got == want and set(got) == {1, 2, 3}
+    res.embeddings.unpersist(blocking=False)
