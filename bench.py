@@ -235,8 +235,19 @@ def _shorten(names: list[str], width: int) -> dict[str, str]:
 def record_names(names: list[str]) -> dict[str, str]:
     """The pinned full-name -> record-name map (see NAME_WIDTH block
     comment): strip ``q_``, truncate at NAME_WIDTH, ~N on collision in
-    input order. Exposed so tests can pin the frozen r10 snapshot."""
-    return _shorten([k[2:] if k.startswith("q_") else k for k in names], NAME_WIDTH)
+    input order. Exposed so tests can pin the frozen r10 snapshot.
+
+    Raises ValueError when two names would share one record name (e.g.
+    ``q_foo`` and ``foo``): the record would silently drop a timing and
+    pair the rest with the wrong names."""
+    stripped = [k[2:] if k.startswith("q_") else k for k in names]
+    short = _shorten(stripped, NAME_WIDTH)
+    taken = list(short.values())
+    if len(taken) != len(names) or len(set(taken)) != len(taken):
+        dup = {k for k in stripped if stripped.count(k) > 1}
+        dup |= {v for v in taken if taken.count(v) > 1}
+        raise ValueError(f"timing keys collapse to one record name: {sorted(dup)}")
+    return short
 
 
 def format_record(
@@ -246,6 +257,7 @@ def format_record(
     cpus: int,
     n_heavy: int,
     drift: dict | None = None,
+    default_parallelism: int | None = None,
 ) -> str:
     """ONE JSON line for the driver. Per-query NAMES are pinned (see
     NAME_WIDTH block comment) so the driver's round-over-round matching
@@ -254,7 +266,9 @@ def format_record(
     fields, in order: 2-sig times -> 1-sig times -> drop the drift
     diagnostics (drift_spread/ab_n/ab_draws/ab_ref — drift_ab itself is
     kept to the last: round-8 VERDICT item 5 made the total carry its
-    own machine-drift calibration)."""
+    own machine-drift calibration). ``cpus`` and ``default_parallelism``
+    are never shed. Raises ValueError when even the last rung is over
+    budget: the driver would archive a cut, unparseable line."""
 
     short = record_names(list(timings))
     keys = list(short.values())
@@ -273,6 +287,8 @@ def format_record(
             "unit": "sec",
             "queries": q,
             "sf": sf,
+            "cpus": cpus,
+            "defaultParallelism": default_parallelism,
         }
         if drift:
             if drift_full:
@@ -290,8 +306,8 @@ def format_record(
     for kw in attempts:
         line = _compact(**kw)
         if len(line) <= RECORD_BUDGET:
-            break
-    return line
+            return line
+    raise ValueError(f"bench record is {len(line)} chars, over RECORD_BUDGET={RECORD_BUDGET}")
 
 
 # ---- same-machine A/B drift calibration (round-8 VERDICT item 5) ----------
@@ -615,6 +631,7 @@ def main() -> None:
         flush=True,
     )
 
+    default_parallelism = spark.sparkContext.defaultParallelism
     # stop the measuring session BEFORE the A/B subprocess so the previous
     # round's code benches on the same idle machine the passes above had
     spark.stop()
@@ -626,7 +643,9 @@ def main() -> None:
 
     print(json.dumps({"rows": rows}, separators=(",", ":")), file=sys.stderr, flush=True)
     print(
-        format_record(timings, total, _sf_of(sf_dir), cpus, len(heavy), drift),
+        format_record(
+            timings, total, _sf_of(sf_dir), cpus, len(heavy), drift, default_parallelism
+        ),
         flush=True,
     )
 

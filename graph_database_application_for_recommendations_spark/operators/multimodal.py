@@ -3,16 +3,11 @@
 The Spark-side plumbing is real and tested — binary payload column, typed
 metadata struct, Arrow-batched ``mapInPandas`` feature extraction with an
 explicit output schema and bounded batch sizes. The media *decode* step
-needs no imaging/audio library: real stdlib(+numpy) decoders cover binary
-PPM, uncompressed BMP, PNG at every legal depth incl. Adam7 and palette
-(zlib inflate + scanline defilter), GIF87a/89a (full LZW), baseline AND
-progressive JPEG (Huffman entropy decode + IDCT, any sampling, restart
-intervals, spectral selection + successive approximation), and WAV in
-PCM, G.711 µ-law/A-law, and IMA ADPCM codings. Formats past those
-capabilities (arithmetic/lossless JPEG, sub-8-bit PNG, MPEG-family
-audio) raise NotImplementedError and route to deterministic
-byte-level features (length, crc32, first/last byte), so the distributed
-pipeline shape is exercisable on any payload.
+needs no imaging/audio library: it covers exactly the two container
+formats ``assets_from_documents`` emits, binary PPM (P6) images and PCM
+WAV audio (8/16-bit). Every other payload raises NotImplementedError and
+routes to deterministic byte-level features (length, crc32, first/last
+byte), so the distributed pipeline shape is exercisable on any payload.
 """
 
 from __future__ import annotations
@@ -120,997 +115,53 @@ def assets_from_documents(documents: DataFrame) -> DataFrame:
     )
 
 
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # gray, RGB, gray+alpha, RGBA
-
-
-# Adam7 pass geometry (RFC 2083 §2.6): (x0, y0, xstep, ystep) per pass
-_ADAM7 = [
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-]
-
-
-def _png_defilter(raw: bytes, start: int, n_rows: int, stride: int, bpp: int):
-    """Reverse the per-scanline filters (None/Sub/Up/Average/Paeth,
-    RFC 2083 §6) for one (sub-)image of ``n_rows`` scanlines of
-    ``stride`` bytes. Filters operate BYTE-wise with the left neighbor
-    ``bpp`` bytes back (bpp = channels × bytes-per-sample — this, not
-    channels, is what 16-bit depth changes). Returns (rows, next_start);
-    filter state resets at the sub-image boundary, which is exactly the
-    Adam7 contract (each pass is an independently filtered image)."""
-    if len(raw) < start + n_rows * (stride + 1):
-        raise ValueError("truncated PNG raster")
-    prev = bytearray(stride)
-    rows = []
-    pos = start
-    for _ in range(n_rows):
-        ftype = raw[pos]
-        line = bytearray(raw[pos + 1 : pos + 1 + stride])
-        pos += stride + 1
-        if ftype == 1:  # Sub
-            for i in range(bpp, stride):
-                line[i] = (line[i] + line[i - bpp]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                left = line[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                a = line[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[i] = (line[i] + pr) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"unknown PNG filter type {ftype}")
-        rows.append(bytes(line))
-        prev = line
-    return rows, pos
-
-
-def _decode_png(payload: bytes, _pixels_out: list | None = None) -> dict:
-    """Pure-stdlib(+numpy) PNG decode (VERDICT r2 item 3 polish; r6
-    item 7 completes it): chunk walk, zlib-inflate the IDAT stream,
-    byte-wise scanline defilter, every legal sample depth (1/2/4-bit
-    packed grayscale+palette, 8, 16), Adam7 interlacing (7
-    independently-filtered passes scattered back on the (y0::ys,
-    x0::xs) grids), palette (PLTE-mapped). ``mean_value`` averages raw
-    sample values at the stored depth — 0..2^depth-1 for grayscale
-    (alpha samples included, as before); palette indexes map through
-    PLTE first. Depth/color combinations the spec forbids raise."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    off = 8  # past signature
-    width = height = None
-    bit_depth = color_type = interlace = None
-    idat = bytearray()
-    plte = b""
-    while off + 8 <= len(payload):
-        (clen,) = struct.unpack_from(">I", payload, off)
-        ctype = payload[off + 4 : off + 8]
-        body = payload[off + 8 : off + 8 + clen]
-        if ctype == b"IHDR":
-            width, height, bit_depth, color_type, _comp, _filt, interlace = (
-                struct.unpack(">IIBBBBB", body)
-            )
-        elif ctype == b"PLTE":
-            plte = body
-        elif ctype == b"IDAT":
-            idat += body
-        elif ctype == b"IEND":
-            break
-        off += 12 + clen  # len + type + body + crc
-    if width is None:
-        raise ValueError("PNG missing IHDR")
-    palette = color_type == 3
-    if color_type not in _PNG_CHANNELS and not palette:
-        raise ValueError(f"unknown PNG color type {color_type}")
-    if bit_depth not in (1, 2, 4, 8, 16) or (
-        bit_depth < 8 and color_type not in (0, 3)
-    ):
-        # sub-8-bit is only defined for grayscale and palette (PNG spec)
-        raise NotImplementedError(f"PNG bit depth {bit_depth}/color {color_type}")
-    if interlace not in (0, 1):
-        raise ValueError(f"unknown PNG interlace method {interlace}")
-    if palette and (not plte or len(plte) % 3):
-        raise ValueError("palette PNG missing/invalid PLTE")
-    channels = 1 if palette else _PNG_CHANNELS[color_type]
-    raw = zlib.decompress(bytes(idat))
-
-    if bit_depth < 8:
-        # packed 1/2/4-bit samples: filters stay BYTE-wise with bpp=1
-        # (RFC 2083 §6.2 — "bpp is rounded up to one"); unpack after
-        def stride_of(pw: int) -> int:
-            return (pw * bit_depth + 7) // 8
-
-        bpp = 1
-
-        def to_samples(rows: list[bytes], pw: int, ph: int):
-            per = 8 // bit_depth
-            mask = (1 << bit_depth) - 1
-            a = np.frombuffer(b"".join(rows), dtype=np.uint8).reshape(ph, stride_of(pw))
-            # explode each byte into its MSB-first packed samples
-            shifts = np.arange(per - 1, -1, -1) * bit_depth
-            wide = (a[:, :, None] >> shifts[None, None, :]) & mask
-            return wide.reshape(ph, -1)[:, :pw].astype(np.int64)[:, :, None]
-
-    else:
-        bps = bit_depth // 8
-        bpp = channels * bps
-        sample_t = np.dtype(">u2") if bps == 2 else np.uint8
-
-        def stride_of(pw: int) -> int:
-            return pw * bpp
-
-        def to_samples(rows: list[bytes], pw: int, ph: int):
-            a = np.frombuffer(b"".join(rows), dtype=sample_t)
-            return a.astype(np.int64).reshape(ph, pw, channels)
-
-    if interlace == 0:
-        rows, _ = _png_defilter(raw, 0, height, stride_of(width), bpp)
-        px = to_samples(rows, width, height)
-    else:
-        px = np.zeros((height, width, channels), dtype=np.int64)
-        pos = 0
-        for x0, y0, xs, ys in _ADAM7:
-            pw = (width - x0 + xs - 1) // xs
-            ph = (height - y0 + ys - 1) // ys
-            if pw <= 0 or ph <= 0:
-                continue
-            rows, pos = _png_defilter(raw, pos, ph, stride_of(pw), bpp)
-            px[y0::ys, x0::xs, :] = to_samples(rows, pw, ph)
-
-    if palette:
-        lut = np.frombuffer(plte, dtype=np.uint8).astype(np.int64).reshape(-1, 3)
-        gray3 = lut.sum(axis=1)[px[:, :, 0]]
-        total = int(gray3.sum())
-        n = height * width * 3
-    else:
-        total = int(px.sum())
-        n = height * width * channels
-        if channels in (1, 2):  # gray(+alpha): luminance only, alpha ignored
-            gray3 = px[:, :, 0] * 3
-        else:  # RGB / RGBA: channel sum over the color channels
-            gray3 = px[:, :, :3].sum(axis=2)
-    if _pixels_out is not None:
-        _pixels_out.append(gray3)
-    return {
-        "width": width,
-        "height": height,
-        "channels": 3 if palette else channels,
-        "mean_value": round(total / n, 6) if n else 0.0,
-    }
-
-
-def _lzw_decode(min_code_size: int, data: bytes, max_out: int) -> bytes:
-    """GIF-variant LZW (variable-width codes, LSB-first bit packing,
-    clear/end codes, 12-bit cap) — pure stdlib."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    code_size = min_code_size + 1
-    table: dict[int, bytes] = {i: bytes([i]) for i in range(clear)}
-    next_code = end + 1
-    out = bytearray()
-    prev: bytes | None = None
-    bitpos = 0
-    total_bits = len(data) * 8
-    while bitpos + code_size <= total_bits and len(out) < max_out:
-        byte_i, bit_o = divmod(bitpos, 8)
-        window = int.from_bytes(data[byte_i : byte_i + 4], "little")
-        code = (window >> bit_o) & ((1 << code_size) - 1)
-        bitpos += code_size
-        if code == clear:
-            table = {i: bytes([i]) for i in range(clear)}
-            next_code = end + 1
-            code_size = min_code_size + 1
-            prev = None
+def _ppm_raster(payload: bytes) -> tuple[int, int, bytes]:
+    """Binary PPM (P6) parse → (width, height, 24-bit RGB raster): the
+    whitespace-separated width/height/maxval header (``#`` comment lines
+    allowed), then exactly one whitespace byte before the raster. Any
+    other payload raises NotImplementedError; a short raster raises
+    ValueError."""
+    if payload[:2] != b"P6":
+        raise NotImplementedError("only binary PPM (P6) images decodable")
+    vals: list[int] = []
+    i = 2
+    while len(vals) < 3:
+        while i < len(payload) and payload[i : i + 1].isspace():
+            i += 1
+        if payload[i : i + 1] == b"#":  # comment line
+            while i < len(payload) and payload[i] != 0x0A:
+                i += 1
             continue
-        if code == end:
-            break
-        if prev is None:
-            entry = table[code]
-        elif code in table:
-            entry = table[code]
-            if next_code < 4096:
-                table[next_code] = prev + entry[:1]
-                next_code += 1
-        elif code == next_code:
-            entry = prev + prev[:1]
-            table[next_code] = entry
-            next_code += 1
-        else:
-            raise ValueError("corrupt LZW code stream")
-        if next_code == (1 << code_size) and code_size < 12:
-            code_size += 1
-        out += entry
-        prev = entry
-    return bytes(out[:max_out])
-
-
-def _decode_gif(payload: bytes, _pixels_out: list | None = None) -> dict:
-    """Pure-stdlib GIF87a/89a decode: logical screen descriptor, color
-    tables, extension-block skip, first image frame through full LZW
-    (variable-width codes, clear/end, 12-bit dictionary cap). Interlaced
-    frames need NO special casing here: interlace only permutes row
-    order, and every extracted feature (dimensions, mean over pixel
-    values) is row-order invariant."""
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF")
-    sw, sh, flags, _bg, _ar = struct.unpack_from("<HHBBB", payload, 6)
-    pos = 13
-    gct = b""
-    if flags & 0x80:
-        n = 3 * (2 << (flags & 0x07))
-        gct = payload[pos : pos + n]
-        pos += n
-    while pos < len(payload):
-        block = payload[pos]
-        if block == 0x21:  # extension: label + sub-block chain
-            pos += 2
-            while pos < len(payload) and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-        elif block == 0x2C:  # image descriptor
-            _l, _t, w, h, iflags = struct.unpack_from("<HHHHB", payload, pos + 1)
-            pos += 10
-            table = gct
-            if iflags & 0x80:
-                n = 3 * (2 << (iflags & 0x07))
-                table = payload[pos : pos + n]
-                pos += n
-            mcs = payload[pos]
-            pos += 1
-            data = bytearray()
-            while pos < len(payload) and payload[pos] != 0:
-                n = payload[pos]
-                data += payload[pos + 1 : pos + 1 + n]
-                pos += 1 + n
-            idx = _lzw_decode(mcs, bytes(data), w * h)
-            if len(idx) < w * h:
-                raise ValueError(f"truncated GIF raster: {len(idx)} < {w * h}")
-            if not table:
-                raise ValueError("GIF frame without a color table")
-            rgb_sum = sum(
-                table[3 * i] + table[3 * i + 1] + table[3 * i + 2] for i in idx
-            )
-            if _pixels_out is not None:
-                import numpy as np
-
-                g3 = np.array(
-                    [table[3 * i] + table[3 * i + 1] + table[3 * i + 2] for i in idx],
-                    dtype=np.int64,
-                ).reshape(h, w)
-                if iflags & 0x40:  # interlaced: rows arrive in 4-pass order
-                    order = (
-                        list(range(0, h, 8))
-                        + list(range(4, h, 8))
-                        + list(range(2, h, 4))
-                        + list(range(1, h, 2))
-                    )
-                    out = np.empty_like(g3)
-                    out[order] = g3
-                    g3 = out
-                _pixels_out.append(g3)
-            return {
-                "width": w,
-                "height": h,
-                "channels": 3,
-                "mean_value": round(rgb_sum / (3 * w * h), 6),
-            }
-        elif block == 0x3B:  # trailer before any image frame
-            break
-        else:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-    raise ValueError("GIF contains no image frame")
-
-
-# zigzag position -> raster index within an 8x8 block (ITU-T T.81 fig. 5)
-_JPEG_ZIGZAG = (
-    0, 1, 8, 16, 9, 2, 3, 10,
-    17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63,
-)
-
-
-def _idct_basis():
-    """8-point DCT-III basis C (C[x,u] = a(u)·cos((2x+1)uπ/16)); the 2-D
-    inverse transform of a coefficient block F is then C @ F @ C.T."""
-    import numpy as np
-
-    x = np.arange(8)
-    u = np.arange(8)
-    c = np.cos((2 * x[:, None] + 1) * u[None, :] * np.pi / 16) * 0.5
-    c[:, 0] /= np.sqrt(2.0)
-    return c
-
-
-class _JpegBits:
-    """MSB-first bit reader over one entropy-coded (restart) segment."""
-
-    __slots__ = ("d", "p")
-
-    def __init__(self, data: bytes):
-        self.d = data
-        self.p = 0
-
-    def bit(self) -> int:
-        byte_i, off = divmod(self.p, 8)
-        if byte_i >= len(self.d):
-            raise ValueError("JPEG entropy stream exhausted")
-        self.p += 1
-        return (self.d[byte_i] >> (7 - off)) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-
-def _jpeg_huff_decode(bits: _JpegBits, table: dict) -> int:
-    code = 0
-    for ln in range(1, 17):
-        code = (code << 1) | bits.bit()
-        sym = table.get((ln, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid JPEG Huffman code")
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    """EXTEND (T.81 F.12): map t raw bits to the signed coefficient."""
-    if t == 0:
-        return 0
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
-def _decode_jpeg(payload: bytes, _pixels_out: list | None = None) -> dict:
-    """Baseline JPEG decode (ITU-T T.81, public spec), stdlib + numpy:
-    marker walk (DQT/DHT/SOF0/SOF1/DRI/SOS), canonical Huffman tables,
-    entropy decode with byte unstuffing and restart-interval resets,
-    dequantize + de-zigzag, matrix IDCT per 8×8 block, per-component
-    planes with nearest-neighbor chroma upsampling, BT.601 YCbCr→RGB
-    with clamping. Supports 8- and 12-bit sequential Huffman scans
-    (12-bit: 16-bit DQT entries, 2048 level shift, 0..4095 clamp) at any
-    sampling (4:4:4/4:2:2/4:2:0) and grayscale; SOF2 routes to the
-    progressive decoder (_decode_jpeg_progressive); arithmetic and
-    hierarchical modes raise NotImplementedError → byte-feature
-    fallback."""
-    import struct
-
-    import numpy as np
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qt: dict[int, object] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    frame = None
-    restart = 0
-    scan = None
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0x01 or 0xD0 <= marker <= 0xD9:
-            if marker == 0xD9:
-                break
-            continue
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        body = payload[pos + 2 : pos + seglen]
-        if marker == 0xDB:  # DQT: 1+ tables, zigzag order
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 0x0F
-                if pq == 0:
-                    qt[tq] = np.frombuffer(
-                        body[i + 1 : i + 65], dtype=np.uint8
-                    ).astype(np.float64)
-                    i += 65
-                elif pq == 1:  # 16-bit entries (the 12-bit-sample tables)
-                    qt[tq] = np.frombuffer(
-                        body[i + 1 : i + 129], dtype=">u2"
-                    ).astype(np.float64)
-                    i += 129
-                else:
-                    raise ValueError(f"bad DQT precision {pq}")
-        elif marker == 0xC4:  # DHT: canonical code assignment (T.81 C.2)
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0x0F
-                counts = body[i + 1 : i + 17]
-                nsym = sum(counts)
-                symbols = body[i + 17 : i + 17 + nsym]
-                code, k, table = 0, 0, {}
-                for ln in range(1, 17):
-                    for _ in range(counts[ln - 1]):
-                        table[(ln, code)] = symbols[k]
-                        k += 1
-                        code += 1
-                    code <<= 1
-                huff[(tc, th)] = table
-                i += 17 + nsym
-        elif marker in (0xC0, 0xC1):  # baseline / extended sequential
-            prec, hh, ww, nc = struct.unpack_from(">BHHB", body, 0)
-            if prec not in (8, 12):
-                raise NotImplementedError("only 8/12-bit JPEG decodable")
-            comps = []
-            for c in range(nc):
-                cid, hv, tq_id = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, tq_id))
-            frame = (ww, hh, comps, prec)
-        elif marker == 0xC2:  # progressive: its own multi-scan walk
-            return _decode_jpeg_progressive(payload, _pixels_out)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                "only baseline/progressive Huffman JPEG decodable"
-            )
-        elif marker == 0xDD:
-            (restart,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xDA:
-            ns = body[0]
-            scan = [
-                (body[1 + 2 * c], body[2 + 2 * c] >> 4, body[2 + 2 * c] & 0x0F)
-                for c in range(ns)
-            ]
-            pos += seglen
-            break
-        pos += seglen
-    if frame is None or scan is None:
-        raise ValueError("JPEG missing SOF/SOS")
-    w, h, comps, prec = frame
-    center = float(1 << (prec - 1))
-    maxv = float((1 << prec) - 1)
-    if w == 0 or h == 0:
-        raise ValueError("empty JPEG frame")
-
-    # entropy-coded data: unstuff FF00, split at restart markers
-    segments, cur, i = [], bytearray(), pos
-    while i < len(payload):
-        b = payload[i]
-        if b == 0xFF and i + 1 < len(payload):
-            nxt = payload[i + 1]
-            if nxt == 0x00:
-                cur.append(0xFF)
-                i += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:
-                segments.append(bytes(cur))
-                cur = bytearray()
-                i += 2
-                continue
-            break
-        cur.append(b)
-        i += 1
-    segments.append(bytes(cur))
-
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    planes = {
-        cid: np.zeros((mcus_y * cv * 8, mcus_x * ch * 8))
-        for cid, ch, cv, _ in comps
-    }
-    scan_by_id = {cs: (td, ta) for cs, td, ta in scan}
-    basis = _idct_basis()
-    zz = np.array(_JPEG_ZIGZAG)
-
-    bits = _JpegBits(segments[0])
-    seg_idx = 0
-    preds = {cid: 0 for cid, *_ in comps}
-    for mcu in range(mcus_x * mcus_y):
-        if restart and mcu and mcu % restart == 0:
-            seg_idx += 1
-            if seg_idx >= len(segments):
-                raise ValueError("JPEG missing restart segment")
-            bits = _JpegBits(segments[seg_idx])
-            preds = {cid: 0 for cid, *_ in comps}
-        my, mx = divmod(mcu, mcus_x)
-        for cid, ch, cv, tq_id in comps:
-            td, ta = scan_by_id[cid]
-            dctab, actab = huff[(0, td)], huff[(1, ta)]
-            q = qt[tq_id]
-            for by in range(cv):
-                for bx in range(ch):
-                    t = _jpeg_huff_decode(bits, dctab)
-                    preds[cid] += _jpeg_extend(bits.bits(t), t)
-                    coef = np.zeros(64)
-                    coef[0] = preds[cid]
-                    k = 1
-                    while k < 64:
-                        rs = _jpeg_huff_decode(bits, actab)
-                        r, s = rs >> 4, rs & 0x0F
-                        if s == 0:
-                            if r == 15:  # ZRL
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += r
-                        if k > 63:
-                            raise ValueError("JPEG AC index overflow")
-                        coef[k] = _jpeg_extend(bits.bits(s), s)
-                        k += 1
-                    blk = np.zeros(64)
-                    blk[zz] = coef * q  # dequantize + de-zigzag
-                    spatial = basis @ blk.reshape(8, 8) @ basis.T + center
-                    y0 = (my * cv + by) * 8
-                    x0 = (mx * ch + bx) * 8
-                    planes[cid][y0 : y0 + 8, x0 : x0 + 8] = np.clip(
-                        spatial, 0.0, maxv
-                    )
-
-    # upsample to full resolution (sample replication), crop to (h, w)
-    full = []
-    for cid, ch, cv, _ in comps:
-        p = planes[cid]
-        p = np.repeat(np.repeat(p, vmax // cv, axis=0), hmax // ch, axis=1)
-        full.append(p[:h, :w])
-    if len(full) == 1:
-        if _pixels_out is not None:
-            # ×3 keeps grayscale on the same channel-sum scale as RGB for
-            # the pixel consumers (image_dhash's gray3 convention)
-            _pixels_out.append((np.round(full[0]) * 3).astype(np.int64))
-        mean = float(np.mean(np.round(full[0])))
-        return {"width": w, "height": h, "channels": 1, "mean_value": round(mean, 6)}
-    if len(full) != 3:
-        raise NotImplementedError("only 1- or 3-component JPEG decodable")
-    r, g, b = _jpeg_rgb(full, center, maxv)
-    if _pixels_out is not None:
-        _pixels_out.append((r + g + b).astype(np.int64))
-    mean = float((r.sum() + g.sum() + b.sum()) / (3 * w * h))
-    return {"width": w, "height": h, "channels": 3, "mean_value": round(mean, 6)}
-
-
-def _jpeg_entropy_segments(payload: bytes, pos: int) -> tuple[list[bytes], int]:
-    """Entropy-coded data starting at ``pos``: unstuff FF00, split at
-    RSTn markers; returns (segments, position of the terminating marker's
-    0xFF byte)."""
-    segments, cur, i = [], bytearray(), pos
-    while i < len(payload):
-        b = payload[i]
-        if b == 0xFF and i + 1 < len(payload):
-            nxt = payload[i + 1]
-            if nxt == 0x00:
-                cur.append(0xFF)
-                i += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:
-                segments.append(bytes(cur))
-                cur = bytearray()
-                i += 2
-                continue
-            break
-        cur.append(b)
-        i += 1
-    segments.append(bytes(cur))
-    return segments, i
-
-
-def _decode_jpeg_progressive(payload: bytes, _pixels_out: list | None = None) -> dict:
-    """Progressive JPEG decode (ITU-T T.81 §G, public spec) — round-5
-    VERDICT item 6, the last common image mode in the honest-fallback
-    list. Full feature set: spectral selection, successive approximation
-    on both DC and AC, EOB-run coding, interleaved DC scans,
-    non-interleaved per-component scans, restart intervals. Scans
-    accumulate integer coefficients per block; dequantize + IDCT +
-    upsample + color transform then reuse the baseline tail exactly
-    (same _idct_basis/_jpeg_rgb math, so progressive and baseline
-    encodes of one image decode to identical pixels)."""
-    import struct
-
-    import numpy as np
-
-    pos = 2
-    qt: dict[int, object] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    frame = None
-    restart = 0
-    scans: list[tuple] = []  # (scan_comps, Ss, Se, Ah, Al, segments, restart)
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0x01 or 0xD0 <= marker <= 0xD9:
-            if marker == 0xD9:
-                break
-            continue
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        body = payload[pos + 2 : pos + seglen]
-        if marker == 0xDB:
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 0x0F
-                if pq == 0:
-                    qt[tq] = np.frombuffer(
-                        body[i + 1 : i + 65], dtype=np.uint8
-                    ).astype(np.float64)
-                    i += 65
-                elif pq == 1:  # 16-bit entries (the 12-bit-sample tables)
-                    qt[tq] = np.frombuffer(
-                        body[i + 1 : i + 129], dtype=">u2"
-                    ).astype(np.float64)
-                    i += 129
-                else:
-                    raise ValueError(f"bad DQT precision {pq}")
-        elif marker == 0xC4:
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0x0F
-                counts = body[i + 1 : i + 17]
-                nsym = sum(counts)
-                symbols = body[i + 17 : i + 17 + nsym]
-                code, k, table = 0, 0, {}
-                for ln in range(1, 17):
-                    for _ in range(counts[ln - 1]):
-                        table[(ln, code)] = symbols[k]
-                        k += 1
-                        code += 1
-                    code <<= 1
-                huff[(tc, th)] = dict(table)
-                i += 17 + nsym
-        elif marker == 0xC2:
-            prec, hh, ww, nc = struct.unpack_from(">BHHB", body, 0)
-            if prec not in (8, 12):
-                raise NotImplementedError("only 8/12-bit JPEG decodable")
-            comps = []
-            for c in range(nc):
-                cid, hv, tq_id = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, tq_id))
-            frame = (ww, hh, comps, prec)
-        elif marker == 0xDD:
-            (restart,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xDA:
-            ns = body[0]
-            sc = [
-                (body[1 + 2 * c], body[2 + 2 * c] >> 4, body[2 + 2 * c] & 0x0F)
-                for c in range(ns)
-            ]
-            ss, se, ahl = body[1 + 2 * ns : 4 + 2 * ns]
-            segments, pos = _jpeg_entropy_segments(payload, pos + seglen)
-            # huffman tables are mutable between scans: snapshot the ones
-            # this scan references. A scan naming an undefined table is a
-            # loud ValueError here (not an AttributeError inside the
-            # entropy loop, which the Arrow kernel's fallback wouldn't
-            # catch); DC-refinement scans read raw bits and legitimately
-            # reference no table, so missing ids only fail when USED.
-            tables = {
-                (tc, th): huff.get((tc, th)) for _, td, ta in sc
-                for tc, th in ((0, td), (1, ta))
-            }
-            scans.append((sc, ss, se, ahl >> 4, ahl & 0x0F, segments, restart, tables))
-            continue
-        pos += seglen
-    if frame is None or not scans:
-        raise ValueError("JPEG missing SOF2/SOS")
-    w, h, comps, prec = frame
-    center = float(1 << (prec - 1))
-    maxv = float((1 << prec) - 1)
-    if w == 0 or h == 0:
-        raise ValueError("empty JPEG frame")
-
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    by_id = {cid: (ch, cv, tq_id) for cid, ch, cv, tq_id in comps}
-    # zigzag-ordered integer coefficients per block, padded MCU grid
-    coefs = {
-        cid: np.zeros((mcus_y * cv, mcus_x * ch, 64), dtype=np.int64)
-        for cid, ch, cv, _ in comps
-    }
-
-    def _cdiv(a: int, b: int) -> int:
-        return -(-a // b)
-
-    def _refine_run(cf, k: int, se: int, r: int, bits, p1: int, m1: int) -> int:
-        """AC-refinement run advance (T.81 G.1.2.3): skip ``r``
-        zero-history positions, emitting a correction bit for every
-        nonzero-history coefficient passed over; returns the stop k."""
-        while k <= se:
-            if cf[k] != 0:
-                if bits.bit() and (cf[k] & p1) == 0:
-                    cf[k] += p1 if cf[k] > 0 else m1
-            else:
-                if r == 0:
-                    break
-                r -= 1
-            k += 1
-        return k
-
-    for sc, ss, se, ah, al, segments, rst, tables in scans:
-        ns = len(sc)
-        if ss == 0 and se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        if ss > 0 and ns != 1:
-            raise ValueError("progressive AC scan must be single-component")
-        if ss > 0:
-            cs, _td, ta = sc[0]
-            actab = tables[(1, ta)]
-            if actab is None:
-                raise ValueError(f"JPEG AC scan references undefined DHT id {ta}")
-            ch, cv, _ = by_id[cs]
-            wb = _cdiv(_cdiv(w * ch, hmax), 8)
-            hb = _cdiv(_cdiv(h * cv, vmax), 8)
-            cf_plane = coefs[cs]
-            seg_idx, done = 0, 0
-            bits = _JpegBits(segments[0])
-            eobrun = 0
-            for bi in range(hb * wb):
-                if rst and done and done % rst == 0:
-                    seg_idx += 1
-                    if seg_idx >= len(segments):
-                        raise ValueError("JPEG missing restart segment")
-                    bits = _JpegBits(segments[seg_idx])
-                    eobrun = 0
-                by, bx = divmod(bi, wb)
-                cf = cf_plane[by, bx]
-                if ah == 0:  # AC first pass
-                    if eobrun > 0:
-                        eobrun -= 1
-                    else:
-                        k = ss
-                        while k <= se:
-                            rs = _jpeg_huff_decode(bits, actab)
-                            r, s = rs >> 4, rs & 0x0F
-                            if s == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += bits.bits(r)
-                                break
-                            k += r
-                            if k > se:
-                                raise ValueError("JPEG AC index overflow")
-                            cf[k] = _jpeg_extend(bits.bits(s), s) << al
-                            k += 1
-                else:  # AC refinement
-                    p1, m1 = 1 << al, -(1 << al)
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            rs = _jpeg_huff_decode(bits, actab)
-                            r, s = rs >> 4, rs & 0x0F
-                            val = 0
-                            if s == 0:
-                                if r < 15:
-                                    eobrun = 1 << r
-                                    if r:
-                                        eobrun += bits.bits(r)
-                                    break
-                                # r == 15: run of 16 zero-history positions
-                            else:
-                                if s != 1:
-                                    raise ValueError(
-                                        "AC refinement magnitude must be 1"
-                                    )
-                                val = p1 if bits.bit() else m1
-                            k = _refine_run(cf, k, se, r, bits, p1, m1)
-                            if val and k <= se:
-                                cf[k] = val
-                            k += 1
-                    if eobrun > 0:
-                        _refine_run(cf, k, se, se - k + 1, bits, p1, m1)
-                        eobrun -= 1
-                done += 1
-        elif ah > 0:  # DC refinement: one raw bit per block
-            order = []
-            if ns == 1:
-                cs = sc[0][0]
-                ch, cv, _ = by_id[cs]
-                wb = _cdiv(_cdiv(w * ch, hmax), 8)
-                hb = _cdiv(_cdiv(h * cv, vmax), 8)
-                order = [
-                    (cs, bi // wb, bi % wb) for bi in range(hb * wb)
-                ]
-            else:
-                for mcu in range(mcus_x * mcus_y):
-                    my, mx = divmod(mcu, mcus_x)
-                    for cs, _td, _ta in sc:
-                        ch, cv, _ = by_id[cs]
-                        for by in range(cv):
-                            for bx in range(ch):
-                                order.append((cs, my * cv + by, mx * ch + bx))
-                # restart counts MCUs in interleaved scans: group size
-            group = len(sc) and sum(
-                by_id[cs][0] * by_id[cs][1] for cs, *_ in sc
-            )
-            bits = _JpegBits(segments[0])
-            seg_idx = 0
-            for i, (cs, by, bx) in enumerate(order):
-                unit = i // group if ns > 1 else i
-                if rst and unit and unit % rst == 0 and (ns == 1 or i % group == 0):
-                    seg_idx += 1
-                    if seg_idx >= len(segments):
-                        raise ValueError("JPEG missing restart segment")
-                    bits = _JpegBits(segments[seg_idx])
-                coefs[cs][by, bx, 0] |= bits.bit() << al
-        else:  # DC first pass: huffman diff coding, per-component predictors
-            bits = _JpegBits(segments[0])
-            seg_idx = 0
-            preds = {cs: 0 for cs, *_ in sc}
-            if ns == 1:
-                cs, td, _ta = sc[0]
-                dctab = tables[(0, td)]
-                if dctab is None:
-                    raise ValueError(f"JPEG DC scan references undefined DHT id {td}")
-                ch, cv, _ = by_id[cs]
-                wb = _cdiv(_cdiv(w * ch, hmax), 8)
-                hb = _cdiv(_cdiv(h * cv, vmax), 8)
-                for bi in range(hb * wb):
-                    if rst and bi and bi % rst == 0:
-                        seg_idx += 1
-                        if seg_idx >= len(segments):
-                            raise ValueError("JPEG missing restart segment")
-                        bits = _JpegBits(segments[seg_idx])
-                        preds[cs] = 0
-                    t = _jpeg_huff_decode(bits, dctab)
-                    preds[cs] += _jpeg_extend(bits.bits(t), t)
-                    coefs[cs][bi // wb, bi % wb, 0] = preds[cs] << al
-            else:
-                for mcu in range(mcus_x * mcus_y):
-                    if rst and mcu and mcu % rst == 0:
-                        seg_idx += 1
-                        if seg_idx >= len(segments):
-                            raise ValueError("JPEG missing restart segment")
-                        bits = _JpegBits(segments[seg_idx])
-                        preds = {cs: 0 for cs, *_ in sc}
-                    my, mx = divmod(mcu, mcus_x)
-                    for cs, td, _ta in sc:
-                        dctab = tables[(0, td)]
-                        if dctab is None:
-                            raise ValueError(
-                                f"JPEG DC scan references undefined DHT id {td}"
-                            )
-                        ch, cv, _ = by_id[cs]
-                        for by in range(cv):
-                            for bx in range(ch):
-                                t = _jpeg_huff_decode(bits, dctab)
-                                preds[cs] += _jpeg_extend(bits.bits(t), t)
-                                coefs[cs][my * cv + by, mx * ch + bx, 0] = (
-                                    preds[cs] << al
-                                )
-
-    # dequantize + IDCT — identical math to the baseline tail
-    basis = _idct_basis()
-    zz = np.array(_JPEG_ZIGZAG)
-    planes = {}
-    for cid, ch, cv, tq_id in comps:
-        q = qt[tq_id]
-        plane = np.zeros((mcus_y * cv * 8, mcus_x * ch * 8))
-        cf_plane = coefs[cid]
-        for by in range(mcus_y * cv):
-            for bx in range(mcus_x * ch):
-                blk = np.zeros(64)
-                blk[zz] = cf_plane[by, bx].astype(np.float64) * q
-                spatial = basis @ blk.reshape(8, 8) @ basis.T + center
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = np.clip(
-                    spatial, 0.0, maxv
-                )
-        planes[cid] = plane
-    full = []
-    for cid, ch, cv, _ in comps:
-        p = planes[cid]
-        p = np.repeat(np.repeat(p, vmax // cv, axis=0), hmax // ch, axis=1)
-        full.append(p[:h, :w])
-    if len(full) == 1:
-        if _pixels_out is not None:
-            _pixels_out.append((np.round(full[0]) * 3).astype(np.int64))
-        mean = float(np.mean(np.round(full[0])))
-        return {"width": w, "height": h, "channels": 1, "mean_value": round(mean, 6)}
-    if len(full) != 3:
-        raise NotImplementedError("only 1- or 3-component JPEG decodable")
-    r, g, b = _jpeg_rgb(full, center, maxv)
-    if _pixels_out is not None:
-        _pixels_out.append((r + g + b).astype(np.int64))
-    mean = float((r.sum() + g.sum() + b.sum()) / (3 * w * h))
-    return {"width": w, "height": h, "channels": 3, "mean_value": round(mean, 6)}
-
-
-def _jpeg_rgb(full, center: float = 128.0, maxv: float = 255.0):
-    """BT.601 YCbCr→RGB with the decoder's exact round/clip discipline —
-    shared by the metadata path and the pixel path so a hash computed
-    over pixels agrees with the attested mean_value math. ``center``/
-    ``maxv`` follow the frame's sample precision (128/255 at 8 bits,
-    2048/4095 at 12)."""
-    import numpy as np
-
-    y, cb, cr = full
-    r = np.clip(np.round(y + 1.402 * (cr - center)), 0, maxv)
-    g = np.clip(
-        np.round(y - 0.344136 * (cb - center) - 0.714136 * (cr - center)), 0, maxv
-    )
-    b = np.clip(np.round(y + 1.772 * (cb - center)), 0, maxv)
-    return r, g, b
+        j = i
+        while j < len(payload) and not payload[j : j + 1].isspace():
+            j += 1
+        vals.append(int(payload[i:j]))
+        i = j
+    i += 1  # exactly one whitespace byte separates maxval from raster
+    w, h, _maxval = vals
+    raster = payload[i : i + w * h * 3]
+    if len(raster) < w * h * 3:
+        raise ValueError(f"truncated PPM raster: {len(raster)} < {w * h * 3}")
+    return w, h, raster
 
 
 def _decode_image(payload: bytes) -> dict:
-    """Image decode without an imaging library (stdlib + numpy): binary
-    PPM (P6), uncompressed 24/32-bit BMP, PNG at every legal depth incl.
-    Adam7 and palette (zlib inflate + scanline defilter, r7), GIF87a/89a (full
-    LZW), baseline JPEG (Huffman + IDCT, r5) and progressive JPEG
-    (T.81 §G, r6).
-    Arithmetic/lossless JPEG and the other documented capability gaps
-    raise NotImplementedError and route to byte-level features —
-    honestly environment-limited, as before."""
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return _decode_png(payload)
-    if payload[:2] == b"\xff\xd8":
-        return _decode_jpeg(payload)
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        return _decode_gif(payload)
-    if payload[:2] == b"P6":
-        vals: list[int] = []
-        i = 2
-        while len(vals) < 3:
-            while i < len(payload) and payload[i : i + 1].isspace():
-                i += 1
-            if payload[i : i + 1] == b"#":  # comment line
-                while i < len(payload) and payload[i] != 0x0A:
-                    i += 1
-                continue
-            j = i
-            while j < len(payload) and not payload[j : j + 1].isspace():
-                j += 1
-            vals.append(int(payload[i:j]))
-            i = j
-        i += 1  # exactly one whitespace byte separates maxval from raster
-        w, h, _maxval = vals
-        raster = payload[i : i + w * h * 3]
-        if len(raster) < w * h * 3:
-            raise ValueError(f"truncated PPM raster: {len(raster)} < {w * h * 3}")
-        return {
-            "width": w,
-            "height": h,
-            "channels": 3,
-            "mean_value": round(sum(raster) / len(raster), 6) if raster else 0.0,
-        }
-    if payload[:2] == b"BM":
-        import struct
-
-        (data_off,) = struct.unpack_from("<I", payload, 10)
-        w, h = struct.unpack_from("<ii", payload, 18)
-        (bpp,) = struct.unpack_from("<H", payload, 28)
-        (compression,) = struct.unpack_from("<I", payload, 30)
-        if compression != 0 or bpp not in (24, 32):
-            raise NotImplementedError("only uncompressed 24/32-bit BMP decodable")
-        raster = payload[data_off:]
-        return {
-            "width": w,
-            "height": abs(h),  # negative height = top-down rows
-            "channels": bpp // 8,
-            "mean_value": round(sum(raster) / len(raster), 6) if raster else 0.0,
-        }
-    raise NotImplementedError(
-        "only PPM(P6)/uncompressed BMP/PNG/GIF decode without an imaging library"
-    )
+    """Image metadata from a binary PPM (P6) — the one image format the
+    asset tables carry. Other formats raise NotImplementedError and route
+    to byte-level features."""
+    w, h, raster = _ppm_raster(payload)
+    return {
+        "width": w,
+        "height": h,
+        "channels": 3,
+        "mean_value": round(sum(raster) / len(raster), 6) if raster else 0.0,
+    }
 
 
 def _wav_parse(payload: bytes):
     """RIFF/WAVE chunk walk → (audio_fmt, channels, sample_rate, bits,
-    block_align, data). Raises NotImplementedError for non-RIFF payloads
-    and ValueError when fmt/data chunks are missing."""
-    import struct
-
+    data). Raises NotImplementedError for non-RIFF payloads and
+    ValueError when fmt/data chunks are missing."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise NotImplementedError("only RIFF/WAVE audio decodable without an audio lib")
     off = 12
@@ -1123,9 +174,8 @@ def _wav_parse(payload: bytes):
         if cid == b"fmt ":
             audio_fmt, channels = struct.unpack_from("<HH", body, 0)
             (sample_rate,) = struct.unpack_from("<I", body, 4)
-            (block_align,) = struct.unpack_from("<H", body, 12)
             (bits,) = struct.unpack_from("<H", body, 14)
-            fmt = (audio_fmt, channels, sample_rate, bits, block_align)
+            fmt = (audio_fmt, channels, sample_rate, bits)
         elif cid == b"data":
             data = body
         off += 8 + csize + (csize & 1)  # chunks are word-aligned
@@ -1134,152 +184,24 @@ def _wav_parse(payload: bytes):
     return (*fmt, data)
 
 
-# G.711 decode (ITU-T G.711 / the public-domain Sun g711.c formulas):
-# 8-bit companded code -> 16-bit linear sample. Exact integer tables.
-def _ulaw_table():
-    out = []
-    for u in range(256):
-        v = ~u & 0xFF
-        t = (((v & 0x0F) << 3) + 0x84) << ((v & 0x70) >> 4)
-        out.append((0x84 - t) if (v & 0x80) else (t - 0x84))
-    return out
-
-
-def _alaw_table():
-    out = []
-    for a in range(256):
-        v = a ^ 0x55
-        t = (v & 0x0F) << 4
-        seg = (v & 0x70) >> 4
-        if seg == 0:
-            t += 8
-        elif seg == 1:
-            t += 0x108
-        else:
-            t = (t + 0x108) << (seg - 1)
-        out.append(t if (v & 0x80) else -t)
-    return out
-
-
-_ULAW = _ulaw_table()
-_ALAW = _alaw_table()
-
-# IMA/DVI ADPCM (the public IMA spec; WAV format tag 0x11): 4-bit nibble
-# -> step-table delta with predictor + index state per block.
-_IMA_STEPS = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-]
-_IMA_INDEX = [-1, -1, -1, -1, 2, 4, 6, 8]
-
-
-def _ima_decode_nibble(nib: int, predictor: int, index: int) -> tuple[int, int]:
-    step = _IMA_STEPS[index]
-    diff = step >> 3
-    if nib & 4:
-        diff += step
-    if nib & 2:
-        diff += step >> 1
-    if nib & 1:
-        diff += step >> 2
-    predictor = predictor - diff if nib & 8 else predictor + diff
-    predictor = max(-32768, min(32767, predictor))
-    index = max(0, min(88, index + _IMA_INDEX[nib & 7]))
-    return predictor, index
-
-
-def _ima_decode_block(block: bytes, channels: int):
-    """One IMA ADPCM WAV block → per-channel sample lists. Block layout
-    (the WAV mapping of the IMA spec): a 4-byte header per channel
-    (int16 predictor, uint8 step index, reserved), then 4-byte words of
-    8 nibbles (low nibble first) interleaved channel-by-channel."""
-    import struct
-
-    chans = []
-    for c in range(channels):
-        pred, idx = struct.unpack_from("<hB", block, 4 * c)[0], block[4 * c + 2]
-        if idx > 88:
-            raise ValueError("IMA ADPCM step index out of range")
-        chans.append({"pred": pred, "idx": idx, "out": [pred]})
-    pos = 4 * channels
-    while pos + 4 * channels <= len(block):
-        for c in range(channels):
-            st = chans[c]
-            for b in block[pos + 4 * c : pos + 4 * c + 4]:
-                for nib in (b & 0x0F, b >> 4):
-                    st["pred"], st["idx"] = _ima_decode_nibble(nib, st["pred"], st["idx"])
-                    st["out"].append(st["pred"])
-        pos += 4 * channels
-    return [st["out"] for st in chans]
-
-
-def _wav_linear(audio_fmt, channels, bits, block_align, data):
-    """(n, channels) int64 linear samples for the decodable WAV codecs:
-    PCM (8-bit unsigned / 16-bit signed LE), G.711 µ-law (7) and A-law
-    (6), IMA ADPCM (17). Anything else raises NotImplementedError →
-    byte-feature fallback."""
-    import numpy as np
-
-    if channels < 1:
-        raise ValueError("WAV with zero channels")
-    if audio_fmt == 1:
-        if bits == 8:
-            arr = np.frombuffer(data, dtype=np.uint8).astype(np.int64)
-        elif bits == 16:
-            arr = np.frombuffer(data[: len(data) // 2 * 2], dtype="<i2").astype(np.int64)
-        else:
-            raise NotImplementedError("only 8/16-bit PCM decodable")
-    elif audio_fmt in (6, 7):
-        lut = np.asarray(_ALAW if audio_fmt == 6 else _ULAW, dtype=np.int64)
-        arr = lut[np.frombuffer(data, dtype=np.uint8)]
-    elif audio_fmt == 17:
-        if block_align < 4 * channels:
-            raise ValueError("IMA ADPCM block_align smaller than its headers")
-        per_chan: list[list[int]] = [[] for _ in range(channels)]
-        for base in range(0, len(data) - len(data) % block_align, block_align):
-            for c, smp in enumerate(_ima_decode_block(data[base : base + block_align], channels)):
-                per_chan[c].extend(smp)
-        if not per_chan[0]:
-            raise ValueError("empty IMA ADPCM data chunk")
-        arr = np.stack([np.asarray(c, dtype=np.int64) for c in per_chan], axis=1)
-        return arr
-    else:
-        raise NotImplementedError(f"WAV format tag {audio_fmt} not decodable")
-    n = len(arr) // channels
-    if n == 0:
-        raise ValueError("empty WAV data chunk")
-    return arr[: n * channels].reshape(n, channels)
-
-
 def _decode_audio(payload: bytes) -> dict:
-    """Pure-stdlib(+numpy) WAV decode (RIFF chunk walk): PCM, G.711
-    µ-law/A-law (ITU-T G.711), IMA ADPCM (format tag 0x11). Other codecs
-    raise NotImplementedError → byte-level features. ``mean_value`` for
-    PCM keeps the original raw-data-byte mean (the oracle-pinned
-    contract for the fixture assets); for the companded/ADPCM codecs it
-    is the mean of the DECODED linear samples (the raw bytes are code
-    words — averaging them would be meaningless)."""
-    audio_fmt, channels, sample_rate, bits, block_align, data = _wav_parse(payload)
-    if audio_fmt == 1:
-        if bits not in (8, 16):
-            raise NotImplementedError("only 8/16-bit PCM decodable")
-        n_samples = len(data) // max(1, (bits // 8) * channels)
-        mean = round(sum(data) / len(data), 6) if data else 0.0
-    else:
-        samples = _wav_linear(audio_fmt, channels, bits, block_align, data)
-        n_samples = samples.shape[0]
-        mean = round(float(samples.mean()), 6)
+    """Pure-stdlib WAV metadata (RIFF chunk walk) for 8/16-bit PCM, the
+    one audio coding the asset tables carry. Other codings raise
+    NotImplementedError → byte-level features. ``mean_value`` is the
+    raw-data-byte mean (the oracle-pinned contract for the fixture
+    assets)."""
+    audio_fmt, channels, sample_rate, bits, data = _wav_parse(payload)
+    if audio_fmt != 1:
+        raise NotImplementedError(f"WAV format tag {audio_fmt} not decodable")
+    if bits not in (8, 16):
+        raise NotImplementedError("only 8/16-bit PCM decodable")
     return {
         "channels": channels,
         "sample_rate": sample_rate,
-        "n_samples": n_samples,
-        "mean_value": mean,
+        "n_samples": len(data) // max(1, (bits // 8) * channels),
+        "mean_value": round(sum(data) / len(data), 6) if data else 0.0,
     }
+
 
 
 def _byte_features(payload: bytes) -> dict:
@@ -1337,11 +259,9 @@ def extract_features(
                         struct.error,
                     ):
                         # undecodable -> byte features only. Truncated
-                        # headers surface as struct.error/IndexError; a
-                        # malformed-but-parseable JPEG can also raise
-                        # KeyError (SOS referencing an undefined DHT/DQT
-                        # table id) or ZeroDivisionError (zero sampling
-                        # factor in SOF) — ADVICE r5.
+                        # headers surface as struct.error/IndexError; the
+                        # tuple stays broad because payloads are untrusted
+                        # and no malformed one may fail the task.
                         decoded = None
                 row = {
                     "asset_id": asset_id,
@@ -1478,70 +398,15 @@ def resize_images(assets: DataFrame, width: int = 64, height: int = 64) -> DataF
 
 
 def _decode_gray3(payload: bytes):
-    """(h, w) int64 channel-sum pixel grid (r+g+b; grayscale scaled ×3 to
-    stay on the same scale) — the pixel feed for the perceptual-hash
-    path. PPM (P6) and uncompressed 24/32-bit BMP parse their rasters
-    directly; JPEG (baseline + progressive), PNG, and GIF (incl.
-    de-interlace) ride the decoders' pixel capture. Formats past the
-    decoder capabilities raise NotImplementedError and are excluded from
-    pHash dedup (honest gap, same contract as the decoder fallbacks)."""
+    """(h, w) int64 channel-sum pixel grid (r+g+b) of a binary PPM (P6) —
+    the pixel feed for the perceptual-hash path. Other formats raise
+    NotImplementedError and are excluded from pHash dedup (same contract
+    as the decoder fallbacks)."""
     import numpy as np
 
-    if payload[:2] == b"\xff\xd8":
-        px: list = []
-        _decode_jpeg(payload, _pixels_out=px)
-        return px[0]
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        px = []
-        _decode_png(payload, _pixels_out=px)
-        return px[0]
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        px = []
-        _decode_gif(payload, _pixels_out=px)
-        return px[0]
-    if payload[:2] == b"P6":
-        vals: list[int] = []
-        i = 2
-        while len(vals) < 3:
-            while i < len(payload) and payload[i : i + 1].isspace():
-                i += 1
-            if payload[i : i + 1] == b"#":
-                while i < len(payload) and payload[i] != 0x0A:
-                    i += 1
-                continue
-            j = i
-            while j < len(payload) and not payload[j : j + 1].isspace():
-                j += 1
-            vals.append(int(payload[i:j]))
-            i = j
-        i += 1
-        w, h, _maxval = vals
-        raster = payload[i : i + w * h * 3]
-        if len(raster) < w * h * 3:
-            raise ValueError(f"truncated PPM raster: {len(raster)} < {w * h * 3}")
-        arr = np.frombuffer(raster, dtype=np.uint8).astype(np.int64).reshape(h, w, 3)
-        return arr.sum(axis=2)
-    if payload[:2] == b"BM":
-        (data_off,) = struct.unpack_from("<I", payload, 10)
-        w, h = struct.unpack_from("<ii", payload, 18)
-        (bpp,) = struct.unpack_from("<H", payload, 28)
-        (compression,) = struct.unpack_from("<I", payload, 30)
-        if compression != 0 or bpp not in (24, 32):
-            raise NotImplementedError("only uncompressed 24/32-bit BMP decodable")
-        nch = bpp // 8
-        stride = (w * nch + 3) // 4 * 4
-        top_down = h < 0
-        h = abs(h)
-        rows = []
-        for r in range(h):
-            src_r = r if top_down else h - 1 - r
-            line = payload[data_off + src_r * stride : data_off + src_r * stride + w * nch]
-            if len(line) < w * nch:
-                raise ValueError("truncated BMP raster")
-            px = np.frombuffer(line, dtype=np.uint8).astype(np.int64).reshape(w, nch)
-            rows.append(px[:, :3].sum(axis=1))  # BGR sum == RGB sum; alpha dropped
-        return np.stack(rows)
-    raise NotImplementedError("pixel decode: PPM/BMP/JPEG/PNG/GIF only")
+    w, h, raster = _ppm_raster(payload)
+    return np.frombuffer(raster, dtype=np.uint8).astype(np.int64).reshape(h, w, 3).sum(axis=2)
+
 
 
 def _dhash_words(gray3, hash_size: int = 8) -> tuple[int, int]:
@@ -1691,14 +556,28 @@ def _hamming_pairs_words(sig: DataFrame, max_hamming: int) -> DataFrame:
 
 
 def _decode_pcm_samples(payload: bytes):
-    """1-D int64 channel-sum sample vector from a decodable WAV — the
-    audio analog of _decode_gray3 (channels summed to stay
-    integer-exact). Rides _wav_linear, so the dHash path hears G.711
-    µ-law/A-law and IMA ADPCM payloads as the same linear samples the
-    metadata decoder reports (8-bit PCM unsigned, 16-bit signed; the
-    companded/ADPCM codecs decode to 16-bit linear)."""
-    audio_fmt, channels, _sr, bits, block_align, data = _wav_parse(payload)
-    return _wav_linear(audio_fmt, channels, bits, block_align, data).sum(axis=1)
+    """1-D int64 channel-sum sample vector from a PCM WAV — the audio
+    analog of _decode_gray3 (channels summed to stay integer-exact;
+    8-bit PCM unsigned, 16-bit signed LE). Any other coding raises
+    NotImplementedError and is excluded from audio dHash dedup."""
+    import numpy as np
+
+    audio_fmt, channels, _sr, bits, data = _wav_parse(payload)
+    if channels < 1:
+        raise ValueError("WAV with zero channels")
+    if audio_fmt != 1:
+        raise NotImplementedError(f"WAV format tag {audio_fmt} not decodable")
+    if bits == 8:
+        arr = np.frombuffer(data, dtype=np.uint8).astype(np.int64)
+    elif bits == 16:
+        arr = np.frombuffer(data[: len(data) // 2 * 2], dtype="<i2").astype(np.int64)
+    else:
+        raise NotImplementedError("only 8/16-bit PCM decodable")
+    n = len(arr) // channels
+    if n == 0:
+        raise ValueError("empty WAV data chunk")
+    return arr[: n * channels].reshape(n, channels).sum(axis=1)
+
 
 
 def _audio_dhash_words(samples, hash_size: int = 8) -> tuple[int, int]:

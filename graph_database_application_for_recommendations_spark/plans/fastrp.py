@@ -73,6 +73,10 @@ from ..functions.hints import gated_broadcast
 
 SPARSITY = 3
 
+# GDS's default iterationWeights: the first round's vectors are dropped,
+# rounds 2 and 3 are summed
+DEFAULT_ITERATION_WEIGHTS = (0.0, 1.0, 1.0)
+
 # Driver-side exact solve below this many (undirected-doubled) edges —
 # ~100 MB of (src, dst, weight) rows, far below driver heap. Same hybrid
 # pattern as plans/louvain.py's sequential coarse solve: a graph this size
@@ -341,7 +345,7 @@ def fastrp(
     nodes: DataFrame,
     edges: DataFrame,
     dim: int = 64,
-    iteration_weights: tuple[float, ...] = (0.0, 1.0, 1.0),
+    iteration_weights: tuple[float, ...] = DEFAULT_ITERATION_WEIGHTS,
     seed: int = 42,
     local_max_edges: int = LOCAL_MAX_EDGES,
 ) -> DataFrame:
@@ -367,7 +371,9 @@ def fastrp(
     # (see module docstring) — and it spreads the per-iteration kernel
     # across the cluster even when the source was a single narrow file
     par = nodes.sparkSession.sparkContext.defaultParallelism
+    pre_gate = edges
     edges = cache_wide(edges, par, "dst")
+    pre_gate.unpersist(blocking=False)  # cache_wide has filled its own copy
     n_nodes = nodes.count()
     cols = _ecols(dim)
     # left lazy: the init table's only consumer is round 0's broadcast (or

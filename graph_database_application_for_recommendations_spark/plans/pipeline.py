@@ -27,8 +27,7 @@ from .modularity import modularity
 def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
     """Driver-local FastRP over the bipartite rating graph, skipping the
     string-keyed graph materialization: ``(ids, final, user_ids, user_mat)``
-    or ``None`` when the doubled edge count exceeds the local gate or an
-    isbn key does not round-trip its int64 parse.
+    or ``None`` when the doubled edge count exceeds the local gate.
 
     Bit-identical to ``fastrp(*bipartite_rating_graph(ratings))`` on this
     graph family (pinned by test_pipeline_local_arrays_match_generic_path):
@@ -40,12 +39,11 @@ def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
       cache's scan order — exactly ``concat([u→b], [b→u])`` over one
       collect of the directed rows (same cached scan, same projection);
     - node NUMBERING is free (see ``_fastrp_local_solve``: every node's
-      output column is independent of the ordinal scheme), so users/books
-      map through numeric searchsorted instead of the generic path's
-      2·|E| string-hash lookups — the isbn key is ``CAST(partkey AS
-      VARCHAR)`` (sources/views.py), so the int64 parse round-trips; a
-      key that does not (non-digit, zero-padded) returns ``None`` and the
-      caller takes the generic path;
+      output column is independent of the ordinal scheme), so users map
+      through a numeric searchsorted and books through one
+      ``pd.factorize`` of the isbn strings (uniques ranked in string
+      order) instead of the generic path's 2·|E| string-hash lookups —
+      any isbn string maps, non-digit and zero-padded keys included;
     - bipartite graphs built from the rating list have no isolated nodes
       by construction (every node id comes from a rating row), matching
       the generic path's ``has_isolated == False`` branch.
@@ -57,6 +55,7 @@ def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
     string-hash id→ordinal lookups.
     """
     import numpy as np
+    import pandas as pd
 
     ratings = ratings.cache()  # no-op when the caller already cached it
     n_directed = ratings.count()
@@ -66,22 +65,19 @@ def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
         "user_id", "isbn", F.col("rating").cast("double").alias("weight")
     ).toPandas()
     users = ep["user_id"].to_numpy(dtype=np.int64)
-    isbn = ep["isbn"].to_numpy()
-    try:
-        books = isbn.astype(np.int64)
-    except (TypeError, ValueError, OverflowError):
-        return None  # a non-digit key: the generic string-keyed path takes it
     w_dir = ep["weight"].to_numpy(dtype=np.float64)
     u_sorted = np.unique(users)
-    b_sorted = np.unique(books)
-    b_keys = b_sorted.astype("U")
-    nb = len(b_sorted)
+    # factorize hashes the |E| isbn strings once and only the distinct
+    # keys get sorted; np.unique would sort all |E| strings
+    codes, uniques = pd.factorize(ep["isbn"])
+    b_keys = uniques.to_numpy().astype("U")
+    order = np.argsort(b_keys)
+    b_keys = b_keys[order]
+    rank = np.empty_like(order)
+    rank[order] = np.arange(len(order))
+    nb = len(b_keys)
     u_ord = nb + np.searchsorted(u_sorted, users)
-    b_ord = np.searchsorted(b_sorted, books)
-    # every key must round-trip its parse: "0123" parses to 123, but its
-    # node is b:0123, not b:123
-    if not (b_keys[b_ord] == isbn).all():
-        return None
+    b_ord = rank[codes]
     # doubled edges in the generic path's collected row order
     src = np.concatenate([u_ord, b_ord])
     dst = np.concatenate([b_ord, u_ord])
@@ -93,7 +89,7 @@ def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
         ]
     ).astype(object)
     final = _fastrp._fastrp_local_solve(
-        ids, src, dst, w, dim, (0.0, 1.0, 1.0), seed
+        ids, src, dst, w, dim, _fastrp.DEFAULT_ITERATION_WEIGHTS, seed
     )
     # the user block, ids ascending — what user_embeddings_from_fastrp +
     # knn_exact_local's sort would produce (numeric sort == the cast-long

@@ -129,6 +129,21 @@ def test_fastrp_distributed_zero_fill_matches_local(spark, weights):
         assert dist[nid] == pytest.approx(vec, abs=1e-9)
 
 
+def test_fastrp_distributed_releases_pre_gate_edge_cache(spark):
+    """The gate count caches the caller's edge list; the distributed path
+    iterates over its own dst-partitioned copy, so that first cache must
+    not outlive the call (the local path already releases it)."""
+    from pyspark import StorageLevel
+
+    pairs = [("n0", "n1", 1.0), ("n1", "n2", 2.0), ("n2", "n0", 3.0)]
+    edges = spark.createDataFrame(
+        pairs + [(d, s, w) for s, d, w in pairs], "src string, dst string, weight double"
+    )
+    nodes = spark.createDataFrame([(f"n{i}",) for i in range(3)], "node_id string")
+    assert len(fastrp(nodes, edges, dim=8, local_max_edges=0).collect()) == 3
+    assert edges.storageLevel == StorageLevel.NONE
+
+
 def test_fastrp_distributed_py4j_round_trip_budget(spark, monkeypatch):
     """Each wide (dim-column) plan node of the distributed path is built by
     one batched expression-list call. Building them one Column at a time

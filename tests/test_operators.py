@@ -789,6 +789,43 @@ def test_bench_record_names_frozen_to_r10_snapshot():
     assert list(rec["queries"])[: len(_R10_RECORD_NAMES)] == _R10_RECORD_NAMES
 
 
+def test_bench_record_carries_cpus_and_parallelism():
+    import json
+
+    import bench
+
+    rec = json.loads(bench.format_record({"q_a": 1.0, "q_b": 2.5}, 3.5, 0.1, 8, 1, None, 16))
+    assert (rec["cpus"], rec["defaultParallelism"]) == (8, 16)
+    assert rec["queries"] == {"a": 1, "b": 2.5}
+
+
+def test_bench_record_names_refuse_collapsing_keys():
+    """``q_foo`` and ``foo`` strip to one name: the record would drop one
+    timing and misalign the rest, so naming fails instead."""
+    import bench
+
+    with pytest.raises(ValueError, match="collapse"):
+        bench.record_names(["q_foo", "foo"])
+    with pytest.raises(ValueError, match="collapse"):
+        bench.format_record({"q_foo": 1.0, "foo": 2.0}, 3.0, 0.1, 8, 1)
+    # a truncation collision still gets its ~N suffix
+    assert list(bench.record_names(["q_abcdefgh", "q_abcdefgi"]).values()) == [
+        "abcdefg", "abcdefg~1",
+    ]
+
+
+def test_bench_record_over_budget_raises(monkeypatch):
+    """Past the last rung of the compaction ladder the record must fail
+    loudly, not be printed longer than the driver's tail keeps."""
+    import bench
+
+    timings = {f"q_{i:03d}": 12.34 for i in range(40)}
+    assert len(bench.format_record(timings, 493.6, 0.1, 8, 1)) <= bench.RECORD_BUDGET
+    monkeypatch.setattr(bench, "RECORD_BUDGET", 100)
+    with pytest.raises(ValueError, match="RECORD_BUDGET"):
+        bench.format_record(timings, 493.6, 0.1, 8, 1)
+
+
 def test_ab_drift_median_of_alternating_draws(monkeypatch):
     """Round-9 VERDICT: a single A/B draw scatters ±0.2-0.3 on this box, so
     drift_ab is now the median of alternating prev/cur draws with the

@@ -632,11 +632,11 @@ def test_pipeline_local_arrays_match_generic_path(spark):
     ratings.unpersist(blocking=False)
 
 
-def test_pipeline_falls_back_on_non_canonical_isbn(spark, monkeypatch):
-    """An isbn that does not round-trip its int64 parse — a non-digit key,
-    or a zero-padded one that would silently become another node ("0123"
-    -> b:123) — makes the bipartite arrays path decline, and run_pipeline's
-    embeddings come from the generic string-keyed path instead."""
+def test_pipeline_arrays_path_accepts_non_canonical_isbn(spark, monkeypatch):
+    """Any isbn string takes the bipartite arrays path — a non-digit key,
+    and a zero-padded one next to its unpadded twin ("0123" and "123" are
+    two books) — and gives exactly the generic string-keyed path's
+    embeddings, both from the arrays themselves and from run_pipeline."""
     from types import SimpleNamespace
 
     from graph_database_application_for_recommendations_spark.plans import (
@@ -649,23 +649,29 @@ def test_pipeline_falls_back_on_non_canonical_isbn(spark, monkeypatch):
 
     ratings = spark.createDataFrame(
         [(1, "0123", 5), (1, "X12", 3), (2, "0123", 4), (2, "77", 2),
-         (3, "77", 1), (3, "X12", 4)],
+         (3, "77", 1), (3, "X12", 4), (3, "123", 2), (4, "123", 5)],
         "user_id bigint, isbn string, rating int",
-    )
-    for bad in ("0123", "X12"):  # either key alone makes the path decline
-        only = ratings.filter(F.col("isbn").isin(bad, "77"))
-        assert pipeline._bipartite_fastrp_arrays(only, 16, 7) is None
+    ).cache()
     nodes, edges = bipartite_rating_graph(ratings)
-    generic = _fastrp.fastrp(nodes, edges, dim=16, seed=7)
-    assert {"b:0123", "b:X12"} <= {r["node_id"] for r in generic.collect()}
-    want = {
-        r["user_id"]: r["embedding"]
-        for r in _fastrp.user_embeddings_from_fastrp(generic).collect()
+    generic = {
+        r["node_id"]: r["embedding"]
+        for r in _fastrp.fastrp(nodes, edges, dim=16, seed=7).collect()
     }
+    assert {"b:0123", "b:123", "b:X12"} <= set(generic)
+    arr = pipeline._bipartite_fastrp_arrays(ratings, 16, 7)
+    assert arr is not None
+    ids, final, _, _ = arr
+    got_all = {
+        r["node_id"]: r["embedding"]
+        for r in _fastrp.embeddings_df_from_arrays(spark, ids, final).collect()
+    }
+    assert got_all == generic  # exact doubles, every node
     monkeypatch.setattr(
         pipeline, "load_ref_tables", lambda spark, sf_dir: SimpleNamespace(ratings=ratings)
     )
     res = pipeline.run_pipeline(spark, "unused", dim=16, seed=7)
     got = {r["user_id"]: r["embedding"] for r in res.embeddings.collect()}
-    assert got == want and set(got) == {1, 2, 3}
+    assert got == {int(k[2:]): v for k, v in generic.items() if k.startswith("u:")}
+    assert set(got) == {1, 2, 3, 4}
     res.embeddings.unpersist(blocking=False)
+    ratings.unpersist(blocking=False)
