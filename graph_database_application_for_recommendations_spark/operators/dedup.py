@@ -240,12 +240,12 @@ def jaccard_verify_pairs(
     from ..functions.hints import gated_broadcast
 
     docs = documents
-    # cache before the gate count: the sole engine caller hands in a
-    # materialized pair list (the count is a cheap rescan), but a lazy
-    # caller's plan would otherwise execute once for the count and again
-    # for each of the two intersection joins and the id semi-join
-    # (round-10 VERDICT item 5). The cache backs the returned plan.
-    p = pairs.select("doc_a", "doc_b").cache()
+    # no cache here: the sole engine caller (neardup_lsh_verified) hands in
+    # a materialized pair list, so the gate count is a cheap rescan and the
+    # joins below read the same pinned rows. A lazy caller's plan executes
+    # once for the count and again for each of the two intersection joins
+    # and the id semi-join — pin ``pairs`` first and own its release.
+    p = pairs.select("doc_a", "doc_b")
     n_pairs = p.count()
     # ≤ 2·|pairs| distinct ids; 48 B/row covers a long id or short string
     # key plus row overhead against the standard 256 MB broadcast budget

@@ -11,6 +11,7 @@ reference's Cypher reads node properties.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import cache, cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,9 +20,7 @@ from ..operators.corating import corating_edges
 from ..operators.knn import knn_exact_local, knn_exact_local_arrays, knn_ivf
 from ..sources.views import load_ref_tables
 from . import fastrp as _fastrp
-from . import lpa as _lpa
 from .graphs import bipartite_rating_graph
-from .modularity import modularity
 
 
 def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
@@ -29,15 +28,13 @@ def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
     string-keyed graph materialization: ``(ids, final, user_ids, user_mat)``
     or ``None`` when the doubled edge count exceeds the local gate.
 
-    Bit-identical to ``fastrp(*bipartite_rating_graph(ratings))`` on this
-    graph family (pinned by test_pipeline_local_arrays_match_generic_path):
+    Contract: the same rows as ``fastrp(*bipartite_rating_graph(ratings))``
+    up to float noise in the last ulps — the rows-only tolerance of the
+    ``q_pipeline_*`` queries, which round embedding values to 6dp:
 
     - the gate compares the same number (|doubled edges| = 2·|ratings|);
-    - the edge multiset and its ROW ORDER match the generic path's collect:
-      ``undirected(directed)`` is ``directed.unionByName(flipped)``, whose
-      collected order is [directed rows; flipped rows] each in the ratings
-      cache's scan order — exactly ``concat([u→b], [b→u])`` over one
-      collect of the directed rows (same cached scan, same projection);
+    - the edge multiset matches: ``[u→b]`` then ``[b→u]`` over one collect
+      of the directed rows is the generic path's ``undirected(directed)``;
     - node NUMBERING is free (see ``_fastrp_local_solve``: every node's
       output column is independent of the ordinal scheme), so users map
       through a numeric searchsorted and books through one
@@ -47,6 +44,12 @@ def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
     - bipartite graphs built from the rating list have no isolated nodes
       by construction (every node id comes from a rating row), matching
       the generic path's ``has_isolated == False`` branch.
+
+    The two paths are also bit-identical today, but only because Spark
+    collects ``directed.unionByName(flipped)`` as [directed rows; flipped
+    rows], each in the ratings cache's scan order, which fixes the edge
+    ROW ORDER and so the float summation order. Spark does not promise
+    that order; test_pipeline_local_arrays_match_generic_path pins it.
 
     What this removes vs the generic local path, per run (guide §4 shrink
     the Python boundary, §1.2 don't compute what you throw away): the
@@ -100,10 +103,10 @@ def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
 class PipelineResult:
     """Lazily-evaluated pipeline stages.
 
-    The community stage (LPA/Louvain) runs driver-side iteration loops with
+    The community stage (Louvain) runs driver-side iteration loops with
     actions inside — eager construction would pay that cost even for
-    callers that only read ``similar_to``. Each stage materializes on first
-    access and is cached; ``similar_to``/``communities`` may be reassigned
+    callers that only read ``similar_to``. Each stage runs on first access
+    and its result is kept; ``embeddings``/``similar_to`` may be reassigned
     (e.g. wrapped in ``.cache()``) by callers.
     """
 
@@ -116,46 +119,26 @@ class PipelineResult:
         self._embeddings_fn = embeddings_fn
         self._similar_to_fn = similar_to_fn
         self._communities_fn = communities_fn
-        self._embeddings: DataFrame | None = None
-        self._similar_to: DataFrame | None = None
-        self._communities: DataFrame | None = None
-        self._modularity: float | None = None
 
-    @property
+    @cached_property
     def embeddings(self) -> DataFrame:
-        if self._embeddings is None:
-            self._embeddings = self._embeddings_fn()
-        return self._embeddings
+        return self._embeddings_fn()
 
-    @property
+    @cached_property
     def similar_to(self) -> DataFrame:
-        if self._similar_to is None:
-            self._similar_to = self._similar_to_fn()
-        return self._similar_to
+        return self._similar_to_fn()
 
-    @similar_to.setter
-    def similar_to(self, df: DataFrame) -> None:
-        self._similar_to = df
-
-    def _run_communities(self) -> None:
-        if self._communities is None:
-            self._communities, self._modularity = self._communities_fn()
+    @cached_property
+    def _community_stage(self) -> tuple[DataFrame, float]:
+        return self._communities_fn()
 
     @property
     def communities(self) -> DataFrame:
-        self._run_communities()
-        return self._communities
-
-    @communities.setter
-    def communities(self, df: DataFrame) -> None:
-        self._communities = df
+        return self._community_stage[0]
 
     @property
     def modularity(self) -> float:
-        if self._modularity is None and self._communities is not None:
-            return float("nan")  # communities injected externally
-        self._run_communities()
-        return self._modularity
+        return self._community_stage[1]
 
 
 def run_pipeline(
@@ -165,10 +148,8 @@ def run_pipeline(
     dim: int = 64,
     knn_top_k: int = 20,
     knn_cutoff: float = 0.8,
-    lpa_max_iter: int = 10,
     seed: int = 42,
     knn_lsh_threshold: int = 50_000,
-    community_algorithm: str = "louvain",
 ) -> PipelineResult:
     """End-to-end algorithm pipeline over the reference-shaped tables.
 
@@ -194,12 +175,9 @@ def run_pipeline(
     # the driver-local FastRP solve (ids/matrix arrays), computed at most
     # once and shared by the embeddings AND similar_to stages — the KNN
     # stage then never round-trips the vectors through the JVM (guide §4)
-    _arrays: dict = {}
-
+    @cache
     def _local_fastrp():
-        if "v" not in _arrays:
-            _arrays["v"] = _bipartite_fastrp_arrays(ratings, dim, seed)
-        return _arrays["v"]
+        return _bipartite_fastrp_arrays(ratings, dim, seed)
 
     def _embeddings() -> DataFrame:
         # G2: FastRP on the undirected weighted bipartite graph (S9)
@@ -236,26 +214,16 @@ def run_pipeline(
                       top_k=knn_top_k, cutoff=knn_cutoff)
 
     def _communities() -> tuple[DataFrame, float]:
-        # G1: community detection on the co-rating projection (S10 + J3) —
-        # 'louvain' (the default, round-3 VERDICT item 5) matches the
-        # reference algorithm (Alg_Community_Detection.py:36-50); 'lpa'
-        # stays available as the cheaper single-level option with the
-        # same interface
+        # G1: Louvain community detection on the co-rating projection
+        # (S10 + J3) — the reference algorithm (Alg_Community_Detection.py:36-50)
+        from .louvain import louvain
+
         co = corating_edges(ratings).select(
             F.col("u1").alias("src"), F.col("u2").alias("dst"),
             F.col("weight").cast("double").alias("weight"),
         )
-        if community_algorithm == "louvain":
-            from .louvain import louvain
-
-            nodes_comm, q = louvain(co)
-            comm = nodes_comm.select(F.col("node_id").alias("user_id"), "community")
-        else:
-            comm = _lpa.label_propagation(co, max_iter=lpa_max_iter).select(
-                F.col("node_id").alias("user_id"), "community"
-            )
-            q = modularity(co, comm.select(F.col("user_id").alias("node_id"), "community"))
-        return comm, q
+        nodes_comm, q = louvain(co)
+        return nodes_comm.select(F.col("node_id").alias("user_id"), "community"), q
 
     result = PipelineResult(_embeddings, _similar_to, _communities)
 

@@ -99,7 +99,7 @@ def get_recommender(
 ) -> Recommender:
     """The streamlit dispatch analog: pick 'knn' or 'community'
     (reference ``streamlit_app.py:73-76``), running the algorithm pipeline
-    (FastRP/KNN/LPA write-backs) if no precomputed result is supplied."""
+    (FastRP/KNN/Louvain write-backs) if no precomputed result is supplied."""
     ref = load_ref_tables(spark, sf_dir)
     if pipeline is None:
         pipeline = run_pipeline(spark, sf_dir, knn_cutoff=0.6)

@@ -353,9 +353,62 @@ def test_pipeline_default_community_is_louvain(spark):
     from graph_database_application_for_recommendations_spark.plans.pipeline import run_pipeline
 
     q_louvain = run_pipeline(spark, SF_SMALL).modularity
-    q_lpa = run_pipeline(spark, SF_SMALL, community_algorithm="lpa").modularity
+    co = corating_edges(load_ref_tables(spark, SF_SMALL).ratings).select(
+        F.col("u1").alias("src"), F.col("u2").alias("dst"),
+        F.col("weight").cast("double").alias("weight"))
+    q_lpa = modularity(co, label_propagation(co, max_iter=10))
     assert q_louvain > 0.0
     assert q_louvain >= q_lpa
+
+
+def _count_calls(monkeypatch, module, name: str) -> list:
+    """Wrap ``module.name`` so each call appends to the returned list."""
+    calls: list = []
+    real = getattr(module, name)
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, counting)
+    return calls
+
+
+def test_registry_memo_runs_stage_once_until_reset(spark, monkeypatch):
+    """A memoized registry stage runs once per session: a second call
+    returns the same DataFrame without re-running it, and reset_caches()
+    makes the next call run it again."""
+    from graph_database_application_for_recommendations_spark import registry
+    from graph_database_application_for_recommendations_spark.operators import recommend
+
+    monkeypatch.setattr(registry, "_STAGE_CACHE", {})
+    calls = _count_calls(monkeypatch, recommend, "holdout_hit_flags")
+    first = registry._holdout_flags(spark, SF_SMALL)
+    assert registry._holdout_flags(spark, SF_SMALL) is first
+    assert len(calls) == 1
+    registry.reset_caches()
+    assert registry._holdout_flags(spark, SF_SMALL) is not first
+    assert len(calls) == 2
+
+
+def test_registry_pipeline_memo_defers_community_stage(spark, monkeypatch):
+    """_pipeline pins similar_to without running Louvain; the community
+    stage runs once, on first access, and modularity reads that run."""
+    from graph_database_application_for_recommendations_spark import registry
+    from graph_database_application_for_recommendations_spark.plans import louvain
+
+    monkeypatch.setattr(registry, "_STAGE_CACHE", {})
+    calls = _count_calls(monkeypatch, louvain, "louvain")
+    res = registry._pipeline(spark, SF_SMALL)
+    assert registry._pipeline(spark, SF_SMALL) is res
+    assert res.similar_to.is_cached
+    assert calls == []
+    comm, q = registry._pipeline_communities(spark, SF_SMALL)
+    assert len(calls) == 1
+    assert comm.is_cached and res.communities is comm
+    assert res.modularity == q
+    assert registry._pipeline_communities(spark, SF_SMALL)[0] is comm
+    assert len(calls) == 1
 
 
 def test_louvain_modularity_matches_duckdb(spark):

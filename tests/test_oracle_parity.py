@@ -456,6 +456,71 @@ def test_no_raw_broadcast_hints_engine_wide():
     )
 
 
+def test_no_module_level_cache_containers():
+    """Stage results a session reuses have ONE owner: the registry's
+    ``_session_memo`` over ``_STAGE_CACHE``. A library module that binds a
+    module-level ``_*CACHE*`` / ``_*MEMO*`` dict or list grows a second,
+    unowned memo whose entries outlive every query that filled them and
+    escape ``registry.reset_caches()``. AST walk over each module's
+    top-level assignments (a docstring or comment mentioning such a name
+    does not trip it)."""
+    import ast
+    import glob
+    import os
+    import re
+
+    allowed = {
+        "registry.py::_STAGE_CACHE": "the single per-session stage memo",
+        os.path.join("operators", "pq.py") + "::_LAST_ROTATED_CACHE": (
+            "one-slot rotated-corpus release until a query-scoped owner "
+            "exists (ROADMAP direction 3)"
+        ),
+    }
+    containers = (ast.Dict, ast.List, ast.DictComp, ast.ListComp)
+    factories = {"dict", "list", "defaultdict", "OrderedDict"}
+
+    def is_container(value) -> bool:
+        if isinstance(value, containers):
+            return True
+        if isinstance(value, ast.Call):
+            f = value.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            return name in factories
+        return False
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "graph_database_application_for_recommendations_spark",
+    )
+    found = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), filename=rel)
+        for node in tree.body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            for t in targets:
+                if (
+                    isinstance(t, ast.Name)
+                    and re.fullmatch(r"_\w*(CACHE|MEMO)\w*", t.id, re.IGNORECASE)
+                    and is_container(value)
+                ):
+                    found.append(f"{rel}::{t.id}")
+    offenders = sorted(set(found) - set(allowed))
+    assert not offenders, (
+        f"module-level cache containers outside the registry memo: {offenders} "
+        f"(memoize per-session stages with registry._session_memo)"
+    )
+    assert set(allowed) <= set(found), (
+        f"stale allow-list entries: {sorted(set(allowed) - set(found))}"
+    )
+
+
 def test_gate_node_vector_broadcast_switches_on_count(spark):
     """The shared gate must broadcast (with the witness alias) under the
     byte budget and fall back to the bare frame over it — the exact louvain

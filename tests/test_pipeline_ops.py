@@ -93,6 +93,23 @@ def test_jaccard_verify_pairs_matches_exact_kernel(spark, docs_with_dups):
     assert restricted == exact
 
 
+def test_jaccard_verify_pairs_leaves_no_cache_entry(spark, docs_with_dups):
+    """jaccard_verify_pairs pins nothing: its engine caller hands in a
+    materialized candidate list and owns that pin, so a cache of the pair
+    list here would be a second, unowned copy that outlives the query."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    identity = spark._jvm.System.identityHashCode
+
+    def entries():
+        data = cm.cachedData()
+        return {identity(data.apply(i)) for i in range(data.size())}
+
+    before = entries()
+    pairs = spark.createDataFrame([(1, 2), (1, 3)], "doc_a LONG, doc_b LONG")
+    dedup.jaccard_verify_pairs(docs_with_dups, pairs, threshold=0.0).collect()
+    assert entries() <= before
+
+
 def test_jaccard_verify_pairs_subset_semi_join_restriction(spark, docs_with_dups):
     """A strict SUBSET of the candidate pairs (so the round-10 semi-join
     pre-filter actually drops corpus docs before the shingle explode)
