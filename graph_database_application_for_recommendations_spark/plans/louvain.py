@@ -21,12 +21,19 @@ community implementations, public):
    stops improving or ``max_levels`` is reached.
 
 Every step is joins + groupBys over (node, community, weight) tuples —
-shuffle-partitioned, no driver-side per-node state.
+shuffle-partitioned, no driver-side per-node state. The input is evaluated
+once (one cache serves the size gate and either path); a distributed level
+keeps one label table per sweep, ``(node_id, community, deg, tot)``, read
+through count-gated broadcasts by the src-partitioned edge cache, so a
+sweep plans no edge shuffle. Everything Louvain pins is released before it
+returns except the checkpoint the result reads.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import cache_wide, gate_node_vector_broadcast, materialize, release_checkpoint
@@ -34,130 +41,134 @@ from ..functions.hints import gated_broadcast
 from .modularity import modularity
 
 
+def _release(df: DataFrame) -> None:
+    """Drop ``df``'s cache entry or checkpoint blocks, whichever it holds."""
+    df.unpersist(blocking=False)
+    release_checkpoint(df)
+
+
 def _local_move(edges: DataFrame, max_sweeps: int) -> DataFrame:
     """One Louvain phase on ``edges`` (undirected-doubled src,dst,weight).
 
-    Returns (node_id, community); keeps the best-modularity assignment
-    across sweeps.
+    Returns (node_id, community): the last sweep's assignment.
 
-    Physical note: per-sweep label/degree tables come out of
-    ``plans.materialize`` as LogicalRDDs with no size stats, which Catalyst
-    will never auto-broadcast. Left un-hinted, every sweep's
-    edges ⋈ labels join plans as a sort-merge join that re-shuffles the
-    whole edge list. We gate an explicit broadcast on the node count
-    (node tables are |V|, tiny next to |E|); graphs too big to broadcast
-    fall back to the shuffle join.
+    Physical note: the label table ``(node_id, community, deg, tot)`` is
+    the only per-sweep state (``tot``, the degree sum of the node's
+    community, is attached by a window as each table is built). Checkpoints
+    carry no size stats, so Catalyst never auto-broadcasts them: both
+    lookups, ``dst → (c, tot_c)`` and ``src → (c_own, deg)``, broadcast the
+    table behind one count gate (graphs too big for that take shuffle
+    joins). On the src-partitioned edge cache the ``(src, c)`` aggregate
+    and the argmax then run exchange-free, so a sweep is two broadcasts,
+    the window's |V|-row shuffle and the move count. The window stays off
+    the broadcast side, where it would draw a runtime bloom filter (a
+    shuffle of the active edges) into every sweep.
     """
     spark = edges.sparkSession
     par = spark.sparkContext.defaultParallelism
-    m2 = edges.agg(F.sum("weight")).collect()[0][0]
-    deg = (
+    # every node starts in its own community, so tot = deg
+    labels = (
         edges.groupBy("src").agg(F.sum("weight").alias("deg"))
-        .withColumnRenamed("src", "node_id")
+        .select(
+            F.col("src").alias("node_id"),
+            F.col("src").alias("community"),
+            "deg",
+            F.col("deg").alias("tot"),
+        )
         .coalesce(par)
         .cache()
     )
-    n_nodes = deg.count()
+    # one job fills the label table and sizes the level: |V| and 2m = Σ deg
+    n_nodes, m2 = labels.agg(F.count(F.lit(1)), F.sum("deg")).collect()[0]
     bc = gate_node_vector_broadcast(n_nodes, "louvain label table")
-    labels = materialize(deg.select("node_id", F.col("node_id").alias("community")))
     stale = 0
-    prev_pin: tuple[DataFrame, DataFrame] | None = None
 
     for sweep in range(max_sweeps):
-        dst_comm = labels.select(
-            F.col("node_id").alias("dst"), F.col("community").alias("c")
-        )
         # red/black gating: only nodes whose hash parity matches this sweep
         # may move — filtering the edge list on src parity BEFORE the
         # per-sweep join halves the sweep's dominant shuffle/agg (the
         # inactive half's argmax would be computed and then discarded)
-        active_edges = edges.filter(
-            F.pmod(F.hash("src"), F.lit(2)) == (sweep % 2)
-        )
+        def active(col: str):
+            return F.pmod(F.hash(col), F.lit(2)) == (sweep % 2)
+
         # k_i→c: weight from node i into community c (self-loops count into
-        # the node's own community like GDS does)
+        # the node's own community like GDS does); tot_c rides along as a
+        # grouping key (it is a function of c)
         k_ic = (
-            active_edges.join(bc(dst_comm), "dst")
-            .groupBy(F.col("src").alias("node_id"), "c")
+            edges.filter(active("src"))
+            .join(
+                bc(labels.select(
+                    F.col("node_id").alias("dst"), F.col("community").alias("c"), "tot"
+                )),
+                "dst",
+            )
+            .groupBy(F.col("src").alias("node_id"), "c", "tot")
             .agg(F.sum("weight").alias("k_ic"))
         )
-        tot = labels.join(bc(deg), "node_id").groupBy("community").agg(
-            F.sum("deg").alias("tot")
+        cand = k_ic.join(
+            bc(labels.select("node_id", F.col("community").alias("c_own"), "deg")),
+            "node_id",
+        ).select(
+            "node_id",
+            "c",
+            "c_own",
+            "deg",
+            # remove own degree from tot when evaluating the current
+            # community (standard ΔQ bookkeeping)
+            (
+                F.col("k_ic")
+                - F.col("deg")
+                * (
+                    F.col("tot")
+                    - F.when(F.col("c") == F.col("c_own"), F.col("deg")).otherwise(F.lit(0.0))
+                )
+                / F.lit(m2)
+            ).alias("gain"),
         )
-        cand = (
-            k_ic.join(bc(tot), k_ic.c == tot.community)
-            .join(bc(deg), "node_id")
-            .join(bc(labels.select("node_id", F.col("community").alias("c_own"))), "node_id")
-            .select(
-                "node_id",
-                "c",
-                "c_own",
-                # remove own degree from tot when evaluating the current
-                # community (standard ΔQ bookkeeping)
-                (
-                    F.col("k_ic")
-                    - F.col("deg")
-                    * (
-                        F.col("tot")
-                        - F.when(F.col("c") == F.col("c_own"), F.col("deg")).otherwise(F.lit(0.0))
-                    )
-                    / F.lit(m2)
-                ).alias("gain"),
-            )
-        )
-        # argmax via hash aggregate, not a row_number() sort-window: the
+        # argmax via aggregate, not a row_number() sort-window: the
         # aggregate gets a map-side partial combine and skips the per-sweep
         # full sort of the candidate table (tie-break gain desc, c asc —
-        # node/community ids are numeric, so max(-c) == min(c))
-        chosen = (
-            cand.groupBy("node_id")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("gain"),
-                        (-F.col("c")).alias("_neg_c"),
-                        F.col("c").alias("choice"),
-                    )
-                ).alias("best")
-            )
-            .select("node_id", F.col("best.choice").alias("choice"))
+        # node/community ids are numeric, so max(-c) == min(c)); c_own and
+        # deg are functions of node_id and ride along as grouping keys
+        chosen = cand.groupBy("node_id", "c_own", "deg").agg(
+            F.max(
+                F.struct(
+                    F.col("gain"),
+                    (-F.col("c")).alias("_neg_c"),
+                    F.col("c").alias("choice"),
+                )
+            ).alias("best")
         )
-        # ``chosen`` only contains this sweep's active-parity nodes (the
-        # edge prefilter above), so a left join + coalesce applies exactly
-        # their moves; inactive nodes keep their community. The convergence
-        # signal rides along as a ``_moved`` flag so ONE job both fills the
-        # new label cache and counts the moves — no separate old⋈new
-        # comparison pass per sweep. (With red/black gating the moves are
+        # every active node has an edge, so ``chosen`` holds exactly the
+        # active half; unioned with the inactive half's rows it is the next
+        # label table, with no labels ⋈ chosen shuffle. The convergence
+        # signal rides along as a ``_moved`` flag. LAZY checkpoint: the
+        # plan is truncated now (the next sweep reads this table twice;
+        # untruncated, the plan compounds every sweep) and the blocks fill
+        # during the move count, so one action both fills the next label
+        # table and counts the moves. (With red/black gating the moves are
         # monotone enough that a per-sweep exact-Q guard isn't worth a
         # 2-join pass over the edge list; the per-level Q guard in
         # louvain() still rejects a non-improving level.)
-        flagged = (
-            labels.join(chosen, "node_id", "left")
-            .select(
+        nxt = (
+            chosen.select(
                 "node_id",
-                F.coalesce("choice", "community").alias("community"),
-                (
-                    F.col("choice").isNotNull()
-                    & (F.col("choice") != F.col("community"))
-                ).alias("_moved"),
+                F.col("best.choice").alias("community"),
+                "deg",
+                (F.col("best.choice") != F.col("c_own")).alias("_moved"),
             )
-            .coalesce(par)
-            .cache()
+            .unionByName(
+                labels.filter(~active("node_id")).select(
+                    "node_id", "community", "deg", F.lit(False).alias("_moved")
+                )
+            )
+            .withColumn("tot", F.sum("deg").over(Window.partitionBy("community")))
+            .localCheckpoint(eager=False)
         )
-        changed = flagged.filter("_moved").count()
-        # LAZY checkpoint: plan truncation now (the next sweep references
-        # this table ~5 times — untruncated that compounds 5^sweeps), block
-        # materialization riding the next sweep's fill job, which reads the
-        # flagged cache filled by the count above. The superseded sweep's
-        # resources are dead once this fill has run.
-        new_labels = flagged.select("node_id", "community").localCheckpoint(eager=False)
-        if prev_pin is not None:
-            p_cache, p_ck = prev_pin
-            p_cache.unpersist(blocking=False)
-            p_ck.unpersist(blocking=False)
-            release_checkpoint(p_ck)
-        prev_pin = (flagged, new_labels)
-        labels = new_labels
+        changed = nxt.filter("_moved").count()
+        # the table this sweep read is dead once the next one is filled
+        _release(labels)
+        labels = nxt
         if changed == 0:
             # a half-sweep may be flat while the other half still has
             # moves; stop only after both parities stall
@@ -167,7 +178,10 @@ def _local_move(edges: DataFrame, max_sweeps: int) -> DataFrame:
         else:
             stale = 0
 
-    return labels
+    # eager: the result's blocks are filled before its source is released
+    out = labels.select("node_id", "community").localCheckpoint()
+    _release(labels)
+    return out
 
 
 def _louvain_sequential(
@@ -320,25 +334,41 @@ def louvain(
     coarsening shrinks the graph geometrically, so even with a 100 TB
     input only level 0 (and rarely level 1) is distributed — the level-1
     supernode graph is usually thousands of nodes.
+
+    The size gate's count fills a cache of ``edges`` (unless the caller's
+    plan is already cached), which the local solve or the src-partitioned
+    copy then reads, so the upstream plan runs once. The returned frame
+    reads one checkpoint; every other cache and checkpoint made here is
+    released before returning.
     """
     spark = edges.sparkSession
     par = spark.sparkContext.defaultParallelism
-    if not (local_threshold and edges.count() <= local_threshold):
+    pinned = None  # the edge cache made here, released on return
+    n_edges = None
+    if local_threshold:
+        # one run of the upstream plan (the pipeline's co-rating self-join)
+        # serves the gate count and whichever path reads the edges next
+        if edges.storageLevel == StorageLevel.NONE:
+            edges = pinned = edges.cache()
+        n_edges = edges.count()
+    if n_edges is None or n_edges > local_threshold:
         # hash-partition the edge cache on src: every per-sweep aggregate
         # downstream groups on src or (src, c) after broadcast joins that
         # preserve the probe side's partitioning, and HashPartitioning(src)
         # satisfies both clustered distributions — so the sweeps' dominant
         # k_i→c aggregation and the per-node argmax both run exchange-free,
         # every sweep, for one setup shuffle (same strategy as FastRP's
-        # dst-partitioned cache). Skipped when level 0 solves locally —
-        # the local path reads the edges exactly once.
-        edges = cache_wide(edges, par, "src")
+        # dst-partitioned cache).
+        wide = cache_wide(edges, par, "src")
+        if pinned is not None:
+            _release(pinned)
+        edges = pinned = wide
     mapping: DataFrame | None = None  # original node_id -> current community
     cur_edges = edges
     prev_q = float("-inf")
 
     for level in range(max_levels):
-        if local_threshold and cur_edges.count() <= local_threshold:
+        if local_threshold and (n_edges if level == 0 else cur_edges.count()) <= local_threshold:
             pdf = cur_edges.toPandas()
             node_ids, comm_idx, q_local = _louvain_sequential(
                 pdf["src"].to_numpy(),
@@ -390,6 +420,8 @@ def louvain(
                     )
                 prev_q = q_local
             break
+        # a filled checkpoint: at the first level it becomes the mapping
+        # as is, no second copy
         labels = _local_move(cur_edges, max_sweeps)
         first_level = mapping is None
         composed = (
@@ -407,18 +439,25 @@ def louvain(
             edges, composed.select("node_id", "community")
         )
         if q <= prev_q + 1e-9:
+            _release(labels)  # never the mapping: the first level always improves on -inf
             break
-        prev_q, mapping = q, materialize(composed, supersedes=mapping)
-        prev_edges = cur_edges
-        cur_edges = materialize(_coarsen(cur_edges, labels))
+        prev_q = q
+        mapping = labels if first_level else materialize(composed, supersedes=mapping)
+        coarse = materialize(_coarsen(cur_edges, labels))
         # this level's labels and edge list are dead once the coarse graph
-        # and composed mapping are pinned (first level: composed IS labels,
-        # which now backs the mapping — keep it)
+        # and composed mapping are pinned (first level: labels IS the
+        # mapping — keep it)
         if not first_level:
-            labels.unpersist(blocking=False)
-        if prev_edges is not edges:
-            prev_edges.unpersist(blocking=False)
+            _release(labels)
+        if cur_edges is not edges:
+            _release(cur_edges)
+        cur_edges = coarse
 
+    # the returned frame reads only the mapping checkpoint
+    if cur_edges is not edges:
+        _release(cur_edges)
+    if pinned is not None:
+        _release(pinned)
     assert mapping is not None
     canon = mapping.groupBy("community").agg(F.min("node_id").alias("canon"))
     canon = gate_node_vector_broadcast(canon.count(), "canonical community ids")(canon)

@@ -68,3 +68,178 @@ def test_louvain_coarsening_merges_chain(spark):
     for a, b in pairs:
         assert got[a] == got[b]
     assert q > 0.3
+
+
+# --- distributed sweep: semantics, job budget, storage, input passes --------
+
+
+def _replica_local_move(edges, parity, max_sweeps):
+    """Plain-Python replica of ``plans.louvain._local_move``: synchronous
+    red/black sweeps (node parity = Spark's ``pmod(hash(id), 2)``), gain
+    k_i→c − deg_i·(tot_c − [c = c_own]·deg_i)/2m over the node's neighbour
+    communities, ties to the smallest c, stop after two stale half-sweeps.
+    Returns ({node: community}, number of equal-gain ties seen)."""
+    nbrs: dict[int, list[tuple[int, float]]] = {}
+    for s, d, w in edges:
+        nbrs.setdefault(s, []).append((d, w))
+    deg = {i: sum(w for _, w in nbrs[i]) for i in nbrs}
+    m2 = sum(deg.values())
+    comm = {i: i for i in nbrs}
+    ties = 0
+    stale = 0
+    for sweep in range(max_sweeps):
+        tot: dict[int, float] = {}
+        for i, c in comm.items():
+            tot[c] = tot.get(c, 0.0) + deg[i]
+        new = dict(comm)
+        changed = 0
+        for i in nbrs:
+            if parity[i] != sweep % 2:
+                continue
+            k_ic: dict[int, float] = {}
+            for d, w in nbrs[i]:
+                k_ic[comm[d]] = k_ic.get(comm[d], 0.0) + w
+            own = comm[i]
+            gains = {
+                c: k - deg[i] * (tot[c] - (deg[i] if c == own else 0.0)) / m2
+                for c, k in k_ic.items()
+            }
+            best = max(gains.values())
+            top = sorted(c for c, g in gains.items() if g == best)
+            ties += len(top) > 1
+            new[i] = top[0]
+            changed += top[0] != own
+        comm = new
+        if changed == 0:
+            stale += 1
+            if stale >= 2:
+                break
+        else:
+            stale = 0
+    return comm, ties
+
+
+def _seeded_graph(seed, n, p, weights):
+    import random
+
+    rng = random.Random(seed)
+    und = {}
+    for i in range(n):
+        und[(i, (i + 1) % n)] = rng.choice(weights)  # a ring keeps it connected
+        for j in range(i + 2, n):
+            if rng.random() < p:
+                und[(i, j)] = rng.choice(weights)
+    return [(s, d, float(w)) for (a, b), w in und.items() for s, d in ((a, b), (b, a))]
+
+
+@pytest.mark.parametrize(
+    "seed, n, p, weights, max_sweeps, has_ties",
+    [
+        (7, 60, 0.08, [1, 2, 3, 5], 6, False),
+        # unit weights on a sparse graph: equal degrees everywhere, so many
+        # nodes see several neighbour communities with the same gain
+        (11, 48, 0.03, [1], 8, True),
+    ],
+)
+def test_local_move_matches_python_replica(spark, seed, n, p, weights, max_sweeps, has_ties):
+    """The distributed sweep loop is the replica, bit for bit, on
+    integer-weight graphs (every sum is exact), ties included."""
+    from graph_database_application_for_recommendations_spark.plans import cache_wide
+    from graph_database_application_for_recommendations_spark.plans.louvain import _local_move
+
+    rows = _seeded_graph(seed, n, p, weights)
+    edges = spark.createDataFrame(rows, "src LONG, dst LONG, weight DOUBLE")
+    parity = {
+        r["id"]: r["parity"]
+        for r in spark.createDataFrame([(i,) for i in range(n)], "id LONG")
+        .select("id", F.pmod(F.hash("id"), F.lit(2)).alias("parity"))
+        .collect()
+    }
+    want, ties = _replica_local_move(rows, parity, max_sweeps)
+    if has_ties:
+        assert ties > 0
+    wide = cache_wide(edges, spark.sparkContext.defaultParallelism, "src")
+    got = {r["node_id"]: r["community"] for r in _local_move(wide, max_sweeps).collect()}
+    wide.unpersist(blocking=False)
+    assert got == want
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_local_move_sweep_job_budget(spark):
+    """One more sweep of the distributed local move costs at most 7 Spark
+    jobs: one label table per sweep, both lookups broadcast from it, no
+    separate degree or tot table."""
+    from graph_database_application_for_recommendations_spark.operators.corating import (
+        corating_edges,
+    )
+    from graph_database_application_for_recommendations_spark.plans import cache_wide
+    from graph_database_application_for_recommendations_spark.plans.louvain import _local_move
+    from graph_database_application_for_recommendations_spark.sources.views import load_ref_tables
+
+    from .conftest import SF_SMALL
+
+    co = corating_edges(load_ref_tables(spark, SF_SMALL).ratings).select(
+        F.col("u1").alias("src"), F.col("u2").alias("dst"),
+        F.col("weight").cast("double").alias("weight"),
+    )
+    edges = cache_wide(co, spark.sparkContext.defaultParallelism, "src")
+    two, jobs_two = _jobs_in_group(spark, "louvain-2-sweeps", lambda: _local_move(edges, 2))
+    three, jobs_three = _jobs_in_group(spark, "louvain-3-sweeps", lambda: _local_move(edges, 3))
+    # the third sweep really ran and moved nodes
+    assert set(two.collect()) != set(three.collect())
+    edges.unpersist(blocking=False)
+    assert jobs_three - jobs_two <= 7
+
+
+def test_louvain_distributed_releases_all_but_result(spark, three_cliques):
+    """After a fully distributed run, executor storage holds nothing Louvain
+    created except the checkpoint the returned frame reads."""
+    import time
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def held():
+        return {i.id() for i in jsc.getRDDStorageInfo()}
+
+    before = held()
+    comm, _ = louvain(three_cliques, local_threshold=0)
+    comm.collect()
+    leaves = comm._jdf.queryExecution().analyzed().collectLeaves()
+    result_rdds = {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getName().endswith(".LogicalRDD")
+    }
+    # unpersist(blocking=False) is asynchronous: give the removals a moment
+    deadline = time.monotonic() + 10
+    while held() - before != result_rdds and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert len(result_rdds) == 1
+    assert held() - before == result_rdds
+
+
+def test_louvain_local_path_reads_input_once(spark, three_cliques):
+    """A driver-sized input takes the local path after one evaluation of
+    its upstream plan: the gate count and the collect share one cache."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def seen(_):
+        acc.add(1)
+        return True
+
+    probe = F.udf(seen, "boolean")
+    n = three_cliques.count()
+    comm, q = louvain(three_cliques.filter(probe("src")))
+    assert comm.count() == 12 and q > 0.6
+    assert acc.value == n
