@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..functions.hints import gated_broadcast
-from .ivf import _assign, train_ivf_centroids
+from .ivf import _CENTROIDS, _assign, _unit_vectors, train_ivf_centroids
 from .pq import pq_encode, train_pq_codebooks
 
 
@@ -50,7 +50,8 @@ def topk_ivfpq(
     """IVF-PQ approximate top-k: (query_id, neighbor_id, similarity).
 
     Plan: coarse centroids (distributed Lloyd over md5 seeds) → corpus
-    assignment + residuals (broadcast argmin join) → residual PQ codes
+    assignment + residuals (broadcast argmax join over the id-partitioned
+    corpus, the winning centroid carried through the argmax) → residual PQ codes
     (Arrow kernel, cell id carried through — no join-back shuffle) →
     per-query probes of the ``nprobe`` best cells (broadcast centroid
     table) → ADC = ⟨q, c⟩ + Σ LUT[code] over a (cell)-equi-join of the
@@ -74,13 +75,9 @@ def topk_ivfpq(
     spark = corpus.sparkSession
     centroids = train_ivf_centroids(corpus, id_col, vec_col, num_cells, lloyd_iters)
 
-    par = spark.sparkContext.defaultParallelism
-    c_vecs = corpus.repartition(par).select(
-        F.col(id_col).alias("neighbor_id"),
-        V.l2_normalize(V.as_double(F.col(vec_col))).alias("_v"),
-    )
-    assigned = _assign(c_vecs, centroids, "neighbor_id", "cell")
-    residuals = assigned.join(gated_broadcast(centroids, "fixed-size construction: IVF centroid table, num_cells rows x dim doubles"), "cell").select(
+    c_vecs = _unit_vectors(corpus, id_col, vec_col, "neighbor_id")
+    # the winning centroid rides the argmax, so residuals need no join back
+    residuals = _assign(c_vecs, centroids, "neighbor_id", "_v", "_c").select(
         "neighbor_id",
         "cell",
         F.zip_with("_v", "_c", lambda a, b: a - b).alias("_r"),
@@ -108,7 +105,7 @@ def topk_ivfpq(
         F.col(id_col).alias("query_id"),
         V.l2_normalize(V.as_double(F.col(vec_col))).alias("_qv"),
     )
-    q_cells = q_vecs.crossJoin(gated_broadcast(centroids, "fixed-size construction: IVF centroid table, num_cells rows x dim doubles")).select(
+    q_cells = q_vecs.crossJoin(gated_broadcast(centroids, _CENTROIDS)).select(
         "query_id", "_qv", "cell", V.dot(F.col("_qv"), F.col("_c")).alias("_qc")
     )
     wp = Window.partitionBy("query_id").orderBy(F.desc("_qc"), F.asc("cell"))

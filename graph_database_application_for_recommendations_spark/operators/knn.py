@@ -278,7 +278,10 @@ def knn_ivf(
     for any affordable table count (measured at sf0.1), while probing the
     8 nearest k-means cells recovers ~60% at the same cost. Candidate
     volume ≈ n · nprobe · (n / cells) — an equi-join on cell id, never a
-    cross join.
+    cross join. The corpus is shuffled by id once for training and once
+    for the search, whose query and corpus sides share that exchange; the
+    centroids live on the driver between Lloyd rounds, so the call leaves
+    no cache or checkpoint behind.
     """
     from .ivf import topk_ivf
 

@@ -803,6 +803,7 @@ def test_driver_side_materialization_sites_are_classified():
         "operators/dedup.py::neardup_components": (1, "scalar convergence check per LFMIS round"),
         "operators/diagnostics.py::table_profile": (1, "bounded per-column profile rows"),
         "operators/etl.py::point_upsert": (1, "single-key point operation"),
+        "operators/ivf.py::train_ivf_centroids": (2, "num_cells x dim seed and centroid tables, already broadcast through the driver"),
         "operators/ivfpq.py::topk_ivfpq": (1, "LUT-gated local rerank (documented gate)"),
         "operators/knn.py::knn_exact_local": (1, "size-gated local twin of the distributed op"),
         "operators/pca.py::pca_fit": (1, "dim x dim Gram matrix (vector-dim bounded)"),
