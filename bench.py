@@ -9,7 +9,7 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 Query mix: the skew-prone co-rating self-join, the O(n²) vector kernels
 (KNN, simsearch, embedding near-dup), the serving join paths, the dedup
 suite over documents, text analysis, event sessionization/windows, and the
-iterative FastRP+LPA pipeline — i.e. every physical pattern the engine
+iterative FastRP+Louvain pipeline — i.e. every physical pattern the engine
 uses, not just the cheap ones.
 """
 
@@ -182,7 +182,7 @@ BENCH_QUERIES = [
     "q_events_periodicity",
 ]
 
-# the iterative pipeline (FastRP -> KNN -> LPA) is measured as one unit,
+# the iterative pipeline (FastRP -> KNN -> Louvain) is measured as one unit,
 # mirroring the reference's algorithm run (Alg_KNN_FastRP.py main)
 PIPELINE_QUERY = "q_pipeline_similar_to"
 

@@ -4,8 +4,8 @@ capabilities of Clara1a2/Graph_Database_Application_for_Recommendations.
 The reference is a thin Neo4j/Bolt client (~14 Cypher queries + 3 GDS
 algorithm calls, see SURVEY.md). This package re-expresses those semantics
 Spark-first: declarative DataFrame/SQL plans optimized by Catalyst, iterative
-DataFrame programs for the graph algorithms (FastRP, label propagation /
-modularity), and Structured Streaming for the event-stream extensions.
+DataFrame programs for the graph algorithms (FastRP, Louvain /
+modularity), and one Structured Streaming job (sharded sequence packing).
 
 Layout
 ------
@@ -13,7 +13,7 @@ Layout
 - ``functions`` : vector + text column expression helpers (no Python UDFs)
 - ``operators`` : relational operators & serving queries (SURVEY.md §2)
 - ``plans``     : iterative algorithm drivers + materialization pipeline
-- ``streaming`` : Structured Streaming operators over the events table
+- ``streaming`` : the sharded sequence-packing stream over the documents corpus
 - ``registry``  : name -> (spark_fn, oracle_sql) for the driver contract
 """
 

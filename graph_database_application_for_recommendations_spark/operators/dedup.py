@@ -432,8 +432,8 @@ def minhash_signature_arrays(
     shingle_n: int = 3,
 ) -> DataFrame:
     """(doc_id, sig array<bigint>): seed-ordered minhash signature as one
-    array — the INDEXABLE per-doc artifact the near-dup-aware ingest path
-    persists (operators/etl.py::ingest_neardup_append). Band keys and
+    array — the INDEXABLE per-doc artifact a near-dup-aware ingest index
+    stores (the ``index`` ingest_neardup_decisions reads). Band keys and
     pairwise Jaccard estimates both re-derive from it exactly
     (band_keys_from_sig / _est_jaccard_arrays), so a standing corpus is
     never re-shingled to dedup an incoming batch against it."""
@@ -1513,15 +1513,10 @@ def ingest_neardup_decisions(
     shingle_n: int = 3,
     threshold: float = 0.5,
     max_iters: int = 32,
-    keep_inc: bool = False,
-):
+) -> DataFrame:
     """(doc_id, status) for every incoming doc: ``kept`` | ``dup_exact`` |
     ``dup_near`` — the decision kernel of near-dup-aware append-only
-    ingest (round-5 VERDICT item 3). With ``keep_inc=True`` returns
-    ``(decisions, inc)`` where ``inc`` is the still-pinned
-    (doc_id, _fp, _sig) batch table, so the write path can derive the
-    survivors' index rows without re-shingling the batch text — the
-    caller then owns releasing it.
+    ingest (round-5 VERDICT item 3).
 
     ``index`` is the standing-corpus survivor index: (fingerprint,
     sig array<bigint>) — canonical fingerprint plus minhash signature per
@@ -1538,8 +1533,7 @@ def ingest_neardup_decisions(
     ordered micro-batches (appending each one's survivors to the index
     before the next) yields the SAME survivor set, because LFMIS decides
     each doc purely against smaller-id survivors — which is precisely the
-    accumulated index. This is the property the streaming ingest face
-    relies on, pinned by tests/test_streaming.py.
+    accumulated index, so an ingest loop may cut its batches anywhere.
 
     Status of a dropped doc is a post-pass over the final survivor set:
     ``dup_exact`` if some survivor (index or smaller-id kept batch doc)
@@ -1651,11 +1645,9 @@ def ingest_neardup_decisions(
                 .alias("status"),
             )
         )
-        out = materialize(out)
-        return (out, inc) if keep_inc else out
+        return materialize(out)
     finally:
-        if not keep_inc:
-            release_checkpoint(inc)
+        release_checkpoint(inc)
         release_checkpoint(idx)
 
 
@@ -1988,7 +1980,7 @@ def scrub_spans_against_index(
     token sequence already exists in the standing corpus is scrubbed;
     the standing corpus is represented ONLY by its chunk-hash table
     (one ``chunk_hash`` column), never rescanned as text — the same
-    index discipline as near-dup ingest (ingest_neardup_append): at
+    index discipline as near-dup ingest (ingest_neardup_decisions): at
     100 TB the chunk index is |chunks| md5 strings, and each batch
     costs one equi-semi-join against it plus the batch's own
     token-linear chunking.

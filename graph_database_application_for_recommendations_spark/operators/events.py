@@ -268,11 +268,10 @@ def event_conversions(
     funnel correlation — every ``then_type`` event that follows a
     ``first_type`` event by the same user within the interval.
 
-    Batch twin of ``streaming/events.py::conversions_stream`` (the
-    stream-stream interval join). Physically an equi-join on ``user_id``
-    with the time bound as a residual predicate — the same shape Spark
-    gives the watermarked stream-stream join, where the bound also limits
-    join state retention.
+    Physically an equi-join on ``user_id`` with the time bound as a
+    residual predicate — the same shape Spark gives a watermarked
+    stream-stream interval join, where the bound also limits join state
+    retention.
     """
     width = within_minutes * US_PER_MIN
     first = events.filter(F.col("event_type") == first_type).select(

@@ -58,7 +58,7 @@ def cms_delta_table(
     (depth × width cells) regardless of corpus size, and cells are
     additive integers: deltas from disjoint batches consolidate by plain
     SUM into exactly the single-pass sketch (and negate for retraction,
-    like every group-algebra sidecar — etl._negate)."""
+    like every group-algebra sidecar)."""
     tok = documents.select(
         F.explode(tokens(F.col(text_col))).alias("token")
     )
@@ -144,26 +144,6 @@ def hll_merge(deltas: DataFrame) -> DataFrame:
     max, associative/commutative/idempotent, so the consolidated
     registers equal a single-pass build under any batching or replay."""
     return deltas.groupBy("bucket").agg(F.max("max_rho").alias("max_rho"))
-
-
-def hll_estimate(registers: DataFrame, p: int = HLL_P) -> float:
-    """Driver-side scalar estimate from a (bucket, max_rho) register
-    table — the raw HLL estimator with the small-range linear-counting
-    correction (Flajolet et al. 2007 §4; the empirical alpha_m). The
-    register table is the oracle-checked artifact; the estimate is a
-    bounded O(2^p) fold of it (collected: 2^p ≤ thousands of rows, a
-    sketch, never data)."""
-    m = 1 << p
-    rows = {r["bucket"]: r["max_rho"] for r in registers.collect()}
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    z = sum(2.0 ** -rows.get(b, 0) for b in range(m))
-    est = alpha * m * m / z
-    zeros = m - len(rows)
-    if est <= 2.5 * m and zeros:
-        import math
-
-        est = m * math.log(m / zeros)
-    return est
 
 
 BLOOM_BITS = 1 << 16

@@ -410,7 +410,7 @@ def token_count_table(
     + one hash aggregate (map-side combinable). The additive half of
     vocabulary building: count tables from disjoint document sets SUM
     into the whole-corpus table, which is what incremental maintenance
-    (vocab_delta_append) exploits."""
+    (consolidate_token_counts) exploits."""
     par = documents.sparkSession.sparkContext.defaultParallelism
     return (
         documents.repartition(par)
@@ -545,24 +545,6 @@ def scrub_expr(text):
     return F.regexp_replace(clean, PII_PHONE_RE, "<PHONE>")
 
 
-def quality_keep_expr(
-    text,
-    min_tokens: int = 10,
-    max_tokens: int = 500,
-    min_stopword_ratio: float = 0.01,
-):
-    """Boolean keep-predicate form of the quality filter (token bounds +
-    English-stopword floor) — shared by batch compositions and streaming."""
-    toks = tokens(text)
-    n_tok = F.size(toks)
-    stop_hits = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS["en"])))
-    return (
-        (n_tok >= min_tokens)
-        & (n_tok <= max_tokens)
-        & ((stop_hits.cast("double") / n_tok) >= min_stopword_ratio)
-    )
-
-
 def scrub_pii(
     documents: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -683,8 +665,8 @@ def bigram_count_table(
     """(bigram, _cnt): the character-bigram count table — the ADDITIVE
     half of the CCNet-proxy LM (lm_bigram_scores): counts from disjoint
     batches sum into the whole-corpus table, so the filtering model is
-    maintainable incrementally (etl.lm_delta_append) and retractable —
-    another group-algebra sidecar; the first-char totals (the
+    maintainable incrementally (consolidate_bigram_counts) and
+    retractable — another group-algebra sidecar; the first-char totals (the
     conditional's denominator) are DERIVED from this table at
     consolidation, never stored, so the two can't drift."""
     return (
@@ -714,8 +696,8 @@ def lm_scores_from_counts(
     consolidated from sidecar deltas — integer counts, so the derived
     log-probabilities are identical either way; q_ingest_lm pins it).
     Scoring uses the same per-(doc, bigram)-count weighted-mean form as
-    lm_bigram_scores (the two faces must stay value-identical — the
-    sidecar tests pin it), which also shrinks the model-join input from
+    lm_bigram_scores (the two faces must stay value-identical —
+    q_ingest_lm pins it), which also shrinks the model-join input from
     the position stream to its per-doc counts."""
     return _scores_from_doc_counts(
         _doc_bigram_counts(documents, id_col, text_col), big
@@ -1005,7 +987,7 @@ def quality_hist_table(
     n_tokens⌋, 9). The distribution profile behind mixture/threshold
     decisions ("what fraction of source X clears quality θ"), and the
     ADDITIVE half of incremental quality monitoring: histograms from
-    disjoint batches sum (quality_hist_delta_append).
+    disjoint batches sum (consolidate_quality_hist).
 
     The bucket is derived from the two INTEGER counts, so it is exact
     cross-engine: for a,b ≤ 2^31 the correctly-rounded double a·10/b
@@ -1567,11 +1549,10 @@ def dsir_log_ratio(
     ln(p_target(b)/p_raw(b)) per hashed-unigram bucket. Emitted DENSE:
     exactly num_buckets rows, one per possible bucket, so a bucket unseen
     in BOTH corpora still carries its smoothed ratio ln((rn+B)/(tn+B))⁻¹-
-    style value instead of being absent (ADVICE r5: the streaming scorer's
-    inner join silently dropped tokens hashing to missing buckets,
+    style value instead of being absent (a scorer that inner-joins a
+    sparse model silently drops tokens hashing to missing buckets,
     understating n_tokens/log_weight for genuinely novel documents).
-    Still the broadcastable artifact both the batch scorer and
-    streaming/events.py::dsir_score_stream consume."""
+    The broadcastable artifact the batch scorer consumes."""
     B = num_buckets
     raw_tok = _dsir_buckets(documents, B, id_col, text_col)
     tgt_tok = _dsir_buckets(target, B, id_col, text_col)
@@ -1811,8 +1792,8 @@ def consolidate_token_counts(deltas: DataFrame) -> DataFrame:
     vocabulary maintenance incremental: re-deriving the tokenizer table
     after a batch costs the BATCH's tokens plus a |vocab|-sized merge,
     never a corpus rescan. Tokens whose counts sum to zero (fully
-    retracted — etl._negate) drop, so the consolidated table equals the
-    direct count table over the surviving corpus."""
+    retracted by a negated delta) drop, so the consolidated table equals
+    the direct count table over the surviving corpus."""
     return (
         deltas.groupBy("token")
         .agg(F.sum("count").alias("count"), F.sum("n_docs").alias("n_docs"))

@@ -15,7 +15,7 @@ def materialize(df: DataFrame, *, supersedes: DataFrame | None = None) -> DataFr
     """Iteration boundary: pin ``df``'s data and truncate its logical plan.
 
     Plan truncation is load-bearing, not cosmetic: logical plans are trees,
-    and a Louvain/LPA sweep references the previous round's table ~5 times,
+    and a Louvain sweep references the previous round's table ~5 times,
     so chaining rounds without truncation grows the plan as 5^rounds —
     analysis and plan-string generation hang long before execution would
     (observed: TreeNode.generateTreeString spinning on a toy graph).
@@ -79,7 +79,7 @@ def gate_node_vector_broadcast(
     """Gating policy for the per-iteration |V|-row vector/label joins every
     iterative driver makes (round-8 VERDICT item 2): broadcast while the
     counted row total fits the byte budget, otherwise fall back to the
-    shuffle join against the co-partitioned edge cache. Louvain/LPA carried
+    shuffle join against the co-partitioned edge cache. Louvain carried
     this gate inline since round 3; pagerank/eigenvector/hits broadcast
     ungated — at 10⁹ nodes that is a ~24 GB broadcast per iteration, an
     executor OOM with the sane shuffle plan blocked. ``n_rows`` must be an

@@ -28,7 +28,7 @@ def connected_components(
     """(node_id, component): connected components of an edge list,
     ``component`` = MIN node id in the component. GDS exposes this as
     ``gds.wcc``; it is also the invariant-checkable core of the iterative
-    min-label machinery the community/dedup plans share — unlike LPA or
+    min-label machinery the community/dedup plans share — unlike
     Louvain labels, CC labels are fully determined by the graph, so the
     driver can hash-compare them against a recursive-CTE SQL oracle.
 

@@ -109,9 +109,10 @@ def similar_to(spark: SparkSession, sf_dir: str) -> DataFrame:
 def users_with_community(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stand-in community binding for the oracle-checked
     community-recommender queries: community := c_nationkey. The *real*
-    pipeline binds plans/lpa.py output instead (rows-only checked queries,
-    q_lpa_* below) — community ids from label propagation are partition-
-    stable but not value-stable, so they can't be hash-compared to SQL."""
+    pipeline binds plans/louvain.py output instead (q_louvain_communities,
+    which has no SQL oracle) — a Louvain community id is a label the
+    algorithm picks, not a value SQL can derive, so it can't be
+    hash-compared."""
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
     # cached for the same write-back reason as similar_to(): the community
     # property is precomputed once, three serving queries read it
@@ -3062,10 +3063,9 @@ def _louvain_modularity(s: SparkSession, d: str) -> DataFrame:
     prints from the GDS summary (Alg_Community_Detection.py:45-50).
     Deterministic (sequential local path, pinned tie-breaks), so this one
     row is the regression tripwire for the whole Louvain stage; unlike
-    LPA's Q (exactly 0.0 at driver scales — LPA collapses to one community
-    on the dense co-rating graph) it is a nontrivial value. The pipeline
-    runs Louvain too; this standalone entry attests the algorithm in
-    isolation. tests/test_algorithms.py recomputes Q over the labels in
+    the one-community partition's Q (exactly 0.0) it is a nontrivial
+    value. The pipeline runs Louvain too; this standalone entry attests
+    the algorithm in isolation. tests/test_algorithms.py recomputes Q over the labels in
     DuckDB."""
     _, q = _louvain(s, d)
     return s.createDataFrame([(float(round(q, 6)),)], "modularity double")
@@ -3075,7 +3075,7 @@ register("q_louvain_modularity", _louvain_modularity, None)
 
 
 # --- iterative-machinery invariants (round-2 VERDICT item 2) ----------------
-# LPA/Louvain labels are value-unstable, so the pipeline community queries
+# Louvain labels are value-unstable, so the pipeline community queries
 # are rows-only. These queries check the SAME iterative machinery against a
 # full hash oracle where the output IS graph-determined:
 # - connected components (gds.wcc analog; min-label = exactly the solver the
@@ -3086,7 +3086,7 @@ register("q_louvain_modularity", _louvain_modularity, None)
 
 
 def _corating_double(s: SparkSession, d: str) -> DataFrame:
-    """The Louvain/LPA input graph, shared-cache with q_corating_projection."""
+    """The Louvain input graph, shared-cache with q_corating_projection."""
     return corating.corating_edges(_ref(s, d).ratings).cache().select(
         F.col("u1").alias("src"),
         F.col("u2").alias("dst"),
@@ -3397,22 +3397,29 @@ _STREAM_PACK_SHARDS = 8
 
 
 def _stream_pack_totals(s: SparkSession, d: str) -> DataFrame:
+    import shutil
     import tempfile
     import uuid
 
     from .streaming import events as stream_ops
 
-    packed = stream_ops.run_to_memory(
-        stream_ops.pack_stream(
-            stream_ops.read_documents_stream(s, d),
-            ctx_len=_STREAM_PACK_CTX,
-            n_shards=_STREAM_PACK_SHARDS,
-            seed=7,
-        ),
-        f"t_stream_pack_totals_{uuid.uuid4().hex[:8]}",
-        "append",
-        tempfile.mkdtemp(prefix="ck_stream_pack_totals_"),
-    )
+    # the memory sink keeps the rows on the driver, so the checkpoint is
+    # dead once the availableNow run has terminated
+    checkpoint = tempfile.mkdtemp(prefix="ck_stream_pack_totals_")
+    try:
+        packed = stream_ops.run_to_memory(
+            stream_ops.pack_stream(
+                stream_ops.read_documents_stream(s, d),
+                ctx_len=_STREAM_PACK_CTX,
+                n_shards=_STREAM_PACK_SHARDS,
+                seed=7,
+            ),
+            f"t_stream_pack_totals_{uuid.uuid4().hex[:8]}",
+            "append",
+            checkpoint,
+        )
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return packed.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
@@ -6415,8 +6422,8 @@ register(
 def _ingest_retract_q(s: SparkSession, d: str) -> DataFrame:
     """Retraction face of the incremental-maintenance algebra: all three
     batches are appended, then batch 1 is RETRACTED by appending its
-    negated delta (etl._negate — integer counts form a group, so removal
-    needs no corpus rescan); the consolidated vocabulary must equal a
+    negated delta (integer counts form a group, so removal needs no
+    corpus rescan); the consolidated vocabulary must equal a
     direct rebuild over the surviving documents bit-for-bit. Oracle =
     the direct derivation with batch 1's documents excluded."""
     docs = _docs(s, d)
@@ -6424,8 +6431,7 @@ def _ingest_retract_q(s: SparkSession, d: str) -> DataFrame:
     for i in range(3):
         delta = textstats.token_count_table(docs.filter(F.col("doc_id") % 3 == i))
         deltas = delta if deltas is None else deltas.unionByName(delta)
-    # the retraction delta: batch 1's counts, negated (same table the
-    # etl.vocab_delta_append(retract=True) face publishes)
+    # the retraction delta: batch 1's counts, negated
     neg = textstats.token_count_table(docs.filter(F.col("doc_id") % 3 == 1)).select(
         "token", (-F.col("count")).alias("count"), (-F.col("n_docs")).alias("n_docs")
     )
@@ -8259,9 +8265,8 @@ register(
 
 # Sharded-export manifest: deterministic md5 shard assignment + the
 # order-free per-shard integrity row (XOR of 60-bit content hashes) —
-# the commit a trainer-facing export writes next to its shards. The
-# write path (export_jsonl_shards) is pytest-pinned: read-back manifest
-# equals this query.
+# the commit a trainer-facing export writes next to its shards, and the
+# row a reader recomputes to verify a delivered shard.
 register(
     "q_corpus_shards",
     lambda s, d: etl.shard_manifest(_docs(s, d), n_shards=8),

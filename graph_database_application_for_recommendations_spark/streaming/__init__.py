@@ -1,3 +1,3 @@
-"""Structured Streaming operators over the events table (SURVEY.md §7
-phase 5 north-star extension — the reference itself has no streaming
-surface, see SURVEY.md §2.6)."""
+"""Structured Streaming: the sharded sequence-packing stream over the
+documents corpus (SURVEY.md §7 phase 5 north-star extension — the
+reference itself has no streaming surface, see SURVEY.md §2.6)."""

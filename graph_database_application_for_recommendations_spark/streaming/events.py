@@ -1,17 +1,15 @@
-"""Structured Streaming over the events table.
+"""Structured Streaming over the documents corpus: sharded sequence packing.
 
-Each operator here is the streaming twin of an oracle-checked batch plan in
-operators/events.py — the tests drive both and compare results, so the
-streaming semantics are anchored to the DuckDB-checked batch semantics.
+``pack_stream`` is the streaming relaxation of ``operators/packing.py``'s
+batch concatenate-and-chunk. ``q_stream_pack_totals`` replays the corpus
+through it and checks the per-shard token totals against a plain-SQL
+oracle.
 
 Design notes:
 - File source (parquet) with an explicit schema; ``maxFilesPerTrigger``
   gives multi-batch replays in tests, ``availableNow`` bounded runs.
-- Watermarks bound state for tumbling windows and dedup; session windows
-  use the built-in ``session_window`` (gap-merged, same semantics as the
-  batch gaps-and-islands plan).
-- The custom stateful operator (running per-user profile) uses
-  ``applyInPandasWithState`` — the Arrow-batched stateful API.
+- The per-shard running offset is custom state kept by
+  ``applyInPandasWithState``, the Arrow-batched stateful API.
 """
 
 from __future__ import annotations
@@ -22,186 +20,13 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..functions.hints import gated_broadcast
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
-
-# Raw file schema for the TIMESTAMP(NANOS) testdata generation: ts arrives
-# as long under spark.sql.legacy.parquet.nanosAsLong (see sources/tables.py).
-# Later generations write TIMESTAMP(MICROS) — read_events_stream probes the
-# file's footer (one cheap batch schema read) and picks the right variant.
-RAW_EVENT_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming read of the events parquet with proper event-time column."""
-    from ..sources.tables import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # streaming file sources require an explicit schema; take it from the
-    # batch reader's footer inference so either ts encoding works
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    # the file source rejects a plain file path ("basePath must be a
-    # directory") but accepts a glob that matches it
-    raw = reader.parquet(f"{sf_dir}/events.[p]arquet")
-    return normalize_event_ts(raw)
-
-
-def tumbling_counts_stream(
-    events: DataFrame, minutes: int = 60, watermark_minutes: int = 120
-) -> DataFrame:
-    """Watermarked tumbling-window counts; twin of
-    operators/events.py::tumbling_counts."""
-    return (
-        events.withWatermark("ts", f"{watermark_minutes} minutes")
-        .groupBy(F.window("ts", f"{minutes} minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 6).alias("sum_value"))
-        .select(
-            F.unix_micros(F.col("window.start")).alias("window_start_us"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def sliding_counts_stream(
-    events: DataFrame,
-    width_minutes: int = 60,
-    slide_minutes: int = 30,
-    watermark_minutes: int = 120,
-) -> DataFrame:
-    """Watermarked sliding-window counts; twin of
-    operators/events.py::sliding_counts."""
-    return (
-        events.withWatermark("ts", f"{watermark_minutes} minutes")
-        .groupBy(
-            F.window("ts", f"{width_minutes} minutes", f"{slide_minutes} minutes"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 6).alias("sum_value"))
-        .select(
-            F.unix_micros(F.col("window.start")).alias("window_start_us"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def sessionize_stream(
-    events: DataFrame, gap_minutes: int = 30, watermark_minutes: int = 120
-) -> DataFrame:
-    """Session windows per user (gap-merged); twin of
-    operators/events.py::sessionize. ``session_window.end`` is
-    last-event + gap, so the gap is subtracted to recover the duration."""
-    gap_us = gap_minutes * 60 * 1_000_000
-    return (
-        events.withWatermark("ts", f"{watermark_minutes} minutes")
-        .groupBy("user_id", F.session_window("ts", f"{gap_minutes} minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros(F.col("session_window.start")).alias("session_start_us"),
-            "n_events",
-            F.round(
-                (
-                    F.unix_micros(F.col("session_window.end"))
-                    - F.unix_micros(F.col("session_window.start"))
-                    - F.lit(gap_us)
-                )
-                / F.lit(1_000_000.0),
-                6,
-            ).alias("duration_s"),
-        )
-    )
-
-
-def dedup_stream(events: DataFrame, watermark_minutes: int = 120) -> DataFrame:
-    """Stateful streaming dedup on (user_id, event_type): first arrival wins;
-    the watermark bounds the dedup state. Twin of
-    operators/events.py::dedup_events (equal when arrival order == event-time
-    order, which holds for the replayed parquet)."""
-    return (
-        events.withWatermark("ts", f"{watermark_minutes} minutes")
-        .dropDuplicates(["user_id", "event_type"])
-        .select("event_id", F.unix_micros("ts").alias("ts_us"), "user_id", "event_type", "value")
-    )
-
-
-def conversions_stream(
-    events: DataFrame,
-    first_type: str = "click",
-    then_type: str = "purchase",
-    within_minutes: int = 30,
-    watermark_minutes: int = 120,
-) -> DataFrame:
-    """Stream-stream interval self-join: ``then_type`` events joined to the
-    ``first_type`` events they follow (same user, within the interval).
-    Twin of operators/events.py::event_conversions.
-
-    Both sides carry a watermark and the join condition bounds event time
-    on both ends, so Spark can expire join state: a buffered ``first`` row
-    is droppable once the ``then`` watermark passes first_ts + interval —
-    this is THE state-retention contract for stream-stream joins at scale.
-    """
-    first = (
-        events.filter(F.col("event_type") == first_type)
-        .select(
-            F.col("user_id").alias("first_user"),
-            F.col("event_id").alias("first_event_id"),
-            F.col("ts").alias("first_ts"),
-        )
-        .withWatermark("first_ts", f"{watermark_minutes} minutes")
-    )
-    then = (
-        events.filter(F.col("event_type") == then_type)
-        .select(
-            F.col("user_id").alias("then_user"),
-            F.col("event_id").alias("then_event_id"),
-            F.col("ts").alias("then_ts"),
-        )
-        .withWatermark("then_ts", f"{watermark_minutes} minutes")
-    )
-    joined = first.join(
-        then,
-        F.expr(
-            f"""first_user = then_user
-            AND then_ts > first_ts
-            AND then_ts <= first_ts + INTERVAL {within_minutes} MINUTES"""
-        ),
-    )
-    return joined.select(
-        F.col("first_user").alias("user_id"),
-        "first_event_id",
-        "then_event_id",
-        F.unix_micros("first_ts").alias("first_us"),
-        F.unix_micros("then_ts").alias("then_us"),
-    )
 
 
 DOC_SCHEMA = StructType(
@@ -223,91 +48,6 @@ def read_documents_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(f"{sf_dir}/documents.[p]arquet")
-
-
-def dedup_documents_stream(docs: DataFrame) -> DataFrame:
-    """Streaming canonical-fingerprint dedup: the arriving corpus keeps the
-    first document per canonical token-set fingerprint — the streaming twin
-    of operators/dedup.py::dedup_fingerprint (ingestion-time dedup for a
-    continuously-arriving training corpus)."""
-    from ..functions.text import canonical_fingerprint
-
-    return docs.withColumn(
-        "fingerprint", canonical_fingerprint(F.col("text"))
-    ).dropDuplicates(["fingerprint"])
-
-
-def clean_corpus_stream(docs: DataFrame) -> DataFrame:
-    """The ingest-time corpus build as ONE streaming pipeline: quality
-    filter (token bounds + stopword floor) → PII scrub → first-writer-wins
-    fingerprint dedup. Stateless stages are the same column expressions as
-    the batch operators (textstats.quality_scores/scrub_pii predicates);
-    the only state is the dedup fingerprint set. Emits
-    (doc_id, clean_text, n_tokens, fingerprint) for the sink —
-    append-mode-safe, so it composes with the foreachBatch upsert
-    write-back (run_writeback).
-
-    Note the deliberate semantic difference from the batch
-    ``q_corpus_clean``: batch keeps the SMALLEST doc id per fingerprint
-    group (a global min), streaming keeps the FIRST ARRIVAL — identical
-    sets when ids arrive in order (the replay case the test pins), the
-    standard ingest-time relaxation otherwise.
-    """
-    from ..functions.text import canonical_fingerprint, tokens
-    from ..operators.textstats import quality_keep_expr, scrub_expr
-
-    t = F.col("text")
-    kept = docs.filter(quality_keep_expr(t))
-    return (
-        kept.select(
-            "doc_id",
-            scrub_expr(t).alias("clean_text"),
-            F.size(tokens(t)).cast("long").alias("n_tokens"),
-            canonical_fingerprint(t).alias("fingerprint"),
-        )
-        .dropDuplicates(["fingerprint"])
-    )
-
-
-USER_PROFILE_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("last_ts_us", LongType()),
-    ]
-)
-
-_STATE_SCHEMA = "n_events LONG, total_value DOUBLE, last_ts_us LONG"
-
-
-def running_user_profile_stream(events: DataFrame) -> DataFrame:
-    """Custom stateful operator: per-user running (count, value sum, last
-    event time), emitted on every update — ``applyInPandasWithState``."""
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # GroupState.get is a PROPERTY in PySpark 4 — calling it invokes
-        # the returned tuple and kills the query on the first batch that
-        # restores state (invisible to single-microbatch tests)
-        n, total, last = state.get if state.exists else (0, 0.0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            last = max(last, int(pdf["ts"].astype("int64").max() // 1000))
-        state.update((n, round(total, 6), last))
-        yield pd.DataFrame(
-            [{"user_id": key[0], "n_events": n, "total_value": round(total, 6), "last_ts_us": last}]
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=USER_PROFILE_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 PACK_SCHEMA = StructType(
@@ -352,7 +92,9 @@ def pack_stream(
     def update(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        # property, not method — see running_user_profile_stream
+        # GroupState.get is a PROPERTY in PySpark 4: calling it invokes
+        # the returned tuple and kills the query on the first batch that
+        # restores state (invisible to single-microbatch tests)
         (start,) = state.get if state.exists else (0,)
         for pdf in pdfs:
             rows = []
@@ -380,89 +122,6 @@ def pack_stream(
     )
 
 
-EMBEDDING_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
-        StructField("label", IntegerType()),
-    ]
-)
-
-
-def read_embeddings_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming read of arriving query vectors (file replay)."""
-    reader = spark.readStream.schema(EMBEDDING_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(f"{sf_dir}/embeddings.[p]arquet")
-
-
-def simsearch_stream_writeback(
-    query_stream: DataFrame,
-    corpus: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-    k: int = 5,
-) -> None:
-    """Streaming similarity search: each micro-batch of arriving query
-    vectors is matched against the static corpus with the exact top-k
-    operator (stream-static pattern via foreachBatch), appending results.
-
-    At scale the per-batch operator swaps for the LSH/IVF variants — the
-    orchestration is identical.
-    """
-    from ..operators.simsearch import topk_bruteforce
-
-    def _match(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        topk_bruteforce(batch_df, corpus, k=k).write.mode("append").parquet(out_path)
-
-    query = (
-        query_stream.writeStream.foreachBatch(_match)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-def run_writeback(
-    stream_df: DataFrame,
-    out_path: str,
-    keys: list[str],
-    checkpoint_dir: str,
-) -> None:
-    """Streaming write-back: maintain a parquet table upserted per
-    micro-batch (``foreachBatch`` + MERGE-style keep-incoming, the same
-    semantics as operators/etl.py::upsert_keep_last) — the streaming analog
-    of the reference's GDS write-back pattern. On Delta/Iceberg this
-    becomes a real MERGE INTO; plain parquet gets read-union-rewrite."""
-    from ..operators.etl import upsert_keep_last
-
-    spark = stream_df.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            existing = spark.read.parquet(out_path)
-        except Exception:  # first batch: nothing materialized yet
-            existing = batch_df.limit(0)
-        merged = upsert_keep_last(existing, batch_df, keys).localCheckpoint()
-        merged.write.mode("overwrite").parquet(out_path)
-
-    query = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
 def run_to_memory(
     stream_df: DataFrame, name: str, output_mode: str, checkpoint_dir: str
 ) -> DataFrame:
@@ -478,584 +137,3 @@ def run_to_memory(
     )
     query.awaitTermination()
     return stream_df.sparkSession.table(name)
-
-
-ANOMALY_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("zscore", DoubleType()),
-    ]
-)
-
-_ANOMALY_STATE_SCHEMA = "n LONG, mean DOUBLE, m2 DOUBLE"
-
-
-def anomaly_stream(
-    events: DataFrame, z: float = 3.0, min_samples: int = 30
-) -> DataFrame:
-    """Streaming twin of ``operators/events.py::value_anomalies`` with
-    *online* statistics: per-event-type running (n, mean, M2) via
-    Welford's algorithm (Technometrics 1962, public) in
-    ``applyInPandasWithState``; each event is scored against the stats of
-    all PREVIOUS events (state across microbatches, ts/event_id order
-    within one), and flagged when |z| > ``z`` once at least
-    ``min_samples`` points have been seen.
-
-    Unlike the batch operator — which scores against the global two-pass
-    stats — the streaming contract is prefix-causal: an event can only be
-    judged by its past. The test suite pins the flagged set against a
-    pandas replay of the identical rule. One (n, mean, M2) triple of
-    state per event_type: bounded state regardless of stream length.
-    """
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import math
-
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for ev_id, v in zip(pdf["event_id"], pdf["value"]):
-                v = float(v)
-                if n >= min_samples:
-                    std = math.sqrt(m2 / (n - 1))
-                    if std > 0.0:
-                        zs = (v - mean) / std
-                        if abs(zs) > z:
-                            out.append(
-                                {
-                                    "event_id": int(ev_id),
-                                    "event_type": key[0],
-                                    "value": v,
-                                    "zscore": round(zs, 6),
-                                }
-                            )
-                n += 1
-                d = v - mean
-                mean += d / n
-                m2 += d * (v - mean)
-        state.update((n, mean, m2))
-        yield pd.DataFrame(out, columns=["event_id", "event_type", "value", "zscore"])
-
-    return events.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=ANOMALY_SCHEMA,
-        stateStructType=_ANOMALY_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def funnel_stream(
-    events: DataFrame,
-    steps: tuple[str, str, str] = ("view", "click", "purchase"),
-    within_minutes: int = 30,
-    watermark_minutes: int = 120,
-) -> DataFrame:
-    """CASCADED stream-stream interval joins: every (step1, step2, step3)
-    event triple by one user where each step falls within
-    ``within_minutes`` after the previous one — the streaming 3-step
-    funnel. One level up from ``conversions_stream``: the first join's
-    append-mode output is itself a watermarked stream the second join
-    consumes, which is the composition contract that makes multi-step
-    funnels expressible at ingest time.
-
-    (user_id, e1, e2, e3, t1_us, t2_us, t3_us) — ALL qualifying triples
-    (the bounded-interval contract; the batch ``funnel()`` operator's
-    per-user-earliest semantics need unbounded state, which is exactly
-    what a watermarked stream must not hold). Both joins bound event
-    time on both ends so Spark can expire join state at each level.
-    """
-
-    def side(step: str, n: int) -> DataFrame:
-        return (
-            events.filter(F.col("event_type") == step)
-            .select(
-                F.col("user_id").alias(f"u{n}"),
-                F.col("event_id").alias(f"e{n}"),
-                F.col("ts").alias(f"t{n}"),
-            )
-            .withWatermark(f"t{n}", f"{watermark_minutes} minutes")
-        )
-
-    s1, s2, s3 = (side(s, i + 1) for i, s in enumerate(steps))
-    # After the first join, t1 is demoted to a plain long: Spark allows at
-    # most ONE event-time column per stream, so each cascade level keeps
-    # only the column its own join state expires on (t2, then t3).
-    j12 = s1.join(
-        s2,
-        F.expr(
-            f"""u1 = u2 AND t2 > t1
-            AND t2 <= t1 + INTERVAL {within_minutes} MINUTES"""
-        ),
-    ).select("u1", "e1", "e2", F.unix_micros("t1").alias("t1_us"), "t2")
-    j123 = j12.join(
-        s3,
-        F.expr(
-            f"""u1 = u3 AND t3 > t2
-            AND t3 <= t2 + INTERVAL {within_minutes} MINUTES"""
-        ),
-    )
-    return j123.select(
-        F.col("u1").alias("user_id"),
-        "e1",
-        "e2",
-        "e3",
-        "t1_us",
-        F.unix_micros("t2").alias("t2_us"),
-        F.unix_micros("t3").alias("t3_us"),
-    )
-
-
-def value_trend_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of operators/events.py::value_trend — the REGR_*
-    sufficient statistics (n, Σx, Σy, Σxy, Σx², Σy²) are all plain sums,
-    so the linear trend maintains incrementally under complete-mode
-    aggregation with bounded state (one row of moments per event type);
-    the closed-form slope/intercept/r² are computed on output. This is
-    the standard way to stream any moment-expressible statistic."""
-    x = F.unix_micros("ts") / F.lit(86_400_000_000.0)
-    src = events.select("event_type", x.alias("_x"), F.col("value").alias("_y"))
-    m = src.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("_x").alias("sx"),
-        F.sum("_y").alias("sy"),
-        F.sum(F.col("_x") * F.col("_y")).alias("sxy"),
-        F.sum(F.col("_x") * F.col("_x")).alias("sxx"),
-        F.sum(F.col("_y") * F.col("_y")).alias("syy"),
-    )
-    cov = F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n")
-    varx = F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")
-    vary = F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")
-    # REGR_* corner semantics (ADVICE r4, and required under the session's
-    # ANSI mode where a bare /0 THROWS, not nulls): slope is NULL when
-    # var(x)=0 (all events at one timestamp); r² is NULL when var(x)=0,
-    # exactly 1.0 when var(y)=0 but var(x)≠0 (constant-valued type: a
-    # perfect horizontal fit), else cov²/(varx·vary). CASE branches are
-    # conditionally executed, so the guarded divisions never trip ANSI.
-    slope = F.when(varx == 0, F.lit(None).cast("double")).otherwise(cov / varx)
-    r2 = (
-        F.when(varx == 0, F.lit(None).cast("double"))
-        .when(vary == 0, F.lit(1.0))
-        .otherwise(cov * cov / (varx * vary))
-    )
-    return m.select(
-        "event_type",
-        F.col("n").cast("long").alias("n"),
-        F.round(slope, 6).alias("slope"),
-        F.round((F.col("sy") - slope * F.col("sx")) / F.col("n"), 6).alias("intercept"),
-        F.round(r2, 6).alias("r2"),
-    )
-
-
-def dsir_score_stream(
-    docs: DataFrame, log_ratio: DataFrame, num_buckets: int = 4096
-) -> DataFrame:
-    """Streaming DSIR scoring: incoming documents scored against a
-    BATCH-trained hashed-unigram log-ratio table (the standard serving
-    split — distributions are estimated offline on the existing corpus,
-    the stream scores arrivals). ``log_ratio`` is the (b, lr) table a
-    batch ``textstats.dsir_log_ratio`` run derives — DENSE, exactly
-    ``num_buckets`` rows (one per possible bucket, unseen buckets carry
-    the smoothed ratio), broadcast into a stream-static join, no
-    streaming state at all. ``num_buckets`` must match training (ADVICE
-    r5: the old hardcoded 4096 silently mis-bucketed non-default models);
-    the density contract is verified loudly up front, which also catches
-    a mismatched ``num_buckets`` since the row count won't agree.
-
-    Emits (doc_id, n_tokens, log_weight), append-safe: each document's
-    score is complete when its row arrives, so parity with the batch
-    scorer on the same corpus is exact (same expressions, same rounding).
-    """
-    from ..functions.text import md5_hash32
-    from ..functions.text import tokens as _tokens
-
-    # log_ratio is the static side (bounded: num_buckets rows) — counting
-    # it here is a tiny batch job, not a streaming action.
-    n_ratio = log_ratio.count()
-    if n_ratio != num_buckets:
-        raise ValueError(
-            f"log_ratio has {n_ratio} rows but num_buckets={num_buckets}: "
-            "the table must be the dense artifact of dsir_log_ratio "
-            "trained with the same num_buckets (a sparse or mismatched "
-            "table would silently drop or mis-assign token buckets)"
-        )
-    tok = docs.select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("token")
-    ).select(
-        "doc_id",
-        F.pmod(md5_hash32(F.col("token")), F.lit(num_buckets)).alias("b"),
-    )
-    # ONE stateful aggregation (Σ_tokens lr(b) ≡ Σ_b count·lr): chaining a
-    # per-(doc, bucket) pre-count into a per-doc rollup would be two
-    # stateful operators, which Structured Streaming's global-watermark
-    # correctness check rejects; the stream-static broadcast join is
-    # stateless, so this keeps the whole plan single-state.
-    return (
-        tok.join(gated_broadcast(log_ratio, "count()-verified dense table: exactly num_buckets rows, checked above"), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.round(F.sum("lr"), 6).alias("log_weight"),
-        )
-    )
-
-
-def quality_score_stream(docs: DataFrame, model) -> DataFrame:
-    """Streaming quality-classifier scoring: incoming documents scored by
-    a BATCH-trained MLlib LogisticRegressionModel (the serving split —
-    CCNet-style filters are trained offline, applied at ingest). MLlib
-    transformers are stateless column programs, so ``model.transform``
-    works on a streaming DataFrame as-is; the coefficient vector rides a
-    broadcast. Emits (doc_id, score) append-safe — per-row, no state.
-    """
-    from pyspark.ml.feature import HashingTF
-    from pyspark.ml.functions import vector_to_array
-
-    from ..functions.text import tokens
-
-    nf = model.numFeatures
-    base = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
-    feats = HashingTF(
-        inputCol="toks", outputCol="features", numFeatures=nf
-    ).transform(base)
-    return model.transform(feats).select(
-        "doc_id", F.round(vector_to_array("probability")[1], 6).alias("score")
-    )
-
-
-def run_ingest_neardup_stream(
-    docs_stream: DataFrame,
-    corpus_path: str,
-    index_path: str,
-    checkpoint_dir: str,
-    compact_every: int = 0,
-    **ingest_kwargs,
-) -> None:
-    """Streaming near-dup-aware ingest: each micro-batch runs the SAME
-    decision kernel + index contract as the batch write path
-    (operators/etl.py::ingest_neardup_append) via ``foreachBatch`` — so
-    a corpus ingested as a stream admits exactly the batch survivor set
-    (greedy first-writer-wins is batching-invariant; see
-    dedup.ingest_neardup_decisions). The fingerprint+signature index
-    accumulates across micro-batches in ``index_path``; state lives in
-    the index table, not the streaming engine, which keeps the stream
-    itself stateless and restart-safe: the checkpoint replays
-    undelivered batches, and the append path publishes each batch's
-    corpus+index files under DETERMINISTIC batch_id-derived names
-    (operators/etl.py::_publish → sources/fsutil.py::publish_batch), so
-    a replayed batch replaces its own files — exactly-once even when the
-    previous attempt died between the two table writes (ADVICE r6).
-    ``compact_every`` > 0 compacts both tables after every N-th batch
-    (operators/etl.py::compact_after_append — safe at this call site by
-    construction: the batch's publish completed before its compaction
-    can run, so a post-compaction replay no-ops on the fingerprint
-    anti-join)."""
-    from ..operators.etl import compact_after_append, ingest_neardup_append
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_neardup_append(
-            batch_df.sparkSession,
-            corpus_path,
-            index_path,
-            batch_df,
-            batch_id=batch_id,
-            **ingest_kwargs,
-        )
-        if compact_every:
-            compact_after_append(
-                batch_df.sparkSession,
-                corpus_path,
-                index_path,
-                batch_id,
-                every=compact_every,
-            )
-
-    query = (
-        docs_stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-def dedup_paragraphs_stream(docs: DataFrame, max_paras: int = 1 << 16) -> DataFrame:
-    """Streaming paragraph-granularity ingest dedup (round-5 VERDICT
-    item 7): split arriving documents into blank-line paragraph units
-    (the same posexplode + para_key packing as
-    operators/dedup.py::split_paragraphs — stateless, works on a
-    streaming frame as-is) and keep the FIRST arrival per canonical
-    paragraph fingerprint — dedup_documents_stream's fingerprint state on
-    the exploded units. Emits (doc_id, para_idx, para_key, text,
-    fingerprint), append-safe.
-
-    Contract vs the batch faces: exact-fingerprint paragraph dedup — the
-    streaming twin of split_paragraphs + one-representative-per-
-    fingerprint (the parity pytest pins the kept fingerprint SET and
-    group membership; which member survives is the first arrival, which
-    inside a shuffled micro-batch is not id order). The batch MinHash near-dup face
-    (dedup_paragraphs) remains the offline pass: near-dup banding needs
-    the corpus-wide signature table, while ingest-time paragraph dedup
-    is the exact-duplicate gate (Lee et al. ACL 2022 run both)."""
-    from ..functions.text import canonical_fingerprint
-    from ..operators.dedup import split_paragraphs
-
-    paras = split_paragraphs(docs, max_paras=max_paras)
-    return paras.withColumn(
-        "fingerprint", canonical_fingerprint(F.col("text"))
-    ).dropDuplicates(["fingerprint"])
-
-
-def run_ingest_spanscrub_stream(
-    docs_stream: DataFrame,
-    corpus_path: str,
-    index_path: str,
-    checkpoint_dir: str,
-    compact_every: int = 0,
-    **ingest_kwargs,
-) -> None:
-    """Streaming span-scrub ingest: each micro-batch runs the SAME
-    decision kernel + chunk-hash-index contract as the batch write path
-    (operators/etl.py::ingest_spanscrub_append) via ``foreachBatch``.
-    Because chunk ownership is judged on SUBMITTED text (standing index
-    ∪ smaller-id same-batch docs), an id-ordered stream stores exactly
-    the one-batch corpus under ANY micro-batching — with the same
-    batch_id-keyed exactly-once publication as the near-dup stream."""
-    from ..operators.etl import compact_after_append, ingest_spanscrub_append
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_spanscrub_append(
-            batch_df.sparkSession,
-            corpus_path,
-            index_path,
-            batch_df,
-            batch_id=batch_id,
-            **ingest_kwargs,
-        )
-        if compact_every:
-            compact_after_append(
-                batch_df.sparkSession, corpus_path, index_path, batch_id,
-                every=compact_every,
-            )
-
-    query = (
-        docs_stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-def run_ingest_stats_stream(
-    docs_stream: DataFrame,
-    vocab_path: str,
-    stats_path: str,
-    qhist_path: str,
-    checkpoint_dir: str,
-    dsir_path: str | None = None,
-    num_buckets: int = 4096,
-    drift_path: str | None = None,
-) -> None:
-    """Streaming statistics-sidecar maintenance: each micro-batch appends
-    its vocabulary-count, corpus-scalar, quality-histogram (and
-    optionally DSIR-histogram) deltas via ``foreachBatch`` — the
-    streaming face of the incremental-maintenance algebra (DESIGN.md
-    round 7). All four sidecars are pure-additive state published under
-    deterministic batch_id names, so the checkpoint's replay semantics
-    give exactly-once for free (a replayed batch REPLACES its own delta
-    files); no cross-write atomicity is needed because deltas are
-    independent tables that each individually equal their full-corpus
-    derivation when consolidated. The stream itself is stateless — model
-    state lives in the delta tables, readable mid-stream by any
-    consolidated_* reader. ``drift_path`` additionally publishes a
-    per-batch quality-drift report (KL vs the pre-batch baseline —
-    textstats.quality_drift_from_hists), so distribution shift in a
-    source is visible batch-by-batch without any extra corpus read."""
-    from ..operators.etl import (
-        corpus_stats_delta_append,
-        dsir_hist_delta_append,
-        quality_hist_delta_append,
-        vocab_delta_append,
-    )
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        vocab_delta_append(s, vocab_path, batch_df, batch_id=batch_id)
-        corpus_stats_delta_append(s, stats_path, batch_df, batch_id=batch_id)
-        quality_hist_delta_append(s, qhist_path, batch_df, batch_id=batch_id)
-        if dsir_path is not None:
-            dsir_hist_delta_append(
-                s, dsir_path, batch_df, num_buckets=num_buckets, batch_id=batch_id
-            )
-        if drift_path is not None:
-            # drift monitoring rides the loop: KL of THIS batch against the
-            # baseline AS OF BEFORE it (the as-of read keeps a replayed
-            # batch from scoring against its own earlier delta); the first
-            # batch has no baseline and emits nothing. The report itself is
-            # published like any delta — idempotent under replay.
-            from ..operators.etl import _publish, _read_index
-            from ..operators.textstats import (
-                consolidate_quality_hist,
-                quality_drift_from_hists,
-                quality_hist_table,
-            )
-
-            prior = _read_index(s, qhist_path, batch_id)
-            if prior is not None:
-                report = quality_drift_from_hists(
-                    quality_hist_table(batch_df), consolidate_quality_hist(prior)
-                )
-                _publish(s, report, drift_path, batch_id)
-
-    query = (
-        docs_stream.writeStream.foreachBatch(_append)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-def run_ingest_dedup_stream(
-    docs_stream: DataFrame,
-    corpus_path: str,
-    index_path: str,
-    checkpoint_dir: str,
-    bloom_path: str | None = None,
-    compact_every: int = 0,
-    **ingest_kwargs,
-) -> None:
-    """Streaming exact-fingerprint ingest dedup: each micro-batch runs
-    the batch write path (operators/etl.py::ingest_dedup_append) via
-    ``foreachBatch`` — same survivor set as any batching (first-writer-
-    wins on canonical fingerprints is batching-invariant), same
-    batch_id-keyed exactly-once publication. ``bloom_path`` threads the
-    broadcast pre-filter through: at steady state each micro-batch's
-    dedup join shrinks from |batch| to ~|dups| rows, and the filter's
-    one-sidedness makes it replay-proof WITHOUT as-of reconstruction
-    (a self-polluted filter only routes more keys to the exact join —
-    see the append path's docstring). ``compact_every`` as in the
-    near-dup stream."""
-    from ..operators.etl import compact_after_append, ingest_dedup_append
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_dedup_append(
-            batch_df.sparkSession,
-            corpus_path,
-            index_path,
-            batch_df,
-            batch_id=batch_id,
-            bloom_path=bloom_path,
-            **ingest_kwargs,
-        )
-        if compact_every:
-            compact_after_append(
-                batch_df.sparkSession, corpus_path, index_path, batch_id,
-                every=compact_every,
-            )
-
-    query = (
-        docs_stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-def run_ingest_sketch_stream(
-    docs_stream: DataFrame,
-    cms_path: str,
-    hll_path: str,
-    bloom_path: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Streaming sketch maintenance: each micro-batch appends its
-    count-min delta (token frequencies), HyperLogLog registers (distinct
-    doc ids) and Bloom words (canonical fingerprints) under
-    batch_id-deterministic names — the sketch family riding the same
-    stateless foreachBatch discipline as the statistics sidecars. All
-    three merges are replay-safe by their algebra alone: CMS replay
-    REPLACES its own delta files (exactly-once), HLL max and Bloom OR
-    are idempotent so even a double-append is harmless."""
-    from ..operators.etl import cms_delta_append, hll_delta_append
-    from ..operators.etl import _publish
-    from ..operators.sketches import bloom_delta_table
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        cms_delta_append(s, cms_path, batch_df, id_col, text_col, batch_id=batch_id)
-        hll_delta_append(s, hll_path, batch_df, id_col, batch_id=batch_id)
-        from ..functions.text import canonical_fingerprint
-
-        fps = batch_df.select(
-            canonical_fingerprint(F.col(text_col)).alias("fingerprint")
-        )
-        _publish(s, bloom_delta_table(fps, "fingerprint"), bloom_path, batch_id)
-
-    query = (
-        docs_stream.writeStream.foreachBatch(_append)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-def run_ingest_zonemap_stream(
-    events_stream: DataFrame,
-    stats_path: str,
-    checkpoint_dir: str,
-    xcol: str = "ts_us",
-    ycol: str = "user_id",
-    file_expr: str = "ts_us DIV 86400000000",
-) -> None:
-    """Streaming zone-map maintenance: each micro-batch publishes its
-    per-file (n_rows, min/max) stats rows — the add-file-stats commit a
-    lakehouse writer performs — under batch_id-deterministic names
-    (exactly-once on replay: a crash-replayed batch REPLACES its own
-    delta files, which the SUM half of the (MIN, MAX, SUM) monoid
-    requires; the MIN/MAX halves are idempotent regardless). Readers
-    consolidate with ``layout.consolidate_zonemaps`` at plan time —
-    same stateless foreachBatch discipline as the statistics and sketch
-    sidecars."""
-    from ..operators.etl import _publish
-    from ..operators.layout import zonemap_delta_table
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = zonemap_delta_table(batch_df, xcol, ycol, F.expr(file_expr))
-        _publish(batch_df.sparkSession, delta, stats_path, batch_id)
-
-    query = (
-        events_stream.writeStream.foreachBatch(_append)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()

@@ -35,8 +35,8 @@ def spark():
 #     SPARK_GRAFT_RUN_SLOW=1 python -m pytest tests/ -q
 #
 # The list is explicit node names (file::test[param]) rather than marks so
-# the split is auditable in one place; a renamed test falls out of the list
-# and simply runs in the fast core (fail-open).
+# the split is auditable in one place; a name that matches no test fails
+# tests/test_oracle_parity.py::test_slow_list_names_existing_tests.
 
 _SLOW_TESTS = frozenset([
     "test_algorithms.py::test_betweenness_exact_known_graphs",
@@ -47,8 +47,6 @@ _SLOW_TESTS = frozenset([
     "test_algorithms.py::test_hits_bipartite_semantics",
     "test_algorithms.py::test_iterative_trio_gated_and_shuffle_paths_agree",
     "test_algorithms.py::test_knn_lsh_subset_of_exact",
-    "test_algorithms.py::test_lpa_deterministic",
-    "test_algorithms.py::test_lpa_separates_cliques",
     "test_algorithms.py::test_modularity_two_cliques",
     "test_algorithms.py::test_pagerank_invariants",
     "test_algorithms.py::test_pipeline_default_community_is_louvain",
@@ -56,48 +54,34 @@ _SLOW_TESTS = frozenset([
     "test_algorithms.py::test_pipeline_scale_knn_path",
     "test_algorithms.py::test_pipeline_writeback_roundtrip",
     "test_louvain.py::test_louvain_distributed_path_separates_cliques",
-    "test_operators.py::test_compact_after_append_across_boundary_replay_safe",
     "test_operators.py::test_eigenvector_centrality_invariants",
-    "test_operators.py::test_ingest_dedup_bloom_prefilter_is_transparent",
     "test_oracle_parity.py::test_all_registered_queries_are_driver_canonicalizable",
     "test_oracle_parity.py::test_parity_sf0001[q_ingest_neardup]",
     "test_oracle_parity.py::test_parity_sf0001[q_pagerank]",
     "test_oracle_parity.py::test_parity_sf0001[q_recsys_als_invariants]",
     "test_oracle_parity.py::test_parity_sf0001[q_recsys_hitrate_ci]",
-    "test_pipeline_ops.py::test_bm25_sidecar_matches_full_rescan",
     "test_pipeline_ops.py::test_bootstrap_ci_contract",
     "test_pipeline_ops.py::test_bootstrap_ci_key_types_and_null_units",
     "test_pipeline_ops.py::test_bpe_merges_match_reference",
     "test_pipeline_ops.py::test_butterfly_count_empty_graph_is_zero_row",
-    "test_pipeline_ops.py::test_centroid_sidecar_matches_single_pass",
-    "test_pipeline_ops.py::test_cms_sketch_properties_and_retraction",
-    "test_pipeline_ops.py::test_compact_parquet_preserves_rows_and_shrinks_files",
     "test_pipeline_ops.py::test_dedup_exact",
-    "test_pipeline_ops.py::test_dsir_hist_delta_append_matches_full_retrain",
-    "test_pipeline_ops.py::test_dsir_sidecar_retraction_matches_survivor_retrain",
     "test_pipeline_ops.py::test_embedding_neardup_lsh_subset_of_exact",
     "test_pipeline_ops.py::test_filter_flags_degenerate_docs",
     "test_pipeline_ops.py::test_greedy_first_writer_is_lfmis",
-    "test_pipeline_ops.py::test_hll_registers_merge_and_estimate",
-    "test_pipeline_ops.py::test_ingest_neardup_append_batch_id_exactly_once",
-    "test_pipeline_ops.py::test_ingest_neardup_append_batching_invariance",
-    "test_pipeline_ops.py::test_ingest_neardup_batching_invariance_across_compaction",
-    "test_pipeline_ops.py::test_ingest_spanscrub_batching_invariance",
+    "test_pipeline_ops.py::test_ingest_neardup_decisions_batching_invariance",
+    "test_pipeline_ops.py::test_ingest_spanscrub_decisions_batching_invariance",
     "test_pipeline_ops.py::test_ivfpq_lut_gate_distributed_path_is_bit_equal",
     "test_pipeline_ops.py::test_join_size_audit_hand_counts",
-    "test_pipeline_ops.py::test_lm_sidecar_matches_full_rescan_and_retraction",
     "test_pipeline_ops.py::test_lsh_verified_composition",
     "test_pipeline_ops.py::test_mmr_rerank_diversifies",
     "test_pipeline_ops.py::test_multiprobe_lsh_recall_dominates_single_probe",
     "test_pipeline_ops.py::test_neardup_components_chain_converges_with_pointer_jumping",
     "test_pipeline_ops.py::test_opq_rotation_invariants_and_recall",
     "test_pipeline_ops.py::test_quality_drift_report_flags_shifted_source",
-    "test_pipeline_ops.py::test_quality_hist_sidecar_matches_full_scan",
-    "test_pipeline_ops.py::test_sidecar_retraction_matches_rebuild_without_batch",
+    "test_pipeline_ops.py::test_sidecar_consolidations_retract_and_merge",
     "test_pipeline_ops.py::test_simsearch_ivfpq_recall_against_bruteforce",
     "test_pipeline_ops.py::test_simsearch_lsh_recall_against_bruteforce",
     "test_pipeline_ops.py::test_source_signatures_distinctive_terms",
-    "test_pipeline_ops.py::test_vocab_delta_append_matches_full_rebuild",
     "test_plans.py::test_books_dim_broadcast",
     "test_plans.py::test_fanout_sizing_runs_no_job",
     "test_plans.py::test_fastrp_round_is_exchange_free",
@@ -111,8 +95,6 @@ _SLOW_TESTS = frozenset([
     "test_properties.py::test_event_conversions_matches_bruteforce",
     "test_properties.py::test_filter_flags_matches_python_replica",
     "test_properties.py::test_greedy_first_writer_equals_sequential_greedy",
-    "test_properties.py::test_ingest_neardup_invariant_under_random_batching",
-    "test_properties.py::test_ingest_spanscrub_invariant_under_random_batching",
     "test_properties.py::test_jaccard_bounds_and_symmetry",
     "test_properties.py::test_length_quantile_keep_properties",
     "test_properties.py::test_linkpred_capped_matches_python_replica",
@@ -125,16 +107,7 @@ _SLOW_TESTS = frozenset([
     "test_properties.py::test_source_signatures_two_level_topk_matches_naive",
     "test_properties.py::test_stratified_sample_two_level_equals_naive_window",
     "test_properties.py::test_upsert_idempotent_and_total",
-    "test_streaming.py::test_streaming_funnel_matches_batch_triples",
-    "test_streaming.py::test_streaming_ingest_dedup_across_compaction_boundary",
-    "test_streaming.py::test_streaming_ingest_dedup_bloom_matches_batch",
-    "test_streaming.py::test_streaming_ingest_neardup_matches_batch",
-    "test_streaming.py::test_streaming_ingest_spanscrub_matches_batch",
     "test_streaming.py::test_streaming_pack_state_survives_multiple_microbatches",
-    "test_streaming.py::test_streaming_profile_state_survives_multiple_microbatches",
-    "test_streaming.py::test_streaming_sketches_match_single_pass",
-    "test_streaming.py::test_streaming_stats_sidecars_match_full_scan",
-    "test_streaming.py::test_zonemap_stream_matches_single_pass",
 ])
 
 

@@ -19,7 +19,7 @@ from graph_database_application_for_recommendations_spark.plans.graphs import (
     bipartite_rating_graph,
     undirected,
 )
-from graph_database_application_for_recommendations_spark.plans.lpa import label_propagation
+from graph_database_application_for_recommendations_spark.plans.louvain import louvain
 from graph_database_application_for_recommendations_spark.plans.modularity import modularity
 from graph_database_application_for_recommendations_spark.sources.views import load_ref_tables
 
@@ -41,30 +41,19 @@ def two_cliques(spark):
     return undirected(df)
 
 
-def test_lpa_separates_cliques(spark, two_cliques):
-    comm = label_propagation(two_cliques, max_iter=10)
-    got = {r["node_id"]: r["community"] for r in comm.collect()}
-    assert set(got) == {1, 2, 3, 4, 11, 12, 13, 14}  # partition covers all nodes
-    c1 = {got[i] for i in [1, 2, 3, 4]}
-    c2 = {got[i] for i in [11, 12, 13, 14]}
-    assert len(c1) == 1 and len(c2) == 1 and c1 != c2
-    # canonicalized ids: community id == smallest member id
-    assert c1 == {1} and c2 == {11}
-
-
-def test_lpa_deterministic(spark, two_cliques):
-    a = sorted(map(tuple, label_propagation(two_cliques).collect()))
-    b = sorted(map(tuple, label_propagation(two_cliques).collect()))
-    assert a == b
-
-
 def test_modularity_two_cliques(spark, two_cliques):
-    comm = label_propagation(two_cliques)
-    q = modularity(two_cliques, comm)
+    # the planted partition: one community per clique
+    planted = spark.createDataFrame(
+        [(i, 1) for i in (1, 2, 3, 4)] + [(i, 11) for i in (11, 12, 13, 14)],
+        "node_id LONG, community LONG",
+    )
+    q = modularity(two_cliques, planted)
     assert 0.3 < q < 0.55  # near-perfect 2-community partition
     # degenerate partition (everything one community) has Q ~= 0
-    one = comm.select("node_id").withColumn("community", F.lit(1))
+    one = planted.withColumn("community", F.lit(1))
     assert abs(modularity(two_cliques, one)) < 1e-9
+    _, q_louvain = louvain(two_cliques)
+    assert q_louvain >= q - 1e-9
 
 
 def test_fastrp_shape_and_determinism(spark):
@@ -347,18 +336,18 @@ def test_pipeline_modularity_matches_duckdb(spark):
 def test_pipeline_default_community_is_louvain(spark):
     """VERDICT r3 item 5: the pipeline's community stage defaults to
     Louvain (the reference's actual algorithm, Alg_Community_Detection.py)
-    and its modularity dominates the LPA stand-in's on the same graph
-    (LPA collapses to one community on the dense co-rating projection,
-    Q = 0; Louvain finds a nontrivial partition)."""
+    and finds a nontrivial partition of the dense co-rating projection:
+    its modularity beats the one-community partition's, which is Q = 0."""
     from graph_database_application_for_recommendations_spark.plans.pipeline import run_pipeline
 
     q_louvain = run_pipeline(spark, SF_SMALL).modularity
     co = corating_edges(load_ref_tables(spark, SF_SMALL).ratings).select(
         F.col("u1").alias("src"), F.col("u2").alias("dst"),
         F.col("weight").cast("double").alias("weight"))
-    q_lpa = modularity(co, label_propagation(co, max_iter=10))
-    assert q_louvain > 0.0
-    assert q_louvain >= q_lpa
+    nodes = co.select(F.col("src").alias("node_id")).distinct()
+    q_one = modularity(co, nodes.withColumn("community", F.lit(1)))
+    assert abs(q_one) < 1e-9
+    assert q_louvain > q_one
 
 
 def _count_calls(monkeypatch, module, name: str) -> list:

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from graph_database_application_for_recommendations_spark.plans.graphs import undirected
 from graph_database_application_for_recommendations_spark.plans.louvain import louvain
-from graph_database_application_for_recommendations_spark.plans.lpa import label_propagation
 from graph_database_application_for_recommendations_spark.plans.modularity import modularity
 
 
@@ -45,10 +44,15 @@ def test_louvain_distributed_path_separates_cliques(spark, three_cliques):
 
 
 def test_louvain_at_least_as_good_as_lpa(spark, three_cliques):
+    """Louvain's Q is at least the planted partition's: one community
+    per clique."""
     _, q_louvain = louvain(three_cliques)
-    lpa = label_propagation(three_cliques)
-    q_lpa = modularity(three_cliques, lpa)
-    assert q_louvain >= q_lpa - 1e-9
+    planted = spark.createDataFrame(
+        [(i, c[0]) for c in ([1, 2, 3, 4], [11, 12, 13, 14], [21, 22, 23, 24]) for i in c],
+        "node_id LONG, community LONG",
+    )
+    q_planted = modularity(three_cliques, planted)
+    assert q_louvain >= q_planted - 1e-9
 
 
 def test_louvain_coarsening_merges_chain(spark):

@@ -427,67 +427,6 @@ def test_resample_forward_fill_semantics(spark):
     assert got[("b", base + 3 * h)] == (7.0, False)
 
 
-def test_bucketed_point_upsert_rewrites_only_touched_buckets(spark, tmp_path):
-    """VERDICT r3 missing-item #2: the cheap single-entity write-back.
-    A point upsert must (a) produce exactly upsert_keep_last semantics,
-    (b) physically rewrite ONLY the buckets the updated keys hash to, and
-    (c) serve point lookups with partition pruning."""
-    import os
-
-    from graph_database_application_for_recommendations_spark.sources.views import (
-        load_ref_tables,
-    )
-
-    ratings = load_ref_tables(spark, SF_SMALL).ratings
-    path = str(tmp_path / "bucketed_ratings")
-    keys = ["user_id", "isbn"]
-    etl.write_bucketed(ratings, path, keys, n_buckets=16)
-
-    first = ratings.orderBy("user_id", "isbn").limit(1).collect()[0]
-    updates = spark.createDataFrame(
-        [(first["user_id"], first["isbn"], 3), (999_999, "zzz-new", 9)],
-        ratings.schema,
-    )
-
-    def snapshot():
-        out = {}
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    out[p] = os.stat(p).st_mtime_ns
-        return out
-
-    before = snapshot()
-    touched = etl.point_upsert(spark, path, updates, keys, n_buckets=16)
-    after = snapshot()
-
-    # (a) semantics: equal to the full-table MERGE
-    want = sorted(
-        map(tuple, etl.upsert_keep_last(ratings, updates, keys).collect())
-    )
-    got = sorted(map(tuple, etl.read_bucketed(spark, path).collect()))
-    assert got == want
-
-    # (b) physical cheapness: files outside the touched buckets unchanged
-    untouched_before = {
-        p: t for p, t in before.items()
-        if not any(f"_bucket={b}/" in p for b in touched)
-    }
-    assert untouched_before  # the update must not have touched everything
-    for p, t in untouched_before.items():
-        assert after.get(p) == t, f"untouched bucket file rewritten: {p}"
-    assert 0 < len(touched) <= 2
-
-    # (c) point lookup: pruned scan, updated value visible
-    row = etl.point_lookup(
-        spark, path, keys, [first["user_id"], first["isbn"]], n_buckets=16
-    )
-    assert [r["rating"] for r in row.collect()] == [3]
-    plan = row._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "_bucket" in plan.split("PartitionFilters")[1][:200]
-
-
 def test_source_format_roundtrips(spark, tmp_path):
     """Source/sink format coverage beyond parquet+CSV: ORC and JSON-lines
     round-trip the documents table byte-for-byte (same rows, same
@@ -516,179 +455,6 @@ def test_source_format_roundtrips(spark, tmp_path):
         )
     )
     assert got_json == want
-
-
-def test_ingest_dedup_append_matches_batch_dedup(spark, tmp_path):
-    """Two overlapping ingest batches through the fingerprint-index path
-    admit exactly the batch dedup_fingerprint survivor set of the union
-    (first-writer-wins across batches; ids ordered so batch order ==
-    id order)."""
-    from graph_database_application_for_recommendations_spark.operators.dedup import (
-        dedup_fingerprint,
-    )
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        ingest_dedup_append,
-    )
-
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "fp_index")
-    b1 = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "delta epsilon"), (3, "beta  GAMMA alpha")],
-        "doc_id long, text string",
-    )  # 3 is a canonical dup of 1 (order/case/whitespace)
-    b2 = spark.createDataFrame(
-        [(4, "delta epsilon"), (5, "zeta eta"), (6, "zeta eta"), (7, "theta")],
-        "doc_id long, text string",
-    )  # 4 dups batch-1's 2; 6 dups 5 within the batch
-    n1 = ingest_dedup_append(spark, corpus, index, b1)
-    n2 = ingest_dedup_append(spark, corpus, index, b2)
-    assert (n1, n2) == (2, 2)
-    stored = spark.read.parquet(corpus)
-    want = {
-        r["keep_id"]
-        for r in dedup_fingerprint(b1.unionByName(b2)).collect()
-    }
-    assert {r["doc_id"] for r in stored.collect()} == want == {1, 2, 5, 7}
-    # the index holds exactly one fingerprint per survivor
-    assert spark.read.parquet(index).distinct().count() == 4
-
-
-def test_ingest_dedup_bloom_prefilter_is_transparent(spark, tmp_path):
-    """The Bloom pre-filter changes the PLAN, never the survivor set:
-    the same overlapping batches through the bloom_path variant store
-    exactly the plain-path corpus and index; the filter answers TRUE for
-    every admitted fingerprint (no false negatives) and the sidecar
-    accumulates one delta per non-empty batch."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        ingest_dedup_append,
-    )
-    from graph_database_application_for_recommendations_spark.operators.sketches import (
-        bloom_maybe_contains,
-        bloom_merge,
-    )
-
-    b1 = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "delta epsilon"), (3, "beta  GAMMA alpha")],
-        "doc_id long, text string",
-    )
-    b2 = spark.createDataFrame(
-        [(4, "delta epsilon"), (5, "zeta eta"), (6, "zeta eta"), (7, "theta")],
-        "doc_id long, text string",
-    )
-    plain_c, plain_i = str(tmp_path / "pc"), str(tmp_path / "pi")
-    ingest_dedup_append(spark, plain_c, plain_i, b1, batch_id=0)
-    ingest_dedup_append(spark, plain_c, plain_i, b2, batch_id=1)
-
-    c, i, bl = str(tmp_path / "c"), str(tmp_path / "i"), str(tmp_path / "bloom")
-    n1 = ingest_dedup_append(spark, c, i, b1, batch_id=0, bloom_path=bl)
-    n2 = ingest_dedup_append(spark, c, i, b2, batch_id=1, bloom_path=bl)
-    assert (n1, n2) == (2, 2)
-    assert sorted(map(tuple, spark.read.parquet(c).collect())) == sorted(
-        map(tuple, spark.read.parquet(plain_c).collect())
-    )
-    # replay of batch 1 with the (self-polluted) filter: still a no-op set
-    ingest_dedup_append(spark, c, i, b2, batch_id=1, bloom_path=bl)
-    assert sorted(map(tuple, spark.read.parquet(c).collect())) == sorted(
-        map(tuple, spark.read.parquet(plain_c).collect())
-    )
-    bloom = bloom_merge(spark.read.parquet(bl))
-    admitted = spark.read.parquet(i).select(F.col("fingerprint"))
-    flags = bloom_maybe_contains(bloom, admitted, "fingerprint")
-    assert all(r["maybe_present"] for r in flags.collect())
-
-
-def test_read_table_asof_snapshots_ingest_history(spark, tmp_path):
-    """The batch-file protocol gives time travel for free: asof(N) reads
-    exactly the corpus as it stood after batch N — including through a
-    replayed (replaced) batch — and refuses loudly once compaction has
-    traded history for file count."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        compact_parquet,
-        ingest_dedup_append,
-        read_table_asof,
-    )
-
-    corpus, index = str(tmp_path / "c"), str(tmp_path / "i")
-    batches = [
-        [(1, "alpha beta"), (2, "gamma delta")],
-        [(3, "epsilon zeta"), (4, "alpha  BETA")],  # 4 dups 1
-        [(5, "eta theta")],
-    ]
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        ingest_dedup_append(spark, corpus, index, df, batch_id=i)
-    # replay batch 1: snapshot must not double-count
-    ingest_dedup_append(
-        spark, corpus, index,
-        spark.createDataFrame(batches[1], "doc_id long, text string"), batch_id=1,
-    )
-    asof = lambda b: {r["doc_id"] for r in read_table_asof(spark, corpus, b).collect()}
-    assert asof(0) == {1, 2}
-    assert asof(1) == {1, 2, 3}
-    assert asof(2) == {1, 2, 3, 5}
-    assert read_table_asof(spark, corpus, -1).count() == 0
-
-    compact_parquet(spark, corpus, target_files=1)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="history unavailable"):
-        read_table_asof(spark, corpus, 1)
-
-
-def test_compact_after_append_across_boundary_replay_safe(spark, tmp_path):
-    """VERDICT r7 item 8: the ingest-loop compaction hook must preserve
-    the exactly-once contract ACROSS a compaction boundary. Sequence:
-    ingest batches 0,1 (compaction fires after batch 1, every=2, folding
-    their batch-named files into anonymous compacted files), then (a)
-    REPLAY batch 0 — whose name-based replay exclusion was surrendered
-    by compaction — and (b) continue with batches 2,3 (compaction fires
-    again after 3). Final corpus and index must equal the clean
-    never-compacted, never-replayed run row-for-row, the replay must be
-    a no-op (the fingerprint anti-join, not file names, is the
-    guarantee), and compaction must actually reduce the file count."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        compact_after_append,
-        ingest_dedup_append,
-    )
-    from graph_database_application_for_recommendations_spark.sources.fsutil import (
-        list_parquet,
-    )
-
-    batches = [
-        [(1, "alpha beta"), (2, "gamma delta")],
-        [(3, "epsilon zeta"), (4, "alpha  BETA")],   # 4 dups 1 cross-batch
-        [(5, "eta theta"), (6, "eta  THETA")],       # 6 dups 5 in-batch
-        [(7, "iota kappa"), (8, "gamma DELTA")],     # 8 dups 2 cross-batch
-    ]
-    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-
-    plain_c, plain_i = str(tmp_path / "pc"), str(tmp_path / "pi")
-    for i, rows in enumerate(batches):
-        ingest_dedup_append(spark, plain_c, plain_i, mk(rows), batch_id=i)
-
-    c, i_ = str(tmp_path / "c"), str(tmp_path / "i")
-    fired = []
-    for b in (0, 1):
-        ingest_dedup_append(spark, c, i_, mk(batches[b]), batch_id=b)
-    files_before = len(list_parquet(spark, c))
-    fired.append(compact_after_append(spark, c, i_, batch_id=1, every=2))
-    files_after = len(list_parquet(spark, c))
-    assert fired == [True] and files_after < files_before
-    # (a) replay a batch whose files were just compacted away: no-op
-    appended = ingest_dedup_append(spark, c, i_, mk(batches[0]), batch_id=0)
-    assert appended == 0
-    # (b) keep ingesting across the boundary; second compaction at 3
-    for b in (2, 3):
-        ingest_dedup_append(spark, c, i_, mk(batches[b]), batch_id=b)
-        fired.append(compact_after_append(spark, c, i_, batch_id=b, every=2))
-    assert fired == [True, False, True]
-    got = sorted(map(tuple, spark.read.parquet(c).collect()))
-    want = sorted(map(tuple, spark.read.parquet(plain_c).collect()))
-    assert got == want
-    assert (
-        spark.read.parquet(i_).distinct().count()
-        == spark.read.parquet(plain_i).distinct().count()
-    )
 
 
 def test_bench_record_fits_driver_tail_budget():
@@ -864,42 +630,3 @@ def test_ab_drift_median_of_alternating_draws(monkeypatch):
     assert len(trees) == 4
     assert trees[0] == trees[2] and trees[1] == trees[3]
     assert trees[0] != trees[1]
-
-
-def test_bucketed_join_elides_shuffle(spark, tmp_path):
-    """Two tables bucketed identically on the join key join with NO
-    Exchange on either side (the co-located merge join); an unbucketed
-    read of the same data shuffles. This is the plan-level proof of the
-    write_bucketed contract."""
-    from pyspark.sql import functions as F
-
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        write_bucketed_table,
-    )
-
-    a = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") % 7).alias("va"))
-    b = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") % 5).alias("vb"))
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the sort-merge path: at test sizes Spark would broadcast,
-        # which bypasses bucketing entirely ("Bucketed: false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed_table(a, "t_bk_a", ["k"], 8, str(tmp_path / "a"))
-        write_bucketed_table(b, "t_bk_b", ["k"], 8, str(tmp_path / "b"))
-        joined = spark.table("t_bk_a").join(spark.table("t_bk_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-        assert joined.count() == 1000
-        # control: the same data read plainly DOES shuffle
-        pa = spark.read.parquet(str(tmp_path / "a"))
-        pb = spark.read.parquet(str(tmp_path / "b"))
-        plain = pa.join(pb, "k")
-        assert (
-            "Exchange hashpartitioning"
-            in plain._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        spark.sql("DROP TABLE IF EXISTS t_bk_a")
-        spark.sql("DROP TABLE IF EXISTS t_bk_b")

@@ -521,6 +521,29 @@ def test_no_module_level_cache_containers():
     )
 
 
+def test_slow_list_names_existing_tests():
+    """Every ``conftest._SLOW_TESTS`` entry names a test function defined
+    in its file: a deleted or renamed test must leave the list with it,
+    or the slow/fast split silently drifts."""
+    import ast
+    import os
+
+    from .conftest import _SLOW_TESTS
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    defined: dict[str, set[str]] = {}
+    for fname in {entry.split("::")[0] for entry in _SLOW_TESTS}:
+        path = os.path.join(here, fname)
+        body = ast.parse(open(path).read()).body if os.path.exists(path) else []
+        defined[fname] = {n.name for n in body if isinstance(n, ast.FunctionDef)}
+    stale = sorted(
+        entry
+        for entry in _SLOW_TESTS
+        if entry.split("::")[1].split("[")[0] not in defined[entry.split("::")[0]]
+    )
+    assert not stale, f"_SLOW_TESTS entries naming no test: {stale}"
+
+
 def test_gate_node_vector_broadcast_switches_on_count(spark):
     """The shared gate must broadcast (with the witness alias) under the
     byte budget and fall back to the bare frame over it — the exact louvain
@@ -802,7 +825,6 @@ def test_driver_side_materialization_sites_are_classified():
         "operators/bpe.py::bpe_merges": (1, "n_merges-bounded vocab loop (driver algorithm)"),
         "operators/dedup.py::neardup_components": (1, "scalar convergence check per LFMIS round"),
         "operators/diagnostics.py::table_profile": (1, "bounded per-column profile rows"),
-        "operators/etl.py::point_upsert": (1, "single-key point operation"),
         "operators/ivf.py::train_ivf_centroids": (2, "num_cells x dim seed and centroid tables, already broadcast through the driver"),
         "operators/ivfpq.py::topk_ivfpq": (1, "LUT-gated local rerank (documented gate)"),
         "operators/knn.py::knn_exact_local": (1, "size-gated local twin of the distributed op"),
@@ -810,7 +832,6 @@ def test_driver_side_materialization_sites_are_classified():
         "operators/pq.py::topk_pq": (1, "codebook-sized LUT to driver"),
         "operators/pq.py::train_pq_codebooks": (1, "sampled k-means training set (bounded sample)"),
         "operators/sampling.py::stratified_sample": (1, "scalar histogram-size gate aggregate (r10 broadcast guard)"),
-        "operators/sketches.py::hll_estimate": (1, "fixed 2^p register table"),
         "plans/fastrp.py::_fastrp_local": (2, "gated driver-local path (documented gates)"),
         "plans/louvain.py::_local_move": (1, "scalar move-count per sweep"),
         "plans/louvain.py::louvain": (2, "coarsened-graph gate + scalar convergence"),
@@ -828,3 +849,6 @@ def test_driver_side_materialization_sites_are_classified():
     )
     grown = {s: c for s, c in sites.items() if c > allow[s][0]}
     assert not grown, f"sites grew beyond their audited call count: {grown}"
+    assert set(allow) <= set(sites), (
+        f"stale allow-list entries: {sorted(set(allow) - set(sites))}"
+    )

@@ -1542,16 +1542,228 @@ def test_split_paragraphs_overflow_raises_loudly(spark):
         dedup.split_paragraphs(docs, max_paras=3).collect()
 
 
+def _ingest_test_docs():
+    """30 docs in three id-ordered groups of 10 with planted duplicates:
+    doc 3 = token-permutation of doc 1 (exact/canonical dup, in-group),
+    doc 15 = permutation of doc 5 (exact dup across groups),
+    doc 12 = doc 2 + one appended token (near dup across groups),
+    doc 23 = doc 12 + one appended token (near dup of a DROPPED doc and
+    of kept doc 2's text family — exercises the chain)."""
+    base = {
+        i: " ".join(f"w{i}x{j}" for j in range(20)) for i in range(30)
+    }
+    base[3] = " ".join(reversed(base[1].split()))
+    base[15] = " ".join(reversed(base[5].split()))
+    base[12] = base[2] + " extra1"
+    base[23] = base[12] + " extra2"
+    return [(i, base[i]) for i in range(30)]
+
+
+def _spanscrub_test_docs():
+    """Docs with cross-batch AND in-batch shared spans: shared0..119 has
+    CDC boundaries after 19/49/64/103, so its interior chunks are the
+    shareable units. doc 1 owns the span; docs 11 (batch 2) and 21
+    (batch 3) embed it; docs 14 and 15 (same batch) share a second span
+    with each other only (in-batch first-writer case)."""
+    para = " ".join(f"shared{i}" for i in range(120))
+    para2 = " ".join(f"intra{i}" for i in range(120))
+    rows = []
+    for i in range(30):
+        base = " ".join(f"d{i}w{j}" for j in range(25))
+        if i == 1:
+            t = para
+        elif i in (11, 21):
+            t = base + " " + para + f" tail{i}"
+        elif i == 14:
+            t = para2
+        elif i == 15:
+            t = base + " " + para2 + " tailx"
+        else:
+            t = base
+        rows.append((i, t))
+    return rows
+
+def test_ingest_neardup_decisions_batching_invariance(spark):
+    """Round-5 VERDICT item 3: deciding the corpus as one batch or as
+    three id-ordered micro-batches, each appending its survivors'
+    (fingerprint, sig) rows to the index the next one reads, keeps the
+    IDENTICAL survivor set; exact and near duplicates of standing docs
+    drop without rescanning corpus text."""
+    from graph_database_application_for_recommendations_spark.functions.text import (
+        canonical_fingerprint,
+    )
+    from graph_database_application_for_recommendations_spark.operators.dedup import (
+        ingest_neardup_decisions,
+        minhash_signature_arrays,
+    )
+
+    docs = spark.createDataFrame(_ingest_test_docs(), "doc_id long, text string")
+
+    def index_rows(df):
+        return (
+            df.select("doc_id", canonical_fingerprint(F.col("text")).alias("fingerprint"))
+            .join(minhash_signature_arrays(df), "doc_id", "left")
+            .select("fingerprint", "sig")
+        )
+
+    def survivors(batches):
+        index, kept = index_rows(docs.limit(0)), set()
+        for b in batches:
+            ids = {
+                r["doc_id"]
+                for r in ingest_neardup_decisions(index, b).collect()
+                if r["status"] == "kept"
+            }
+            kept |= ids
+            index = index.unionByName(index_rows(b.filter(F.col("doc_id").isin(sorted(ids)))))
+        return kept
+
+    got_one = survivors([docs])
+    got_multi = survivors(
+        [docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10)) for lo in (0, 10, 20)]
+    )
+    assert got_one == got_multi
+    assert 3 not in got_one and 15 not in got_one  # canonical-fp dups
+    assert 12 not in got_one  # near dup of standing doc 2 (cross batch)
+    assert 23 not in got_one  # near dup in the 12-2 text family
+    assert {0, 1, 2, 5} <= got_one
+    assert len(got_one) == 26
+
+
+def test_ingest_spanscrub_decisions_batching_invariance(spark):
+    """One batch vs three id-ordered micro-batches, each adding its new
+    chunk hashes to the index the next one reads, scrub every doc to the
+    IDENTICAL text, and that text equals remove_cross_doc_spans over the
+    whole set: the submitted-text ownership rule needs no rounds."""
+    from graph_database_application_for_recommendations_spark.operators.dedup import (
+        ingest_spanscrub_decisions,
+        remove_cross_doc_spans,
+    )
+
+    docs = spark.createDataFrame(_spanscrub_test_docs(), "doc_id long, text string")
+
+    def scrubbed(batches):
+        index = spark.createDataFrame([], "chunk_hash string")
+        out = {}
+        for b in batches:
+            clean, new = ingest_spanscrub_decisions(index, b, boundary_mod=16, min_tokens=2)
+            out.update({r["doc_id"]: r["clean_text"] for r in clean.collect()})
+            index = index.unionByName(new.select("chunk_hash"))
+        return out
+
+    got_one = scrubbed([docs])
+    got_multi = scrubbed(
+        [docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10)) for lo in (0, 10, 20)]
+    )
+    assert len(got_one) == 30
+    assert got_one == got_multi
+    offline = {r["doc_id"]: r["clean_text"] for r in remove_cross_doc_spans(docs).collect()}
+    assert got_one == offline
+    # the embedded span's interior is gone from every later doc
+    for victim in (11, 21):
+        kept = set(got_one[victim].split())
+        assert {i for i in range(120) if f"shared{i}" not in kept} == set(range(20, 104))
+    assert "intra20" not in set(got_one[15].split())  # in-batch first-writer
+    assert got_one[14] == " ".join(f"intra{i}" for i in range(120))  # owner keeps
+
+
+def test_sidecar_consolidations_retract_and_merge(spark):
+    """The batch faces of the sidecar algebra, without any file layer:
+    a batch retracted by its negated delta leaves each group-algebra
+    consolidation equal to a direct build over the surviving rows;
+    count-min estimates are one-sided; HLL registers max-merged over
+    batches, one of them appended twice, equal the single-pass table."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from graph_database_application_for_recommendations_spark.functions.text import tokens
+    from graph_database_application_for_recommendations_spark.operators.simsearch import (
+        centroid_delta_table,
+        consolidate_centroids,
+    )
+    from graph_database_application_for_recommendations_spark.operators.sketches import (
+        cms_delta_table,
+        cms_point_estimates,
+        consolidate_cms,
+        hll_merge,
+        hll_register_table,
+    )
+    from graph_database_application_for_recommendations_spark.operators.textstats import (
+        bigram_count_table,
+        consolidate_bigram_counts,
+        consolidate_quality_hist,
+        quality_hist_table,
+    )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def retracted(table, batches, cols):
+        deltas = [table(b) for b in batches]
+        neg = deltas[1].select(
+            *[(-F.col(c)).alias(c) if c in cols else c for c in deltas[1].columns]
+        )
+        return reduce(DataFrame.unionByName, deltas, neg)
+
+    docs = spark.createDataFrame(
+        [
+            (i, ("the and of " * (i % 3)) + " ".join(f"tok{(i * 7 + j) % 13}" for j in range(8)),
+             f"src{i % 2}")
+            for i in range(30)
+        ]
+        # only in the retracted batch: its bigrams must drop out entirely
+        + [(31, "qzqz xjxj", "src1")],
+        "doc_id long, text string, source string",
+    )
+    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    surviving = docs.filter(F.col("doc_id") % 3 != 1)
+    assert rows(
+        consolidate_quality_hist(retracted(quality_hist_table, batches, {"n_docs"}))
+    ) == rows(quality_hist_table(surviving))
+    assert rows(
+        consolidate_bigram_counts(retracted(bigram_count_table, batches, {"_cnt"}))
+    ) == rows(consolidate_bigram_counts(bigram_count_table(surviving)))
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 4) + 0.0625 * (i % 9), float(i % 5)]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    cent = spark.createDataFrame([(0, [0.0, 0.0]), (1, [3.0, 3.0])], "cid long, cv array<double>")
+    ebatches = [emb.filter(F.col("vec_id") % 3 == i) for i in range(3)]
+    assert rows(
+        consolidate_centroids(
+            retracted(lambda b: centroid_delta_table(b, cent), ebatches, {"isum", "n_vecs"})
+        )
+    ) == rows(consolidate_centroids(centroid_delta_table(emb.filter(F.col("vec_id") % 3 != 1), cent)))
+
+    true_counts = {
+        r["token"]: r["n"]
+        for r in docs.select(F.explode(tokens(F.col("text"))).alias("token"))
+        .groupBy("token").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    est = {
+        r["token"]: r["est"]
+        for r in cms_point_estimates(
+            consolidate_cms(cms_delta_table(docs)), list(true_counts) + ["zz_absent"]
+        ).collect()
+    }
+    assert all(est[t] >= n for t, n in true_counts.items())
+    assert est["zz_absent"] >= 0
+
+    uids = spark.range(3000).select((F.col("id") % 1000).alias("uid"))
+    merged = reduce(
+        DataFrame.unionByName,
+        [hll_register_table(uids.filter(F.col("uid") % 3 == i), "uid") for i in (0, 1, 2, 0)],
+    )
+    assert rows(hll_merge(merged)) == rows(hll_register_table(uids, "uid"))
+
+
 def test_dsir_log_ratio_is_dense_and_stream_guard_rejects_mismatch(spark):
     """ADVICE r5: the trained (b, lr) table is DENSE — exactly num_buckets
-    rows, unseen buckets carrying the smoothed ratio — so the streaming
-    scorer's stream-static join can never drop a novel document's tokens;
-    and the scorer loudly rejects a table whose bucket count doesn't match
-    its num_buckets instead of silently mis-assigning every token."""
+    rows, unseen buckets carrying the smoothed ratio — so a scorer that
+    joins it can never drop a novel document's tokens."""
     from graph_database_application_for_recommendations_spark.operators import textstats
-    from graph_database_application_for_recommendations_spark.streaming import (
-        events as stream_ops,
-    )
 
     docs = spark.createDataFrame(
         [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
@@ -1569,9 +1781,6 @@ def test_dsir_log_ratio_is_dense_and_stream_guard_rejects_mismatch(spark):
     default_lr = math.log(1.0 / (2 + B)) - math.log(1.0 / (4 + B))
     unseen = [lr for b, lr in seen_lr.items() if abs(lr - default_lr) < 1e-12]
     assert len(unseen) >= B - 3  # at most 3 distinct token buckets occupied
-
-    with pytest.raises(ValueError, match="num_buckets"):
-        stream_ops.dsir_score_stream(docs, ratio, num_buckets=128)
 
 
 def test_ivfpq_lut_gate_distributed_path_is_bit_equal(spark):
@@ -1615,63 +1824,6 @@ def test_greedy_first_writer_is_lfmis(spark):
     ids4 = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
     kept = {r["doc_id"] for r in greedy_first_writer(ids4, star).collect() if r["keep"]}
     assert kept == {1}
-
-
-def _ingest_test_docs():
-    """30 docs in three id-ordered groups of 10 with planted duplicates:
-    doc 3 = token-permutation of doc 1 (exact/canonical dup, in-group),
-    doc 15 = permutation of doc 5 (exact dup across groups),
-    doc 12 = doc 2 + one appended token (near dup across groups),
-    doc 23 = doc 12 + one appended token (near dup of a DROPPED doc and
-    of kept doc 2's text family — exercises the chain)."""
-    base = {
-        i: " ".join(f"w{i}x{j}" for j in range(20)) for i in range(30)
-    }
-    base[3] = " ".join(reversed(base[1].split()))
-    base[15] = " ".join(reversed(base[5].split()))
-    base[12] = base[2] + " extra1"
-    base[23] = base[12] + " extra2"
-    return [(i, base[i]) for i in range(30)]
-
-
-def test_ingest_neardup_append_batching_invariance(spark, tmp_path):
-    """Round-5 VERDICT item 3: replaying the same corpus as one batch or
-    as three id-ordered micro-batches against the accumulating
-    fingerprint+signature index yields the IDENTICAL survivor set, with
-    exact and near duplicates of standing docs dropped without rescanning
-    corpus text."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        ingest_neardup_append,
-    )
-
-    rows = _ingest_test_docs()
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    one = tmp_path / "one"
-    ingest_neardup_append(spark, str(one / "corpus"), str(one / "index"), docs)
-    got_one = {
-        r["doc_id"] for r in spark.read.parquet(str(one / "corpus")).collect()
-    }
-
-    multi = tmp_path / "multi"
-    for lo in (0, 10, 20):
-        batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        ingest_neardup_append(spark, str(multi / "corpus"), str(multi / "index"), batch)
-    got_multi = {
-        r["doc_id"] for r in spark.read.parquet(str(multi / "corpus")).collect()
-    }
-
-    assert got_one == got_multi
-    # planted dups dropped, everything else kept
-    assert 3 not in got_one and 15 not in got_one  # canonical-fp dups
-    assert 12 not in got_one  # near dup of standing doc 2 (cross batch)
-    assert 23 not in got_one  # near dup in the 12-2 text family
-    assert {0, 1, 2, 5} <= got_one
-    assert len(got_one) == 26
-    # the index carries one (fingerprint, sig) row per survivor
-    idx = spark.read.parquet(str(multi / "index"))
-    assert idx.count() == len(got_multi)
-    assert idx.select("fingerprint").distinct().count() == len(got_multi)
 
 
 def _gradient(h, w):
@@ -1850,38 +2002,6 @@ def test_decontaminate_flags_eval_overlap(spark):
     assert rows[3]["contaminated"] and rows[3]["eval_hits"] > 2
 
 
-def test_compact_parquet_preserves_rows_and_shrinks_files(spark, tmp_path):
-    """Compaction of the append-grown ingest index: row content identical
-    (fingerprint+sig multiset), file count collapses, and a subsequent
-    ingest against the compacted index still dedups correctly."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        compact_parquet,
-        ingest_neardup_append,
-    )
-
-    rows = _ingest_test_docs()
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    root = tmp_path / "m"
-    for lo in (0, 10, 20):
-        part = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        ingest_neardup_append(spark, str(root / "corpus"), str(root / "index"), part)
-
-    idx_path = str(root / "index")
-    before_rows = sorted(
-        (r["fingerprint"], tuple(r["sig"] or [])) for r in spark.read.parquet(idx_path).collect()
-    )
-    nb, na = compact_parquet(spark, idx_path, target_files=1)
-    assert nb > 1 and na == 1
-    after_rows = sorted(
-        (r["fingerprint"], tuple(r["sig"] or [])) for r in spark.read.parquet(idx_path).collect()
-    )
-    assert after_rows == before_rows
-
-    # re-ingesting the same docs against the compacted index appends nothing
-    n = ingest_neardup_append(spark, str(root / "corpus"), idx_path, docs)
-    assert n == 0
-
-
 def test_cdc_chunks_shift_robust(spark):
     """The CDC property fixed windows lack: prepending a sentence to a
     document changes ONLY the first chunk's hash — every chunk after the
@@ -1905,84 +2025,6 @@ def test_cdc_chunks_shift_robust(spark):
     # within a doc, chunk indexes are dense from 0
     idx1 = sorted(r["chunk_idx"] for r in chunks if r["doc_id"] == 1)
     assert idx1 == list(range(len(idx1)))
-
-
-def test_ingest_neardup_append_batch_id_exactly_once(spark, tmp_path):
-    """ADVICE r6 atomicity: with batch_id-derived deterministic file
-    names, replaying a micro-batch after ANY crash point — including the
-    worst one, index published but corpus lost — converges to exactly
-    the clean-run state: no duplicated corpus rows, no lost text."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        ingest_neardup_append,
-    )
-    from graph_database_application_for_recommendations_spark.sources.fsutil import (
-        list_parquet,
-    )
-
-    rows = _ingest_test_docs()
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def batch(lo):
-        return docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-
-    ref = tmp_path / "ref"  # clean run, no crashes
-    for i, lo in enumerate((0, 10, 20)):
-        ingest_neardup_append(
-            spark, str(ref / "corpus"), str(ref / "index"), batch(lo), batch_id=i
-        )
-    want_corpus = sorted(
-        (r["doc_id"], r["text"])
-        for r in spark.read.parquet(str(ref / "corpus")).collect()
-    )
-    want_index = sorted(
-        r["fingerprint"] for r in spark.read.parquet(str(ref / "index")).collect()
-    )
-
-    cr = tmp_path / "crash"
-    corpus, index = str(cr / "corpus"), str(cr / "index")
-    ingest_neardup_append(spark, corpus, index, batch(0), batch_id=0)
-    # batch 1 "crashes" after the index publish but before the corpus
-    # publish: run it fully, then delete its corpus files
-    ingest_neardup_append(spark, corpus, index, batch(10), batch_id=1)
-    from graph_database_application_for_recommendations_spark.sources.fsutil import (
-        hadoop_fs,
-    )
-
-    killed = [n for n, _ in list_parquet(spark, corpus) if n.startswith("batch-0000000001-")]
-    assert killed, "batch publications must carry deterministic batch names"
-    fs, _ = hadoop_fs(spark, corpus)
-    for n in killed:
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(f"{corpus}/{n}"), False)
-    # foreachBatch replays batch 1 on restart
-    ingest_neardup_append(spark, corpus, index, batch(10), batch_id=1)
-    # and a spurious double-replay must be a no-op too
-    ingest_neardup_append(spark, corpus, index, batch(10), batch_id=1)
-    ingest_neardup_append(spark, corpus, index, batch(20), batch_id=2)
-
-    got_corpus = sorted(
-        (r["doc_id"], r["text"]) for r in spark.read.parquet(corpus).collect()
-    )
-    got_index = sorted(r["fingerprint"] for r in spark.read.parquet(index).collect())
-    assert got_corpus == want_corpus
-    assert got_index == want_index
-
-
-def test_compact_parquet_file_scheme_uri(spark, tmp_path):
-    """VERDICT r6 item 5: the Hadoop-FS listing path must work on an
-    explicit ``file:``-scheme URI, not just bare local paths."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        compact_parquet,
-    )
-
-    p = tmp_path / "t"
-    df = spark.range(100).withColumn("v", F.col("id") * 2)
-    for _ in range(3):
-        df.coalesce(2).write.mode("append").parquet(str(p))
-    uri = "file://" + str(p)
-    nb, na = compact_parquet(spark, uri, target_files=1)
-    assert nb == 6 and na == 1
-    got = sorted(r["id"] for r in spark.read.parquet(str(p)).collect())
-    assert got == sorted(list(range(100)) * 3)
 
 
 def test_greedy_first_writer_depth_equals_budget(spark):
@@ -2044,43 +2086,6 @@ def test_remove_cross_doc_spans_keeps_unique_docs_intact(spark):
     assert got[1]["clean_text"] == rep + " " + rep  # internal repeat kept
     assert got[1]["n_removed_tokens"] == 0
     assert got[2]["n_removed_tokens"] == 0
-
-
-def test_ingest_neardup_batching_invariance_across_compaction(spark, tmp_path):
-    """VERDICT r6 item 8: the batching-invariance contract must survive a
-    compaction boundary — compacting corpus+index after EVERY batch
-    (every=1, the most hostile schedule) still yields the single-batch
-    survivor set, and replaying the last batch post-compaction is a
-    no-op (its rows are present; the anti-join drops everything)."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        compact_after_append,
-        ingest_neardup_append,
-    )
-
-    rows = _ingest_test_docs()
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    one = tmp_path / "one"
-    ingest_neardup_append(spark, str(one / "corpus"), str(one / "index"), docs)
-    want = sorted(
-        (r["doc_id"], r["text"]) for r in spark.read.parquet(str(one / "corpus")).collect()
-    )
-
-    multi = tmp_path / "multi"
-    corpus, index = str(multi / "corpus"), str(multi / "index")
-    for i, lo in enumerate((0, 10, 20)):
-        batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        ingest_neardup_append(spark, corpus, index, batch, batch_id=i)
-        assert compact_after_append(spark, corpus, index, i, every=1)
-    got = sorted((r["doc_id"], r["text"]) for r in spark.read.parquet(corpus).collect())
-    assert got == want
-
-    # post-compaction replay of the last batch: exact no-op
-    last = docs.filter(F.col("doc_id") >= 20)
-    n = ingest_neardup_append(spark, corpus, index, last, batch_id=2)
-    assert n == 0
-    again = sorted((r["doc_id"], r["text"]) for r in spark.read.parquet(corpus).collect())
-    assert again == want
 
 
 def test_scrub_spans_against_index_uses_index_only(spark):
@@ -2238,142 +2243,6 @@ def test_semantic_decontaminate_guards_the_projected_frame(spark):
         semantic_decontaminate(tr, huge)
 
 
-def _spanscrub_test_docs():
-    """Docs with cross-batch AND in-batch shared spans: shared0..119 has
-    CDC boundaries after 19/49/64/103, so its interior chunks are the
-    shareable units. doc 1 owns the span; docs 11 (batch 2) and 21
-    (batch 3) embed it; docs 14 and 15 (same batch) share a second span
-    with each other only (in-batch first-writer case)."""
-    para = " ".join(f"shared{i}" for i in range(120))
-    para2 = " ".join(f"intra{i}" for i in range(120))
-    rows = []
-    for i in range(30):
-        base = " ".join(f"d{i}w{j}" for j in range(25))
-        if i == 1:
-            t = para
-        elif i in (11, 21):
-            t = base + " " + para + f" tail{i}"
-        elif i == 14:
-            t = para2
-        elif i == 15:
-            t = base + " " + para2 + " tailx"
-        else:
-            t = base
-        rows.append((i, t))
-    return rows
-
-
-def test_ingest_spanscrub_batching_invariance(spark, tmp_path):
-    """One-batch vs three id-ordered micro-batches (with batch_id
-    exactly-once publication) store the IDENTICAL scrubbed corpus, and
-    that corpus equals remove_cross_doc_spans over the whole set — the
-    submitted-text ownership rule that makes the kernel round-free."""
-    from graph_database_application_for_recommendations_spark.operators.dedup import (
-        remove_cross_doc_spans,
-    )
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        ingest_spanscrub_append,
-    )
-
-    rows = _spanscrub_test_docs()
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    one = tmp_path / "one"
-    n = ingest_spanscrub_append(spark, str(one / "c"), str(one / "i"), docs)
-    assert n == 30
-    got_one = {r["doc_id"]: r["text"] for r in spark.read.parquet(str(one / "c")).collect()}
-
-    multi = tmp_path / "multi"
-    for i, lo in enumerate((0, 10, 20)):
-        batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        ingest_spanscrub_append(spark, str(multi / "c"), str(multi / "i"), batch, batch_id=i)
-    # replay of the last batch must be a no-op on the stored corpus
-    ingest_spanscrub_append(
-        spark, str(multi / "c"), str(multi / "i"),
-        docs.filter(F.col("doc_id") >= 20), batch_id=2,
-    )
-    got_multi = {r["doc_id"]: r["text"] for r in spark.read.parquet(str(multi / "c")).collect()}
-    assert got_one == got_multi
-
-    offline = {
-        r["doc_id"]: r["clean_text"] for r in remove_cross_doc_spans(docs).collect()
-    }
-    assert got_one == offline
-    # the embedded span's interior is gone from every later doc
-    for victim in (11, 21):
-        kept = set(got_one[victim].split())
-        assert {i for i in range(120) if f"shared{i}" not in kept} == set(range(20, 104))
-    assert "intra20" not in set(got_one[15].split())  # in-batch first-writer
-    assert got_one[14] == " ".join(f"intra{i}" for i in range(120))  # owner keeps
-
-
-def test_vocab_delta_append_matches_full_rebuild(spark, tmp_path):
-    """Incremental vocabulary through parquet deltas: three id-disjoint
-    batches appended with batch_ids, consolidated vocabulary ==
-    build_vocabulary over the full corpus, bit-for-bit — including after
-    a replayed batch (exactly-once) and a compaction of the delta dir."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        compact_parquet,
-        consolidated_vocabulary,
-        vocab_delta_append,
-    )
-    from graph_database_application_for_recommendations_spark.operators.textstats import (
-        build_vocabulary,
-    )
-
-    rows = [(i, " ".join(f"tok{(i * 7 + j) % 13}" for j in range(10))) for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    want = sorted(map(tuple, build_vocabulary(docs, min_count=2).collect()))
-
-    path = str(tmp_path / "deltas")
-    for i, lo in enumerate((0, 10, 20)):
-        batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        n = vocab_delta_append(spark, path, batch, batch_id=i)
-        assert n > 0
-    # replay of batch 1 must replace, not double-count
-    vocab_delta_append(
-        spark, path, docs.filter((F.col("doc_id") >= 10) & (F.col("doc_id") < 20)),
-        batch_id=1,
-    )
-    got = sorted(map(tuple, consolidated_vocabulary(spark, path, min_count=2).collect()))
-    assert got == want
-
-    compact_parquet(spark, path, target_files=1)
-    again = sorted(map(tuple, consolidated_vocabulary(spark, path, min_count=2).collect()))
-    assert again == want
-
-
-def test_dsir_hist_delta_append_matches_full_retrain(spark, tmp_path):
-    """Incremental DSIR raw histograms through parquet deltas: three
-    id-disjoint batches consolidated == dsir_log_ratio over the full raw
-    corpus, bit-for-bit, including after a replayed batch."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        consolidated_dsir_model,
-        dsir_hist_delta_append,
-    )
-    from graph_database_application_for_recommendations_spark.operators.textstats import (
-        dsir_log_ratio,
-    )
-
-    rows = [(i, " ".join(f"w{(i * 11 + j) % 37}" for j in range(12))) for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    target = docs.filter(F.col("doc_id") % 5 == 0)
-    want = {r["b"]: r["lr"] for r in dsir_log_ratio(docs, target, num_buckets=256).collect()}
-
-    path = str(tmp_path / "hists")
-    for i, lo in enumerate((0, 10, 20)):
-        batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        dsir_hist_delta_append(spark, path, batch, num_buckets=256, batch_id=i)
-    dsir_hist_delta_append(  # replay: replaces, never double-counts
-        spark, path, docs.filter((F.col("doc_id") >= 20)), num_buckets=256, batch_id=2
-    )
-    got = {
-        r["b"]: r["lr"]
-        for r in consolidated_dsir_model(spark, path, target, num_buckets=256).collect()
-    }
-    assert got == want and len(got) == 256
-
-
 def test_gopher_quality_signals_rules(spark):
     """Each Gopher App-A rule discriminates on a crafted page: bullet and
     ellipsis line fractions count trimmed non-empty lines, symbols count
@@ -2414,85 +2283,6 @@ def test_gopher_quality_signals_rules(spark):
     assert not d["gopher_pass"]
 
 
-def test_bm25_sidecar_matches_full_rescan(spark, tmp_path):
-    """Incremental BM25 model through parquet sidecars: vocabulary-count
-    deltas (df) + corpus-scalar deltas (N, avgdl) from three id-disjoint
-    batches; consolidated scoring == bm25_scores over the full corpus,
-    bit-for-bit — including after a replayed batch (exactly-once) and a
-    compaction of the scalar delta dir."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        compact_parquet,
-        consolidated_bm25_scores,
-        corpus_stats_delta_append,
-        vocab_delta_append,
-    )
-    from graph_database_application_for_recommendations_spark.operators.textstats import (
-        bm25_scores,
-    )
-
-    rows = [
-        (i, " ".join(f"tok{(i * 7 + j) % 13}" for j in range(4 + i % 5)))
-        for i in range(30)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    terms = ["tok0", "tok3", "tok7"]
-    want = sorted(map(tuple, bm25_scores(docs, terms, top_n=100).collect()))
-
-    counts = str(tmp_path / "counts")
-    stats = str(tmp_path / "stats")
-    for i, lo in enumerate((0, 10, 20)):
-        batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        assert vocab_delta_append(spark, counts, batch, batch_id=i) > 0
-        assert corpus_stats_delta_append(spark, stats, batch, batch_id=i) == 10
-    # replay of batch 2 must replace, not double-count
-    replay = docs.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 30))
-    vocab_delta_append(spark, counts, replay, batch_id=2)
-    corpus_stats_delta_append(spark, stats, replay, batch_id=2)
-
-    got = sorted(
-        map(tuple, consolidated_bm25_scores(spark, counts, stats, docs, terms).collect())
-    )
-    assert got == want and len(got) > 0
-
-    compact_parquet(spark, stats, target_files=1)
-    again = sorted(
-        map(tuple, consolidated_bm25_scores(spark, counts, stats, docs, terms).collect())
-    )
-    assert again == want
-
-
-def test_quality_hist_sidecar_matches_full_scan(spark, tmp_path):
-    """Incremental per-source quality histograms through parquet deltas:
-    three id-disjoint batches consolidated == the direct whole-corpus
-    histogram, including after a replayed batch (exactly-once)."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        consolidated_quality_hist,
-        quality_hist_delta_append,
-    )
-    from graph_database_application_for_recommendations_spark.operators.textstats import (
-        quality_hist_table,
-    )
-
-    rows = [
-        (i, ("the and of " * (i % 4)) + " ".join(f"w{j}" for j in range(6)), f"src{i % 3}")
-        for i in range(30)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    want = sorted(map(tuple, quality_hist_table(docs).collect()))
-    assert len({b for (_, b, _) in want}) > 1  # buckets actually spread
-
-    path = str(tmp_path / "qhist")
-    for i, lo in enumerate((0, 10, 20)):
-        batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        assert quality_hist_delta_append(spark, path, batch, batch_id=i) > 0
-    quality_hist_delta_append(
-        spark, path, docs.filter((F.col("doc_id") >= 10) & (F.col("doc_id") < 20)),
-        batch_id=1,
-    )
-    got = sorted(map(tuple, consolidated_quality_hist(spark, path).collect()))
-    assert got == want
-
-
 def test_mmr_rerank_diversifies(spark):
     """MMR vs plain top-k on a crafted corpus: two near-identical highly
     relevant vectors and one moderately relevant orthogonal one — plain
@@ -2529,228 +2319,6 @@ def test_mmr_rerank_diversifies(spark):
     assert [degraded[i] for i in (1, 2, 3)] == [1, 2, 3]
 
 
-def test_centroid_sidecar_matches_single_pass(spark, tmp_path):
-    """Incremental centroid maintenance through parquet moment deltas:
-    three id-disjoint batches assigned against frozen centroids,
-    consolidated == a one-shot delta over the full table, bit-for-bit
-    (fixed-point sums are associative), including after a replayed
-    batch; assignment itself picks the nearest centroid."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        centroid_delta_append,
-        consolidated_centroids,
-    )
-    from graph_database_application_for_recommendations_spark.operators.simsearch import (
-        assign_to_centroids,
-        centroid_delta_table,
-        consolidate_centroids,
-    )
-
-    rows = [
-        (i, [float((i % 3) * 10) + (i % 7) * 0.125, float(i % 5) * 0.25])
-        for i in range(30)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cent = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [10.0, 0.0]), (2, [20.0, 0.0])],
-        "cid long, cv array<double>",
-    )
-    got_assign = {r["vec_id"]: r["cid"] for r in assign_to_centroids(emb, cent).collect()}
-    assert got_assign[0] == 0 and got_assign[1] == 1 and got_assign[2] == 2
-
-    want = sorted(
-        map(tuple, consolidate_centroids(centroid_delta_table(emb, cent)).collect())
-    )
-    path = str(tmp_path / "moments")
-    for i, lo in enumerate((0, 10, 20)):
-        batch = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 10))
-        assert centroid_delta_append(spark, path, batch, cent, batch_id=i) > 0
-    centroid_delta_append(
-        spark, path, emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 20)),
-        cent, batch_id=1,
-    )
-    got = sorted(map(tuple, consolidated_centroids(spark, path).collect()))
-    assert got == want and len(got) == 6
-
-
-def test_sidecar_retraction_matches_rebuild_without_batch(spark, tmp_path):
-    """Deletion without rescan: append three batches to every sidecar,
-    retract batch 1 by appending its negated delta under a fresh
-    batch_id, and check each consolidated artifact equals a direct
-    derivation over the surviving documents/vectors, bit-for-bit."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        centroid_delta_append,
-        consolidated_centroids,
-        consolidated_corpus_stats,
-        consolidated_quality_hist,
-        consolidated_vocabulary,
-        corpus_stats_delta_append,
-        quality_hist_delta_append,
-        vocab_delta_append,
-    )
-    from graph_database_application_for_recommendations_spark.operators.simsearch import (
-        centroid_delta_table,
-        consolidate_centroids,
-    )
-    from graph_database_application_for_recommendations_spark.operators.textstats import (
-        build_vocabulary,
-        quality_hist_table,
-    )
-
-    rows = [
-        (i, ("the and of " * (i % 3)) + " ".join(f"tok{(i * 7 + j) % 13}" for j in range(8)),
-         f"src{i % 2}")
-        for i in range(30)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    surviving = docs.filter(F.col("doc_id") % 3 != 1)
-    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-
-    vp, sp, qp = (str(tmp_path / n) for n in ("vocab", "stats", "qhist"))
-    for i, b in enumerate(batches):
-        vocab_delta_append(spark, vp, b, batch_id=i)
-        corpus_stats_delta_append(spark, sp, b, batch_id=i)
-        quality_hist_delta_append(spark, qp, b, batch_id=i)
-    # retraction of batch 1 under a FRESH batch_id
-    vocab_delta_append(spark, vp, batches[1], batch_id=100, retract=True)
-    assert corpus_stats_delta_append(spark, sp, batches[1], batch_id=100, retract=True) == -10
-    quality_hist_delta_append(spark, qp, batches[1], batch_id=100, retract=True)
-
-    want_vocab = sorted(map(tuple, build_vocabulary(surviving, min_count=2).collect()))
-    got_vocab = sorted(map(tuple, consolidated_vocabulary(spark, vp, min_count=2).collect()))
-    assert got_vocab == want_vocab
-
-    st = consolidated_corpus_stats(spark, sp).first()
-    direct = surviving.count()
-    assert st["n_docs"] == direct == 20
-
-    want_q = sorted(map(tuple, quality_hist_table(surviving).collect()))
-    got_q = sorted(map(tuple, consolidated_quality_hist(spark, qp).collect()))
-    assert got_q == want_q
-
-    # centroid moments: integer fixed-point retraction is exact
-    emb = spark.createDataFrame(
-        [(i, [float(i % 4) + 0.0625 * (i % 9), float(i % 5)]) for i in range(24)],
-        "vec_id long, embedding array<double>",
-    )
-    cent = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [3.0, 3.0])], "cid long, cv array<double>"
-    )
-    mp = str(tmp_path / "moments")
-    ebatches = [emb.filter(F.col("vec_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(ebatches):
-        centroid_delta_append(spark, mp, b, cent, batch_id=i)
-    centroid_delta_append(spark, mp, ebatches[1], cent, batch_id=100, retract=True)
-    want_c = sorted(map(tuple, consolidate_centroids(
-        centroid_delta_table(emb.filter(F.col("vec_id") % 3 != 1), cent)
-    ).collect()))
-    got_c = sorted(map(tuple, consolidated_centroids(spark, mp).collect()))
-    assert got_c == want_c
-
-
-def test_cms_sketch_properties_and_retraction(spark, tmp_path):
-    """Count-min invariants: estimates are one-sided (est >= true count,
-    exact on this tiny vocab at width 1024), consolidation over batches
-    equals the single-pass sketch, and retracting a batch restores the
-    surviving corpus's sketch bit-for-bit."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        cms_delta_append,
-        consolidated_cms_sketch,
-    )
-    from graph_database_application_for_recommendations_spark.operators.sketches import (
-        cms_delta_table,
-        cms_point_estimates,
-        consolidate_cms,
-    )
-
-    rows = [(i, " ".join(f"tok{(i + j) % 9}" for j in range(6))) for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sketch = consolidate_cms(cms_delta_table(docs))
-    true_counts = {
-        r["token"]: r["n"]
-        for r in docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
-        .groupBy("token").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    est = {
-        r["token"]: r["est"]
-        for r in cms_point_estimates(sketch, list(true_counts) + ["zz_absent"]).collect()
-    }
-    for t, n in true_counts.items():
-        assert est[t] >= n, (t, est[t], n)
-    assert est["zz_absent"] >= 0
-
-    path = str(tmp_path / "cms")
-    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        assert cms_delta_append(spark, path, b, batch_id=i) > 0
-    cms_delta_append(spark, path, batches[1], batch_id=100, retract=True)
-    want = sorted(map(tuple, consolidate_cms(
-        cms_delta_table(docs.filter(F.col("doc_id") % 3 != 1))
-    ).collect()))
-    got = sorted(map(tuple, consolidated_cms_sketch(spark, path).collect()))
-    assert got == want
-
-
-def test_hll_registers_merge_and_estimate(spark, tmp_path):
-    """HLL invariants: batch-merged registers equal the single-pass
-    table (max-monoid), double-append is idempotent, and the estimate
-    lands within 15% of the true distinct count at p=10."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        consolidated_hll,
-        hll_delta_append,
-    )
-    from graph_database_application_for_recommendations_spark.operators.sketches import (
-        hll_estimate,
-        hll_register_table,
-    )
-
-    n_true = 5000
-    df = spark.range(n_true * 3).select((F.col("id") % n_true).alias("uid"))
-    want = sorted(map(tuple, hll_register_table(df, "uid").collect()))
-
-    path = str(tmp_path / "hll")
-    for i in range(3):
-        b = df.filter(F.col("uid") % 3 == i)
-        assert hll_delta_append(spark, path, b, "uid", batch_id=i) > 0
-    # idempotence: re-appending a batch under a new id changes nothing
-    hll_delta_append(spark, path, df.filter(F.col("uid") % 3 == 0), "uid", batch_id=100)
-    merged = consolidated_hll(spark, path)
-    assert sorted(map(tuple, merged.collect())) == want
-
-    est = hll_estimate(merged)
-    assert abs(est - n_true) / n_true < 0.15, est
-
-
-def test_lm_sidecar_matches_full_rescan_and_retraction(spark, tmp_path):
-    """Incremental LM-filter model through parquet bigram deltas:
-    consolidated scoring == lm_bigram_scores over the full corpus; after
-    retracting batch 1, scoring the survivors == a direct rescan of the
-    survivors."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        consolidated_lm_scores,
-        lm_delta_append,
-    )
-    from graph_database_application_for_recommendations_spark.operators.textstats import (
-        lm_bigram_scores,
-    )
-
-    rows = [(i, f"som{i % 5}e text abou{i % 3}t things {i % 7}") for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    want = sorted(map(tuple, lm_bigram_scores(docs).collect()))
-
-    path = str(tmp_path / "lm")
-    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        assert lm_delta_append(spark, path, b, batch_id=i) > 0
-    got = sorted(map(tuple, consolidated_lm_scores(spark, path, docs).collect()))
-    assert got == want
-
-    lm_delta_append(spark, path, batches[1], batch_id=100, retract=True)
-    surviving = docs.filter(F.col("doc_id") % 3 != 1)
-    want2 = sorted(map(tuple, lm_bigram_scores(surviving).collect()))
-    got2 = sorted(map(tuple, consolidated_lm_scores(spark, path, surviving).collect()))
-    assert got2 == want2
-
-
 def test_quality_drift_report_flags_shifted_source(spark):
     """A source whose batch slice shifts quality (stopword-stuffed docs)
     scores a larger KL than a source whose batch is distribution-typical;
@@ -2775,40 +2343,6 @@ def test_quality_drift_report_flags_shifted_source(spark):
     assert got["shifty"]["kl"] > got["steady"]["kl"] >= 0.0
     same = {r["source"]: r["kl"] for r in quality_drift_report(docs, docs).collect()}
     assert all(abs(v) < 0.01 for v in same.values())
-
-
-def test_dsir_sidecar_retraction_matches_survivor_retrain(spark, tmp_path):
-    """DSIR raw-histogram retraction: appending batch 1's negated
-    histogram leaves a consolidated model equal to a full retrain over
-    the surviving documents, bit-for-bit (dense spine treats a zero-sum
-    bucket exactly like a missing one)."""
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        consolidated_dsir_model,
-        dsir_hist_delta_append,
-    )
-    from graph_database_application_for_recommendations_spark.operators.textstats import (
-        dsir_log_ratio,
-    )
-
-    rows = [(i, " ".join(f"w{(i * 3 + j) % 17}" for j in range(9))) for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    target = docs.filter(F.col("doc_id") % 7 == 0)
-    path = str(tmp_path / "dsir")
-    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        assert dsir_hist_delta_append(spark, path, b, num_buckets=256, batch_id=i) > 0
-    dsir_hist_delta_append(spark, path, batches[1], num_buckets=256, batch_id=100, retract=True)
-
-    surviving = docs.filter(F.col("doc_id") % 3 != 1)
-    want = {
-        r["b"]: r["lr"]
-        for r in dsir_log_ratio(surviving, target, num_buckets=256).collect()
-    }
-    got = {
-        r["b"]: r["lr"]
-        for r in consolidated_dsir_model(spark, path, target, num_buckets=256).collect()
-    }
-    assert got == want and len(got) == 256
 
 
 def test_rrf_fuse_promotes_consensus(spark):
@@ -3448,44 +2982,6 @@ def test_dedup_keep_best_and_kanon(spark):
     r = k_anonymity_report(users, ["loc", "age"], k=5).collect()[0]
     assert (r["n_groups"], r["n_risky_groups"], r["n_risky_rows"]) == (3, 2, 3)
     assert r["risky_fraction"] == 0.375
-
-
-def test_shard_export_roundtrip_manifest(spark, tmp_path):
-    """export_jsonl_shards + read-back: every shard directory's recount
-    matches the manifest row (count, tokens, order-free XOR); the
-    assignment is stable across repeated runs."""
-    from pyspark.sql import functions as F
-
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        export_jsonl_shards,
-        shard_assignments,
-        shard_manifest,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} body with {i % 3} extras") for i in range(40)],
-        "doc_id long, text string",
-    )
-    want = {r["shard_id"]: r.asDict() for r in shard_manifest(docs, 4).collect()}
-    dest = str(tmp_path / "shards")
-    export_jsonl_shards(docs, dest, 4)
-    back = spark.read.json(dest)  # shard_id comes back as a partition column
-    got = {
-        r["shard_id"]: r.asDict()
-        for r in shard_manifest(back.select("doc_id", "text"), 4).collect()
-    }
-    assert got == want
-    # and the partition directories agree with the recomputed assignment
-    mismatch = (
-        shard_assignments(back.select("doc_id", "text"), 4)
-        .join(back.select("doc_id", F.col("shard_id").cast("long").alias("_dir")), "doc_id")
-        .where(F.col("shard_id") != F.col("_dir"))
-        .count()
-    )
-    assert mismatch == 0
-    a1 = sorted(map(tuple, shard_assignments(docs, 4).select("doc_id", "shard_id").collect()))
-    a2 = sorted(map(tuple, shard_assignments(docs, 4).select("doc_id", "shard_id").collect()))
-    assert a1 == a2 and len({s for _, s in a1}) == 4
 
 
 def test_time_split_report_cold_users(spark):

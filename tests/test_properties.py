@@ -394,123 +394,6 @@ def test_audio_dhash_invariances(n, seed, shift):
 
 
 @given(
-    seed=st.integers(min_value=0, max_value=10_000),
-    cut1=st.integers(min_value=1, max_value=11),
-    cut2=st.integers(min_value=1, max_value=11),
-)
-@settings(max_examples=5, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_ingest_neardup_invariant_under_random_batching(spark, tmp_path_factory, seed, cut1, cut2):
-    """Randomized batching invariance for near-dup-aware ingest: a random
-    corpus (with seeded exact dups, permutation dups, and near dups)
-    split at arbitrary id-ordered cut points admits the same survivor
-    set as a single batch — the LFMIS contract, end to end through the
-    parquet index."""
-    import random
-
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        ingest_neardup_append,
-    )
-
-    rng = random.Random(seed)
-    texts = {}
-    for i in range(12):
-        r = rng.random()
-        prev = [j for j in range(i) if j in texts]
-        if r < 0.25 and prev:
-            texts[i] = texts[rng.choice(prev)]  # exact dup
-        elif r < 0.45 and prev:
-            toks = texts[rng.choice(prev)].split()
-            rng.shuffle(toks)
-            texts[i] = " ".join(toks)  # canonical-fp dup (permutation)
-        elif r < 0.7 and prev:
-            texts[i] = texts[rng.choice(prev)] + f" x{i}"  # near dup
-        else:
-            texts[i] = " ".join(f"w{seed}b{i}t{j}" for j in range(18))
-    rows = [(i, t) for i, t in sorted(texts.items())]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    base = tmp_path_factory.mktemp("ingest_prop")
-    one = base / "one"
-    ingest_neardup_append(spark, str(one / "c"), str(one / "i"), docs)
-    want = {r["doc_id"] for r in spark.read.parquet(str(one / "c")).collect()}
-
-    a, b = sorted((min(cut1, 11), min(cut2, 11)))
-    multi = base / "multi"
-    for lo, hi in ((0, a), (a, b), (b, 12)):
-        if lo == hi:
-            continue
-        part = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        ingest_neardup_append(spark, str(multi / "c"), str(multi / "i"), part)
-    got = {r["doc_id"] for r in spark.read.parquet(str(multi / "c")).collect()}
-    assert got == want
-
-
-@given(
-    seed=st.integers(min_value=0, max_value=10_000),
-    cut1=st.integers(min_value=1, max_value=11),
-    cut2=st.integers(min_value=1, max_value=11),
-)
-@settings(max_examples=5, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_ingest_spanscrub_invariant_under_random_batching(
-    spark, tmp_path_factory, seed, cut1, cut2
-):
-    """Randomized batching invariance for span-scrub ingest: a random
-    corpus (docs that embed earlier docs' text, share tails, or are
-    fresh) split at arbitrary id-ordered cut points stores the same
-    scrubbed corpus as a single batch — and both equal the offline
-    remove_cross_doc_spans pass, the submitted-text ownership contract,
-    end to end through the parquet chunk index."""
-    import random
-
-    from graph_database_application_for_recommendations_spark.operators.dedup import (
-        remove_cross_doc_spans,
-    )
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        ingest_spanscrub_append,
-    )
-
-    rng = random.Random(seed)
-    texts = {}
-    for i in range(12):
-        r = rng.random()
-        prev = [j for j in range(i) if j in texts]
-        fresh = " ".join(f"w{seed}b{i}t{j}" for j in range(rng.randint(30, 90)))
-        if r < 0.3 and prev:
-            texts[i] = fresh + " " + texts[rng.choice(prev)]  # embeds an earlier doc
-        elif r < 0.5 and prev:
-            donor = texts[rng.choice(prev)].split()
-            texts[i] = " ".join(donor[len(donor) // 2 :]) + " " + fresh  # shared tail
-        elif r < 0.6 and prev:
-            texts[i] = texts[rng.choice(prev)]  # exact dup (fully scrubbed)
-        else:
-            texts[i] = fresh
-    rows = [(i, t) for i, t in sorted(texts.items())]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    base = tmp_path_factory.mktemp("scrub_prop")
-    one = base / "one"
-    ingest_spanscrub_append(spark, str(one / "c"), str(one / "i"), docs)
-    want = {r["doc_id"]: r["text"] for r in spark.read.parquet(str(one / "c")).collect()}
-
-    offline = {
-        r["doc_id"]: r["clean_text"] for r in remove_cross_doc_spans(docs).collect()
-    }
-    assert want == offline
-
-    a, b = sorted((min(cut1, 11), min(cut2, 11)))
-    multi = base / "multi"
-    for bi, (lo, hi) in enumerate(((0, a), (a, b), (b, 12))):
-        if lo == hi:
-            continue
-        part = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        ingest_spanscrub_append(spark, str(multi / "c"), str(multi / "i"), part, batch_id=bi)
-    got = {r["doc_id"]: r["text"] for r in spark.read.parquet(str(multi / "c")).collect()}
-    assert got == want
-
-
-@given(
     docs=st.lists(texts, min_size=4, max_size=10),
     cuts=st.lists(st.integers(0, 9), min_size=0, max_size=3),
     retract=st.booleans(),

@@ -1,251 +1,17 @@
-"""Streaming twins vs oracle-checked batch plans: drive each streaming
-operator with availableNow over the sf0.001 events parquet and compare to
-the batch operator's result."""
+"""Structured Streaming over the documents corpus: drive ``pack_stream``
+with availableNow over a parquet file source and check the per-shard
+tiling across one and several microbatches, and check that a stateless
+batch operator runs unchanged on a streaming frame."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+import glob
+import os
+import tempfile
 
-from graph_database_application_for_recommendations_spark.operators import events as batch_ops
-from graph_database_application_for_recommendations_spark.sources.views import load_ref_tables
 from graph_database_application_for_recommendations_spark.streaming import events as stream_ops
 
 from .conftest import SF_SMALL
-
-
-@pytest.fixture(scope="module")
-def batch_events(spark):
-    return load_ref_tables(spark, SF_SMALL).events.cache()
-
-
-@pytest.fixture(scope="module")
-def event_stream(spark):
-    return stream_ops.read_events_stream(spark, SF_SMALL)
-
-
-def _rows(df):
-    return sorted(map(tuple, df.collect()))
-
-
-def test_streaming_tumbling_matches_batch(spark, event_stream, batch_events, tmp_path):
-    got = stream_ops.run_to_memory(
-        stream_ops.tumbling_counts_stream(event_stream, minutes=60),
-        "t_tumbling",
-        "complete",
-        str(tmp_path / "ck1"),
-    )
-    want = batch_ops.tumbling_counts(batch_events, minutes=60)
-    assert _rows(got) == _rows(want)
-
-
-def test_streaming_sliding_matches_batch(spark, event_stream, batch_events, tmp_path):
-    got = stream_ops.run_to_memory(
-        stream_ops.sliding_counts_stream(event_stream, width_minutes=60, slide_minutes=30),
-        "t_sliding",
-        "complete",
-        str(tmp_path / "ck_slide"),
-    )
-    want = batch_ops.sliding_counts(batch_events, width_minutes=60, slide_minutes=30)
-    assert _rows(got) == _rows(want)
-
-
-def test_streaming_conversions_matches_batch(spark, event_stream, batch_events, tmp_path):
-    """Stream-stream interval self-join (click -> purchase funnel) equals
-    the batch interval join. Inner stream-stream joins emit rows as both
-    sides arrive; append mode is exact here."""
-    got = stream_ops.run_to_memory(
-        stream_ops.conversions_stream(event_stream, within_minutes=30),
-        "t_conversions",
-        "append",
-        str(tmp_path / "ck_conv"),
-    )
-    want = batch_ops.event_conversions(batch_events, within_minutes=30)
-    assert _rows(got) == _rows(want)
-
-
-def test_streaming_sessionize_matches_batch(spark, event_stream, batch_events, tmp_path):
-    got = stream_ops.run_to_memory(
-        stream_ops.sessionize_stream(event_stream, gap_minutes=30),
-        "t_sessions",
-        "complete",
-        str(tmp_path / "ck2"),
-    )
-    want = batch_ops.sessionize(batch_events, gap_minutes=30)
-    assert _rows(got) == _rows(want)
-
-
-def test_streaming_dedup_matches_batch_keys(spark, event_stream, batch_events, tmp_path):
-    got = stream_ops.run_to_memory(
-        stream_ops.dedup_stream(event_stream),
-        "t_dedup",
-        "append",
-        str(tmp_path / "ck3"),
-    )
-    want = batch_ops.dedup_events(batch_events)
-    # one surviving row per key on both sides; first-arrival == earliest-ts
-    # only when the file is time-ordered per key, so compare key sets
-    got_keys = {(r["user_id"], r["event_type"]) for r in got.collect()}
-    want_keys = {(r["user_id"], r["event_type"]) for r in want.collect()}
-    assert got_keys == want_keys
-    assert got.count() == len(got_keys)
-
-
-def test_streaming_stateful_profile(spark, event_stream, batch_events, tmp_path):
-    got = stream_ops.run_to_memory(
-        stream_ops.running_user_profile_stream(event_stream),
-        "t_profile",
-        "update",
-        str(tmp_path / "ck4"),
-    )
-    # single availableNow batch -> the last update per user is the total
-    import pandas as pd
-
-    gpdf = got.toPandas().sort_values("n_events").groupby("user_id").last().reset_index()
-    want = (
-        batch_events.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("total_value"),
-            F.max(F.unix_micros("ts")).alias("last_ts_us"),
-        )
-        .toPandas()
-    )
-    merged = gpdf.merge(want, on="user_id", suffixes=("_got", "_want"))
-    assert len(merged) == len(want)
-    assert (merged["n_events_got"] == merged["n_events_want"]).all()
-    assert (merged["last_ts_us_got"] == merged["last_ts_us_want"]).all()
-    assert (abs(merged["total_value_got"] - merged["total_value_want"]) < 1e-6).all()
-
-
-def test_streaming_document_dedup(spark, tmp_path):
-    """Ingestion-time corpus dedup: one survivor per canonical fingerprint,
-    matching the batch dedup_fingerprint group count."""
-    from graph_database_application_for_recommendations_spark.operators.dedup import (
-        dedup_fingerprint,
-    )
-    from graph_database_application_for_recommendations_spark.sources.views import (
-        load_ref_tables,
-    )
-
-    docs_batch = load_ref_tables(spark, SF_SMALL).documents
-    got = stream_ops.run_to_memory(
-        stream_ops.dedup_documents_stream(stream_ops.read_documents_stream(spark, SF_SMALL)),
-        "t_docdedup",
-        "append",
-        str(tmp_path / "ck_docs"),
-    )
-    want_groups = dedup_fingerprint(docs_batch).count()
-    assert got.count() == want_groups
-    assert got.select("fingerprint").distinct().count() == want_groups
-
-
-def test_streaming_writeback_parquet(spark, batch_events, tmp_path):
-    """foreachBatch write-back: the maintained parquet table converges to
-    the batch tumbling aggregate (GDS write-back pattern, streamed)."""
-    out = str(tmp_path / "writeback_out")
-    stream = stream_ops.tumbling_counts_stream(
-        stream_ops.read_events_stream(spark, SF_SMALL), minutes=60
-    )
-    stream_ops.run_writeback(
-        stream, out, keys=["window_start_us", "event_type"], checkpoint_dir=str(tmp_path / "ck_wb")
-    )
-    got = spark.read.parquet(out)
-    want = batch_ops.tumbling_counts(batch_events, minutes=60)
-    assert _rows(got) == _rows(want)
-
-
-def test_streaming_simsearch_matches_batch(spark, tmp_path):
-    """Stream-static similarity search: streamed query vectors matched
-    against the static corpus equal the batch top-k."""
-    from graph_database_application_for_recommendations_spark.operators.simsearch import (
-        topk_bruteforce,
-    )
-    from graph_database_application_for_recommendations_spark.sources.views import (
-        load_ref_tables,
-    )
-
-    corpus = load_ref_tables(spark, SF_SMALL).embeddings.cache()
-    out = str(tmp_path / "sims_out")
-    stream_ops.simsearch_stream_writeback(
-        stream_ops.read_embeddings_stream(spark, SF_SMALL).filter("vec_id < 15"),
-        corpus,
-        out,
-        str(tmp_path / "ck_sims"),
-        k=5,
-    )
-    got = spark.read.parquet(out)
-    want = topk_bruteforce(corpus.filter("vec_id < 15"), corpus, k=5)
-    assert _rows(got) == _rows(want)
-
-
-def test_streaming_multi_batch_replay(spark, batch_events, tmp_path):
-    """Split events into several files and replay one file per trigger —
-    exercises watermark advancement across micro-batches."""
-    src = str(tmp_path / "events_split")
-    batch_events.select(
-        "event_id",
-        F.expr("unix_micros(ts) * 1000").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    ).repartition(4).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema(stream_ops.RAW_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    )
-    got = stream_ops.run_to_memory(
-        stream_ops.tumbling_counts_stream(stream, minutes=60),
-        "t_multibatch",
-        "complete",
-        str(tmp_path / "ck5"),
-    )
-    want = batch_ops.tumbling_counts(batch_events, minutes=60)
-    assert _rows(got) == _rows(want)
-
-
-def test_streaming_corpus_clean_matches_batch(spark, tmp_path):
-    """Ingest-time corpus build: the streaming quality->scrub->dedup
-    pipeline admits exactly the batch pass's fingerprint groups, and the
-    scrubbed text matches the batch scrub for every surviving doc."""
-    from graph_database_application_for_recommendations_spark.operators import (
-        dedup as dd,
-        textstats,
-    )
-    from graph_database_application_for_recommendations_spark.sources.views import (
-        load_ref_tables,
-    )
-
-    docs_batch = load_ref_tables(spark, SF_SMALL).documents
-    got = stream_ops.run_to_memory(
-        stream_ops.clean_corpus_stream(stream_ops.read_documents_stream(spark, SF_SMALL)),
-        "t_corpus_clean",
-        "append",
-        str(tmp_path / "ck_corpus_clean"),
-    )
-    # batch twin: same quality predicate, then fingerprint groups
-    q = textstats.quality_scores(docs_batch)
-    keep = q.filter(
-        (F.col("n_tokens") >= 10)
-        & (F.col("n_tokens") <= 500)
-        & (F.col("stopword_ratio") >= 0.01)
-    ).select("doc_id")
-    survivors = docs_batch.join(keep, "doc_id", "left_semi")
-    want_fps = {r["fingerprint"] for r in dd.dedup_fingerprint(survivors).collect()}
-    got_rows = got.collect()
-    assert {r["fingerprint"] for r in got_rows} == want_fps
-    assert len(got_rows) == len(want_fps)  # exactly one survivor per group
-    # scrubbed text parity for the admitted ids
-    batch_scrub = {
-        r["doc_id"]: r["clean_text"]
-        for r in textstats.scrub_pii(survivors).collect()
-    }
-    for r in got_rows:
-        assert r["clean_text"] == batch_scrub[r["doc_id"]]
 
 
 def test_streaming_sharded_packing_tiles_each_shard(spark, tmp_path):
@@ -322,427 +88,6 @@ def test_streaming_pack_state_survives_multiple_microbatches(spark, tmp_path):
     assert total == 40
 
 
-def test_streaming_profile_state_survives_multiple_microbatches(spark, tmp_path):
-    """Same property-vs-method pin for the stateful user profile."""
-    src = str(tmp_path / "ev_src")
-    rows1 = [(1, 100, "view", 1.0, 1_000_000)]
-    rows2 = [(2, 100, "view", 2.0, 2_000_000)]
-    for i, rows in enumerate([rows1, rows2]):
-        spark.createDataFrame(
-            rows, "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts_us LONG"
-        ).selectExpr(
-            "event_id", "user_id", "event_type", "value", "timestamp_micros(ts_us) AS ts"
-        ).coalesce(1).write.mode("overwrite" if i == 0 else "append").parquet(src)
-    stream = spark.readStream.schema(
-        "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP"
-    ).option("maxFilesPerTrigger", 1).parquet(src)
-    got = stream_ops.run_to_memory(
-        stream_ops.running_user_profile_stream(stream),
-        "t_profile_multibatch",
-        "update",
-        str(tmp_path / "ck_prof_mb"),
-    ).collect()
-    # the LAST emitted row for user 100 must have accumulated both batches
-    final = max(got, key=lambda r: r["n_events"])
-    assert final["n_events"] == 2 and final["total_value"] == 3.0
-
-
-def test_streaming_anomaly_matches_online_replay(spark, event_stream, batch_events, tmp_path):
-    """The streaming Welford z-score detector's flagged set must equal a
-    pandas replay of the identical prefix-causal rule (each event judged
-    only by its past, ts/event_id order within each type)."""
-    import math
-
-    got = stream_ops.run_to_memory(
-        stream_ops.anomaly_stream(event_stream, z=2.5, min_samples=30),
-        "t_anomaly",
-        "update",
-        str(tmp_path / "ck_anom"),
-    )
-    pdf = (
-        batch_events.select("event_id", "event_type", "value", "ts")
-        .toPandas()
-        .sort_values(["event_type", "ts", "event_id"])
-    )
-    want = []
-    for etype, grp in pdf.groupby("event_type"):
-        n, mean, m2 = 0, 0.0, 0.0
-        for ev_id, v in zip(grp["event_id"], grp["value"]):
-            v = float(v)
-            if n >= 30:
-                std = math.sqrt(m2 / (n - 1))
-                if std > 0 and abs((v - mean) / std) > 2.5:
-                    want.append((int(ev_id), etype, v, round((v - mean) / std, 6)))
-            n += 1
-            d = v - mean
-            mean += d / n
-            m2 += d * (v - mean)
-    assert _rows(got) == sorted(want)
-    assert len(want) > 0  # the fixture actually exercises the rule
-
-
-def test_streaming_funnel_matches_batch_triples(spark, event_stream, batch_events, tmp_path):
-    """The cascaded stream-stream funnel must produce exactly the batch
-    set of bounded-interval (view, click, purchase) triples."""
-    # 480-minute steps: the sparse sf0.001 stream has 3 qualifying
-    # triples at that width (0 below 240) — probed, not guessed
-    got = stream_ops.run_to_memory(
-        stream_ops.funnel_stream(event_stream, within_minutes=480),
-        "t_funnel3",
-        "append",
-        str(tmp_path / "ck_fun3"),
-    )
-    us = F.unix_micros
-    w = 480 * 60 * 1_000_000
-    e = batch_events
-    s1 = e.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("u"), F.col("event_id").alias("e1"), us("ts").alias("t1")
-    )
-    s2 = e.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("u"), F.col("event_id").alias("e2"), us("ts").alias("t2")
-    )
-    s3 = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("u"), F.col("event_id").alias("e3"), us("ts").alias("t3")
-    )
-    want = (
-        s1.join(s2, "u").filter((F.col("t2") > F.col("t1")) & (F.col("t2") <= F.col("t1") + w))
-        .join(s3, "u").filter((F.col("t3") > F.col("t2")) & (F.col("t3") <= F.col("t2") + w))
-        .select(F.col("u").alias("user_id"), "e1", "e2", "e3",
-                F.col("t1").alias("t1_us"), F.col("t2").alias("t2_us"), F.col("t3").alias("t3_us"))
-    )
-    assert _rows(got) == _rows(want)
-    assert want.count() > 0  # fixture exercises the cascade
-
-
-def test_simsearch_stream_writeback_matches_batch(spark, tmp_path):
-    """VERDICT r3 item 6: the streaming ANN write-back (foreachBatch
-    stream-static top-k) round-trips through parquet to exactly the batch
-    brute-force result q_simsearch_topk attests — same pairs, same
-    rounded similarities."""
-    from graph_database_application_for_recommendations_spark.operators.simsearch import (
-        topk_bruteforce,
-    )
-
-    emb = load_ref_tables(spark, SF_SMALL).embeddings
-    stream = stream_ops.read_embeddings_stream(spark, SF_SMALL).filter(
-        F.col("vec_id") < 10
-    )
-    out = str(tmp_path / "simsearch_out")
-    stream_ops.simsearch_stream_writeback(
-        stream, emb, out, str(tmp_path / "ck_sw"), k=10
-    )
-    got = {
-        (r["query_id"], r["neighbor_id"]): r["similarity"]
-        for r in spark.read.parquet(out).collect()
-    }
-    want = {
-        (r["query_id"], r["neighbor_id"]): r["similarity"]
-        for r in topk_bruteforce(
-            emb.filter(F.col("vec_id") < 10), emb, k=10
-        ).collect()
-    }
-    assert got == want
-
-
-def test_streaming_trend_matches_batch(spark, event_stream, batch_events, tmp_path):
-    """The moment-form streaming trend equals the batch REGR_* trend up
-    to float round-off (algebraically identical, different accumulation;
-    the intercept extrapolates ~20k days back to epoch, so absolute
-    digits are ill-conditioned — compare relatively)."""
-    got = {
-        r["event_type"]: (r["n"], r["slope"], r["intercept"], r["r2"])
-        for r in stream_ops.run_to_memory(
-            stream_ops.value_trend_stream(event_stream),
-            "t_trend",
-            "complete",
-            str(tmp_path / "ck_trend"),
-        ).collect()
-    }
-    want = {
-        r["event_type"]: (r["n"], r["slope"], r["intercept"], r["r2"])
-        for r in batch_ops.value_trend(batch_events).collect()
-    }
-    assert set(got) == set(want)
-    for k, (n, s, i, r2) in want.items():
-        gn, gs, gi, gr2 = got[k]
-        assert gn == n
-        assert gs == pytest.approx(s, rel=1e-6, abs=1e-6)
-        assert gi == pytest.approx(i, rel=1e-6)
-        assert gr2 == pytest.approx(r2, rel=1e-4, abs=1e-6)
-
-
-def test_streaming_trend_regr_corner_cases(spark, tmp_path):
-    """REGR_* corner semantics must match ANSI between the twins (ADVICE
-    r4): a constant-VALUED type (var(y)=0, var(x)!=0) has r2 = 1.0, and a
-    single-timestamp type (var(x)=0) has NULL slope/r2 — in BOTH the
-    batch aggregate and the moment-form streaming rewrite."""
-    import datetime
-
-    t0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
-    rows = []
-    # 'flat': constant value over distinct timestamps -> slope 0, r2 1.0
-    for i in range(5):
-        rows.append((i, "flat", t0 + datetime.timedelta(hours=i), 7.5))
-    # 'point': all events at ONE timestamp -> var(x)=0 -> NULL slope/r2
-    for i in range(5, 9):
-        rows.append((i, "point", t0, float(i)))
-    # 'ramp': a genuine trend as the control
-    for i in range(9, 14):
-        rows.append((i, "ramp", t0 + datetime.timedelta(hours=i), float(i)))
-    pdf = spark.createDataFrame(
-        rows, "event_id long, event_type string, ts timestamp, value double"
-    )
-    src_dir = tmp_path / "corner_events"
-    pdf.repartition(1).write.parquet(str(src_dir))
-    stream = spark.readStream.schema(pdf.schema).parquet(str(src_dir))
-
-    def by_type(df):
-        return {r["event_type"]: (r["n"], r["slope"], r["r2"]) for r in df.collect()}
-
-    want = by_type(batch_ops.value_trend(pdf))
-    got = by_type(
-        stream_ops.run_to_memory(
-            stream_ops.value_trend_stream(stream),
-            "t_trend_corner",
-            "complete",
-            str(tmp_path / "ck_trend_corner"),
-        )
-    )
-    assert set(got) == {"flat", "point", "ramp"}
-    assert want["flat"][1:] == (0.0, 1.0)
-    assert want["point"][1:] == (None, None)
-    for k in want:
-        n, s, r2 = want[k]
-        gn, gs, gr2 = got[k]
-        assert gn == n
-        if s is None:
-            assert gs is None and gr2 is None
-        else:
-            # the moment form cancels catastrophically at epoch-scale x
-            # for a 5-point synthetic series; the corner rows above are
-            # the exact checks, the ramp is only the non-degenerate control
-            assert gs == pytest.approx(s, rel=1e-4, abs=1e-4)
-            assert gr2 == pytest.approx(r2, rel=1e-4, abs=1e-4)
-
-
-def test_streaming_dsir_matches_batch(spark, tmp_path):
-    """dsir_score_stream over the replayed corpus with the batch-trained
-    log-ratio table equals the batch scorer exactly (same expressions,
-    same rounding; the stream adds no state)."""
-    from graph_database_application_for_recommendations_spark.operators import textstats
-    from graph_database_application_for_recommendations_spark.sources.views import (
-        load_ref_tables,
-    )
-
-    docs = load_ref_tables(spark, SF_SMALL).documents
-    target = docs.filter(F.col("lang") == "en")
-    ratio = textstats.dsir_log_ratio(docs, target).cache()
-    want = {
-        r["doc_id"]: (r["n_tokens"], r["log_weight"])
-        for r in textstats.dsir_scores(docs, target).collect()
-    }
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["log_weight"])
-        for r in stream_ops.run_to_memory(
-            stream_ops.dsir_score_stream(
-                stream_ops.read_documents_stream(spark, SF_SMALL), ratio
-            ),
-            "t_dsir",
-            "complete",
-            str(tmp_path / "ck_dsir"),
-        ).collect()
-    }
-    ratio.unpersist(blocking=False)
-    assert got == want
-
-
-def test_streaming_quality_clf_matches_batch(spark, tmp_path):
-    """A batch-trained quality classifier scores the replayed document
-    stream identically to the batch scorer (stateless transform; the
-    HashingTF features and the coefficient dot product are per-row)."""
-    from graph_database_application_for_recommendations_spark.plans.quality_clf import (
-        quality_classifier_scores,
-    )
-    from graph_database_application_for_recommendations_spark.sources.views import (
-        load_ref_tables,
-    )
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import HashingTF
-    from graph_database_application_for_recommendations_spark.functions.text import tokens
-
-    docs = load_ref_tables(spark, SF_SMALL).documents
-    want = {
-        r["doc_id"]: r["score"]
-        for r in quality_classifier_scores(docs, F.col("lang") == "en").collect()
-    }
-    # refit the same model to hand the streaming scorer (deterministic
-    # given one partitioning; the parity below is batch-vs-stream of the
-    # SAME fitted coefficients, not fit-vs-fit)
-    base = docs.select(
-        "doc_id", (F.col("lang") == "en").cast("double").alias("label"),
-        tokens(F.col("text")).alias("toks"),
-    )
-    feats = HashingTF(inputCol="toks", outputCol="features", numFeatures=4096).transform(base)
-    model = LogisticRegression(
-        featuresCol="features", labelCol="label", maxIter=10, regParam=0.01,
-        standardization=True,
-    ).fit(feats)
-    got = {
-        r["doc_id"]: r["score"]
-        for r in stream_ops.run_to_memory(
-            stream_ops.quality_score_stream(
-                stream_ops.read_documents_stream(spark, SF_SMALL), model
-            ),
-            "t_qclf",
-            "append",
-            str(tmp_path / "ck_qclf"),
-        ).collect()
-    }
-    assert set(got) == set(want)
-    same = sum(1 for k in want if abs(got[k] - want[k]) < 2e-6)
-    # scores from an identically-configured refit may differ at the last
-    # float ulp through treeAggregate order; require near-total agreement
-    assert same >= 0.98 * len(want)
-
-
-def test_streaming_ingest_neardup_matches_batch(spark, tmp_path):
-    """Round-5 VERDICT item 3, streaming face: replaying a corpus as an
-    id-ordered file stream (one file per micro-batch) through
-    run_ingest_neardup_stream produces exactly the one-shot batch
-    survivor set — the index contract is shared, and greedy
-    first-writer-wins is batching-invariant."""
-    import os
-    import time
-
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        ingest_neardup_append,
-    )
-    from tests.test_pipeline_ops import _ingest_test_docs
-
-    rows = _ingest_test_docs()
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    # one-shot batch reference
-    one = tmp_path / "one"
-    ingest_neardup_append(spark, str(one / "corpus"), str(one / "index"), docs)
-    want = {r["doc_id"] for r in spark.read.parquet(str(one / "corpus")).collect()}
-
-    # id-ordered replay: one parquet file per group, ascending mtimes so
-    # the file source's one-file-per-trigger order follows doc ids
-    src = tmp_path / "src"
-    src.mkdir()
-    t0 = time.time() - 100
-    for i, lo in enumerate((0, 10, 20)):
-        part = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        part.coalesce(1).write.parquet(str(tmp_path / f"stage{i}"))
-        pq = next(
-            p for p in os.listdir(tmp_path / f"stage{i}") if p.endswith(".parquet")
-        )
-        dst = src / f"{i:02d}.parquet"
-        os.rename(tmp_path / f"stage{i}" / pq, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    multi = tmp_path / "multi"
-    stream_ops.run_ingest_neardup_stream(
-        stream, str(multi / "corpus"), str(multi / "index"), str(tmp_path / "ck_ingest")
-    )
-    got = {r["doc_id"] for r in spark.read.parquet(str(multi / "corpus")).collect()}
-    assert got == want
-    idx = spark.read.parquet(str(multi / "index"))
-    assert idx.count() == len(got)
-
-
-def test_streaming_paragraph_dedup_matches_batch(spark, tmp_path):
-    """dedup_paragraphs_stream over the replayed superdoc corpus keeps
-    exactly one representative per canonical paragraph fingerprint, the
-    same fingerprint set as the batch split+fingerprint pass, and every
-    kept unit is a genuine member of its group (dropDuplicates keeps the
-    first ARRIVAL, which within a shuffled micro-batch is not necessarily
-    the smallest para_key — the set-level contract is what both faces
-    share)."""
-    from graph_database_application_for_recommendations_spark.functions.text import (
-        canonical_fingerprint,
-    )
-    from graph_database_application_for_recommendations_spark.operators.dedup import (
-        split_paragraphs,
-    )
-    from graph_database_application_for_recommendations_spark.registry import _superdocs
-    from pyspark.sql import Window
-
-    superdocs = _superdocs(spark, SF_SMALL)
-    sd_path = tmp_path / "superdocs"
-    superdocs.coalesce(1).write.parquet(str(sd_path))
-
-    paras = split_paragraphs(superdocs).withColumn(
-        "fingerprint", canonical_fingerprint(F.col("text"))
-    )
-    members = {}
-    for r in paras.collect():
-        members.setdefault(r["fingerprint"], set()).add(r["para_key"])
-
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(sd_path))
-    got_rows = stream_ops.run_to_memory(
-        stream_ops.dedup_paragraphs_stream(stream),
-        "t_para_dedup",
-        "append",
-        str(tmp_path / "ck_para"),
-    ).collect()
-    fps = [r["fingerprint"] for r in got_rows]
-    assert len(fps) == len(set(fps))  # one representative per group
-    assert set(fps) == set(members)   # exactly the batch fingerprint set
-    for r in got_rows:                # each kept unit belongs to its group
-        assert r["para_key"] in members[r["fingerprint"]]
-
-
-def test_streaming_ingest_spanscrub_matches_batch(spark, tmp_path):
-    """Streaming face of span-scrub ingest: an id-ordered file replay
-    (one file per micro-batch) through run_ingest_spanscrub_stream
-    stores exactly the one-shot batch corpus — submitted-text ownership
-    is batching-invariant, and the chunk-hash index carries the state."""
-    import os
-    import time
-
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        ingest_spanscrub_append,
-    )
-    from tests.test_pipeline_ops import _spanscrub_test_docs
-
-    rows = _spanscrub_test_docs()
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    one = tmp_path / "one"
-    ingest_spanscrub_append(spark, str(one / "c"), str(one / "i"), docs)
-    want = {r["doc_id"]: r["text"] for r in spark.read.parquet(str(one / "c")).collect()}
-
-    src = tmp_path / "src"
-    src.mkdir()
-    t0 = time.time() - 100
-    for i, lo in enumerate((0, 10, 20)):
-        part = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        part.coalesce(1).write.parquet(str(tmp_path / f"stage{i}"))
-        pq = next(p for p in os.listdir(tmp_path / f"stage{i}") if p.endswith(".parquet"))
-        dst = src / f"{i:02d}.parquet"
-        os.rename(tmp_path / f"stage{i}" / pq, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    multi = tmp_path / "multi"
-    stream_ops.run_ingest_spanscrub_stream(
-        stream, str(multi / "c"), str(multi / "i"), str(tmp_path / "ck_scrub")
-    )
-    got = {r["doc_id"]: r["text"] for r in spark.read.parquet(str(multi / "c")).collect()}
-    assert got == want
-
-
 def test_streaming_c4_clean_is_stateless_and_matches_batch(spark, tmp_path):
     """c4_paragraph_clean is a pure per-row column program, so it works
     on a streaming frame as-is (no state, append-safe); the replayed
@@ -774,267 +119,14 @@ def test_streaming_c4_clean_is_stateless_and_matches_batch(spark, tmp_path):
     assert sorted(out) == want
 
 
-def test_streaming_stats_sidecars_match_full_scan(spark, tmp_path):
-    """Streaming statistics-sidecar maintenance: an id-ordered file
-    replay (one file per micro-batch) through run_ingest_stats_stream
-    leaves delta tables whose consolidations equal the direct
-    whole-corpus vocabulary, corpus scalars and quality histogram,
-    bit-for-bit — model state rides in the sidecar tables, the stream
-    itself is stateless."""
-    import os
-    import time
+def test_stream_pack_totals_leaves_no_checkpoint_dir(spark):
+    """q_stream_pack_totals checkpoints its availableNow run in a fresh
+    temp directory; the memory sink holds the rows on the driver, so the
+    directory must be gone once the query returns."""
+    from graph_database_application_for_recommendations_spark import registry
 
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        consolidated_corpus_stats,
-        consolidated_quality_hist,
-        consolidated_vocabulary,
-    )
-    from graph_database_application_for_recommendations_spark.operators.textstats import (
-        build_vocabulary,
-        quality_hist_table,
-    )
-
-    rows = [
-        (i, ("the and of " * (i % 3)) + " ".join(f"tok{(i * 5 + j) % 11}" for j in range(7)),
-         f"src{i % 2}")
-        for i in range(30)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    want_vocab = sorted(map(tuple, build_vocabulary(docs, min_count=2).collect()))
-    want_hist = sorted(map(tuple, quality_hist_table(docs).collect()))
-
-    src = tmp_path / "src"
-    src.mkdir()
-    t0 = time.time() - 100
-    for i, lo in enumerate((0, 10, 20)):
-        part = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        part.coalesce(1).write.parquet(str(tmp_path / f"stage{i}"))
-        pq = next(p for p in os.listdir(tmp_path / f"stage{i}") if p.endswith(".parquet"))
-        dst = src / f"{i:02d}.parquet"
-        os.rename(tmp_path / f"stage{i}" / pq, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    vp, sp, qp, dp = (str(tmp_path / n) for n in ("vocab", "stats", "qhist", "drift"))
-    stream_ops.run_ingest_stats_stream(
-        stream, vp, sp, qp, str(tmp_path / "ck_stats"), drift_path=dp
-    )
-
-    got_vocab = sorted(map(tuple, consolidated_vocabulary(spark, vp, min_count=2).collect()))
-    assert got_vocab == want_vocab
-    st = consolidated_corpus_stats(spark, sp).first()
-    assert st["n_docs"] == 30
-    got_hist = sorted(map(tuple, consolidated_quality_hist(spark, qp).collect()))
-    assert got_hist == want_hist
-    # drift reports: batches 2 and 3 score against their pre-batch baseline
-    # (batch 1 has none); every KL is finite and the per-source rows exist
-    drift = spark.read.parquet(dp).collect()
-    assert {r["source"] for r in drift} == {"src0", "src1"}
-    assert len(drift) == 4  # 2 sources x 2 scoring batches
-    assert all(r["kl"] is not None and r["kl"] >= 0.0 for r in drift)
-
-
-def test_streaming_ingest_dedup_bloom_matches_batch(spark, tmp_path):
-    """Streaming exact-dedup ingest with the Bloom pre-filter: an
-    id-ordered file replay stores exactly the one-shot dedup survivor
-    set, and the filter sidecar accumulates alongside."""
-    import os
-    import time
-
-    from graph_database_application_for_recommendations_spark.operators.dedup import (
-        dedup_fingerprint,
-    )
-
-    rows = [(i, f"text number {i % 7} with words") for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    want = {r["keep_id"] for r in dedup_fingerprint(docs).collect()}
-
-    src = tmp_path / "src"
-    src.mkdir()
-    t0 = time.time() - 100
-    for i, lo in enumerate((0, 10, 20)):
-        part = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        part.coalesce(1).write.parquet(str(tmp_path / f"stage{i}"))
-        pq = next(p for p in os.listdir(tmp_path / f"stage{i}") if p.endswith(".parquet"))
-        dst = src / f"{i:02d}.parquet"
-        os.rename(tmp_path / f"stage{i}" / pq, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    stream_ops.run_ingest_dedup_stream(
-        stream, str(tmp_path / "c"), str(tmp_path / "i"), str(tmp_path / "ck"),
-        bloom_path=str(tmp_path / "bloom"),
-    )
-    got = {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "c")).collect()}
-    assert got == want == set(range(7))
-    assert spark.read.parquet(str(tmp_path / "bloom")).count() > 0
-
-
-def test_streaming_sketches_match_single_pass(spark, tmp_path):
-    """Streaming sketch maintenance: a file replay leaves CMS/HLL/Bloom
-    states whose merges equal the single-pass builds over the same
-    corpus (sum / max / or algebras respectively)."""
-    import os
-    import time
-
-    from graph_database_application_for_recommendations_spark.operators.etl import (
-        consolidated_cms_sketch,
-        consolidated_hll,
-    )
-    from graph_database_application_for_recommendations_spark.operators.sketches import (
-        bloom_delta_table,
-        bloom_merge,
-        cms_delta_table,
-        consolidate_cms,
-        hll_register_table,
-    )
-    from graph_database_application_for_recommendations_spark.functions.text import (
-        canonical_fingerprint,
-    )
-
-    rows = [(i, " ".join(f"tok{(i + j) % 9}" for j in range(6))) for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    want_cms = sorted(map(tuple, consolidate_cms(cms_delta_table(docs)).collect()))
-    want_hll = sorted(map(tuple, hll_register_table(docs, "doc_id").collect()))
-    fps = docs.select(canonical_fingerprint(F.col("text")).alias("fingerprint"))
-    want_bloom = sorted(map(tuple, bloom_merge(bloom_delta_table(fps, "fingerprint")).collect()))
-
-    src = tmp_path / "src"
-    src.mkdir()
-    t0 = time.time() - 100
-    for i, lo in enumerate((0, 10, 20)):
-        part = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        part.coalesce(1).write.parquet(str(tmp_path / f"stage{i}"))
-        pq = next(p for p in os.listdir(tmp_path / f"stage{i}") if p.endswith(".parquet"))
-        dst = src / f"{i:02d}.parquet"
-        os.rename(tmp_path / f"stage{i}" / pq, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    cp, hp, bp = (str(tmp_path / n) for n in ("cms", "hll", "bloom"))
-    stream_ops.run_ingest_sketch_stream(stream, cp, hp, bp, str(tmp_path / "ck_sk"))
-
-    assert sorted(map(tuple, consolidated_cms_sketch(spark, cp).collect())) == want_cms
-    assert sorted(map(tuple, consolidated_hll(spark, hp).collect())) == want_hll
-    got_bloom = sorted(map(tuple, bloom_merge(spark.read.parquet(bp)).collect()))
-    assert got_bloom == want_bloom
-
-
-def test_zonemap_stream_matches_single_pass(spark, tmp_path):
-    """Three micro-batches of per-day stats deltas consolidate to the
-    single-pass zone-map table — the (MIN, MAX, SUM) monoid face riding
-    the stateless foreachBatch discipline."""
-    import os
-    import time
-
-    from graph_database_application_for_recommendations_spark.streaming import (
-        events as stream_ops,
-    )
-    from graph_database_application_for_recommendations_spark.operators.layout import (
-        consolidate_zonemaps,
-        zonemap_delta_table,
-    )
-
-    day = 86_400_000_000
-    rows = [(i, (i % 5) * day + i * 1_000_000, i % 7) for i in range(30)]
-    ev = spark.createDataFrame(rows, "event_id long, ts_us long, user_id long")
-    want = sorted(
-        map(tuple, zonemap_delta_table(ev, "ts_us", "user_id", F.expr("ts_us DIV 86400000000")).collect())
-    )
-
-    src = tmp_path / "zm_src"
-    src.mkdir()
-    t0 = time.time() - 100
-    for i, lo in enumerate((0, 10, 20)):
-        part = ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < lo + 10))
-        part.coalesce(1).write.parquet(str(tmp_path / f"zstage{i}"))
-        pq = next(p for p in os.listdir(tmp_path / f"zstage{i}") if p.endswith(".parquet"))
-        dst = src / f"{i:02d}.parquet"
-        os.rename(tmp_path / f"zstage{i}" / pq, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    stream = (
-        spark.readStream.schema("event_id long, ts_us long, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    sp = str(tmp_path / "zm_stats")
-    stream_ops.run_ingest_zonemap_stream(stream, sp, str(tmp_path / "ck_zm"))
-    got = sorted(map(tuple, consolidate_zonemaps(spark.read.parquet(sp)).collect()))
-    assert got == want
-
-
-def test_streaming_ingest_dedup_across_compaction_boundary(spark, tmp_path):
-    """VERDICT r7 item 8, streaming face: the dedup ingest stream with
-    compact_every=2 compacts mid-stream (after micro-batches 1 and 3),
-    and a RESTART from the same checkpoint continues across the
-    compaction boundary — new files only, exactly-once — leaving the
-    one-shot dedup survivor set and fewer corpus files than batches."""
-    import os
-    import time
-
-    from graph_database_application_for_recommendations_spark.operators.dedup import (
-        dedup_fingerprint,
-    )
-    from graph_database_application_for_recommendations_spark.sources.fsutil import (
-        list_parquet,
-    )
-
-    rows = [(i, f"text number {i % 5} with words") for i in range(40)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    want = {r["keep_id"] for r in dedup_fingerprint(docs).collect()}
-
-    src = tmp_path / "src"
-    src.mkdir()
-    t0 = time.time() - 100
-
-    def add_file(i: int, lo: int) -> None:
-        part = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10))
-        part.coalesce(1).write.parquet(str(tmp_path / f"stage{i}"))
-        pq = next(
-            p for p in os.listdir(tmp_path / f"stage{i}") if p.endswith(".parquet")
-        )
-        dst = src / f"{i:02d}.parquet"
-        os.rename(tmp_path / f"stage{i}" / pq, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    def run() -> None:
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        stream_ops.run_ingest_dedup_stream(
-            stream, str(tmp_path / "c"), str(tmp_path / "i"), str(tmp_path / "ck"),
-            compact_every=2,
-        )
-
-    # first session: micro-batches 0,1 -> compaction fires at batch 1
-    add_file(0, 0)
-    add_file(1, 10)
-    run()
-    files_after_first = len(list_parquet(spark, str(tmp_path / "c")))
-    # restart across the boundary: batches 2,3 only; compaction at 3
-    add_file(2, 20)
-    add_file(3, 30)
-    run()
-    got = {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "c")).collect()}
-    assert got == want == set(range(5))
-    # compaction actually folded: survivor files <= compaction targets,
-    # not one file-set per micro-batch
-    assert files_after_first <= 2
-    assert len(list_parquet(spark, str(tmp_path / "c"))) <= 2
-    # index kept exactly one fingerprint per survivor
-    assert spark.read.parquet(str(tmp_path / "i")).distinct().count() == 5
+    pattern = os.path.join(tempfile.gettempdir(), "ck_stream_pack_totals_*")
+    before = len(glob.glob(pattern))
+    rows = registry.queries()["q_stream_pack_totals"](spark, SF_SMALL).collect()
+    assert rows
+    assert len(glob.glob(pattern)) == before
