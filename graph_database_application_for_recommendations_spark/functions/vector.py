@@ -40,7 +40,3 @@ def l2_normalize(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two double arrays (un-normalized inputs)."""
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def cosine_rounded(a: Column, b: Column) -> Column:
-    return F.round(cosine(a, b), SIM_SCALE)

@@ -182,21 +182,6 @@ def label_centroids(
     )
 
 
-def bucket_ids(
-    df: DataFrame,
-    planes: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, bucket): bucket = bitmask of sign(v · plane_p)."""
-    v = V.as_double(F.col(vec_col))
-    bucket = F.lit(0)
-    for p, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(x) for x in plane])
-        bucket = bucket + F.when(V.dot(v, lit_plane) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return df.select(F.col(id_col).alias("id"), bucket.cast("long").alias("bucket"))
-
-
 def multi_bucket_ids(
     df: DataFrame,
     planes: list[list[float]],

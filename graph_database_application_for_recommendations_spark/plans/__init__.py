@@ -70,11 +70,27 @@ def release_checkpoint(df: DataFrame) -> None:
         pass
 
 
+NODE_VECTOR_BUDGET_BYTES = 256 * 1024 * 1024
+
+
+def node_vector_fits(
+    n_rows: int, bytes_per_row: int = 24, budget_bytes: int | None = None
+) -> bool:
+    """Whether an ``n_rows``-row per-node table fits the node-vector byte
+    budget (``NODE_VECTOR_BUDGET_BYTES`` unless ``budget_bytes`` is given):
+    the one size rule behind :func:`gate_node_vector_broadcast` and the
+    driver-held label tables, which a broadcast ships through the driver
+    anyway."""
+    if budget_bytes is None:
+        budget_bytes = NODE_VECTOR_BUDGET_BYTES
+    return n_rows * bytes_per_row < budget_bytes
+
+
 def gate_node_vector_broadcast(
     n_rows: int,
     what: str,
     bytes_per_row: int = 24,
-    budget_bytes: int = 256 * 1024 * 1024,
+    budget_bytes: int | None = None,
 ):
     """Gating policy for the per-iteration |V|-row vector/label joins every
     iterative driver makes (round-8 VERDICT item 2): broadcast while the
@@ -92,7 +108,9 @@ def gate_node_vector_broadcast(
     ``plans/``."""
     from ..functions.hints import gated_broadcast
 
-    if n_rows * bytes_per_row < budget_bytes:
+    if budget_bytes is None:
+        budget_bytes = NODE_VECTOR_BUDGET_BYTES
+    if node_vector_fits(n_rows, bytes_per_row, budget_bytes):
         return lambda df: gated_broadcast(
             df, f"count-gated node vector: {what}, {n_rows} rows * "
             f"{bytes_per_row} B < {budget_bytes} B"

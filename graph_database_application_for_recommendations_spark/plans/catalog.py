@@ -8,7 +8,7 @@ view; existence check and conditional drop map to catalog lookups.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def graph_exists(spark: SparkSession, name: str) -> bool:
@@ -22,12 +22,3 @@ def drop_graph_if_exists(spark: SparkSession, name: str) -> bool:
     spark.table(name).unpersist()
     spark.catalog.dropTempView(name)
     return True
-
-
-def project_graph(spark: SparkSession, name: str, df: DataFrame) -> tuple[int, DataFrame]:
-    """Materialize + register a projection; returns (rowCount, cached df) —
-    the analog of GDS yielding nodeCount/relationshipCount (A7)."""
-    drop_graph_if_exists(spark, name)
-    df = df.cache()
-    df.createOrReplaceTempView(name)
-    return df.count(), df

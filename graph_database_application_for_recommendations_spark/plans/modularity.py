@@ -24,13 +24,9 @@ def modularity(
     edges: DataFrame,
     communities: DataFrame,
     weight_col: str = "weight",
-    two_m: float | None = None,
 ) -> float:
     """``edges``: undirected-doubled (src, dst, weight); ``communities``:
     (node_id, community). Returns Q ∈ [-0.5, 1].
-
-    ``two_m`` (total doubled weight) is graph-invariant — callers looping
-    over partitions (Louvain sweeps) pass it once instead of re-summing.
 
     Single-pass formulation: with ``deg_c = Σ_{i∈c} k_i`` and ``in_c`` the
     doubled intra-community weight,
@@ -64,7 +60,7 @@ def modularity(
         )
         .collect()[0]
     )
-    m = two_m if two_m is not None else row["m_doubled"]
+    m = row["m_doubled"]
     if not m:
         return 0.0
     return float(row["in_total"] / m - row["deg_sq"] / (m * m))

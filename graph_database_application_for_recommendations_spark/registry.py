@@ -3406,6 +3406,7 @@ def _stream_pack_totals(s: SparkSession, d: str) -> DataFrame:
     # the memory sink keeps the rows on the driver, so the checkpoint is
     # dead once the availableNow run has terminated
     checkpoint = tempfile.mkdtemp(prefix="ck_stream_pack_totals_")
+    view = f"t_stream_pack_totals_{uuid.uuid4().hex[:8]}"
     try:
         packed = stream_ops.run_to_memory(
             stream_ops.pack_stream(
@@ -3414,12 +3415,15 @@ def _stream_pack_totals(s: SparkSession, d: str) -> DataFrame:
                 n_shards=_STREAM_PACK_SHARDS,
                 seed=7,
             ),
-            f"t_stream_pack_totals_{uuid.uuid4().hex[:8]}",
+            view,
             "append",
             checkpoint,
         )
     finally:
         shutil.rmtree(checkpoint, ignore_errors=True)
+        # the frame read from the view resolved to the sink's rows, so the
+        # catalog name is dead too
+        s.catalog.dropTempView(view)
     return packed.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),

@@ -19,7 +19,7 @@ from graph_database_application_for_recommendations_spark.operators.ivf import (
 from graph_database_application_for_recommendations_spark.operators.ivfpq import topk_ivfpq
 from graph_database_application_for_recommendations_spark.operators.knn import knn_ivf
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, jobs_in_group
 
 # --- plain-Python replica -----------------------------------------------------
 
@@ -128,16 +128,6 @@ def test_cluster_corpus_matches_python_replica(spark, pm1_vectors, k, lloyd_iter
 # --- jobs and storage ---------------------------------------------------------
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setJobGroup("", "")
-
-
 def test_knn_ivf_job_budget(spark):
     """One knn_ivf call, trained and searched, on the sf0.001 embeddings:
     a Lloyd round is an assign + (cell, dim) mean collected to the driver
@@ -145,9 +135,11 @@ def test_knn_ivf_job_budget(spark):
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").cache()
     emb.count()
     try:
-        jobs = _jobs_in_group(spark, "knn-ivf", lambda: knn_ivf(emb).collect())
-        two = _jobs_in_group(spark, "ivf-2", lambda: train_ivf_centroids(emb, lloyd_iters=2))
-        three = _jobs_in_group(spark, "ivf-3", lambda: train_ivf_centroids(emb, lloyd_iters=3))
+        _, jobs = jobs_in_group(spark, "knn-ivf", lambda: knn_ivf(emb).collect())
+        _, two = jobs_in_group(spark, "ivf-2", lambda: train_ivf_centroids(emb, lloyd_iters=2))
+        _, three = jobs_in_group(
+            spark, "ivf-3", lambda: train_ivf_centroids(emb, lloyd_iters=3)
+        )
     finally:
         emb.unpersist(blocking=True)
     assert jobs <= 19

@@ -82,19 +82,23 @@ def _replica_local_move(edges, parity, max_sweeps):
     red/black sweeps (node parity = Spark's ``pmod(hash(id), 2)``), gain
     k_i→c − deg_i·(tot_c − [c = c_own]·deg_i)/2m over the node's neighbour
     communities, ties to the smallest c, stop after two stale half-sweeps.
-    Returns ({node: community}, number of equal-gain ties seen)."""
+    ``tot`` is summed in ascending node order and 2m exactly rounded, as
+    the driver-held label table does. Returns ({node: community}, number
+    of equal-gain ties seen)."""
+    import math
+
     nbrs: dict[int, list[tuple[int, float]]] = {}
     for s, d, w in edges:
         nbrs.setdefault(s, []).append((d, w))
     deg = {i: sum(w for _, w in nbrs[i]) for i in nbrs}
-    m2 = sum(deg.values())
+    m2 = math.fsum(deg.values())
     comm = {i: i for i in nbrs}
     ties = 0
     stale = 0
     for sweep in range(max_sweeps):
         tot: dict[int, float] = {}
-        for i, c in comm.items():
-            tot[c] = tot.get(c, 0.0) + deg[i]
+        for i in sorted(comm):
+            tot[comm[i]] = tot.get(comm[i], 0.0) + deg[i]
         new = dict(comm)
         changed = 0
         for i in nbrs:
@@ -136,22 +140,12 @@ def _seeded_graph(seed, n, p, weights):
     return [(s, d, float(w)) for (a, b), w in und.items() for s, d in ((a, b), (b, a))]
 
 
-@pytest.mark.parametrize(
-    "seed, n, p, weights, max_sweeps, has_ties",
-    [
-        (7, 60, 0.08, [1, 2, 3, 5], 6, False),
-        # unit weights on a sparse graph: equal degrees everywhere, so many
-        # nodes see several neighbour communities with the same gain
-        (11, 48, 0.03, [1], 8, True),
-    ],
-)
-def test_local_move_matches_python_replica(spark, seed, n, p, weights, max_sweeps, has_ties):
-    """The distributed sweep loop is the replica, bit for bit, on
-    integer-weight graphs (every sum is exact), ties included."""
+def _run_local_move(spark, rows, n, max_sweeps):
+    """``_local_move`` on ``rows`` against the replica: (got, want, ties,
+    whether the labels were driver-held)."""
     from graph_database_application_for_recommendations_spark.plans import cache_wide
     from graph_database_application_for_recommendations_spark.plans.louvain import _local_move
 
-    rows = _seeded_graph(seed, n, p, weights)
     edges = spark.createDataFrame(rows, "src LONG, dst LONG, weight DOUBLE")
     parity = {
         r["id"]: r["parity"]
@@ -160,30 +154,67 @@ def test_local_move_matches_python_replica(spark, seed, n, p, weights, max_sweep
         .collect()
     }
     want, ties = _replica_local_move(rows, parity, max_sweeps)
+    wide = cache_wide(edges, spark.sparkContext.defaultParallelism, "src")
+    labels = _local_move(wide, max_sweeps)
+    got = {r["node_id"]: r["community"] for r in labels.frame.collect()}
+    wide.unpersist(blocking=False)
+    return got, want, ties, labels.node_id is not None
+
+
+_INTEGER_GRAPHS = [
+    (7, 60, 0.08, [1, 2, 3, 5], 6, False),
+    # unit weights on a sparse graph: equal degrees everywhere, so many
+    # nodes see several neighbour communities with the same gain
+    (11, 48, 0.03, [1], 8, True),
+]
+
+
+@pytest.mark.parametrize(
+    "seed, n, p, weights, max_sweeps, has_ties",
+    _INTEGER_GRAPHS + [
+        # non-integer weights: sums are inexact, so the result depends on
+        # the order tot is summed in (ascending node ids on the driver)
+        (5, 60, 0.06, [0.1, 0.7, 1.3], 8, False),
+    ],
+)
+def test_local_move_matches_python_replica(spark, seed, n, p, weights, max_sweeps, has_ties):
+    """The distributed sweep loop with its label table on the driver (every
+    test graph is under the node-vector gate) is the replica, bit for bit,
+    ties included."""
+    got, want, ties, on_driver = _run_local_move(
+        spark, _seeded_graph(seed, n, p, weights), n, max_sweeps
+    )
     if has_ties:
         assert ties > 0
-    wide = cache_wide(edges, spark.sparkContext.defaultParallelism, "src")
-    got = {r["node_id"]: r["community"] for r in _local_move(wide, max_sweeps).collect()}
-    wide.unpersist(blocking=False)
+    assert on_driver
     assert got == want
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+@pytest.mark.parametrize("seed, n, p, weights, max_sweeps, has_ties", _INTEGER_GRAPHS)
+def test_local_move_over_gate_matches_python_replica(
+    spark, monkeypatch, seed, n, p, weights, max_sweeps, has_ties
+):
+    """The same replica pins the over-gate owner, forced by a zero byte
+    budget: one checkpointed label table per sweep, shuffle joins. Its
+    window sums ``tot`` in no fixed order, so it is pinned on integer
+    weights, where every sum is exact."""
+    from graph_database_application_for_recommendations_spark import plans
+
+    monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
+    got, want, ties, on_driver = _run_local_move(
+        spark, _seeded_graph(seed, n, p, weights), n, max_sweeps
+    )
+    if has_ties:
+        assert ties > 0
+    assert not on_driver
+    assert got == want
 
 
 def test_local_move_sweep_job_budget(spark):
-    """One more sweep of the distributed local move costs at most 7 Spark
-    jobs: one label table per sweep, both lookups broadcast from it, no
-    separate degree or tot table."""
+    """One more sweep of the distributed local move costs at most 3 Spark
+    jobs: the driver-held label table is broadcast to both lookups and
+    only the movers come back, so there is no window, checkpoint or move
+    count."""
     from graph_database_application_for_recommendations_spark.operators.corating import (
         corating_edges,
     )
@@ -191,19 +222,58 @@ def test_local_move_sweep_job_budget(spark):
     from graph_database_application_for_recommendations_spark.plans.louvain import _local_move
     from graph_database_application_for_recommendations_spark.sources.views import load_ref_tables
 
-    from .conftest import SF_SMALL
+    from .conftest import SF_SMALL, jobs_in_group
 
     co = corating_edges(load_ref_tables(spark, SF_SMALL).ratings).select(
         F.col("u1").alias("src"), F.col("u2").alias("dst"),
         F.col("weight").cast("double").alias("weight"),
     )
     edges = cache_wide(co, spark.sparkContext.defaultParallelism, "src")
-    two, jobs_two = _jobs_in_group(spark, "louvain-2-sweeps", lambda: _local_move(edges, 2))
-    three, jobs_three = _jobs_in_group(spark, "louvain-3-sweeps", lambda: _local_move(edges, 3))
+    two, jobs_two = jobs_in_group(spark, "louvain-2-sweeps", lambda: _local_move(edges, 2))
+    three, jobs_three = jobs_in_group(spark, "louvain-3-sweeps", lambda: _local_move(edges, 3))
     # the third sweep really ran and moved nodes
-    assert set(two.collect()) != set(three.collect())
+    assert set(two.frame.collect()) != set(three.frame.collect())
     edges.unpersist(blocking=False)
-    assert jobs_three - jobs_two <= 7
+    assert jobs_three - jobs_two <= 3
+
+
+def test_louvain_q_from_coarse_graph_matches_modularity(spark):
+    """The Q a distributed level reads off its coarse graph is the
+    modularity of the returned partition over the input edges, also on
+    non-integer weights (where the two sum in different orders)."""
+    rows = _seeded_graph(3, 80, 0.05, [0.1, 0.7, 1.3])
+    edges = spark.createDataFrame(rows, "src LONG, dst LONG, weight DOUBLE")
+    for threshold in (0, len(rows) - 1):
+        comm, q = louvain(edges, local_threshold=threshold)
+        assert q == pytest.approx(modularity(edges, comm), abs=1e-12)
+
+
+def test_louvain_label_owners_agree(spark, monkeypatch):
+    """A fully distributed run gives the same partition and Q whether the
+    labels live on the driver at every level, in Spark at every level (a
+    zero byte budget), or in Spark at level 0 and on the driver after
+    coarsening (a budget of |V₀| rows: the level-1 labels then compose
+    into a Spark-held mapping)."""
+    from graph_database_application_for_recommendations_spark import plans
+
+    n = 48
+    edges = spark.createDataFrame(
+        _seeded_graph(11, n, 0.03, [1]), "src LONG, dst LONG, weight DOUBLE"
+    )
+
+    def run():
+        comm, q = louvain(edges, max_levels=2, local_threshold=0)
+        groups: dict[int, set[int]] = {}
+        for r in comm.collect():
+            groups.setdefault(r["community"], set()).add(r["node_id"])
+        return sorted(map(sorted, groups.values())), q
+
+    want, q_want = run()
+    for budget in (0, 24 * n):
+        monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", budget)
+        got, q = run()
+        assert got == want
+        assert q == pytest.approx(q_want, abs=1e-12)
 
 
 def test_louvain_distributed_releases_all_but_result(spark, three_cliques):

@@ -833,8 +833,9 @@ def test_driver_side_materialization_sites_are_classified():
         "operators/pq.py::train_pq_codebooks": (1, "sampled k-means training set (bounded sample)"),
         "operators/sampling.py::stratified_sample": (1, "scalar histogram-size gate aggregate (r10 broadcast guard)"),
         "plans/fastrp.py::_fastrp_local": (2, "gated driver-local path (documented gates)"),
-        "plans/louvain.py::_local_move": (1, "scalar move-count per sweep"),
-        "plans/louvain.py::louvain": (2, "coarsened-graph gate + scalar convergence"),
+        "plans/louvain.py::_compose_local": (1, "scalar label offset (over-gate mapping)"),
+        "plans/louvain.py::_local_move": (3, "scalar level size; under the node-vector gate, the (node_id, deg) arrays and each sweep's movers: the gated label table, which the broadcast already ships through the driver"),
+        "plans/louvain.py::louvain": (2, "coarse graph under the local gate + one scalar Q/row-count aggregate"),
         "plans/modularity.py::modularity": (1, "scalar Q"),
         "plans/pipeline.py::_bipartite_fastrp_arrays": (1, "gated driver-local path: <= LOCAL_MAX_EDGES doubled edges"),
         "recommender.py::_records": (1, "API edge: Bolt-style dict rows (reference parity)"),

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from graph_database_application_for_recommendations_spark import registry
 from graph_database_application_for_recommendations_spark.sources.views import load_ref_tables
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, jobs_in_group
 
 
 def _formatted_plan(df) -> str:
@@ -188,34 +188,24 @@ def test_fanout_sizing_runs_no_job(spark):
     n_true = 2000  # sf0.001 embeddings table
     assert n_est is not None and n_true / 8 <= n_est <= n_true * 8
 
-    sc = spark.sparkContext
-    sc.setJobGroup("sizing-guard", "no jobs during plan construction")
-    try:
+    def construct():
         multimodal.extract_features(assets)
         multimodal.sample_frames(assets)
         multimodal.resize_images(assets)
-        jobs = sc.statusTracker().getJobIdsForGroup("sizing-guard")
-    finally:
-        sc.setJobGroup("", "")
-    assert list(jobs) == []
+
+    _, jobs = jobs_in_group(spark, "sizing-guard", construct)
+    assert jobs == 0
 
     # knn_hyperplane legitimately runs jobs at construction (the bucket
     # table is eagerly cached — both join sides scan it); the guard is that
     # AUTO-SIZING num_planes adds none on top of an explicit num_planes.
-    def jobs_for(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setJobGroup("", "")
-
-    explicit = jobs_for(
-        "knn-explicit",
+    _, explicit = jobs_in_group(
+        spark, "knn-explicit",
         lambda: knn.knn_hyperplane(emb, id_col="vec_id", vec_col="embedding", num_planes=5),
     )
-    auto = jobs_for(
-        "knn-auto", lambda: knn.knn_hyperplane(emb, id_col="vec_id", vec_col="embedding")
+    _, auto = jobs_in_group(
+        spark, "knn-auto",
+        lambda: knn.knn_hyperplane(emb, id_col="vec_id", vec_col="embedding"),
     )
     assert auto == explicit
 
@@ -353,21 +343,11 @@ def test_hyperplane_lsh_sizing_runs_no_extra_jobs(spark):
 
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 10)
-    sc = spark.sparkContext
-
-    def jobs_for(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setJobGroup("", "")
-
-    with_dim = jobs_for(
-        "lsh-dim", lambda: simsearch.topk_hyperplane_lsh(queries, emb, k=5, dim=64)
+    _, with_dim = jobs_in_group(
+        spark, "lsh-dim", lambda: simsearch.topk_hyperplane_lsh(queries, emb, k=5, dim=64)
     )
-    probing = jobs_for(
-        "lsh-probe", lambda: simsearch.topk_hyperplane_lsh(queries, emb, k=5)
+    _, probing = jobs_in_group(
+        spark, "lsh-probe", lambda: simsearch.topk_hyperplane_lsh(queries, emb, k=5)
     )
     assert with_dim < probing
 

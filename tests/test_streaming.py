@@ -130,3 +130,23 @@ def test_stream_pack_totals_leaves_no_checkpoint_dir(spark):
     rows = registry.queries()["q_stream_pack_totals"](spark, SF_SMALL).collect()
     assert rows
     assert len(glob.glob(pattern)) == before
+
+
+def test_stream_pack_totals_leaves_no_temp_view(spark):
+    """Each q_stream_pack_totals call names a memory-sink view; the view is
+    dropped before the query returns, and the returned totals still read
+    the sink's rows."""
+    from graph_database_application_for_recommendations_spark import registry
+
+    def views():
+        return {
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("t_stream_pack_totals_")
+        }
+
+    before = views()
+    first = registry.queries()["q_stream_pack_totals"](spark, SF_SMALL)
+    second = registry.queries()["q_stream_pack_totals"](spark, SF_SMALL)
+    assert views() == before
+    assert sorted(first.collect()) == sorted(second.collect())
+    assert first.count() > 0
