@@ -9,26 +9,65 @@ Determinism deviations from the reference (documented per SURVEY.md §5):
 every ``ORDER BY ... LIMIT`` gets an explicit unique tie-break key, and the
 reference's T4 "LIMIT before ORDER BY" picks-3-arbitrary-members quirk is
 canonicalized to order-then-limit.
+
+Each recommender function also takes driver-held tables: key-sorted pandas
+frames from ``serving.driver_table``, the way ``fastrp`` holds a local and
+a distributed path. ``recommend_books_*`` and ``similar_users_*`` then
+answer on the driver as a pandas frame, with no Spark job and the rows,
+order and values of the Spark plan. ``graph_data_*`` stays a Spark query,
+since its rows grow with the neighbourhood, but reads the neighbours or
+the community members off the driver frame as a literal relation instead
+of joining for them.
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import gated_broadcast
+from .serving import literal_relation
+
+
+def _rows_of(table: pd.DataFrame, col: str, keys) -> pd.DataFrame:
+    """The rows of ``table``, sorted by ``col``, whose ``col`` is one of
+    ``keys``, key by key: a key listed twice yields its rows twice, as an
+    equi-join does."""
+    s = table[col].to_numpy()
+    lo, hi = s.searchsorted(keys, "left"), s.searchsorted(keys, "right")
+    idx = [np.arange(a, b) for a, b in zip(lo, hi)]
+    return table.iloc[np.concatenate(idx) if idx else []]
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on its shortest decimal
+    form (``BigDecimal.valueOf``), not Python's round-half-even on the
+    binary value."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _community_members(users_with_community: pd.DataFrame, user_id: int) -> pd.DataFrame:
+    """The rows of the users sharing a community with ``user_id`` (the user
+    included), in user order; none when the user has no community."""
+    uc = users_with_community
+    comm = _rows_of(uc, "user_id", [user_id])["community"].dropna()
+    return uc[uc["community"].isin(comm.unique())]
 
 
 # --- KNN recommender (reference recommender/recommender_knn.py) ---
 
 
 def recommend_books_knn(
-    similar_to: DataFrame,
-    ratings: DataFrame,
-    books: DataFrame,
+    similar_to: DataFrame | pd.DataFrame,
+    ratings: DataFrame | pd.DataFrame,
+    books: DataFrame | pd.DataFrame,
     user_id: int,
     k: int = 3,
-) -> DataFrame:
+) -> DataFrame | pd.DataFrame:
     """2-hop expand + anti-join + group-avg + top-k.
 
     Reference Cypher at ``recommender/recommender_knn.py:11-28``::
@@ -39,6 +78,23 @@ def recommend_books_knn(
         ORDER BY avgRating DESC, votes DESC LIMIT k
         RETURN book.title, book.author, avgRating, votes
     """
+    if isinstance(similar_to, pd.DataFrame):
+        dst = _rows_of(similar_to, "src", [user_id])["dst"].to_numpy()
+        cand = _rows_of(ratings, "user_id", dst)
+        rated = _rows_of(ratings, "user_id", [user_id])["isbn"]
+        cand = cand[~cand["isbn"].isin(rated)].merge(books, on="isbn")
+        agg = (
+            cand.groupby(["isbn", "title", "author"], dropna=False)["rating"]
+            .agg(["sum", "count", "size"])
+            .reset_index()
+        )
+        agg["avgRating"] = [
+            _round6(float(t) / n) if n else None for t, n in zip(agg["sum"], agg["count"])
+        ]
+        agg = agg.rename(columns={"size": "votes"}).sort_values(
+            ["avgRating", "votes", "isbn"], ascending=[False, False, True]
+        )
+        return agg.head(k)[["title", "author", "avgRating", "votes"]].reset_index(drop=True)
     sim_users = similar_to.filter(F.col("src") == user_id).select("dst")
     already_rated = ratings.filter(F.col("user_id") == user_id).select("isbn")
     return (
@@ -53,10 +109,25 @@ def recommend_books_knn(
     )
 
 
-def similar_users_knn(similar_to: DataFrame, users: DataFrame, user_id: int, k: int = 3) -> DataFrame:
+def similar_users_knn(
+    similar_to: DataFrame | pd.DataFrame,
+    users: DataFrame | pd.DataFrame,
+    user_id: int,
+    k: int = 3,
+) -> DataFrame | pd.DataFrame:
     """Reference ``recommender/recommender_knn.py:31-45``: distinct similar
     users, LIMIT k. T5 unordered-limit canonicalized: order by similarity
     desc (tie-break user id) before limiting."""
+    if isinstance(similar_to, pd.DataFrame):
+        nbrs = _rows_of(similar_to, "src", [user_id])
+        nbrs = nbrs[nbrs["dst"] != user_id].sort_values(
+            ["similarity", "dst"], ascending=[False, True]
+        )
+        hit = nbrs.head(k)[["dst"]].merge(users, left_on="dst", right_on="user_id")
+        return (
+            hit.rename(columns={"user_id": "userId"})[["userId", "location", "age"]]
+            .sort_values("userId", ignore_index=True)
+        )
     return (
         similar_to.filter(F.col("src") == user_id)
         .filter(F.col("dst") != user_id)
@@ -69,7 +140,7 @@ def similar_users_knn(similar_to: DataFrame, users: DataFrame, user_id: int, k: 
 
 
 def graph_data_knn(
-    similar_to: DataFrame,
+    similar_to: DataFrame | pd.DataFrame,
     ratings: DataFrame,
     books: DataFrame,
     user_id: int,
@@ -80,7 +151,45 @@ def graph_data_knn(
     target's books+ratings, similar users+similarity, their books+ratings)
     with NULLs where a pattern is absent. Node-object columns are flattened
     to scalar columns for a relational result.
+
+    A driver-held ``similar_to`` gives the target's neighbours as a literal
+    relation of (target, neighbour) pairs, one NULL neighbour when it has
+    none. Two left joins with the broadcast rated books of the target and
+    its neighbours extend those pairs: the same rows in four Spark jobs.
     """
+    if isinstance(similar_to, pd.DataFrame):
+        nbrs = _rows_of(similar_to, "src", [user_id])
+        pairs = pd.DataFrame({"target_id": user_id, "sim_id": nbrs["dst"],
+                              "similarity": nbrs["similarity"]})
+        if pairs.empty:
+            pairs = pd.DataFrame({"target_id": [user_id], "sim_id": [None], "similarity": [None]})
+        pairs = literal_relation(ratings.sparkSession, pairs,
+                                 "target_id bigint, sim_id bigint, similarity double")
+        rated = (
+            ratings.filter(F.col("user_id").isin([user_id, *nbrs["dst"].tolist()]))
+            .join(gated_broadcast(books, "dimension leaf: books metadata table, small vs the ratings fact side by data model"), "isbn")
+        )
+
+        def side(prefix: str) -> DataFrame:
+            return gated_broadcast(
+                rated.select(
+                    F.col("user_id").alias(f"{prefix}_user"),
+                    F.col("isbn").alias(f"{prefix}_isbn"),
+                    F.col("title").alias(f"{prefix}_title"),
+                    F.col("rating").alias(f"{prefix}_rating"),
+                ),
+                "point-lookup: the rating rows of one user and its <= top_k neighbours, ids read off the driver",
+            )
+
+        t_books, s_books = side("t"), side("s")
+        return (
+            pairs.join(t_books, pairs.target_id == t_books.t_user, "left")
+            .join(s_books, pairs.sim_id == s_books.s_user, "left")
+            .select(
+                "target_id", "t_isbn", "t_title", "t_rating",
+                "sim_id", "similarity", "s_isbn", "s_title", "s_rating",
+            )
+        )
     target = ratings.sparkSession.range(user_id, user_id + 1).select(
         F.col("id").alias("target_id")
     )
@@ -117,16 +226,31 @@ def graph_data_knn(
 
 
 def recommend_books_community(
-    users_with_community: DataFrame,
-    ratings: DataFrame,
-    books: DataFrame,
+    users_with_community: DataFrame | pd.DataFrame,
+    ratings: DataFrame | pd.DataFrame,
+    books: DataFrame | pd.DataFrame,
     user_id: int,
     k: int = 3,
     min_rating: int = 6,
-) -> DataFrame:
+) -> DataFrame | pd.DataFrame:
     """Reference ``recommender/recommender_community.py:11-32``: books rated
     >= 6 by same-community users, excluding already-read, top-k by vote count
     (tie-break title, author for determinism)."""
+    if isinstance(users_with_community, pd.DataFrame):
+        peers = _community_members(users_with_community, user_id)["user_id"]
+        peers = np.unique(peers[peers != user_id])
+        rated = _rows_of(ratings, "user_id", [user_id])["isbn"]
+        cand = _rows_of(ratings, "user_id", peers)
+        cand = cand[(cand["rating"] >= min_rating) & ~cand["isbn"].isin(rated)]
+        agg = (
+            cand.merge(books, on="isbn")
+            .groupby(["title", "author"], dropna=False)
+            .size()
+            .reset_index(name="recommendCount")
+            .sort_values(["recommendCount", "title", "author"],
+                         ascending=[False, True, True], na_position="first")
+        )
+        return agg.head(k).reset_index(drop=True)
     target_comm = users_with_community.filter(F.col("user_id") == user_id).select("community")
     peers = (
         users_with_community.join(gated_broadcast(target_comm, "point-lookup: one user's community row(s), <= a handful by key"), "community", "left_semi")
@@ -147,13 +271,21 @@ def recommend_books_community(
 
 
 def similar_users_community(
-    users_with_community: DataFrame, user_id: int, k: int = 3
-) -> DataFrame:
+    users_with_community: DataFrame | pd.DataFrame, user_id: int, k: int = 3
+) -> DataFrame | pd.DataFrame:
     """Reference ``recommender/recommender_community.py:35-55``.
 
     T4 quirk (DISTINCT ... LIMIT 3 *then* ORDER BY — arbitrary members) is
     canonicalized: order by user_id before the limit. Documented deviation.
     """
+    if isinstance(users_with_community, pd.DataFrame):
+        peers = _community_members(users_with_community, user_id)
+        peers = peers[peers["user_id"] != user_id]
+        return (
+            peers.rename(columns={"user_id": "userId"})[["userId", "location", "age"]]
+            .head(k)
+            .reset_index(drop=True)
+        )
     target_comm = users_with_community.filter(F.col("user_id") == user_id).select("community")
     return (
         users_with_community.join(gated_broadcast(target_comm, "point-lookup: one user's community row(s), <= a handful by key"), "community", "left_semi")
@@ -165,15 +297,25 @@ def similar_users_community(
 
 
 def graph_data_community(
-    users_with_community: DataFrame,
+    users_with_community: DataFrame | pd.DataFrame,
     ratings: DataFrame,
     books: DataFrame,
     user_id: int,
 ) -> DataFrame:
     """Reference ``recommender/recommender_community.py:58-72``: all rating
-    edges within the target's community, flattened (user, book, rating)."""
-    target_comm = users_with_community.filter(F.col("user_id") == user_id).select("community")
-    members = users_with_community.join(gated_broadcast(target_comm, "point-lookup: one user's community row(s), <= a handful by key"), "community", "left_semi")
+    edges within the target's community, flattened (user, book, rating).
+
+    A driver-held ``users_with_community`` gives the community's members
+    as a literal relation, which the ratings scan joins as its broadcast
+    side: three Spark jobs."""
+    if isinstance(users_with_community, pd.DataFrame):
+        rows = _community_members(users_with_community, user_id)[["user_id", "location", "age"]]
+        members = literal_relation(
+            ratings.sparkSession, rows, "user_id bigint, location string, age int"
+        )
+    else:
+        target_comm = users_with_community.filter(F.col("user_id") == user_id).select("community")
+        members = users_with_community.join(gated_broadcast(target_comm, "point-lookup: one user's community row(s), <= a handful by key"), "community", "left_semi")
     return (
         members.join(ratings, "user_id")
         .join(gated_broadcast(books, "dimension leaf: books metadata table, small vs the ratings fact side by data model"), "isbn")

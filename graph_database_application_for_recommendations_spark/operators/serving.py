@@ -1,12 +1,80 @@
 """UI-facing serving queries (SURVEY.md §2.8: q_rated_books,
-q_community_members — reference ``streamlit_app.py``)."""
+q_community_members — reference ``streamlit_app.py``), and the
+driver-held serving tables the recommenders answer from.
+
+A serving table is a Spark table collected once to the driver as a
+key-sorted pandas frame (:func:`driver_table`), while its rows fit the
+node-vector rule (``plans.node_vector_fits``). The serving queries take
+such a frame in place of the DataFrame and answer on the driver, with no
+Spark job; over the gate they keep their per-request Spark plans.
+"""
 
 from __future__ import annotations
 
+from functools import cached_property
+
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
+from .. import plans
 from ..functions.hints import gated_broadcast
+
+
+def driver_table(df: DataFrame, *key: str) -> pd.DataFrame | None:
+    """``df`` on the driver, sorted by ``key``, or None when its rows do not
+    fit ``plans.node_vector_fits`` at :func:`plans.row_width` bytes a row.
+
+    One Arrow collect, one Spark job. It reads at most the least row count
+    the gate refuses, so an over-gate table costs the driver no more than
+    the budget. Arrow hands a nullable integer column holding NULLs over as
+    float64; such columns become pandas nullable integers, so a row reads
+    back as ``int`` or ``None``, as ``Row.asDict`` does."""
+    width = plans.row_width(df)
+    refused = -(-plans.NODE_VECTOR_BUDGET_BYTES // width)
+    pdf = df.limit(refused).toPandas()
+    if not plans.node_vector_fits(len(pdf), width):
+        return None
+    for f in df.schema.fields:
+        if isinstance(f.dataType, IntegralType) and pdf[f.name].dtype.kind == "f":
+            pdf[f.name] = pdf[f.name].astype("Int64")
+    return pdf.sort_values(list(key), kind="stable", ignore_index=True)
+
+
+def literal_relation(spark, pdf: pd.DataFrame, schema: str) -> DataFrame:
+    """``pdf`` as a LocalRelation, whose true size the planner sees, so a
+    join builds (broadcasts) it rather than the table it meets. Arrow
+    builds one from a non-empty frame only; an empty frame becomes one
+    NULL row under ``LIMIT 0``, which Catalyst folds to an empty
+    LocalRelation."""
+    if not len(pdf):
+        pdf = pd.DataFrame([[None] * len(pdf.columns)], columns=pdf.columns)
+        return spark.createDataFrame(pdf, schema).limit(0)
+    return spark.createDataFrame(pdf, schema)
+
+
+class ServingTables:
+    """The reference tables both recommenders read, held on the driver:
+    ratings ``(user_id, isbn, rating)`` sorted by user and isbn, books
+    ``(isbn, title, author)`` by isbn and users by user id. One instance
+    serves both recommenders of a pipeline, so each table is collected
+    once."""
+
+    def __init__(self, ref):
+        self.ref = ref
+
+    @cached_property
+    def held(self) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataFrame] | None:
+        """(ratings, books, users), or None as soon as one is over the gate
+        (ratings first: the fact table is the one that outgrows it)."""
+        ratings = driver_table(self.ref.ratings.select("user_id", "isbn", "rating"),
+                               "user_id", "isbn")
+        if ratings is None:
+            return None
+        books = driver_table(self.ref.books.select("isbn", "title", "author"), "isbn")
+        users = None if books is None else driver_table(self.ref.users, "user_id")
+        return None if users is None else (ratings, books, users)
 
 
 def rated_books(ratings: DataFrame, books: DataFrame, user_id: int) -> DataFrame:
@@ -30,7 +98,9 @@ def rated_books(ratings: DataFrame, books: DataFrame, user_id: int) -> DataFrame
     )
 
 
-def community_members(users_with_community: DataFrame, min_size: int = 2) -> DataFrame:
+def community_members(
+    users_with_community: DataFrame | pd.DataFrame, min_size: int = 2
+) -> DataFrame | pd.DataFrame:
     """A4+A5+U1+T3 — members of communities with more than one user.
 
     Reference ``streamlit_app.py:15-30``::
@@ -44,7 +114,16 @@ def community_members(users_with_community: DataFrame, min_size: int = 2) -> Dat
     COLLECT+UNWIND round-trips through an array; relationally that's a
     windowed count — same rows, no array materialization, and it keeps the
     result flat (documented deviation: we also return the community size).
+
+    A driver-held ``users_with_community`` frame gives the same rows as a
+    pandas frame.
     """
+    if isinstance(users_with_community, pd.DataFrame):
+        uc = users_with_community[users_with_community["community"].notna()]
+        size = uc.groupby("community")["user_id"].transform("size")
+        out = pd.DataFrame({"communityId": uc["community"], "userId": uc["user_id"],
+                            "size": size})
+        return out[size >= min_size].sort_values(["communityId", "userId"], ignore_index=True)
     w = Window.partitionBy("community")
     return (
         users_with_community.filter(F.col("community").isNotNull())

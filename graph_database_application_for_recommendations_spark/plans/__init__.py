@@ -178,20 +178,24 @@ _FIXED_WIDTH = {"boolean": 1, "tinyint": 1, "smallint": 2, "int": 4, "float": 4,
                 "timestamp_ntz": 8}
 
 
+def row_width(df: DataFrame, var_field_bytes: int = 256) -> int:
+    """Schema-derived bytes per row: fixed-width fields at their width,
+    variable-width fields — string/array/binary — at ``var_field_bytes``."""
+    return max(1, sum(
+        _FIXED_WIDTH.get(f.dataType.simpleString(), var_field_bytes)
+        for f in df.schema.fields
+    ))
+
+
 def estimated_row_count(df: DataFrame, var_field_bytes: int = 256) -> int | None:
-    """Order-of-magnitude row estimate from the size estimate and a
-    schema-derived row width (variable-width fields — string/array/binary —
-    assumed ``var_field_bytes``). Meant for log-scaled sizing decisions
-    (e.g. LSH plane counts), where a small-constant-factor error is
-    harmless; not for cardinality-sensitive logic."""
+    """Order-of-magnitude row estimate from the size estimate and
+    :func:`row_width`. Meant for log-scaled sizing decisions (e.g. LSH
+    plane counts), where a small-constant-factor error is harmless; not
+    for cardinality-sensitive logic."""
     size = estimated_size_bytes(df)
     if size is None:
         return None
-    width = sum(
-        _FIXED_WIDTH.get(f.dataType.simpleString(), var_field_bytes)
-        for f in df.schema.fields
-    )
-    return max(1, size // max(width, 1))
+    return max(1, size // row_width(df, var_field_bytes))
 
 
 def fanout_partitions(df: DataFrame, target_bytes: int = 1 << 20) -> int:

@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 
 from ..operators.corating import corating_edges
 from ..operators.knn import knn_exact_local, knn_exact_local_arrays, knn_ivf
-from ..sources.views import load_ref_tables
+from ..operators.serving import ServingTables
+from ..sources.views import RefTables, load_ref_tables
 from . import fastrp as _fastrp
 from .graphs import bipartite_rating_graph
 
@@ -112,10 +113,12 @@ class PipelineResult:
 
     def __init__(
         self,
+        ref: RefTables,
         embeddings_fn: Callable[[], DataFrame],
         similar_to_fn: Callable[[], DataFrame],
         communities_fn: Callable[[], tuple[DataFrame, float]],
     ):
+        self.ref = ref
         self._embeddings_fn = embeddings_fn
         self._similar_to_fn = similar_to_fn
         self._communities_fn = communities_fn
@@ -139,6 +142,12 @@ class PipelineResult:
     @property
     def modularity(self) -> float:
         return self._community_stage[1]
+
+    @cached_property
+    def serving(self) -> ServingTables:
+        """The driver-held reference tables the serve stage reads: both
+        recommenders of this pipeline share one collect of each."""
+        return ServingTables(self.ref)
 
 
 def run_pipeline(
@@ -225,7 +234,7 @@ def run_pipeline(
         nodes_comm, q = louvain(co)
         return nodes_comm.select(F.col("node_id").alias("user_id"), "community"), q
 
-    result = PipelineResult(_embeddings, _similar_to, _communities)
+    result = PipelineResult(ref, _embeddings, _similar_to, _communities)
 
     if out_dir:
         result.embeddings.write.mode("overwrite").parquet(f"{out_dir}/embeddings_users.parquet")

@@ -123,6 +123,7 @@ _SLOW_TESTS = frozenset([
     "test_properties.py::test_source_signatures_two_level_topk_matches_naive",
     "test_properties.py::test_stratified_sample_two_level_equals_naive_window",
     "test_properties.py::test_upsert_idempotent_and_total",
+    "test_recommender.py::test_lookups_match_spark_plans_for_every_user",
     "test_streaming.py::test_streaming_pack_state_survives_multiple_microbatches",
 ])
 
