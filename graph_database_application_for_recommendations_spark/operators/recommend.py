@@ -10,14 +10,15 @@ every ``ORDER BY ... LIMIT`` gets an explicit unique tie-break key, and the
 reference's T4 "LIMIT before ORDER BY" picks-3-arbitrary-members quirk is
 canonicalized to order-then-limit.
 
-Each recommender function also takes driver-held tables: key-sorted pandas
-frames from ``serving.driver_table``, the way ``fastrp`` holds a local and
-a distributed path. ``recommend_books_*`` and ``similar_users_*`` then
-answer on the driver as a pandas frame, with no Spark job and the rows,
-order and values of the Spark plan. ``graph_data_*`` stays a Spark query,
-since its rows grow with the neighbourhood, but reads the neighbours or
-the community members off the driver frame as a literal relation instead
-of joining for them.
+Each recommender function also takes driver-held node tables (the
+neighbours, communities, books and users): key-sorted pandas frames from
+``serving.driver_table``, the way ``fastrp`` holds a local and a
+distributed path. The ratings stay a Spark table, since they are
+edge-sized: a call reads the rating rows of the users it needs (the target
+and its neighbours or community) with one filtered scan, one Spark job,
+and answers on the driver as a pandas frame with the rows, order and
+values of the Spark plan. ``similar_users_*`` reads no ratings and runs no
+Spark job.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import gated_broadcast
-from .serving import literal_relation
+from .serving import nullable_ints
 
 
 def _rows_of(table: pd.DataFrame, col: str, keys) -> pd.DataFrame:
@@ -41,6 +42,14 @@ def _rows_of(table: pd.DataFrame, col: str, keys) -> pd.DataFrame:
     lo, hi = s.searchsorted(keys, "left"), s.searchsorted(keys, "right")
     idx = [np.arange(a, b) for a, b in zip(lo, hi)]
     return table.iloc[np.concatenate(idx) if idx else []]
+
+
+def _ratings_of(ratings: DataFrame, users) -> pd.DataFrame:
+    """The ``(user_id, isbn, rating)`` rows of ``users``: one Spark job, a
+    scan of the ratings filtered on the user ids as literals."""
+    rows = ratings.filter(F.col("user_id").isin([int(u) for u in users]))
+    rows = rows.select("user_id", "isbn", "rating")
+    return nullable_ints(rows.toPandas(), rows)
 
 
 def _round6(x: float) -> float:
@@ -63,7 +72,7 @@ def _community_members(users_with_community: pd.DataFrame, user_id: int) -> pd.D
 
 def recommend_books_knn(
     similar_to: DataFrame | pd.DataFrame,
-    ratings: DataFrame | pd.DataFrame,
+    ratings: DataFrame,
     books: DataFrame | pd.DataFrame,
     user_id: int,
     k: int = 3,
@@ -79,9 +88,10 @@ def recommend_books_knn(
         RETURN book.title, book.author, avgRating, votes
     """
     if isinstance(similar_to, pd.DataFrame):
-        dst = _rows_of(similar_to, "src", [user_id])["dst"].to_numpy()
-        cand = _rows_of(ratings, "user_id", dst)
-        rated = _rows_of(ratings, "user_id", [user_id])["isbn"]
+        dst = _rows_of(similar_to, "src", [user_id])["dst"]
+        rows = _ratings_of(ratings, [user_id, *dst])
+        rated = rows.loc[rows["user_id"] == user_id, "isbn"]
+        cand = rows.merge(dst.rename("user_id"), on="user_id")
         cand = cand[~cand["isbn"].isin(rated)].merge(books, on="isbn")
         agg = (
             cand.groupby(["isbn", "title", "author"], dropna=False)["rating"]
@@ -142,9 +152,9 @@ def similar_users_knn(
 def graph_data_knn(
     similar_to: DataFrame | pd.DataFrame,
     ratings: DataFrame,
-    books: DataFrame,
+    books: DataFrame | pd.DataFrame,
     user_id: int,
-) -> DataFrame:
+) -> DataFrame | pd.DataFrame:
     """Triple OPTIONAL MATCH ≡ chained left joins (J6), flattened.
 
     Reference ``recommender/recommender_knn.py:48-79`` returns (target,
@@ -152,43 +162,25 @@ def graph_data_knn(
     with NULLs where a pattern is absent. Node-object columns are flattened
     to scalar columns for a relational result.
 
-    A driver-held ``similar_to`` gives the target's neighbours as a literal
-    relation of (target, neighbour) pairs, one NULL neighbour when it has
-    none. Two left joins with the broadcast rated books of the target and
-    its neighbours extend those pairs: the same rows in four Spark jobs.
+    A driver-held ``similar_to`` and ``books`` give the same rows from one
+    read of the target's and its neighbours' ratings.
     """
     if isinstance(similar_to, pd.DataFrame):
         nbrs = _rows_of(similar_to, "src", [user_id])
-        pairs = pd.DataFrame({"target_id": user_id, "sim_id": nbrs["dst"],
-                              "similarity": nbrs["similarity"]})
-        if pairs.empty:
-            pairs = pd.DataFrame({"target_id": [user_id], "sim_id": [None], "similarity": [None]})
-        pairs = literal_relation(ratings.sparkSession, pairs,
-                                 "target_id bigint, sim_id bigint, similarity double")
-        rated = (
-            ratings.filter(F.col("user_id").isin([user_id, *nbrs["dst"].tolist()]))
-            .join(gated_broadcast(books, "dimension leaf: books metadata table, small vs the ratings fact side by data model"), "isbn")
-        )
-
-        def side(prefix: str) -> DataFrame:
-            return gated_broadcast(
-                rated.select(
-                    F.col("user_id").alias(f"{prefix}_user"),
-                    F.col("isbn").alias(f"{prefix}_isbn"),
-                    F.col("title").alias(f"{prefix}_title"),
-                    F.col("rating").alias(f"{prefix}_rating"),
-                ),
-                "point-lookup: the rating rows of one user and its <= top_k neighbours, ids read off the driver",
-            )
-
-        t_books, s_books = side("t"), side("s")
+        rated = _ratings_of(ratings, [user_id, *nbrs["dst"]]).merge(books, on="isbn")
+        rated = rated[["user_id", "isbn", "title", "rating"]]
+        t_books = rated[rated["user_id"] == user_id].iloc[:, 1:]
+        t_books.columns = ["t_isbn", "t_title", "t_rating"]
+        sims = nbrs[["dst", "similarity"]].set_axis(["sim_id", "similarity"], axis=1)
+        # a left join keeps the one target row: NULLs where nothing matched
+        t_books, sims = (t if len(t) else t.reindex([0]) for t in (t_books, sims))
+        s_books = rated.set_axis(["sim_id", "s_isbn", "s_title", "s_rating"], axis=1)
         return (
-            pairs.join(t_books, pairs.target_id == t_books.t_user, "left")
-            .join(s_books, pairs.sim_id == s_books.s_user, "left")
-            .select(
-                "target_id", "t_isbn", "t_title", "t_rating",
-                "sim_id", "similarity", "s_isbn", "s_title", "s_rating",
-            )
+            t_books.assign(target_id=user_id)
+            .merge(sims, how="cross")
+            .merge(s_books, on="sim_id", how="left")
+            [["target_id", "t_isbn", "t_title", "t_rating",
+              "sim_id", "similarity", "s_isbn", "s_title", "s_rating"]]
         )
     target = ratings.sparkSession.range(user_id, user_id + 1).select(
         F.col("id").alias("target_id")
@@ -227,7 +219,7 @@ def graph_data_knn(
 
 def recommend_books_community(
     users_with_community: DataFrame | pd.DataFrame,
-    ratings: DataFrame | pd.DataFrame,
+    ratings: DataFrame,
     books: DataFrame | pd.DataFrame,
     user_id: int,
     k: int = 3,
@@ -238,9 +230,10 @@ def recommend_books_community(
     (tie-break title, author for determinism)."""
     if isinstance(users_with_community, pd.DataFrame):
         peers = _community_members(users_with_community, user_id)["user_id"]
-        peers = np.unique(peers[peers != user_id])
-        rated = _rows_of(ratings, "user_id", [user_id])["isbn"]
-        cand = _rows_of(ratings, "user_id", peers)
+        peers = peers[peers != user_id]
+        rows = _ratings_of(ratings, [user_id, *peers])
+        rated = rows.loc[rows["user_id"] == user_id, "isbn"]
+        cand = rows[rows["user_id"].isin(peers)]
         cand = cand[(cand["rating"] >= min_rating) & ~cand["isbn"].isin(rated)]
         agg = (
             cand.merge(books, on="isbn")
@@ -299,23 +292,25 @@ def similar_users_community(
 def graph_data_community(
     users_with_community: DataFrame | pd.DataFrame,
     ratings: DataFrame,
-    books: DataFrame,
+    books: DataFrame | pd.DataFrame,
     user_id: int,
-) -> DataFrame:
+) -> DataFrame | pd.DataFrame:
     """Reference ``recommender/recommender_community.py:58-72``: all rating
     edges within the target's community, flattened (user, book, rating).
 
-    A driver-held ``users_with_community`` gives the community's members
-    as a literal relation, which the ratings scan joins as its broadcast
-    side: three Spark jobs."""
+    A driver-held ``users_with_community`` and ``books`` give the same rows
+    from one read of the members' ratings."""
     if isinstance(users_with_community, pd.DataFrame):
-        rows = _community_members(users_with_community, user_id)[["user_id", "location", "age"]]
-        members = literal_relation(
-            ratings.sparkSession, rows, "user_id bigint, location string, age int"
+        members = _community_members(users_with_community, user_id)
+        members = members[["user_id", "location", "age"]]
+        return (
+            members.merge(_ratings_of(ratings, members["user_id"]), on="user_id")
+            .merge(books, on="isbn")
+            .rename(columns={"user_id": "userId"})
+            [["userId", "location", "age", "isbn", "title", "author", "rating"]]
         )
-    else:
-        target_comm = users_with_community.filter(F.col("user_id") == user_id).select("community")
-        members = users_with_community.join(gated_broadcast(target_comm, "point-lookup: one user's community row(s), <= a handful by key"), "community", "left_semi")
+    target_comm = users_with_community.filter(F.col("user_id") == user_id).select("community")
+    members = users_with_community.join(gated_broadcast(target_comm, "point-lookup: one user's community row(s), <= a handful by key"), "community", "left_semi")
     return (
         members.join(ratings, "user_id")
         .join(gated_broadcast(books, "dimension leaf: books metadata table, small vs the ratings fact side by data model"), "isbn")

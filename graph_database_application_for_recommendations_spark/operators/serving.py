@@ -2,16 +2,14 @@
 q_community_members — reference ``streamlit_app.py``), and the
 driver-held serving tables the recommenders answer from.
 
-A serving table is a Spark table collected once to the driver as a
-key-sorted pandas frame (:func:`driver_table`), while its rows fit the
-node-vector rule (``plans.node_vector_fits``). The serving queries take
-such a frame in place of the DataFrame and answer on the driver, with no
-Spark job; over the gate they keep their per-request Spark plans.
+A serving table is a node-sized Spark table collected once to the driver
+as a key-sorted pandas frame (:func:`driver_table`), while its row count
+fits the node-vector rule (``plans.node_vector_fits``). The serving
+queries take such a frame in place of the DataFrame and answer on the
+driver; over the gate they keep their per-request Spark plans.
 """
 
 from __future__ import annotations
-
-from functools import cached_property
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -23,58 +21,30 @@ from ..functions.hints import gated_broadcast
 
 
 def driver_table(df: DataFrame, *key: str) -> pd.DataFrame | None:
-    """``df`` on the driver, sorted by ``key``, or None when its rows do not
-    fit ``plans.node_vector_fits`` at :func:`plans.row_width` bytes a row.
+    """``df`` on the driver, sorted by ``key``, or None when its row count
+    does not fit ``plans.node_vector_fits`` at :func:`plans.row_width`
+    bytes a row.
 
-    One Arrow collect, one Spark job. It reads at most the least row count
-    the gate refuses, so an over-gate table costs the driver no more than
-    the budget. Arrow hands a nullable integer column holding NULLs over as
-    float64; such columns become pandas nullable integers, so a row reads
-    back as ``int`` or ``None``, as ``Row.asDict`` does."""
-    width = plans.row_width(df)
-    refused = -(-plans.NODE_VECTOR_BUDGET_BYTES // width)
-    pdf = df.limit(refused).toPandas()
-    if not plans.node_vector_fits(len(pdf), width):
+    The gate reads the row count first, so a table over it is never
+    collected; one that fits is one Arrow collect. The count is of the
+    executed plan's rows, one single-stage job (``DataFrame.count()``
+    plans an aggregate: two jobs under adaptive execution). Integer
+    columns come back as pandas nullable integers, so a row reads back as
+    ``int`` or ``None``, as ``Row.asDict`` does (Arrow hands a nullable
+    integer column holding NULLs over as float64)."""
+    n_rows = df._jdf.queryExecution().toRdd().count()
+    if not plans.node_vector_fits(n_rows, plans.row_width(df)):
         return None
-    for f in df.schema.fields:
-        if isinstance(f.dataType, IntegralType) and pdf[f.name].dtype.kind == "f":
-            pdf[f.name] = pdf[f.name].astype("Int64")
+    pdf = nullable_ints(df.toPandas(), df)
     return pdf.sort_values(list(key), kind="stable", ignore_index=True)
 
 
-def literal_relation(spark, pdf: pd.DataFrame, schema: str) -> DataFrame:
-    """``pdf`` as a LocalRelation, whose true size the planner sees, so a
-    join builds (broadcasts) it rather than the table it meets. Arrow
-    builds one from a non-empty frame only; an empty frame becomes one
-    NULL row under ``LIMIT 0``, which Catalyst folds to an empty
-    LocalRelation."""
-    if not len(pdf):
-        pdf = pd.DataFrame([[None] * len(pdf.columns)], columns=pdf.columns)
-        return spark.createDataFrame(pdf, schema).limit(0)
-    return spark.createDataFrame(pdf, schema)
-
-
-class ServingTables:
-    """The reference tables both recommenders read, held on the driver:
-    ratings ``(user_id, isbn, rating)`` sorted by user and isbn, books
-    ``(isbn, title, author)`` by isbn and users by user id. One instance
-    serves both recommenders of a pipeline, so each table is collected
-    once."""
-
-    def __init__(self, ref):
-        self.ref = ref
-
-    @cached_property
-    def held(self) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataFrame] | None:
-        """(ratings, books, users), or None as soon as one is over the gate
-        (ratings first: the fact table is the one that outgrows it)."""
-        ratings = driver_table(self.ref.ratings.select("user_id", "isbn", "rating"),
-                               "user_id", "isbn")
-        if ratings is None:
-            return None
-        books = driver_table(self.ref.books.select("isbn", "title", "author"), "isbn")
-        users = None if books is None else driver_table(self.ref.users, "user_id")
-        return None if users is None else (ratings, books, users)
+def nullable_ints(pdf: pd.DataFrame, df: DataFrame) -> pd.DataFrame:
+    """``pdf``, collected from ``df``, with ``df``'s integer columns as
+    pandas nullable integers: joins that miss then leave ``<NA>`` in them,
+    not a float NaN."""
+    ints = [f.name for f in df.schema.fields if isinstance(f.dataType, IntegralType)]
+    return pdf.astype({c: "Int64" for c in ints})
 
 
 def rated_books(ratings: DataFrame, books: DataFrame, user_id: int) -> DataFrame:

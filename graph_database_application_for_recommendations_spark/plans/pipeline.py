@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from ..operators.corating import corating_edges
 from ..operators.knn import knn_exact_local, knn_exact_local_arrays, knn_ivf
-from ..operators.serving import ServingTables
 from ..sources.views import RefTables, load_ref_tables
 from . import fastrp as _fastrp
 from .graphs import bipartite_rating_graph
@@ -142,12 +141,6 @@ class PipelineResult:
     @property
     def modularity(self) -> float:
         return self._community_stage[1]
-
-    @cached_property
-    def serving(self) -> ServingTables:
-        """The driver-held reference tables the serve stage reads: both
-        recommenders of this pipeline share one collect of each."""
-        return ServingTables(self.ref)
 
 
 def run_pipeline(

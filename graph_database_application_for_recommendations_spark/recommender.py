@@ -8,15 +8,17 @@ surface exactly, on top of the materialized pipeline tables (write-back
 pattern, SURVEY.md §3 EP3) — a user of the reference can switch by
 swapping the import.
 
-Serving by key: at construction a recommender collects its serving tables
-to the driver (``serving.driver_table``): ``similar_to`` or each user's
-community, plus the ratings, books and users of a ``serving.ServingTables``
-that both recommenders of a pipeline share — one Spark job a table. While
-every table fits the node-vector rule (``plans.node_vector_fits``),
-``recommend_books``, ``get_similar_users`` and the user picker answer on
-the driver with no Spark job, and ``get_graph_data`` runs one Spark query
-over the neighbours or community members read off the driver. Over the
-gate every call runs its per-request Spark plan.
+Serving by key: at construction a recommender collects its node tables
+to the driver (``serving.driver_table``, a row count and one Arrow collect
+a table): ``similar_to`` or each user's community, plus the books and
+users its ``RefTables`` holds once for every recommender over it
+(``RefTables.driver_held``). While every table fits the node-vector rule
+(``plans.node_vector_fits``), ``get_similar_users`` and the user picker
+answer on the driver with no Spark job, and ``recommend_books`` and
+``get_graph_data`` with one: a filtered scan of the ratings, which are
+edge-sized and stay in Spark, for the rows of the target and its
+neighbours or community. Over the gate every call runs its per-request
+Spark plan.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators import recommend, serving
-from .operators.serving import ServingTables, driver_table
+from .operators.serving import driver_table
 from .plans.pipeline import PipelineResult, run_pipeline
 from .sources.views import RefTables
 
@@ -51,59 +53,56 @@ def _records(df: DataFrame | pd.DataFrame) -> list[dict]:
 class KnnRecommender:
     """reference recommender/recommender_knn.py over SIMILAR_TO."""
 
-    def __init__(self, ref: RefTables, similar_to: DataFrame, k: int = 3,
-                 tables: ServingTables | None = None):
+    def __init__(self, ref: RefTables, similar_to: DataFrame, k: int = 3):
         self.ref = ref
         self.similar_to = similar_to
         self.k = k
-        held = (tables or ServingTables(ref)).held
+        held = ref.driver_held
         sim = None if held is None else driver_table(similar_to, "src", "dst")
         if sim is None:  # over the gate: the per-request Spark plans
-            sim, held = similar_to, (ref.ratings, ref.books, ref.users)
+            sim, held = similar_to, (ref.books, ref.users)
         self._sim = sim
-        self._ratings, self._books, self._users = held
+        self._books, self._users = held
 
     def recommend_books(self, user_id: int) -> list[dict]:
         return _records(recommend.recommend_books_knn(
-            self._sim, self._ratings, self._books, user_id, self.k))
+            self._sim, self.ref.ratings, self._books, user_id, self.k))
 
     def get_similar_users(self, user_id: int) -> list[dict]:
         return _records(recommend.similar_users_knn(self._sim, self._users, user_id, self.k))
 
     def get_graph_data(self, user_id: int) -> list[dict]:
         return _records(
-            recommend.graph_data_knn(self._sim, self.ref.ratings, self.ref.books, user_id)
+            recommend.graph_data_knn(self._sim, self.ref.ratings, self._books, user_id)
         )
 
 
 class CommunityRecommender:
     """reference recommender/recommender_community.py over communities."""
 
-    def __init__(self, ref: RefTables, communities: DataFrame, k: int = 3,
-                 tables: ServingTables | None = None):
+    def __init__(self, ref: RefTables, communities: DataFrame, k: int = 3):
         self.ref = ref
         self.users_comm = ref.users.join(communities, "user_id", "left")
         self.k = k
-        held = (tables or ServingTables(ref)).held
+        held = ref.driver_held
         comm = None if held is None else driver_table(
             communities.select("user_id", "community"), "user_id")
         if comm is None:  # over the gate: the per-request Spark plans
-            self._users_comm, self._ratings, self._books = self.users_comm, ref.ratings, ref.books
+            self._users_comm, self._books = self.users_comm, ref.books
         else:
-            self._ratings, self._books, users = held
+            self._books, users = held
             self._users_comm = users.merge(comm, on="user_id", how="left")
-            self._users_comm["community"] = self._users_comm["community"].astype("Int64")
 
     def recommend_books(self, user_id: int) -> list[dict]:
         return _records(recommend.recommend_books_community(
-            self._users_comm, self._ratings, self._books, user_id, self.k))
+            self._users_comm, self.ref.ratings, self._books, user_id, self.k))
 
     def get_similar_users(self, user_id: int) -> list[dict]:
         return _records(recommend.similar_users_community(self._users_comm, user_id, self.k))
 
     def get_graph_data(self, user_id: int) -> list[dict]:
         return _records(recommend.graph_data_community(
-            self._users_comm, self.ref.ratings, self.ref.books, user_id))
+            self._users_comm, self.ref.ratings, self._books, user_id))
 
     def users_in_large_communities(self) -> list[dict]:
         """reference streamlit_app.py:15-30 (the UI's user picker)."""
@@ -121,12 +120,12 @@ def get_recommender(
     (reference ``streamlit_app.py:73-76``), running the algorithm pipeline
     (FastRP/KNN/Louvain write-backs) over ``sf_dir`` if no precomputed
     result is supplied. The recommender serves the reference tables the
-    pipeline read, and recommenders of one pipeline share its driver-held
-    serving tables (``PipelineResult.serving``)."""
+    pipeline read, so recommenders of one pipeline share their driver-held
+    books and users (``RefTables.driver_held``)."""
     if pipeline is None:
         pipeline = run_pipeline(spark, sf_dir, knn_cutoff=0.6)
     if algorithm == "knn":
-        return KnnRecommender(pipeline.ref, pipeline.similar_to, k, pipeline.serving)
+        return KnnRecommender(pipeline.ref, pipeline.similar_to, k)
     if algorithm == "community":
-        return CommunityRecommender(pipeline.ref, pipeline.communities, k, pipeline.serving)
+        return CommunityRecommender(pipeline.ref, pipeline.communities, k)
     raise ValueError(f"unknown algorithm {algorithm!r}: expected 'knn' or 'community'")

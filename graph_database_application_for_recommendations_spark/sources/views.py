@@ -30,9 +30,11 @@ from __future__ import annotations
 
 from functools import cached_property
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.serving import driver_table
 from .tables import load_table
 
 # --- SQL text (valid in both Spark SQL and DuckDB; used as oracle CTEs) ---
@@ -123,6 +125,16 @@ class RefTables:
         # storage at any bench scale; at 100 TB the same role is played by
         # a materialized parquet table (operators/etl.py writers).
         return build_ratings(self.raw_ratings).cache()
+
+    @cached_property
+    def driver_held(self) -> tuple[pd.DataFrame, pd.DataFrame] | None:
+        """Books ``(isbn, title, author)`` and users on the driver, each
+        sorted by its key (``operators.serving.driver_table``), or None
+        when either is over the node-vector gate: the lookup tables of the
+        recommenders, which every recommender over this instance shares."""
+        books = driver_table(self.books.select("isbn", "title", "author"), "isbn")
+        users = None if books is None else driver_table(self.users, "user_id")
+        return None if users is None else (books, users)
 
     @cached_property
     def events(self) -> DataFrame:

@@ -832,7 +832,8 @@ def test_driver_side_materialization_sites_are_classified():
         "operators/pq.py::topk_pq": (1, "codebook-sized LUT to driver"),
         "operators/pq.py::train_pq_codebooks": (1, "sampled k-means training set (bounded sample)"),
         "operators/sampling.py::stratified_sample": (1, "scalar histogram-size gate aggregate (r10 broadcast guard)"),
-        "operators/serving.py::driver_table": (1, "a serving table under the node-vector gate, one collect per table at recommender construction; an over-gate table stops at the gate's row count"),
+        "operators/recommend.py::_ratings_of": (1, "driver-path recommender call: the rating rows of the target and its neighbours or community, a node-sized key set the node-vector gate admitted"),
+        "operators/serving.py::driver_table": (1, "a node-sized serving table, collected once at recommender construction only after its row count passed the node-vector gate"),
         "plans/fastrp.py::_fastrp_local": (2, "gated driver-local path (documented gates)"),
         "plans/louvain.py::_compose_local": (1, "scalar label offset (over-gate mapping)"),
         "plans/louvain.py::_local_move": (3, "scalar level size; under the node-vector gate, the (node_id, deg) arrays and each sweep's movers: the gated label table, which the broadcast already ships through the driver"),

@@ -1,11 +1,11 @@
 """Serving by key: the recommenders' driver-held tables answer like the
 per-request Spark plans they replace.
 
-Under the node-vector gate a recommender collects its serving tables once
-and answers ``recommend_books``, ``get_similar_users`` and the user picker
-on the driver; ``plans.NODE_VECTOR_BUDGET_BYTES = 0`` forces every call
-onto its Spark plan. Both must give the same ``list[dict]``: same rows,
-order, key order and plain Python value types.
+Under the node-vector gate a recommender collects its node tables once and
+answers on the driver, reading only the ratings it needs with one Spark
+job; ``plans.NODE_VECTOR_BUDGET_BYTES = 0`` forces every call onto its
+Spark plan. Both must give the same ``list[dict]``: same rows, order, key
+order and plain Python value types.
 """
 
 from __future__ import annotations
@@ -15,16 +15,14 @@ from pyspark.sql import functions as F
 
 from graph_database_application_for_recommendations_spark import plans
 from graph_database_application_for_recommendations_spark.operators import recommend
-from graph_database_application_for_recommendations_spark.operators.serving import (
-    ServingTables,
-    driver_table,
-)
+from graph_database_application_for_recommendations_spark.operators.serving import driver_table
 from graph_database_application_for_recommendations_spark.plans.pipeline import run_pipeline
 from graph_database_application_for_recommendations_spark.recommender import (
     CommunityRecommender,
     KnnRecommender,
     _records,
 )
+from graph_database_application_for_recommendations_spark.sources.views import load_ref_tables
 
 from .conftest import SF_SMALL, jobs_in_group
 
@@ -42,12 +40,11 @@ def served(spark):
     no_nbrs, no_comm = users[:2], users[2:4]
     sim = pipe.similar_to.filter(~F.col("src").isin(no_nbrs))
     comm = pipe.communities.filter(~F.col("user_id").isin(no_comm))
-    tables = ServingTables(ref)
-    driver = {"knn": KnnRecommender(ref, sim, tables=tables),
-              "community": CommunityRecommender(ref, comm, tables=tables)}
+    driver = {"knn": KnnRecommender(ref, sim), "community": CommunityRecommender(ref, comm)}
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
-        on_spark = {"knn": KnnRecommender(ref, sim), "community": CommunityRecommender(ref, comm)}
+        over = load_ref_tables(spark, SF_SMALL)  # gates its own driver_held
+        on_spark = {"knn": KnnRecommender(over, sim), "community": CommunityRecommender(over, comm)}
     return {"ref": ref, "sim": sim, "comm": comm, "users": users, "no_nbrs": no_nbrs,
             "no_comm": no_comm, "driver": driver, "spark": on_spark}
 
@@ -129,46 +126,49 @@ def test_knn_avg_rating_rounds_half_up_like_spark(spark):
     books = spark.createDataFrame([("b1", "t", "a")], "isbn string, title string, author string")
     want = _records(recommend.recommend_books_knn(sim, ratings, books, 0))
     got = _records(recommend.recommend_books_knn(
-        driver_table(sim, "src", "dst"), driver_table(ratings, "user_id", "isbn"),
-        driver_table(books, "isbn"), 0,
-    ))
+        driver_table(sim, "src", "dst"), ratings, driver_table(books, "isbn"), 0))
     _assert_same(got, want, "half-up tie")
     assert want == [{"title": "t", "author": "a", "avgRating": 5.007813, "votes": n}]
     assert round(641 / n, 6) == 5.007812
 
 
 def test_driver_table_refuses_at_the_gate(spark, monkeypatch):
-    """A table of n rows at w bytes a row fits iff n * w < budget; the
-    refused table is never collected whole."""
+    """A table of n rows at w bytes a row fits iff n * w < budget. The gate
+    reads the row count first: a refused table is never collected."""
     df = spark.createDataFrame([(9 - i, i) for i in range(10)], "a bigint, b int")
     width = plans.row_width(df)
     monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 10 * width)
+    collects = []
+    monkeypatch.setattr(type(df), "toPandas", lambda self: collects.append(self))
     assert driver_table(df, "a") is None
+    assert collects == []
+    monkeypatch.undo()
     monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 10 * width + 1)
     assert driver_table(df, "a")["a"].tolist() == list(range(10))
 
 
 def test_serving_job_budgets(spark, served):
-    """Building both recommenders collects each serving table once (five
-    single-job collects; the sources were read before, so no parquet
-    schema read is counted); a lookup runs no job; get_graph_data is at
-    most four. Forced over the gate, a lookup runs Spark jobs again."""
-    ref, sim, comm = served["ref"], served["sim"], served["comm"]
+    """Building both recommenders over one RefTables counts and collects
+    each of its four node tables once, a job each; get_similar_users and
+    the picker run no job, recommend_books and get_graph_data one, the
+    read of the ratings. Forced over the gate, a lookup runs its Spark
+    plan again."""
+    sim, comm = served["sim"], served["comm"]
+    ref = load_ref_tables(spark, SF_SMALL)
+    ref.books, ref.users, ref.ratings  # their parquet schema reads: not the calls' jobs
 
     def build():
-        tables = ServingTables(ref)
-        return {"knn": KnnRecommender(ref, sim, tables=tables),
-                "community": CommunityRecommender(ref, comm, tables=tables)}
+        return {"knn": KnnRecommender(ref, sim), "community": CommunityRecommender(ref, comm)}
 
     recs, jobs = jobs_in_group(spark, "build-recommenders", build)
-    assert jobs <= 6
+    assert jobs <= 8
     u = served["users"][5]
     for algo, rec in recs.items():
-        for method in LOOKUPS:
+        _, jobs = jobs_in_group(spark, f"{algo}.similar", lambda: rec.get_similar_users(u))
+        assert jobs == 0, algo
+        for method in ("recommend_books", "get_graph_data"):
             _, jobs = jobs_in_group(spark, f"{algo}.{method}", lambda: getattr(rec, method)(u))
-            assert jobs == 0, (algo, method)
-        _, jobs = jobs_in_group(spark, f"{algo}.graph", lambda: rec.get_graph_data(u))
-        assert 0 < jobs <= 4, (algo, jobs)
+            assert jobs == 1, (algo, method)
     _, jobs = jobs_in_group(spark, "picker", recs["community"].users_in_large_communities)
     assert jobs == 0
     _, jobs = jobs_in_group(spark, "spark-lookup",
