@@ -23,14 +23,15 @@ import sys
 import time
 
 
-def serve_request(pipe, recs: dict, algo: str, user: int) -> None:
+def serve_request(recs: dict, algo: str, user: int) -> None:
     """One serving round-trip: recommendations + similar users + graph
     export + HTML render, timed like the reference's request timer.
-    ``recs`` maps each algorithm to its recommender over ``pipe``."""
-    from graph_database_application_for_recommendations_spark.operators import (
-        recommend as _rec_ops,
+    ``recs`` maps each algorithm to its recommender."""
+    from graph_database_application_for_recommendations_spark.viz import (
+        viz_records,
+        viz_records_knn,
+        write_html,
     )
-    from graph_database_application_for_recommendations_spark.viz import write_html
 
     rec = recs[algo]
     print(f"\n== {algo} recommender, user {user}")
@@ -43,19 +44,9 @@ def serve_request(pipe, recs: dict, algo: str, user: int) -> None:
     print(f"   graph rows: {len(graph)}")
     print(f"   recommendation round-trip: {time.time() - t0:.2f}s")
 
-    # graph visualization HTML, like streamlit_app.py:99-108
-    ref = pipe.ref
-    if algo == "knn":
-        gdf = _rec_ops.graph_data_knn(pipe.similar_to, ref.ratings, ref.books, user)
-        nodes, edges = _rec_ops.viz_export_knn(gdf)
-    else:
-        gdf = _rec_ops.graph_data_community(
-            ref.users.join(pipe.communities, "user_id", "left"),
-            ref.ratings,
-            ref.books,
-            user,
-        )
-        nodes, edges = _rec_ops.viz_export(gdf)
+    # graph visualization HTML, like streamlit_app.py:99-108, from the
+    # graph rows just served
+    nodes, edges = (viz_records_knn if algo == "knn" else viz_records)(graph)
     out = write_html(
         nodes,
         edges,
@@ -65,7 +56,7 @@ def serve_request(pipe, recs: dict, algo: str, user: int) -> None:
     print(f"   graph HTML: {out}")
 
 
-def interactive_loop(pipe, recs: dict, default_user: int) -> None:
+def interactive_loop(recs: dict, default_user: int) -> None:
     """stdin selectbox: '<algo> [user]' per line, empty line repeats the
     last request, 'q' quits."""
     algo, user = "knn", default_user
@@ -91,7 +82,7 @@ def interactive_loop(pipe, recs: dict, default_user: int) -> None:
             else:
                 print("   ? expected: knn|community [user-id] | <user-id> | q")
                 continue
-        serve_request(pipe, recs, algo, user)
+        serve_request(recs, algo, user)
 
 
 def main() -> None:
@@ -130,10 +121,10 @@ def main() -> None:
     # built once per pipeline: each collects its serving tables here
     recs = {a: get_recommender(spark, args.sf_dir, a, pipeline=pipe) for a in algos}
     if args.interactive:
-        interactive_loop(pipe, recs, args.user)
+        interactive_loop(recs, args.user)
     else:
         for algo in algos:
-            serve_request(pipe, recs, algo, args.user)
+            serve_request(recs, algo, args.user)
 
     spark.stop()
 

@@ -27,7 +27,8 @@ Physical strategy — each choice measured:
   and re-assembling an array per group: 5.4s → 1.8s per round. The array
   form exists only at the API boundary (final ``embedding`` column).
 - **Edges hash-partitioned by ``dst`` once, no per-round shuffle.** Every
-  round is `edges ⋈ (broadcast) emb → groupBy(dst)`. A broadcast-hash-join
+  round under the node-vector gate is `edges ⋈ (broadcast) emb →
+  groupBy(dst)`. A broadcast-hash-join
   probe preserves the left side's partitioning, so caching the edge list
   pre-partitioned on ``dst`` satisfies the aggregate's distribution in
   every round: N rounds pay ONE setup shuffle instead of N. The per-round
@@ -35,9 +36,23 @@ Physical strategy — each choice measured:
   combine is useless for it (avg edges per (partition, dst) ≈ degree/P < 1
   at 32+ partitions), so it was shipping the full |E| × (dim+2)-column
   join output (~0.6 GB/round at sf0.1). Measured 28s → 17s end-to-end.
-- **Eager per-round materialization** (cache + localCheckpoint, see
-  ``materialize``): round N's accumulator and round N+1's propagate both
-  read round N's table, and letting that chain stay lazy re-executes the
+- **Driver-held node vectors.** While the (dim × 8 B per node) vector
+  table fits ``plans.node_vector_fits`` — the table the broadcast would
+  ship through the driver anyway — the driver holds it as one (dim, n)
+  numpy matrix (``_fastrp_driver``). The init (the numpy replica of the
+  Spark hash), normalize, accumulator blend and zero-fill run there in the
+  Spark plan's operation order, and Spark runs only each round's edge
+  aggregate: the vectors go out as one Arrow-built frame and the round
+  collects the n×dim means. The 64-column init, normalize, zero-fill,
+  blend, checkpoint and array plans are gone, and the vectors are
+  bit-identical to Spark's over the same broadcast join. Traced on the 300-user benchmark graph (sf0.002, seed 1,
+  4-vCPU VM): 26 → 22 jobs, 8.9 s → 5.0 s wall, 3.7 s → 2.5 s executor
+  CPU; untraced, the whole iteration's process CPU 67.3 s → 50.2 s
+  (median of 11 interleaved pairs). Past the gate the Spark owner below
+  runs.
+- **Eager per-round materialization** (Spark owner; cache +
+  localCheckpoint, see ``materialize``): round N's accumulator and round
+  N+1's propagate both read round N's table, and letting that chain stay lazy re-executes the
   shared subtree at every reference (35s vs 17s end-to-end) — plans also
   grow exponentially with depth (round N's tree embeds round N-1's twice).
   On a real cluster a checkpoint dir would add crash recovery on top.
@@ -56,9 +71,10 @@ sum buffer per vector slot — a partial-aggregatable shuffle of |E| rows
 (map-side combined to one row per partition×node) — no per-node neighbor
 lists are ever collected, so hub nodes (books rated by millions of users at
 100 TB) cannot OOM an executor; AQE splits any skewed reduce partition.
-The node-vector table (dim × 8 B per node) is broadcast into the edge join
-while it fits an executor; beyond that the join degrades gracefully to a
-shuffle join keyed on node id.
+The node-vector table (dim × 8 B per node) is held on the driver and
+broadcast into the edge join while it fits the node-vector gate; beyond
+that Spark holds it and the join degrades gracefully to a shuffle join
+keyed on node id.
 """
 
 from __future__ import annotations
@@ -68,7 +84,13 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import cache_wide, gate_node_vector_broadcast, materialize, release_checkpoint
+from . import (
+    cache_wide,
+    gate_node_vector_broadcast,
+    materialize,
+    node_vector_fits,
+    release_checkpoint,
+)
 from ..functions.hints import gated_broadcast
 
 SPARSITY = 3
@@ -117,6 +139,23 @@ def _normalize(df: DataFrame, dim: int) -> DataFrame:
     )
 
 
+def _normalize_columns(m: "np.ndarray") -> "np.ndarray":
+    """L2-normalize each column of a (dim, n) matrix in place, in the
+    Spark plan's operation order (``_normalize``): the norm is the
+    sequential fold ``sqrt(0 + e0*e0 + e1*e1 + ...)``, and a column whose
+    norm is not > 0 passes through. Same IEEE operations in the same order,
+    so the result is bit-identical to the plan's."""
+    import numpy as np
+
+    sq = np.zeros(m.shape[1])
+    for row in m:
+        sq += row * row
+    nrm = np.sqrt(sq)
+    nz = nrm > 0
+    m[:, nz] /= nrm[nz]
+    return m
+
+
 def _propagate(
     edges: DataFrame, emb: DataFrame, dim: int, broadcast_emb: bool = False
 ) -> DataFrame:
@@ -126,14 +165,14 @@ def _propagate(
     at |E| rows — map-side combined down to one row per (partition, dst).
 
     ``broadcast_emb`` skips shuffling the (large) edge list into the join:
-    right for node tables that fit an executor (the caller gates on node
-    count); huge graphs fall back to the shuffle join.
+    the driver owner sets it, whose node table passed the node-vector gate;
+    the Spark owner runs only past that gate and takes the shuffle join.
     """
     cols = _ecols(dim)
     emb_side = emb.withColumnRenamed("node_id", "src")
     if broadcast_emb:
         emb_side = gated_broadcast(
-            emb_side, "caller count-gated: n_nodes * dim * 8 < 256 MB"
+            emb_side, "caller count-gated: node_vector_fits(n_nodes, dim * 8)"
         )
     return (
         edges.join(emb_side, "src")
@@ -258,33 +297,37 @@ def _fastrp_local_solve(ids, src, dst, w, dim, iteration_weights, seed):
     """
     import numpy as np
 
-    # vectors travel transposed (dim, n): each propagation dim is then a
-    # contiguous 1-D gather + segmented reduceat, ~5x faster than the 2-D
-    # axis-0 reduceat (which strides across the full row width per segment)
-    ht = _init_matrix_local(ids, dim, seed)
-
     order = np.argsort(dst, kind="stable")
     src, dst, w = src[order], dst[order], w[order]
     # contiguous dst runs -> segmented sums via reduceat (vectorized groupBy)
     uniq, starts = np.unique(dst, return_index=True)
     wsum = np.add.reduceat(w, starts)
 
-    def _norm_cols(m: "np.ndarray") -> "np.ndarray":
-        nrm = np.sqrt((m * m).sum(axis=0))
-        nz = nrm > 0
-        m[:, nz] /= nrm[nz]
-        return m
-
-    ht = _norm_cols(ht)  # distributed path normalizes the init the same way
-    acc = None
-    for alpha in iteration_weights:
+    def propagate(ht: "np.ndarray") -> "np.ndarray":
+        # vectors travel transposed (dim, n): each propagation dim is then a
+        # contiguous 1-D gather + segmented reduceat, ~5x faster than the 2-D
+        # axis-0 reduceat (which strides across the full row width per segment)
         nxt = np.zeros_like(ht)
         for d in range(dim):
             nxt[d][uniq] = np.add.reduceat(ht[d][src] * w, starts) / wsum
-        ht = _norm_cols(nxt)
+        return nxt
+
+    return _fastrp_rounds(ids, dim, iteration_weights, seed, propagate)
+
+
+def _fastrp_rounds(ids, dim, iteration_weights, seed, propagate) -> "np.ndarray":
+    """The FastRP recurrence on a (dim, n) matrix, column i belonging to
+    ids[i]: the hash init, normalized, then per round ``propagate`` (the
+    weighted neighbour means, a zero column where no edge arrives),
+    normalize and blend, and the blend normalized. Each step follows the
+    Spark owner's operation order."""
+    ht = _normalize_columns(_init_matrix_local(ids, dim, seed))
+    acc = None
+    for alpha in iteration_weights:
+        ht = _normalize_columns(propagate(ht))
         if alpha != 0.0:
             acc = alpha * ht if acc is None else acc + alpha * ht
-    return _norm_cols(ht.copy() if acc is None else acc)
+    return _normalize_columns(ht if acc is None else acc)
 
 
 def embeddings_df_from_arrays(spark, ids, final, id_type: str = "string") -> DataFrame:
@@ -341,6 +384,53 @@ def _fastrp_local(
     )
 
 
+def _fastrp_driver(
+    nodes: DataFrame,
+    edges: DataFrame,
+    dim: int,
+    iteration_weights: tuple[float, ...],
+    seed: int,
+) -> DataFrame:
+    """The distributed iteration with the (dim, n) node vectors held on the
+    driver, for node tables that pass the node-vector gate.
+
+    ``edges`` is the dst-partitioned edge cache. Spark runs only the
+    edge-sized part of each round: the vectors go out as one Arrow-built
+    frame (a LocalRelation: it holds no storage, and its broadcast is one
+    small job over the local rows) through the Spark owner's
+    ``_propagate`` plan, and the round collects the n×dim means. The
+    init, normalize, accumulator blend and isolated-node zero-fill (a node
+    no edge reaches keeps a zero column) are ``_fastrp_rounds`` in numpy,
+    in the Spark owner's operation order, so both owners give
+    bit-identical vectors over the same broadcast join.
+    """
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    spark = nodes.sparkSession
+    cols = _ecols(dim)
+    ids = nodes.select("node_id").toPandas()["node_id"].to_numpy()
+    index = pd.Index(ids)
+    id_array = pa.array(ids)
+
+    def propagate_in_spark(ht: "np.ndarray") -> "np.ndarray":
+        frame = spark.createDataFrame(
+            pa.Table.from_arrays([id_array, *map(pa.array, ht)], ["node_id", *cols])
+        )
+        means = _propagate(edges, frame, dim, broadcast_emb=True).toArrow()
+        pos = index.get_indexer(means.column("node_id").to_numpy(zero_copy_only=False))
+        nxt = np.zeros_like(ht)
+        for row, c in zip(nxt, cols):
+            row[pos] = means.column(c).to_numpy()
+        return nxt
+
+    final = _fastrp_rounds(ids, dim, iteration_weights, seed, propagate_in_spark)
+    return embeddings_df_from_arrays(
+        spark, ids, final, nodes.schema["node_id"].dataType.simpleString()
+    )
+
+
 def fastrp(
     nodes: DataFrame,
     edges: DataFrame,
@@ -352,8 +442,13 @@ def fastrp(
     """Returns ``(node_id, embedding ARRAY<DOUBLE> dim d)`` for every node.
 
     ``edges`` must already be undirected-doubled (plans/graphs.py).
-    Isolated nodes (no in-edges) come out as zero vectors on both paths:
+    Isolated nodes (no in-edges) come out as zero vectors on every path:
     they receive no messages, so every round leaves them at zero.
+
+    Up to ``local_max_edges`` edges the whole solve runs on the driver.
+    Past it the iteration is distributed, and the node vectors have one of
+    two owners: the driver while they fit the node-vector gate (which
+    releases every cache it made before returning), Spark past it.
     """
     # nodes is typically *derived* (e.g. a distinct over the edge list);
     # without a cache every downstream action — init, broadcast gate,
@@ -375,15 +470,19 @@ def fastrp(
     edges = cache_wide(edges, par, "dst")
     pre_gate.unpersist(blocking=False)  # cache_wide has filled its own copy
     n_nodes = nodes.count()
+    # ~(dim * 8)B per node: while the node-vector table fits the gate (it
+    # would be broadcast through the driver anyway), the driver holds it
+    # and Spark runs only each round's edge aggregate
+    if node_vector_fits(n_nodes, dim * 8):
+        out = _fastrp_driver(nodes, edges, dim, iteration_weights, seed)
+        edges.unpersist(blocking=False)
+        nodes.unpersist(blocking=False)
+        return out
     cols = _ecols(dim)
-    # left lazy: the init table's only consumer is round 0's broadcast (or
-    # join probe), which executes the projection exactly once — pinning it
-    # would pay a store pass for nothing
+    # left lazy: the init table's only consumer is round 0's join, which
+    # executes the projection exactly once — pinning it would pay a store
+    # pass for nothing
     emb = _normalize(_init_embeddings(nodes, dim, seed), dim)
-
-    # ~(dim * 8)B per node: broadcast the node-vector table while it fits
-    # comfortably in an executor; beyond that, shuffle join
-    broadcast_emb = n_nodes * dim * 8 < 256 * 1024 * 1024
 
     # isolated nodes (no in-edges) drop out of the propagate aggregate and
     # need a zero-fill rejoin each round; skip that join entirely when the
@@ -391,8 +490,8 @@ def fastrp(
     # distinct first (map-side combinable) so the probe side broadcasts;
     # a raw |E|-row right side would force a shuffle join here
     reached = edges.select(F.col("dst").alias("node_id")).distinct()
-    # reached is |V|-bounded but still a node-sized set — same count gate
-    # as the embedding broadcast below, not an unconditional hint
+    # reached is |V|-bounded but still a node-sized set — count-gated,
+    # not an unconditional hint
     bc_reached = gate_node_vector_broadcast(n_nodes, "FastRP reached-node set", bytes_per_row=16)
     has_isolated = nodes.join(bc_reached(reached), "node_id", "left_anti").count() > 0
 
@@ -400,13 +499,13 @@ def fastrp(
     prev: DataFrame | None = None
     for idx, alpha in enumerate(iteration_weights):
         is_last = idx == len(iteration_weights) - 1
-        emb = _normalize(_propagate(edges, emb, dim, broadcast_emb), dim)
+        emb = _normalize(_propagate(edges, emb, dim), dim)
         if has_isolated:
             emb = nodes.join(emb, "node_id", "left").selectExpr(
                 "node_id", *[f"coalesce({c}, 0d) AS {c}" for c in cols]
             )
         # materialize only multi-consumer rounds: with α=0 this round's
-        # table feeds exactly one plan (the next round's broadcast/probe),
+        # table feeds exactly one plan (the next round's join),
         # so pinning it would trade one lazy execution for an execution
         # plus a store pass. With α≠0 it has two consumers (next round +
         # accumulator) — pin it so neither re-executes the propagate. On

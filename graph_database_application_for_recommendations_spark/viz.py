@@ -11,6 +11,11 @@ serving-sized neighborhood to a standalone vis-network page. The
 ``collect()`` here is the API edge (one user's graph, like the
 reference's Bolt round-trip), never a corpus-scale action.
 
+A served page already holds its graph rows (``get_graph_data``'s dicts),
+so ``viz_records`` / ``viz_records_knn`` build the same node and edge sets
+from them in Python, as the reference builds its ``Network`` from the
+records, and the page renders with no Spark job.
+
 vis-network is loaded from its public CDN at the same major version the
 reference vendors (vis-9.1.2); the page is otherwise self-contained.
 """
@@ -65,16 +70,70 @@ _TEMPLATE = """<!DOCTYPE html>
 """
 
 
+def _rating_color(rating) -> str:
+    """``recommend.rating_color`` on one value: a NULL rating is green."""
+    if rating is not None and rating <= 4:
+        return "red"
+    if rating is not None and rating <= 7:
+        return "yellow"
+    return "green"
+
+
+def _distinct(rows) -> list[dict]:
+    return list({tuple(r.items()): r for r in rows}.values())
+
+
+def viz_records(graph_rows: list[dict]) -> tuple[list[dict], list[dict]]:
+    """``recommend.viz_export`` over rating rows (userId, isbn, title,
+    rating) given as dicts: the same distinct nodes and one edge a row."""
+    nodes = _distinct(
+        [{"id": f"user_{r['userId']}", "label": f"User {r['userId']}",
+          "shape": "dot", "color": None} for r in graph_rows]
+        + [{"id": r["isbn"], "label": r["title"], "shape": "box",
+            "color": _rating_color(r["rating"])} for r in graph_rows]
+    )
+    edges = [
+        {"src": f"user_{r['userId']}", "dst": r["isbn"],
+         "value": None if r["rating"] is None else float(r["rating"])}
+        for r in graph_rows
+    ]
+    return nodes, edges
+
+
+def viz_records_knn(graph_rows: list[dict]) -> tuple[list[dict], list[dict]]:
+    """``recommend.viz_export_knn`` over ``graph_data_knn`` rows given as
+    dicts: the target's and the similar users' rated books, every similar
+    user as a dot, and user-user edges rescaled to ``1 + similarity * 9``."""
+    books = _distinct(
+        [{"userId": r["target_id"], "isbn": r["t_isbn"], "title": r["t_title"],
+          "rating": r["t_rating"]} for r in graph_rows if r["t_isbn"] is not None]
+        + [{"userId": r["sim_id"], "isbn": r["s_isbn"], "title": r["s_title"],
+            "rating": r["s_rating"]} for r in graph_rows if r["s_isbn"] is not None]
+    )
+    nodes, edges = viz_records(books)
+    sims = [r for r in graph_rows if r["sim_id"] is not None]
+    nodes = _distinct(
+        nodes + [{"id": f"user_{r['sim_id']}", "label": f"User {r['sim_id']}",
+                  "shape": "dot", "color": None} for r in sims]
+    )
+    edges += _distinct(
+        {"src": f"user_{r['target_id']}", "dst": f"user_{r['sim_id']}",
+         "value": 1.0 + r["similarity"] * 9} for r in sims
+    )
+    return nodes, edges
+
+
 def render_html(
-    nodes: DataFrame,
-    edges: DataFrame,
+    nodes: DataFrame | list[dict],
+    edges: DataFrame | list[dict],
     title: str = "Recommendation graph",
     height: str = "600px",
 ) -> str:
     """Render ``viz_export`` output (nodes: id/label/shape/color,
-    edges: src/dst/value) to a standalone vis-network HTML page string."""
+    edges: src/dst/value), as DataFrames or as ``viz_records`` dicts, to a
+    standalone vis-network HTML page string."""
     vis_nodes = []
-    for r in nodes.collect():
+    for r in nodes if isinstance(nodes, list) else nodes.collect():
         node = {"id": r["id"], "label": r["label"], "shape": r["shape"]}
         if r["color"] is not None:
             node["color"] = r["color"]
@@ -86,7 +145,7 @@ def render_html(
             "value": r["value"],
             "title": str(r["value"]),
         }
-        for r in edges.collect()
+        for r in (edges if isinstance(edges, list) else edges.collect())
     ]
     return _TEMPLATE.format(
         title=_html.escape(title),
@@ -98,8 +157,8 @@ def render_html(
 
 
 def write_html(
-    nodes: DataFrame,
-    edges: DataFrame,
+    nodes: DataFrame | list[dict],
+    edges: DataFrame | list[dict],
     path: str,
     title: str = "Recommendation graph",
     height: str = "600px",

@@ -57,7 +57,8 @@ _SLOW_TESTS = frozenset([
     "test_algorithms.py::test_betweenness_exact_known_graphs",
     "test_algorithms.py::test_betweenness_sampled_deterministic_and_scaled",
     "test_algorithms.py::test_bfs_distances_known_graph",
-    "test_algorithms.py::test_fastrp_distributed_path_matches_local",
+    "test_algorithms.py::test_fastrp_distributed_path_matches_local[driver]",
+    "test_algorithms.py::test_fastrp_distributed_path_matches_local[spark]",
     "test_algorithms.py::test_fastrp_shape_and_determinism",
     "test_algorithms.py::test_hits_bipartite_semantics",
     "test_algorithms.py::test_iterative_trio_gated_and_shuffle_paths_agree",

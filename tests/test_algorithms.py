@@ -9,8 +9,10 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from graph_database_application_for_recommendations_spark import plans
 from graph_database_application_for_recommendations_spark.operators.corating import corating_edges
 from graph_database_application_for_recommendations_spark.operators.knn import knn_exact, knn_lsh
+from graph_database_application_for_recommendations_spark.plans import fastrp as fastrp_mod
 from graph_database_application_for_recommendations_spark.plans.fastrp import (
     fastrp,
     user_embeddings_from_fastrp,
@@ -23,7 +25,7 @@ from graph_database_application_for_recommendations_spark.plans.louvain import l
 from graph_database_application_for_recommendations_spark.plans.modularity import modularity
 from graph_database_application_for_recommendations_spark.sources.views import load_ref_tables
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, jobs_in_group
 
 
 @pytest.fixture(scope="module")
@@ -73,44 +75,55 @@ def test_fastrp_shape_and_determinism(spark):
         assert emb2[r["node_id"]] == pytest.approx(r["embedding"], abs=1e-9)
 
 
-def test_fastrp_distributed_path_matches_local(spark):
-    """local_max_edges=0 forces the distributed iteration; both paths start
-    from the identical hash-seeded init and run the same weighted-mean +
-    L2-normalize recurrence, so results agree to float-summation noise."""
-    ratings = load_ref_tables(spark, SF_SMALL).ratings
-    nodes, edges = bipartite_rating_graph(ratings)
-    local = {r["node_id"]: r["embedding"] for r in fastrp(nodes, edges, dim=16, seed=7).collect()}
-    dist = {
-        r["node_id"]: r["embedding"]
-        for r in fastrp(nodes, edges, dim=16, seed=7, local_max_edges=0).collect()
-    }
-    assert local.keys() == dist.keys()
-    for nid, vec in local.items():
-        assert dist[nid] == pytest.approx(vec, abs=1e-9)
+@pytest.fixture(params=["driver", "spark"])
+def owner(request, monkeypatch):
+    """Who holds the node vectors on FastRP's distributed path: the driver
+    while they fit the node-vector gate, or Spark, forced past the gate."""
+    if request.param == "spark":
+        monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
+    return request.param
 
 
-@pytest.mark.parametrize("weights", [(0.0, 1.0, 1.0), (1.0, 0.5, 1.0, 2.0)])
-def test_fastrp_distributed_zero_fill_matches_local(spark, weights):
-    """A node with no edges drops out of every round's propagate aggregate;
-    the distributed path's has_isolated branch zero-fills it back in. At
-    the default dim=64 both paths must agree on every node, the isolated
-    one included (a zero vector). The second weight tuple blends the
-    accumulator over several pinned rounds: each round table must outlive
-    the lazily seeded accumulator that reads it."""
+def _seven_node_graph(spark):
+    """Two components with non-integer weights, plus the isolated ``n6``."""
     nodes = spark.createDataFrame([(f"n{i}",) for i in range(7)], "node_id string")
     pairs = [("n0", "n1", 1.0), ("n1", "n2", 2.0), ("n2", "n0", 3.0),
              ("n3", "n4", 1.5), ("n4", "n5", 0.5)]
     edges = spark.createDataFrame(
         pairs + [(d, s, w) for s, d, w in pairs], "src string, dst string, weight double"
     )
-    local = {
-        r["node_id"]: r["embedding"]
-        for r in fastrp(nodes, edges, iteration_weights=weights).collect()
-    }
-    dist = {
-        r["node_id"]: r["embedding"]
-        for r in fastrp(nodes, edges, iteration_weights=weights, local_max_edges=0).collect()
-    }
+    return nodes, edges
+
+
+def _embed(nodes, edges, **kwargs) -> dict:
+    return {r["node_id"]: r["embedding"] for r in fastrp(nodes, edges, **kwargs).collect()}
+
+
+def test_fastrp_distributed_path_matches_local(spark, owner):
+    """local_max_edges=0 forces the distributed iteration; both paths start
+    from the identical hash-seeded init and run the same weighted-mean +
+    L2-normalize recurrence, so results agree to float-summation noise."""
+    ratings = load_ref_tables(spark, SF_SMALL).ratings
+    nodes, edges = bipartite_rating_graph(ratings)
+    local = _embed(nodes, edges, dim=16, seed=7)
+    dist = _embed(nodes, edges, dim=16, seed=7, local_max_edges=0)
+    assert local.keys() == dist.keys()
+    for nid, vec in local.items():
+        assert dist[nid] == pytest.approx(vec, abs=1e-9)
+
+
+@pytest.mark.parametrize("weights", [(0.0, 1.0, 1.0), (1.0, 0.5, 1.0, 2.0)])
+def test_fastrp_distributed_zero_fill_matches_local(spark, owner, weights):
+    """A node with no edges drops out of every round's propagate aggregate;
+    the Spark owner's has_isolated branch zero-fills it back in, the driver
+    owner leaves its column at zero. At the default dim=64 both paths must
+    agree on every node, the isolated one included (a zero vector). The
+    second weight tuple blends the accumulator over several rounds: on the
+    Spark owner each pinned round table must outlive the lazily seeded
+    accumulator that reads it."""
+    nodes, edges = _seven_node_graph(spark)
+    local = _embed(nodes, edges, iteration_weights=weights)
+    dist = _embed(nodes, edges, iteration_weights=weights, local_max_edges=0)
     assert local.keys() == dist.keys() == {f"n{i}" for i in range(7)}
     assert dist["n6"] == [0.0] * 64
     for nid, vec in local.items():
@@ -118,7 +131,7 @@ def test_fastrp_distributed_zero_fill_matches_local(spark, weights):
         assert dist[nid] == pytest.approx(vec, abs=1e-9)
 
 
-def test_fastrp_distributed_releases_pre_gate_edge_cache(spark):
+def test_fastrp_distributed_releases_pre_gate_edge_cache(spark, owner):
     """The gate count caches the caller's edge list; the distributed path
     iterates over its own dst-partitioned copy, so that first cache must
     not outlive the call (the local path already releases it)."""
@@ -133,15 +146,66 @@ def test_fastrp_distributed_releases_pre_gate_edge_cache(spark):
     assert edges.storageLevel == StorageLevel.NONE
 
 
+def test_fastrp_owners_bit_identical(spark, monkeypatch):
+    """The driver owner replays the Spark owner's node-side arithmetic in
+    numpy (hash init, the sequential norm fold, the CASE WHEN divide, the
+    blend, the zero-fill) in the same operation order, so both owners give
+    the same doubles. On the 7-node graph every node has at most two
+    messages, so the forced Spark owner's shuffle join cannot reorder a
+    sum. On SF_SMALL it would: past the gate the Spark owner joins without
+    the broadcast and sums each node's messages in shuffle order, not in
+    the edge cache's. There its rounds keep the driver owner's broadcast
+    join, so any difference left is in the node-side arithmetic."""
+    nodes, edges = _seven_node_graph(spark)
+    for weights in [(0.0, 1.0, 1.0), (1.0, 0.5, 1.0, 2.0)]:
+        driver = _embed(nodes, edges, iteration_weights=weights, local_max_edges=0)
+        with monkeypatch.context() as m:
+            m.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
+            assert _embed(nodes, edges, iteration_weights=weights, local_max_edges=0) == driver
+
+    ratings = load_ref_tables(spark, SF_SMALL).ratings
+    nodes, edges = bipartite_rating_graph(ratings)
+    driver = _embed(nodes, edges, local_max_edges=0)
+    propagate = fastrp_mod._propagate
+    monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
+    monkeypatch.setattr(
+        fastrp_mod, "_propagate", lambda e, m, dim, *_: propagate(e, m, dim, True)
+    )
+    assert _embed(nodes, edges, local_max_edges=0) == driver
+
+
+def test_fastrp_driver_owner_job_budget_and_release(spark, monkeypatch):
+    """Under the gate Spark runs only the edge caches, the node count and
+    ids, and a round's vector broadcast and edge aggregate: 19 jobs here,
+    fewer than the Spark owner, and once the result is collected no cache
+    or checkpoint of the call is left in storage."""
+    ratings = load_ref_tables(spark, SF_SMALL).ratings
+    nodes, edges = bipartite_rating_graph(ratings)
+    ratings.count()  # fill the shared ratings cache outside the counts
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    before = {r.id() for r in storage()}
+    _, driver_jobs = jobs_in_group(
+        spark, "fastrp-driver", lambda: fastrp(nodes, edges, local_max_edges=0).collect()
+    )
+    assert {r.id() for r in storage()} <= before
+    assert driver_jobs <= 19
+    monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
+    _, spark_jobs = jobs_in_group(
+        spark, "fastrp-spark", lambda: fastrp(nodes, edges, local_max_edges=0).collect()
+    )
+    assert spark_jobs > driver_jobs
+
+
 def test_fastrp_distributed_py4j_round_trip_budget(spark, monkeypatch):
-    """Each wide (dim-column) plan node of the distributed path is built by
-    one batched expression-list call. Building them one Column at a time
-    cost ~85k py4j round trips per call at dim=64 (~1.5k batched); the
-    bound catches any per-column construction creeping back."""
+    """Each wide (dim-column) plan node of the Spark owner is built by one
+    batched expression-list call. Building them one Column at a time cost
+    ~85k py4j round trips per call at dim=64 (~1.5k batched); the bound
+    catches any per-column construction creeping back."""
     from py4j.clientserver import ClientServerConnection
 
     ratings = load_ref_tables(spark, SF_SMALL).ratings
     nodes, edges = bipartite_rating_graph(ratings)
+    monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
     calls = [0]
     send = ClientServerConnection.send_command
 

@@ -154,6 +154,43 @@ def test_viz_export_knn_and_html_render(spark, tmp_path):
         assert isinstance(json.loads(blob), list)  # embedded JSON is valid
 
 
+def test_viz_records_match_spark_export(spark):
+    """A served page renders from the graph rows it already holds:
+    ``viz_records`` / ``viz_records_knn`` over the rows as dicts give the
+    Spark exports' nodes and edges, duplicates included."""
+    from graph_database_application_for_recommendations_spark.viz import (
+        viz_records,
+        viz_records_knn,
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def recs(dicts):
+        return sorted(tuple(d.values()) for d in dicts)
+
+    comm = spark.createDataFrame(
+        [(1, "loc", 30, "i1", "t1", "a1", 9), (2, "loc", None, "i1", "t1", "a1", 3),
+         (2, "loc", None, "i2", "t2", "a2", 6), (1, "loc", 30, "i2", "t2", "a2", 6)],
+        "userId LONG, location STRING, age INT, isbn STRING, title STRING, author STRING, rating INT",
+    )
+    knn = spark.createDataFrame(
+        [(1, "i1", "t1", 9, 2, 0.5, "i2", "t2", 3),
+         (1, "i1", "t1", 9, 2, 0.5, "i1", "t1", 9),
+         (1, "i3", "t3", 5, 2, 0.5, "i2", "t2", 3),
+         (1, "i1", "t1", 9, 3, 0.9, None, None, None),
+         (4, None, None, None, None, None, None, None, None)],
+        "target_id LONG, t_isbn STRING, t_title STRING, t_rating INT,"
+        " sim_id LONG, similarity DOUBLE, s_isbn STRING, s_title STRING, s_rating INT",
+    )
+    for gd, spark_export, records in [(comm, recommend.viz_export, viz_records),
+                                      (knn, recommend.viz_export_knn, viz_records_knn)]:
+        nodes, edges = spark_export(gd)
+        r_nodes, r_edges = records([r.asDict() for r in gd.collect()])
+        assert recs(r_nodes) == rows(nodes.select("id", "label", "shape", "color"))
+        assert recs(r_edges) == rows(edges.select("src", "dst", "value"))
+
+
 def test_csv_etl_pipeline_end_to_end(spark, tmp_path):
     """EP2 (SURVEY §3): the reference's full ETL over Kaggle-shaped CSVs —
     filter implicit ratings, semi-join dims, FK-enforce edges — then serve

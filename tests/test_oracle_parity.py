@@ -814,7 +814,7 @@ def test_driver_side_materialization_sites_are_classified():
             if (
                 isinstance(n, ast.Call)
                 and isinstance(n.func, ast.Attribute)
-                and n.func.attr in ("collect", "toPandas")
+                and n.func.attr in ("collect", "toPandas", "toArrow")
             ):
                 sites[f"{os.path.relpath(path, root)}::{enclosing(n.lineno)}"] += 1
 
@@ -835,6 +835,8 @@ def test_driver_side_materialization_sites_are_classified():
         "operators/recommend.py::_ratings_of": (1, "driver-path recommender call: the rating rows of the target and its neighbours or community, a node-sized key set the node-vector gate admitted"),
         "operators/serving.py::driver_table": (1, "a node-sized serving table, collected once at recommender construction only after its row count passed the node-vector gate"),
         "plans/fastrp.py::_fastrp_local": (2, "gated driver-local path (documented gates)"),
+        "plans/fastrp.py::_fastrp_driver": (1, "under the node-vector gate, the node ids of the gated node-vector table, which the broadcast already ships through the driver"),
+        "plans/fastrp.py::propagate_in_spark": (1, "each driver-owner round's n x dim means: the gated node-vector table, which the broadcast already ships through the driver"),
         "plans/louvain.py::_compose_local": (1, "scalar label offset (over-gate mapping)"),
         "plans/louvain.py::_local_move": (3, "scalar level size; under the node-vector gate, the (node_id, deg) arrays and each sweep's movers: the gated label table, which the broadcast already ships through the driver"),
         "plans/louvain.py::louvain": (2, "coarse graph under the local gate + one scalar Q/row-count aggregate"),
