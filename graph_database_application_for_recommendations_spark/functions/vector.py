@@ -1,8 +1,15 @@
 """Vector math as native Spark column expressions (JVM-side, codegen'd).
 
-No Python UDFs: ``zip_with``/``aggregate``/``transform`` keep the whole
-expression inside whole-stage codegen, which matters when the cosine kernel
-runs over millions of candidate pairs (KNN self-join, SURVEY.md §2.3 J8).
+No Python UDFs: the kernels stay in the JVM. They are not codegen'd,
+though: ``zip_with``/``aggregate``/``transform`` are ``CodegenFallback``
+expressions in Spark 4.1, so they run interpreted and break the
+whole-stage pipeline around them (see functions/blas.py and
+operators/knn.py, whose Arrow kernels replay ``dot``'s fold where the
+candidate pairs are many). Spelling ``dot`` out as a fixed-length sum
+(``a[0]*b[0] + ... + a[63]*b[63]``) does not help either: on the IVF
+re-rank its 64-term expression trees compiled slower, and the
+``precompute_dist`` benchmark's ``run_s`` went from 16.8 s to 37 s on a
+4-vCPU VM.
 
 Precision contract (shared with the DuckDB oracles): float arrays are cast
 to double *before* any arithmetic, and similarity outputs are rounded to

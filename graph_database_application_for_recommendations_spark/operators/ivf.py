@@ -16,6 +16,23 @@ Deterministic, and distributed wherever the corpus is:
   centroid table is k·dim doubles (it passes through the driver on every
   broadcast anyway), so it is normalized and kept on the driver between
   rounds. Nothing is cached or checkpointed past the training call.
+- driver-held node state for all-pairs search (``topk_ivf`` with
+  ``queries is corpus``, knn_ivf's case): while the corpus fits the
+  node-vector gate (``plans.node_vector_fits(n, dim * 8)``, decided from
+  one aggregate before any collect), one Arrow collect brings the
+  normalized vectors and their md5 seed keys to the driver, and the seeds,
+  the Lloyd rounds, the final assignment and the probe ranking run in
+  numpy with V.dot's sequential fold (the same argmax and tie-breaks).
+  Spark gets the (id, cell, vector) and (query id, cell) frames and runs
+  only the edge-sized candidate re-rank: the cell equi-join, the exact
+  cosine and the top-k window, with the Spark owner's expressions. Traced
+  on the 300-user benchmark graph (sf0.002, seed 1, 4-vCPU VM): 21 → 9
+  jobs. Ragged or null vectors, other query sets and corpora past the
+  gate take the Spark owner; ``plans.NODE_VECTOR_BUDGET_BYTES = 0`` forces
+  it.
+
+A zero vector has no direction: it passes normalization unchanged and
+scores 0 against every centroid and neighbour on both owners.
 """
 
 from __future__ import annotations
@@ -30,6 +47,7 @@ from pyspark.sql import functions as F
 from ..functions import vector as V
 from ..functions.blas import normalize_rows_seq
 from ..functions.hints import gated_broadcast
+from ..plans import node_vector_fits
 
 _CENTROIDS = "fixed-size construction: IVF centroid table, num_cells rows x dim doubles"
 
@@ -39,9 +57,17 @@ def _unit_vectors(
 ) -> DataFrame:
     """(out, _v): L2-normalized double vectors, hash-partitioned by id
     unless ``by_id`` is False — the layout every per-vector aggregate and
-    window below keys on."""
-    vecs = df.select(
-        F.col(id_col).alias(out), V.l2_normalize(V.as_double(F.col(vec_col))).alias("_v")
+    window below keys on.
+
+    A zero vector passes through unchanged (ANSI division would raise on
+    its zero norm), as in FastRP's ``_normalize``. The norm is projected
+    into its own column first, so it is computed once per vector rather
+    than once per component inside the transform's lambda; the quotients
+    are the same doubles as ``V.l2_normalize``'s."""
+    raw = df.select(F.col(id_col).alias(out), V.as_double(F.col(vec_col)).alias("_v"))
+    n = F.col("_n")
+    vecs = raw.withColumn("_n", V.l2_norm(F.col("_v"))).select(
+        out, F.when(n > 0, F.transform("_v", lambda x: x / n)).otherwise(F.col("_v")).alias("_v")
     )
     if not by_id:
         return vecs
@@ -49,7 +75,8 @@ def _unit_vectors(
 
 
 def _centroid_table(spark: SparkSession, cells: list[int], mat) -> DataFrame:
-    """(cell, _c) as a local relation: broadcast without a Spark job."""
+    """(cell, _c) as a local relation. It holds no storage, but its
+    broadcast is one small Spark job over the local rows."""
     return spark.createDataFrame(
         pa.table(
             {
@@ -194,6 +221,122 @@ def cluster_members(
     )
 
 
+def _corpus_shape(corpus: DataFrame, vec_col: str) -> tuple[int, int | None]:
+    """(row count, vector length) from one aggregate, run before anything
+    is collected. The length is None unless every vector is present, free
+    of nulls and of one length — the corpora the driver owner can hold."""
+    vec = F.col(vec_col)
+    n, lo, hi, nulls = corpus.agg(
+        F.count(F.lit(1)),
+        F.min(F.size(vec)),
+        F.max(F.size(vec)),
+        F.count_if(vec.isNull() | F.exists(vec, lambda x: x.isNull())),
+    ).first()
+    return n, hi if n > 0 and nulls == 0 and lo == hi else None
+
+
+def _ranked_cells(mat, cents, top: int, row_block: int = 2048):
+    """(n, top) row indices into ``cents`` of each vector's ``top`` most
+    similar centroids, similarity descending then index ascending — the
+    Spark owner's order, since cells are held in ascending order; a NaN
+    ranks greatest, as in Spark's ordering. Similarities are V.dot's
+    sequential fold (``acc += a_i * c_i`` from 0.0 in ascending i, the
+    kernel order of functions/blas.py), blocked over rows so at most
+    ``row_block × len(cents)`` of them are held at once."""
+    out = np.empty((len(mat), top), dtype=np.int64)
+    for lo in range(0, len(mat), row_block):
+        blk = mat[lo : lo + row_block]
+        sims = np.zeros((len(blk), len(cents)))
+        for i in range(mat.shape[1]):
+            sims += np.multiply.outer(blk[:, i], cents[:, i])
+        key = np.where(np.isnan(sims), -np.inf, -sims)
+        if top == 1:  # argmin keeps the first, i.e. smallest, tied index
+            out[lo : lo + len(blk), 0] = key.argmin(axis=1)
+        else:
+            out[lo : lo + len(blk)] = np.argsort(key, axis=1, kind="stable")[:, :top]
+    return out
+
+
+def _rerank(probes: DataFrame, c_assigned: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, similarity): the exact cosine re-rank of the
+    probed cells. ``probes`` is (query_id, _qv, cell), ``c_assigned``
+    (neighbor_id, _cv, cell); the cell equi-join is the candidate set."""
+    pairs = (
+        probes.join(c_assigned, "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(V.dot(F.col("_qv"), F.col("_cv")), V.SIM_SCALE).alias("similarity"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("neighbor_id"))
+    return pairs.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")
+
+
+def _topk_ivf_driver(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    k: int,
+    num_cells: int | None,
+    nprobe: int,
+    lloyd_iters: int,
+) -> DataFrame:
+    """All-pairs :func:`topk_ivf` with the node state held on the driver.
+
+    One Arrow collect brings (id, md5 of the id, normalized vector), all
+    computed by Spark. Rows are sorted by id, so a stable sort on the md5
+    gives the Spark owner's (md5, id) seed order, and each Lloyd mean is
+    the cell's sum in ascending-id order over its count, normalized by
+    ``normalize_rows_seq``; a cell nobody joins drops out. Spark then gets
+    the (id, cell, vector) frame and the (query_id, cell) probes and runs
+    :func:`_rerank`, so every similarity still comes from Spark."""
+    spark = corpus.sparkSession
+    held = (
+        _unit_vectors(corpus, id_col, vec_col, by_id=False)
+        .select("_id", F.md5(F.col("_id").cast("string")).alias("_h"), "_v")
+        .toArrow()
+    )
+    held = held.take(np.argsort(held.column("_id").to_numpy(), kind="stable"))
+    n = held.num_rows
+    mat = held.column("_v").combine_chunks().flatten().to_numpy().reshape(n, dim)
+
+    seeds = np.argsort(held.column("_h").to_numpy(), kind="stable")
+    cells = np.arange(min(num_cells or max(2, int(math.sqrt(n))), n))
+    cents = mat[seeds[: len(cells)]]
+    for _ in range(lloyd_iters):
+        nearest = _ranked_cells(mat, cents, 1)[:, 0]
+        sums = np.zeros_like(cents)
+        np.add.at(sums, nearest, mat)  # in row, i.e. ascending-id, order
+        counts = np.bincount(nearest, minlength=len(cells))
+        kept = counts > 0
+        cells, cents = cells[kept], normalize_rows_seq(sums[kept] / counts[kept, None])
+
+    ranked = cells[_ranked_cells(mat, cents, max(1, min(nprobe, len(cells))))]
+    probe = ranked[:, : max(nprobe, 0)]
+    ids = held.column("_id").combine_chunks()
+    vectors = spark.createDataFrame(
+        pa.table(
+            {"_id": ids, "cell": pa.array(ranked[:, 0], pa.int32()), "_v": held.column("_v")}
+        )
+    )
+    probes = spark.createDataFrame(
+        pa.table(
+            {
+                "query_id": ids.take(np.repeat(np.arange(n), probe.shape[1])),
+                "cell": pa.array(probe.ravel(), pa.int32()),
+            }
+        )
+    )
+    q_vecs = vectors.select(F.col("_id").alias("query_id"), F.col("_v").alias("_qv"))
+    c_assigned = vectors.select(
+        F.col("_id").alias("neighbor_id"), F.col("_v").alias("_cv"), "cell"
+    )
+    return _rerank(probes.join(q_vecs, "query_id"), c_assigned, k)
+
+
 def topk_ivf(
     queries: DataFrame,
     corpus: DataFrame,
@@ -207,11 +350,27 @@ def topk_ivf(
     """IVF approximate top-k: (query_id, neighbor_id, similarity).
 
     Probes the ``nprobe`` nearest cells per query; exact cosine re-rank on
-    the probed candidates only. When ``queries`` is ``corpus`` (all-pairs
-    KNN), both sides read one id-partitioned corpus exchange, so the
-    probe ranking needs none; the cell join and the final top-k keep one
-    exchange each.
+    the probed candidates only. Two owners of the node state (vectors,
+    centroids, cells, probes):
+
+    - the driver (:func:`_topk_ivf_driver`), when ``queries`` is
+      ``corpus`` (all-pairs KNN) and :func:`_corpus_shape` finds the
+      vectors of one length, null-free and within
+      ``plans.node_vector_fits(n, dim * 8)``: Spark runs that aggregate,
+      one collect and the candidate re-rank only;
+    - Spark otherwise. Training broadcasts the driver-held centroids into
+      each Lloyd round; when ``queries`` is ``corpus`` both sides read one
+      id-partitioned corpus exchange, so the probe ranking needs none; the
+      cell join and the final top-k keep one exchange each.
     """
+    if queries is corpus:
+        n, dim = _corpus_shape(corpus, vec_col)
+        if dim is not None and node_vector_fits(n, dim * 8):
+            return _topk_ivf_driver(
+                corpus, id_col, vec_col, dim, k, num_cells, nprobe, lloyd_iters
+            )
+        # the count is in hand: training need not count the corpus again
+        num_cells = num_cells or max(2, int(math.sqrt(n)))
     centroids = train_ivf_centroids(corpus, id_col, vec_col, num_cells, lloyd_iters)
     vecs = _unit_vectors(corpus, id_col, vec_col)
     c_assigned = _assign(vecs, centroids, "_id", "_v").select(
@@ -228,15 +387,4 @@ def topk_ivf(
         .filter(F.col("_rn") <= nprobe)
         .select(F.col("_id").alias("query_id"), F.col("_v").alias("_qv"), "cell")
     )
-
-    pairs = (
-        probes.join(c_assigned, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(V.dot(F.col("_qv"), F.col("_cv")), V.SIM_SCALE).alias("similarity"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("neighbor_id"))
-    return pairs.withColumn("_rn", F.row_number().over(w2)).filter(F.col("_rn") <= k).drop("_rn")
+    return _rerank(probes, c_assigned, k)

@@ -43,9 +43,14 @@ def materialize(df: DataFrame, *, supersedes: DataFrame | None = None) -> DataFr
     out = tmp.localCheckpoint()
     tmp.unpersist(blocking=False)
     if supersedes is not None:
-        supersedes.unpersist(blocking=False)
-        release_checkpoint(supersedes)
+        release(supersedes)
     return out
+
+
+def release(df: DataFrame) -> None:
+    """Drop ``df``'s cache entry or checkpoint blocks, whichever it holds."""
+    df.unpersist(blocking=False)
+    release_checkpoint(df)
 
 
 def release_checkpoint(df: DataFrame) -> None:

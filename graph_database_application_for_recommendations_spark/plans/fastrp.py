@@ -56,6 +56,9 @@ Physical strategy — each choice measured:
   shared subtree at every reference (35s vs 17s end-to-end) — plans also
   grow exponentially with depth (round N's tree embeds round N-1's twice).
   On a real cluster a checkpoint dir would add crash recovery on top.
+  The result is pinned the same way, and then the edge and node caches
+  and every round checkpoint are released, so the returned frame reads
+  one checkpoint, as Louvain's does.
 - **One batched expression list per wide plan node.** Each ``dim``-column
   node (init, normalize, propagate's products / sum / quotients, the
   isolated-node zero-fill, the accumulator seed and blend, the final
@@ -89,6 +92,7 @@ from . import (
     gate_node_vector_broadcast,
     materialize,
     node_vector_fits,
+    release,
     release_checkpoint,
 )
 from ..functions.hints import gated_broadcast
@@ -447,8 +451,9 @@ def fastrp(
 
     Up to ``local_max_edges`` edges the whole solve runs on the driver.
     Past it the iteration is distributed, and the node vectors have one of
-    two owners: the driver while they fit the node-vector gate (which
-    releases every cache it made before returning), Spark past it.
+    two owners: the driver while they fit the node-vector gate, Spark past
+    it. Both release every cache and checkpoint they made before
+    returning; the Spark owner's result is one checkpoint of its own.
     """
     # nodes is typically *derived* (e.g. a distinct over the edge list);
     # without a cache every downstream action — init, broadcast gate,
@@ -497,6 +502,7 @@ def fastrp(
 
     acc: DataFrame | None = None
     prev: DataFrame | None = None
+    pinned: list[DataFrame] = []  # every round checkpoint, released at return
     for idx, alpha in enumerate(iteration_weights):
         is_last = idx == len(iteration_weights) - 1
         emb = _normalize(_propagate(edges, emb, dim), dim)
@@ -519,6 +525,7 @@ def fastrp(
         if alpha != 0.0:
             if not is_last:
                 emb = materialize(emb)
+                pinned.append(emb)
             lit = f"{float(alpha)!r}d"  # repr round-trips the exact double
             if acc is None:
                 acc = emb.selectExpr("node_id", *[f"{lit} * {c} AS {c}" for c in cols])
@@ -529,15 +536,21 @@ def fastrp(
                 )
                 if not is_last:
                     acc = materialize(acc, supersedes=prev_acc)
+                    pinned.append(acc)
             if not is_last:
                 if prev is not None:
                     release_checkpoint(prev)
                 prev = emb
 
     final = acc if acc is not None else emb
-    return _normalize(final, dim).selectExpr(
-        "node_id", f"array({', '.join(cols)}) AS embedding"
+    # pin the result, then release every cache and round checkpoint the
+    # call made: the returned frame reads one checkpoint and nothing else
+    out = materialize(
+        _normalize(final, dim).selectExpr("node_id", f"array({', '.join(cols)}) AS embedding")
     )
+    for df in (edges, nodes, *pinned):
+        release(df)
+    return out
 
 
 def user_embeddings_from_fastrp(emb: DataFrame) -> DataFrame:

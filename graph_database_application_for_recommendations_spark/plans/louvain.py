@@ -51,15 +51,9 @@ from . import (
     gate_node_vector_broadcast,
     materialize,
     node_vector_fits,
-    release_checkpoint,
+    release,
 )
 from ..functions.hints import gated_broadcast
-
-
-def _release(df: DataFrame) -> None:
-    """Drop ``df``'s cache entry or checkpoint blocks, whichever it holds."""
-    df.unpersist(blocking=False)
-    release_checkpoint(df)
 
 
 class _Labels(NamedTuple):
@@ -197,7 +191,7 @@ def _local_move(edges: DataFrame, max_sweeps: int, n_bound: int | None = None) -
             .sort_values("node_id")
         )
         if labels is not None:
-            _release(labels)
+            release(labels)
         node_id = pdf["node_id"].to_numpy(dtype=np.int64)
         deg = pdf["deg"].to_numpy(dtype=np.float64)
         community = node_id.copy()
@@ -255,7 +249,7 @@ def _local_move(edges: DataFrame, max_sweeps: int, n_bound: int | None = None) -
             )
             changed = nxt.filter("_moved").count()
             # the table this sweep read is dead once the next one is filled
-            _release(labels)
+            release(labels)
             labels = nxt
         if changed == 0:
             # a half-sweep may be flat while the other half still has
@@ -276,7 +270,7 @@ def _local_move(edges: DataFrame, max_sweeps: int, n_bound: int | None = None) -
         )
     # eager: the result's blocks are filled before its source is released
     out = labels.select("node_id", "community").localCheckpoint()
-    _release(labels)
+    release(labels)
     return _Labels(out, n_nodes)
 
 
@@ -497,7 +491,7 @@ def louvain(
         # dst-partitioned cache).
         wide = cache_wide(edges, par, "src")
         if pinned is not None:
-            _release(pinned)
+            release(pinned)
         edges = pinned = wide
     # original node_id -> current community, on the driver (node_ids
     # ascending) while |V₀| fits the gate, else as a Spark table
@@ -556,8 +550,8 @@ def louvain(
         q = float(in_w / m2 - deg_sq / (m2 * m2)) if m2 else 0.0
         if q <= prev_q + 1e-9:
             # never the mapping: the first level always improves on -inf
-            _release(filled)
-            _release(labels.frame)
+            release(filled)
+            release(labels.frame)
             break
         prev_q = q
         coarse = filled.localCheckpoint()
@@ -580,17 +574,17 @@ def louvain(
                 mapping.community == F.col("community_prev"),
             ).select(mapping.node_id, labels.frame.community)
             mapping = materialize(composed, supersedes=mapping)
-            _release(labels.frame)
+            release(labels.frame)
         # this level's edge list is dead once the coarse graph is pinned
         if cur_edges is not edges:
-            _release(cur_edges)
+            release(cur_edges)
         cur_edges, n_cur = coarse, n_coarse
 
     # the returned frame reads only the mapping checkpoint
     if cur_edges is not edges:
-        _release(cur_edges)
+        release(cur_edges)
     if pinned is not None:
-        _release(pinned)
+        release(pinned)
     if node_ids is not None:
         # node_ids ascend, so a label's first position is its smallest member
         _, first, inverse = np.unique(comm, return_index=True, return_inverse=True)

@@ -196,6 +196,44 @@ def test_fastrp_driver_owner_job_budget_and_release(spark, monkeypatch):
     assert spark_jobs > driver_jobs
 
 
+def test_fastrp_spark_owner_leaves_only_its_result(spark, monkeypatch):
+    """Forced past the node-vector gate, a call pins its result as one
+    checkpoint and releases its edge and node caches and every round
+    checkpoint: two calls grow executor storage by at most the two
+    checkpoints the results read. The weight tuple pins both round tables
+    and accumulators."""
+    import time
+
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+
+    def held():
+        return {r.id() for r in storage()}
+
+    def checkpoints(df):
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return {
+            leaves.apply(i).rdd().id()
+            for i in range(leaves.size())
+            if leaves.apply(i).getClass().getName().endswith(".LogicalRDD")
+        }
+
+    nodes, edges = _seven_node_graph(spark)
+    monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
+    before = held()
+    results = set()
+    for _ in range(2):
+        out = fastrp(nodes, edges, dim=8, iteration_weights=(1.0, 0.5, 1.0, 2.0),
+                     local_max_edges=0)
+        assert len(out.collect()) == 7
+        results |= checkpoints(out)
+    # unpersist(blocking=False) is asynchronous: give the removals a moment
+    deadline = time.monotonic() + 10
+    while held() - before - results and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert len(results) == 2
+    assert held() - before <= results
+
+
 def test_fastrp_distributed_py4j_round_trip_budget(spark, monkeypatch):
     """Each wide (dim-column) plan node of the Spark owner is built by one
     batched expression-list call. Building them one Column at a time cost

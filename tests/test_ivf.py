@@ -1,4 +1,5 @@
-"""IVF k-means search and clustering: exact replica, job budget, storage."""
+"""IVF k-means search and clustering: exact replica on both owners, job
+budget, fallbacks, storage."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ from decimal import ROUND_HALF_UP, Decimal
 import numpy as np
 import pytest
 
+from graph_database_application_for_recommendations_spark import plans
+from graph_database_application_for_recommendations_spark.operators import ivf
 from graph_database_application_for_recommendations_spark.operators.ivf import (
     cluster_corpus,
     cluster_members,
@@ -98,8 +101,18 @@ def pm1_vectors(spark):
     return df, {i: _normalize(v) for i, v in raw.items()}
 
 
+@pytest.fixture(params=["driver", "spark"])
+def owner(request, monkeypatch):
+    """Who holds the IVF node state (vectors, centroids, cells, probes) of
+    an all-pairs search: the driver while the corpus fits the node-vector
+    gate, or Spark, forced past the gate."""
+    if request.param == "spark":
+        monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
+    return request.param
+
+
 @pytest.mark.parametrize("top_k,cutoff,nprobe", [(5, 0.25, 2), (8, -1.0, 3)])
-def test_knn_ivf_matches_python_replica(spark, pm1_vectors, top_k, cutoff, nprobe):
+def test_knn_ivf_matches_python_replica(spark, owner, pm1_vectors, top_k, cutoff, nprobe):
     df, vecs = pm1_vectors
     got = {
         tuple(r)
@@ -108,7 +121,7 @@ def test_knn_ivf_matches_python_replica(spark, pm1_vectors, top_k, cutoff, nprob
     assert got == _replica_knn(vecs, top_k, cutoff, nprobe)
 
 
-def test_topk_ivf_on_seed_cells_matches_python_replica(spark, pm1_vectors):
+def test_topk_ivf_on_seed_cells_matches_python_replica(spark, owner, pm1_vectors):
     """With no Lloyd round the cells are the nine seeds themselves: every
     vector has equal cell similarities, and for 37 of the 90 the tie
     straddles the nprobe = 2 cut, so the probe ranking's cell tie-break
@@ -116,6 +129,48 @@ def test_topk_ivf_on_seed_cells_matches_python_replica(spark, pm1_vectors):
     df, vecs = pm1_vectors
     got = {tuple(r) for r in topk_ivf(df, df, k=6, nprobe=2, lloyd_iters=0).collect()}
     assert got == _replica_knn(vecs, 6, -1.0, 2, lloyd_iters=0)
+
+
+def test_knn_ivf_zero_vector_scores_zero(spark, owner):
+    """A zero vector has no direction: normalization passes it through
+    (under ANSI its zero norm used to raise DIVIDE_BY_ZERO), and it scores
+    0 against every centroid and every neighbour."""
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.6, 0.8])],
+        "vec_id long, embedding array<double>",
+    )
+    assert {tuple(r) for r in knn_ivf(df, cutoff=-1.0).collect()} == {
+        (1, 2, 0.0), (1, 3, 0.0), (2, 1, 0.0), (2, 3, 0.6), (3, 1, 0.0), (3, 2, 0.6)
+    }
+
+
+@pytest.mark.parametrize("case", ["ragged", "null_vector", "null_element", "queries"])
+def test_ivf_fallbacks_take_the_spark_owner(spark, monkeypatch, pm1_vectors, case):
+    """Inputs the driver owner cannot hold — a vector of another length, a
+    null vector or a null component — and a query set that is not the
+    corpus run the Spark owner and give its answer."""
+    df, _ = pm1_vectors
+    odd = {
+        "ragged": [(1000, [1.0] * 15)],
+        "null_vector": [(1000, None)],
+        "null_element": [(1000, [1.0] * 15 + [None])],
+    }
+    corpus = df.union(spark.createDataFrame(odd[case], df.schema)) if case in odd else df
+    queries = df.filter("vec_id < 60") if case == "queries" else corpus
+
+    def search():
+        return {tuple(r) for r in topk_ivf(queries, corpus, k=6, nprobe=2).collect()}
+
+    with monkeypatch.context() as m:
+        m.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
+        want = search()
+
+    def no_driver_owner(*_):
+        raise AssertionError("took the driver owner")
+
+    monkeypatch.setattr(ivf, "_topk_ivf_driver", no_driver_owner)
+    assert search() == want
+    assert want
 
 
 @pytest.mark.parametrize("k,lloyd_iters", [(6, 0), (6, 3), (11, 2)])
@@ -128,38 +183,54 @@ def test_cluster_corpus_matches_python_replica(spark, pm1_vectors, k, lloyd_iter
 # --- jobs and storage ---------------------------------------------------------
 
 
-def test_knn_ivf_job_budget(spark):
-    """One knn_ivf call, trained and searched, on the sf0.001 embeddings:
-    a Lloyd round is an assign + (cell, dim) mean collected to the driver
-    (3 jobs), and the search shuffles the corpus once for both sides."""
+def test_knn_ivf_job_budget(spark, monkeypatch):
+    """One knn_ivf call, trained and searched, on the sf0.001 embeddings.
+    The driver owner runs the gate aggregate, the corpus collect and the
+    candidate re-rank: 7 jobs. The Spark owner also runs the gate
+    aggregate; a Lloyd round is an assign + (cell, dim) mean collected to
+    the driver (3 jobs), and the search shuffles the corpus once for both
+    sides. Both owners give the same neighbours."""
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").cache()
     emb.count()
     try:
-        _, jobs = jobs_in_group(spark, "knn-ivf", lambda: knn_ivf(emb).collect())
+        driver, driver_jobs = jobs_in_group(
+            spark, "knn-ivf-driver", lambda: knn_ivf(emb, cutoff=-1.0).collect()
+        )
         _, two = jobs_in_group(spark, "ivf-2", lambda: train_ivf_centroids(emb, lloyd_iters=2))
         _, three = jobs_in_group(
             spark, "ivf-3", lambda: train_ivf_centroids(emb, lloyd_iters=3)
         )
+        monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
+        forced, spark_jobs = jobs_in_group(
+            spark, "knn-ivf-spark", lambda: knn_ivf(emb, cutoff=-1.0).collect()
+        )
     finally:
         emb.unpersist(blocking=True)
-    assert jobs <= 19
+    assert sorted(map(tuple, driver)) == sorted(map(tuple, forced))
+    assert len(driver) == 500 * 20
+    assert spark_jobs <= 19
+    assert driver_jobs <= 7
+    assert driver_jobs < spark_jobs
     assert three - two <= 3
 
 
 @pytest.mark.parametrize(
-    "call",
+    "call,owner",
     [
-        lambda df: knn_ivf(df, cutoff=0.0),
-        lambda df: cluster_corpus(df, k=4, lloyd_iters=4),
-        lambda df: cluster_members(df, k=4, lloyd_iters=4),
-        lambda df: topk_ivfpq(df, df, k=5, num_cells=4, m=4, num_centroids=8),
+        (lambda df: knn_ivf(df, cutoff=0.0), "driver"),
+        (lambda df: knn_ivf(df, cutoff=0.0), "spark"),
+        (lambda df: cluster_corpus(df, k=4, lloyd_iters=4), "driver"),
+        (lambda df: cluster_members(df, k=4, lloyd_iters=4), "driver"),
+        (lambda df: topk_ivfpq(df, df, k=5, num_cells=4, m=4, num_centroids=8), "driver"),
     ],
-    ids=["knn_ivf", "cluster_corpus", "cluster_members", "topk_ivfpq"],
+    ids=["knn_ivf", "knn_ivf-spark", "cluster_corpus", "cluster_members", "topk_ivfpq"],
+    indirect=["owner"],
 )
-def test_ivf_calls_leave_no_storage_behind(spark, call):
-    """Training keeps its centroids on the driver and releases its vector
-    cache: once the result is collected, executor storage holds nothing
-    the call created."""
+def test_ivf_calls_leave_no_storage_behind(spark, call, owner):
+    """The driver owner caches nothing; Spark-owner training keeps its
+    centroids on the driver and releases its vector cache: once the result
+    is collected, executor storage holds nothing the call created. Only
+    knn_ivf has two owners; the other calls run at the default gates."""
     jsc = spark.sparkContext._jsc.sc()
 
     def held():

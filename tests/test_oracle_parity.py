@@ -826,6 +826,7 @@ def test_driver_side_materialization_sites_are_classified():
         "operators/dedup.py::neardup_components": (1, "scalar convergence check per LFMIS round"),
         "operators/diagnostics.py::table_profile": (1, "bounded per-column profile rows"),
         "operators/ivf.py::train_ivf_centroids": (2, "num_cells x dim seed and centroid tables, already broadcast through the driver"),
+        "operators/ivf.py::_topk_ivf_driver": (1, "under the node-vector gate, the corpus's normalized vectors and md5 seed keys: the gated node-vector table"),
         "operators/ivfpq.py::topk_ivfpq": (1, "LUT-gated local rerank (documented gate)"),
         "operators/knn.py::knn_exact_local": (1, "size-gated local twin of the distributed op"),
         "operators/pca.py::pca_fit": (1, "dim x dim Gram matrix (vector-dim bounded)"),
