@@ -28,10 +28,6 @@ from pyspark.sql import functions as F
 
 from . import vector as V
 
-# build sides whose Catalyst size estimate is under this collect+broadcast
-# cleanly (the normalized matrix is n·d doubles)
-BLAS_BUILD_MAX_BYTES = 256 << 20
-
 # The catalog estimate is parquet-COMPRESSED bytes, but the build side is
 # materialized as a pandas frame + a float64 matrix + a broadcast copy —
 # several times the on-disk size (ADVICE r2). The gate divides its budget
@@ -41,25 +37,27 @@ BLAS_DECOMPRESS_FACTOR = 4
 
 def blas_build_fits(df: DataFrame) -> bool:
     """True when ``df``'s catalog size estimate says collect+broadcast of
-    the normalized matrix fits comfortably. Statless plans (None
-    estimate) return False — callers fall back to the distributed path."""
-    from ..plans import estimated_size_bytes
+    the normalized matrix fits comfortably: the decompressed estimate
+    must fit the engine's broadcast budget (``plans.node_vector_fits``).
+    Statless plans (None estimate) return False — callers fall back to
+    the distributed path."""
+    from ..plans import estimated_size_bytes, node_vector_fits
 
     size = estimated_size_bytes(df)
-    return size is not None and size * BLAS_DECOMPRESS_FACTOR <= BLAS_BUILD_MAX_BYTES
+    return size is not None and node_vector_fits(size, BLAS_DECOMPRESS_FACTOR)
 
 
 def normalize_rows_seq(mat):
     """L2-normalize rows with the exact IEEE op sequence of the column path
     (``sqrt(fold_k(acc + x_k²))`` then elementwise divide) — bit-identical
-    to ``V.l2_normalize`` including NaN/Inf behavior on zero norms."""
+    to ``V.l2_normalize``, which passes a zero row through unchanged."""
     import numpy as np
 
     acc = np.zeros(mat.shape[0])
     for k in range(mat.shape[1]):
         acc = acc + mat[:, k] * mat[:, k]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return mat / np.sqrt(acc)[:, None]
+    with np.errstate(invalid="ignore"):
+        return mat / np.where(acc == 0, 1.0, np.sqrt(acc))[:, None]
 
 
 def cosine_pairs(

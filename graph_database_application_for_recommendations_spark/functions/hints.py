@@ -44,9 +44,7 @@ def gated_broadcast(df: DataFrame, reason: str) -> DataFrame:
     return F.broadcast(df.alias(GATED_BROADCAST_MARKER))
 
 
-def assert_broadcastable(
-    df: DataFrame, what: str, max_bytes: int = 256 * 1024 * 1024
-) -> DataFrame:
+def assert_broadcastable(df: DataFrame, what: str) -> DataFrame:
     """Cheap runtime contract check for PURE caller-contract
     ``gated_broadcast`` sites (round-8 ADVICE: the witness alias silences
     the sweep unconditionally, so a caller passing an unbounded frame to a
@@ -55,21 +53,22 @@ def assert_broadcastable(
     Uses Catalyst's logical-plan size estimate — catalog/file statistics,
     NO job — so a corpus-backed scan that obviously violates the contract
     fails loudly at plan time instead of OOMing an executor mid-broadcast.
-    The hazard unit is BYTES, so the estimate is thresholded against the
-    same 256 MB budget every count-gated site enforces (round-9 code
+    The hazard unit is BYTES, so the estimate must fit the same budget
+    every count-gated site enforces, ``plans.node_vector_fits`` (round-9 code
     review: a row-count threshold under-protects narrow-row frames — a
     50M-row short-string table passes 5M estimated rows at the default
     256 B/var-field width while broadcasting ~1 GB). Statless frames
     (LogicalRDD, checkpoints) pass untouched: the estimate can't vouch
     either way and the contract stays with the caller, which is exactly
     what the site's ``reason`` string documents."""
-    from ..plans import estimated_size_bytes
+    from .. import plans
 
-    est = estimated_size_bytes(df)
-    if est is not None and est > max_bytes:
+    est = plans.estimated_size_bytes(df)
+    if est is not None and not plans.node_vector_fits(est, 1):
         raise ValueError(
             f"{what}: this side is broadcast by caller contract but its "
-            f"plan statistics estimate ~{est:,} bytes (> {max_bytes:,}) — "
+            f"plan statistics estimate ~{est:,} bytes (budget "
+            f"{plans.NODE_VECTOR_BUDGET_BYTES:,}) — "
             "the contract is violated; reduce the frame (sample/limit) or "
             "use an operator with a shuffle path"
         )

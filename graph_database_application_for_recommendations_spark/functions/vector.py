@@ -40,8 +40,16 @@ def l2_norm(a: Column) -> Column:
 
 
 def l2_normalize(a: Column) -> Column:
-    n = l2_norm(a)
-    return F.transform(a, lambda x: x / n)
+    """``a / ||a||`` with ``dot``'s fold, computed once per vector (the
+    fold's finish step, not inside the division's lambda). A zero vector
+    (or one with a null component) passes through unchanged: ANSI division
+    would raise on its zero norm."""
+    return F.aggregate(
+        a,
+        F.lit(0.0),
+        lambda s, x: s + x * x,
+        lambda s: F.transform(a, lambda x: F.when(s > 0, x / F.sqrt(s)).otherwise(x)),
+    )
 
 
 def cosine(a: Column, b: Column) -> Column:

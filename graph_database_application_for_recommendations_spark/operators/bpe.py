@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hints import gated_broadcast
 from ..functions.text import tokens
+from ..plans import node_vector_fits
 
 # sentencepiece-style marker. Enforced, not assumed (ADVICE r3): words
 # containing the marker are dropped from the aggregate before training —
@@ -221,7 +222,7 @@ def bpe_segment(
     # count; over budget, the plain equi-join shuffles, the correct plan
     # there (round-10 code review: the bare "vocabulary-sized" witness was
     # evidence-free)
-    if n_vocab * 64 < 256 * 1024 * 1024:
+    if node_vector_fits(n_vocab, 64):
         seg = gated_broadcast(
             seg, "count()-gated: distinct-word rows * 64 B < 256 MB"
         )

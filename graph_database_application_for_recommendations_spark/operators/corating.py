@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import gated_broadcast
+from ..plans import node_vector_fits
 
 
 def positive_ratings(ratings: DataFrame, min_rating: int = 6) -> DataFrame:
@@ -68,7 +69,7 @@ def corating_edges(
     a = pos.select(F.col("user_id").alias("u1"), "isbn")
     b = pos.select(F.col("user_id").alias("u2"), "isbn")
     # ~32 bytes per (user_id, isbn) row in the broadcast hash relation
-    if salt is None and pos.count() * 32 < 256 * 1024 * 1024:
+    if salt is None and node_vector_fits(pos.count(), 32):
         return (
             a.join(gated_broadcast(b, "count()-gated: pos.count()*32B < 256MB"), "isbn")
             .filter(F.col("u1") != F.col("u2"))

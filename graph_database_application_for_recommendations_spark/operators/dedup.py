@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hints import assert_broadcastable, gated_broadcast
 from ..functions.text import md5_hash32, md5_hash60, tokens, word_shingles
+from ..plans import node_vector_fits
 
 
 # --- exact & fingerprint ---------------------------------------------------
@@ -248,8 +249,8 @@ def jaccard_verify_pairs(
     p = pairs.select("doc_a", "doc_b")
     n_pairs = p.count()
     # ≤ 2·|pairs| distinct ids; 48 B/row covers a long id or short string
-    # key plus row overhead against the standard 256 MB broadcast budget
-    if 2 * n_pairs * 48 < 256 * 1024 * 1024:
+    # key plus row overhead against the engine's broadcast budget
+    if node_vector_fits(2 * n_pairs, 48):
         ids = (
             p.select(F.col("doc_a").alias("_cand_id"))
             .union(p.select(F.col("doc_b").alias("_cand_id")))
@@ -2180,7 +2181,7 @@ def weighted_jaccard_pairs(
         # on an actual count — else the plain equi-join shuffles, which
         # is the correct plan at that size (round-10 code review: the
         # bare "vocabulary-sized" witness was evidence-free)
-        if kept.count() * 64 < 256 * 1024 * 1024:
+        if node_vector_fits(kept.count(), 64):
             kept = gated_broadcast(
                 kept, "count()-gated: kept-shingle table rows * 64 B < 256 MB"
             )

@@ -55,19 +55,11 @@ _CENTROIDS = "fixed-size construction: IVF centroid table, num_cells rows x dim 
 def _unit_vectors(
     df: DataFrame, id_col: str, vec_col: str, out: str = "_id", by_id: bool = True
 ) -> DataFrame:
-    """(out, _v): L2-normalized double vectors, hash-partitioned by id
-    unless ``by_id`` is False — the layout every per-vector aggregate and
-    window below keys on.
-
-    A zero vector passes through unchanged (ANSI division would raise on
-    its zero norm), as in FastRP's ``_normalize``. The norm is projected
-    into its own column first, so it is computed once per vector rather
-    than once per component inside the transform's lambda; the quotients
-    are the same doubles as ``V.l2_normalize``'s."""
-    raw = df.select(F.col(id_col).alias(out), V.as_double(F.col(vec_col)).alias("_v"))
-    n = F.col("_n")
-    vecs = raw.withColumn("_n", V.l2_norm(F.col("_v"))).select(
-        out, F.when(n > 0, F.transform("_v", lambda x: x / n)).otherwise(F.col("_v")).alias("_v")
+    """(out, _v): ``V.l2_normalize``d double vectors (a zero vector passes
+    through unchanged), hash-partitioned by id unless ``by_id`` is False —
+    the layout every per-vector aggregate and window below keys on."""
+    vecs = df.select(
+        F.col(id_col).alias(out), V.l2_normalize(V.as_double(F.col(vec_col))).alias("_v")
     )
     if not by_id:
         return vecs

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import plans
 from ..functions.hints import gated_broadcast
 from ..functions.text import md5_hash32
 
@@ -48,7 +49,6 @@ def stratified_sample(
     key_col: str,
     fraction: float,
     seed: int = 0,
-    broadcast_budget_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Exact per-stratum fraction: rank rows inside each stratum by their
     deterministic hash (key as tie-break) and keep ceil(fraction·|stratum|).
@@ -82,13 +82,14 @@ def stratified_sample(
     so the corpus is aggregated once, not re-scanned per branch), and an
     estimated byte size — cell count × fixed width PLUS the measured
     stratum payload bytes, so a wide string stratum can't slip under a
-    row-count-only bar — over ``broadcast_budget_bytes`` raises instead
+    row-count-only bar — that does not fit ``plans.node_vector_fits``
+    (the engine's broadcast budget) raises instead
     of silently forcing the broadcast. There is no shuffle fallback by
     design: a stratum key that big means the caller wanted
     ``hash_sample``. The per-stratum totals then derive from the pinned
     histogram (Σ bucket counts), which also drops the second full-corpus
     aggregate the pre-gate version paid. The checkpoint pins at most
-    ``broadcast_budget_bytes`` of block storage per call (the gate bound);
+    the budget's bytes of block storage per call (the gate bound);
     the blocks are released when the returned plan is garbage-collected
     on the driver (ContextCleaner), the same lifetime every
     ``materialize``-built dimension in this engine has."""
@@ -122,13 +123,13 @@ def stratified_sample(
     # ~48 B fixed per broadcast row (bkt + two longs + struct overhead)
     # plus the measured stratum bytes each row carries
     est_bytes = n_cells * 48 + st["_sbytes"]
-    if est_bytes > broadcast_budget_bytes:
+    if not plans.node_vector_fits(est_bytes, 1):
         tmp.unpersist(blocking=False)
         raise ValueError(
             f"stratified_sample: {strata_col!r} yields {n_cells:,} "
             f"(stratum, bucket) histogram cells (~{est_bytes:,} B with the "
             f"stratum payload), whose broadcast would exceed the "
-            f"{broadcast_budget_bytes:,}-byte budget — the stratum column "
+            f"{plans.NODE_VECTOR_BUDGET_BYTES:,}-byte budget — the stratum column "
             "is too high-cardinality (or too wide) for exact per-stratum "
             "sampling; use hash_sample (per-key deterministic fraction) "
             "instead"
@@ -144,7 +145,7 @@ def stratified_sample(
     totals = hist.groupBy("_strat").agg(F.sum("_hn").alias("_n"))
     gate_reason = (
         f"count-gated: {n_cells} (stratum, bucket) cells, ~{est_bytes} B "
-        f"incl. measured stratum payload <= {broadcast_budget_bytes} B"
+        f"incl. measured stratum payload < {plans.NODE_VECTOR_BUDGET_BYTES} B"
     )
     w_in = Window.partitionBy("_strat", "_bkt").orderBy("_h", F.col(key_col))
     return (

@@ -244,7 +244,7 @@ def topk_hyperplane_lsh(
     that guess), and the transient bucket cache is dropped immediately
     instead of leaking for the session (VERDICT r2 item 3).
     """
-    from ..plans import estimated_row_count, materialize
+    from ..plans import estimated_row_count, materialize, node_vector_fits
 
     if dim is None:
         dim = len(queries.select(vec_col).first()[0])
@@ -281,9 +281,9 @@ def topk_hyperplane_lsh(
     vec_bytes = dim * 8 + 24
     n_q = estimated_row_count(queries)
     n_c = n_q if self_knn else estimated_row_count(corpus)
-    if n_q is not None and n_q * vec_bytes < 256 * 1024 * 1024:
+    if n_q is not None and node_vector_fits(n_q, vec_bytes):
         q = gated_broadcast(q, "stats-estimated rows * vec_bytes < 256MB")
-    if n_c is not None and n_c * vec_bytes < 256 * 1024 * 1024:
+    if n_c is not None and node_vector_fits(n_c, vec_bytes):
         c = gated_broadcast(c, "stats-estimated rows * vec_bytes < 256MB")
     pairs = cand.join(q, "query_id").join(c, "neighbor_id").select(
         "query_id",
@@ -718,7 +718,7 @@ def topk_hyperplane_lsh_multiprobe(
     equi-join on (table, bucket) whose left side merely has
     (num_planes+1)× more probe rows. Exact re-rank and determinism
     contract as in topk_hyperplane_lsh."""
-    from ..plans import estimated_row_count, materialize
+    from ..plans import estimated_row_count, materialize, node_vector_fits
 
     if dim is None:
         dim = len(queries.select(vec_col).first()[0])
@@ -754,9 +754,9 @@ def topk_hyperplane_lsh_multiprobe(
     vec_bytes = dim * 8 + 24
     n_q = estimated_row_count(queries)
     n_c = estimated_row_count(corpus)
-    if n_q is not None and n_q * vec_bytes < 256 * 1024 * 1024:
+    if n_q is not None and node_vector_fits(n_q, vec_bytes):
         q = gated_broadcast(q, "stats-estimated rows * vec_bytes < 256MB")
-    if n_c is not None and n_c * vec_bytes < 256 * 1024 * 1024:
+    if n_c is not None and node_vector_fits(n_c, vec_bytes):
         c = gated_broadcast(c, "stats-estimated rows * vec_bytes < 256MB")
     pairs = cand.join(q, "query_id").join(c, "neighbor_id").select(
         "query_id",

@@ -1,8 +1,9 @@
 """Mergeable sketch summaries as maintained sidecar state: count-min
 (frequency estimates) and HyperLogLog registers (distinct counts).
 
-These complete the incremental-maintenance algebra (DESIGN.md round 7)
-with its two remaining monoid classes:
+These complete the incremental-maintenance algebra (sidecar state kept
+as per-batch deltas plus one consolidation aggregate, equal to a full
+rebuild) with its two remaining monoid classes:
 
 * count-min cells are ADDITIVE INTEGERS — the full group algebra: batch
   deltas sum, retraction works by negation, and the consolidated sketch

@@ -1280,7 +1280,8 @@ def bm25_scores_from_stats(
 ) -> DataFrame:
     """BM25 scoring with the MODEL statistics read from maintained
     sidecars instead of a corpus rescan — the retrieval face of the
-    incremental-maintenance algebra (DESIGN.md round 7): ``token_stats``
+    incremental-maintenance algebra (additive per-batch deltas and one
+    consolidation aggregate, equal to a full rebuild): ``token_stats``
     is the consolidated (token, count, n_docs) table (n_docs = per-term
     document frequency, additive across append-only batches) and
     ``corpus_stats`` the consolidated one-row (n_docs, n_tokens) scalar

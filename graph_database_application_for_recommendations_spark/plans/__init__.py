@@ -75,28 +75,22 @@ def release_checkpoint(df: DataFrame) -> None:
         pass
 
 
+#: The engine's one broadcast and driver-table budget, in bytes. Every
+#: byte-sized gate asks :func:`node_vector_fits`, so 0 forces each onto its
+#: shuffle or Spark branch (sites with no such branch refuse instead).
 NODE_VECTOR_BUDGET_BYTES = 256 * 1024 * 1024
 
 
-def node_vector_fits(
-    n_rows: int, bytes_per_row: int = 24, budget_bytes: int | None = None
-) -> bool:
-    """Whether an ``n_rows``-row per-node table fits the node-vector byte
-    budget (``NODE_VECTOR_BUDGET_BYTES`` unless ``budget_bytes`` is given):
-    the one size rule behind :func:`gate_node_vector_broadcast` and the
-    driver-held label tables, which a broadcast ships through the driver
-    anyway."""
-    if budget_bytes is None:
-        budget_bytes = NODE_VECTOR_BUDGET_BYTES
-    return n_rows * bytes_per_row < budget_bytes
+def node_vector_fits(n_rows: int, bytes_per_row: int = 24) -> bool:
+    """Whether an ``n_rows``-row table of ``bytes_per_row``-byte rows fits
+    ``NODE_VECTOR_BUDGET_BYTES`` (strictly under it): the one size rule
+    behind :func:`gate_node_vector_broadcast`, the driver-held tables and
+    every other byte-sized broadcast gate, since a broadcast ships its
+    rows through the driver anyway."""
+    return n_rows * bytes_per_row < NODE_VECTOR_BUDGET_BYTES
 
 
-def gate_node_vector_broadcast(
-    n_rows: int,
-    what: str,
-    bytes_per_row: int = 24,
-    budget_bytes: int | None = None,
-):
+def gate_node_vector_broadcast(n_rows: int, what: str, bytes_per_row: int = 24):
     """Gating policy for the per-iteration |V|-row vector/label joins every
     iterative driver makes (round-8 VERDICT item 2): broadcast while the
     counted row total fits the byte budget, otherwise fall back to the
@@ -113,12 +107,10 @@ def gate_node_vector_broadcast(
     ``plans/``."""
     from ..functions.hints import gated_broadcast
 
-    if budget_bytes is None:
-        budget_bytes = NODE_VECTOR_BUDGET_BYTES
-    if node_vector_fits(n_rows, bytes_per_row, budget_bytes):
+    if node_vector_fits(n_rows, bytes_per_row):
         return lambda df: gated_broadcast(
             df, f"count-gated node vector: {what}, {n_rows} rows * "
-            f"{bytes_per_row} B < {budget_bytes} B"
+            f"{bytes_per_row} B < {NODE_VECTOR_BUDGET_BYTES} B"
         )
     return lambda df: df
 

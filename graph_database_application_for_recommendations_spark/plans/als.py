@@ -56,8 +56,8 @@ def als_model(
     # anti-join via train's lineage, and the serving join-back) and train
     # feeds two (the fit and the seen set) — unpinned, the id-assignment
     # subplan re-executed per consumer, which was the whole r04→r05 ALS
-    # drift (controlled experiment, DESIGN.md "Round-6 ALS drift
-    # attribution": ~0.7s subplan × ~3 recomputes ≈ the observed +2.8s)
+    # drift (controlled experiment at sf0.1, local[32]: ~0.7s subplan ×
+    # ~3 recomputes ≈ the observed +2.8s; pinned, 8.90s → 5.98s min-of-3)
     from . import materialize
 
     from ..functions.hints import gated_broadcast

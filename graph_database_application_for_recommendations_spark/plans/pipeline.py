@@ -22,6 +22,10 @@ from ..sources.views import RefTables, load_ref_tables
 from . import fastrp as _fastrp
 from .graphs import bipartite_rating_graph
 
+#: Users up to which the pipeline's KNN stage solves exactly on the driver;
+#: past it the IVF candidate join (``knn_ivf``) takes over.
+KNN_EXACT_MAX_USERS = 50_000
+
 
 def _bipartite_fastrp_arrays(ratings: DataFrame, dim: int, seed: int):
     """Driver-local FastRP over the bipartite rating graph, skipping the
@@ -151,7 +155,6 @@ def run_pipeline(
     knn_top_k: int = 20,
     knn_cutoff: float = 0.8,
     seed: int = 42,
-    knn_lsh_threshold: int = 50_000,
 ) -> PipelineResult:
     """End-to-end algorithm pipeline over the reference-shaped tables.
 
@@ -160,9 +163,9 @@ def run_pipeline(
     FastRP embeddings of co-rated users genuinely exceed 0.8 cosine, unlike
     the driver's random test embeddings.
 
-    Physical strategy switch: up to ``knn_lsh_threshold`` users the exact
+    Physical strategy switch: up to ``KNN_EXACT_MAX_USERS`` users the exact
     KNN solves on the driver (blocked BLAS matmul — a user table this size
-    is driver-sized data); beyond it the pipeline moves to the LSH
+    is driver-sized data); beyond it the pipeline moves to the IVF
     candidate join (same output contract, approximate recall) — the call
     the reference makes is itself approximate (GDS KNN is NN-descent, not
     exhaustive).
@@ -201,7 +204,7 @@ def run_pipeline(
         # cosine regime it measures ~3x the recall of hyperplane LSH
         # (see knn_ivf docstring).
         arr = _local_fastrp()
-        if arr is not None and len(arr[2]) <= knn_lsh_threshold:
+        if arr is not None and len(arr[2]) <= KNN_EXACT_MAX_USERS:
             # both gates held: the vectors never left the driver — solve
             # straight from the arrays (user ids are BIGINT in the rating
             # schema; identical kernel, contract and output schema)
@@ -211,7 +214,7 @@ def run_pipeline(
                 top_k=knn_top_k, cutoff=knn_cutoff,
             )
         user_emb = result.embeddings
-        knn_fn = knn_exact_local if user_emb.count() <= knn_lsh_threshold else knn_ivf
+        knn_fn = knn_exact_local if user_emb.count() <= KNN_EXACT_MAX_USERS else knn_ivf
         return knn_fn(user_emb, id_col="user_id", vec_col="embedding",
                       top_k=knn_top_k, cutoff=knn_cutoff)
 

@@ -347,14 +347,16 @@ def test_knn_exact_local_matches_distributed(spark):
         assert local[pair] == pytest.approx(sim, abs=1e-9)
 
 
-def test_pipeline_scale_knn_path(spark):
-    """knn_lsh_threshold=0 forces the beyond-driver-size IVF path: output
+def test_pipeline_scale_knn_path(spark, monkeypatch):
+    """KNN_EXACT_MAX_USERS=0 forces the beyond-driver-size IVF path: output
     contract matches (src, dst, similarity), every pair is a true pair
     with the exact operator's similarity (approximate recall, no false
     positives)."""
+    from graph_database_application_for_recommendations_spark.plans import pipeline
     from graph_database_application_for_recommendations_spark.plans.pipeline import run_pipeline
 
-    res = run_pipeline(spark, SF_SMALL, dim=16, knn_cutoff=0.4, knn_lsh_threshold=0)
+    monkeypatch.setattr(pipeline, "KNN_EXACT_MAX_USERS", 0)
+    res = run_pipeline(spark, SF_SMALL, dim=16, knn_cutoff=0.4)
     approx = res.similar_to
     assert approx.columns == ["src", "dst", "similarity"]
     exact_sim = {
@@ -389,6 +391,32 @@ def test_knn_exact_fixture(spark):
     # cos(1,4)≈0.7071, cos(2,4)≈0.7808, cos(3,4)≈0.7071, cos(1,3)=0
     assert got.keys() == {(1, 2), (2, 1)}
     assert got[(1, 2)] == pytest.approx(0.993884, abs=1e-6)
+
+
+@pytest.mark.parametrize("path", ["fold", "blas", "local"])
+def test_knn_zero_vector_scores_zero(spark, path):
+    """A zero vector (FastRP's output for an isolated node) has no
+    direction: every exact KNN path passes it through normalization and
+    scores it 0 against every neighbour, as ``knn_ivf`` does
+    (``tests/test_ivf.py::test_knn_ivf_zero_vector_scores_zero``). The
+    fold path used to raise DIVIDE_BY_ZERO on its zero norm and the BLAS
+    kernel dropped its pairs on NaN."""
+    from graph_database_application_for_recommendations_spark.operators.knn import (
+        knn_exact_local,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.6, 0.8])],
+        "vec_id long, embedding array<double>",
+    )
+    run = {
+        "fold": lambda: knn_exact(df, cutoff=-1.0, strategy="fold"),
+        "blas": lambda: knn_exact(df, cutoff=-1.0, strategy="blas"),
+        "local": lambda: knn_exact_local(df, cutoff=-1.0),
+    }[path]
+    assert {tuple(r) for r in run().collect()} == {
+        (1, 2, 0.0), (1, 3, 0.0), (2, 1, 0.0), (2, 3, 0.6), (3, 1, 0.0), (3, 2, 0.6)
+    }
 
 
 # --- cross-engine invariants for the iterative stages (VERDICT r1 item 2) ---
@@ -620,23 +648,7 @@ def test_iterative_trio_gated_and_shuffle_paths_agree(spark, monkeypatch):
         )
 
     gated = run()
-    orig = plans.gate_node_vector_broadcast
-    monkeypatch.setattr(
-        plans,
-        "gate_node_vector_broadcast",
-        lambda n, what, bytes_per_row=24, budget_bytes=0: orig(
-            n, what, bytes_per_row, budget_bytes=0
-        ),
-    )
-    # the modules bound the name at import time — patch their references
-    import graph_database_application_for_recommendations_spark.plans.eigenvector as ev_mod
-    import graph_database_application_for_recommendations_spark.plans.hits as hits_mod
-    import graph_database_application_for_recommendations_spark.plans.pagerank as pr_mod
-
-    for mod in (ev_mod, hits_mod, pr_mod):
-        monkeypatch.setattr(
-            mod, "gate_node_vector_broadcast", plans.gate_node_vector_broadcast
-        )
+    monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
     shuffled = run()
     assert gated == shuffled
 

@@ -373,6 +373,56 @@ def test_gated_broadcast_marker_is_single_sourced():
     assert not offenders, f"__gated_bounded__ emitted outside hints.py: {offenders}"
 
 
+def test_broadcast_budget_is_single_sourced():
+    """The engine has one byte budget for broadcasts and driver-held
+    tables, ``plans.NODE_VECTOR_BUDGET_BYTES``, asked through
+    ``plans.node_vector_fits``; setting it to 0 is how tests force every
+    byte-sized gate onto its shuffle branch. A second copy of the 256 MiB
+    figure anywhere else in the package is a gate that setting cannot
+    reach. The scan is an AST walk over numeric constant expressions
+    (``256 * 1024 * 1024``, ``256 << 20``, ``268435456``, ...), so a
+    comment or a docstring that names the figure does not trip it."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "graph_database_application_for_recommendations_spark",
+    )
+    budget = 256 * 1024 * 1024
+
+    def numeric(node) -> bool:
+        if isinstance(node, ast.Constant):
+            return type(node.value) in (int, float)
+        if isinstance(node, ast.UnaryOp):
+            return numeric(node.operand)
+        if isinstance(node, ast.BinOp):
+            return numeric(node.left) and numeric(node.right)
+        return False
+
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        if rel == os.path.join("plans", "__init__.py"):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Constant, ast.UnaryOp, ast.BinOp)) and numeric(node):
+                expr = ast.Expression(body=node)
+                try:
+                    value = eval(compile(expr, rel, "eval"))
+                except ArithmeticError:
+                    continue
+                if value == budget:
+                    offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, (
+        f"256 MiB byte budget spelled outside plans/__init__.py: {offenders} — "
+        "ask plans.node_vector_fits instead"
+    )
+
+
 def test_no_raw_broadcast_hints_engine_wide():
     """Every broadcast hint in the engine must route through
     ``gated_broadcast`` (via ``gate_node_vector_broadcast`` for counted
@@ -569,6 +619,99 @@ def test_gate_node_vector_broadcast_switches_on_count(spark):
     assert "broadcast" not in analyzed.lower(), (
         "over-budget vector still broadcast-hinted"
     )
+
+
+def _budget_gate_sites():
+    """Byte-budget gates outside the iterative drivers, each as
+    ``(build, marker)``: ``build(spark)`` runs the operator on sf0.001
+    inputs, and ``marker`` is what its analyzed plan carries when the
+    gate broadcasts — the gated-broadcast witness, or for ``knn_exact``
+    the BLAS strategy's Arrow kernel."""
+    from graph_database_application_for_recommendations_spark.functions.hints import (
+        GATED_BROADCAST_MARKER,
+    )
+    from graph_database_application_for_recommendations_spark.operators import (
+        bpe,
+        dedup,
+        knn,
+        simsearch,
+    )
+    from graph_database_application_for_recommendations_spark.operators.corating import (
+        corating_edges,
+    )
+    from graph_database_application_for_recommendations_spark.sources.views import (
+        load_ref_tables,
+    )
+
+    def emb(spark):
+        return spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+
+    def docs(spark):
+        return spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+
+    def lsh(fn):
+        return lambda spark: fn(
+            emb(spark).filter(F.col("vec_id") < 10), emb(spark), k=10, dim=64
+        )
+
+    def verify_pairs(spark):
+        pairs = spark.range(0, 60).select(
+            F.col("id").alias("doc_a"), (F.col("id") + 7).alias("doc_b")
+        )
+        return dedup.jaccard_verify_pairs(docs(spark), pairs, n=1, threshold=0.05)
+
+    return {
+        "corating_edges": (
+            lambda spark: corating_edges(load_ref_tables(spark, SF_SMALL).ratings),
+            GATED_BROADCAST_MARKER,
+        ),
+        "topk_hyperplane_lsh": (lsh(simsearch.topk_hyperplane_lsh), GATED_BROADCAST_MARKER),
+        "topk_hyperplane_lsh_multiprobe": (
+            lsh(simsearch.topk_hyperplane_lsh_multiprobe),
+            GATED_BROADCAST_MARKER,
+        ),
+        "jaccard_verify_pairs": (verify_pairs, GATED_BROADCAST_MARKER),
+        "weighted_jaccard_pairs": (
+            lambda spark: dedup.weighted_jaccard_pairs(docs(spark), threshold=0.3),
+            GATED_BROADCAST_MARKER,
+        ),
+        "bpe_segment": (
+            lambda spark: bpe.bpe_segment(docs(spark), [("t", "h"), ("th", "e")]),
+            GATED_BROADCAST_MARKER,
+        ),
+        "knn_exact": (
+            lambda spark: knn.knn_exact(
+                emb(spark).filter(F.col("vec_id") < 100), cutoff=0.1, strategy="auto"
+            ),
+            "MapInPandas",
+        ),
+    }
+
+
+@pytest.mark.parametrize("site", sorted(_budget_gate_sites()))
+def test_zero_byte_budget_forces_every_gate_off_broadcast(spark, monkeypatch, site):
+    """``plans.NODE_VECTOR_BUDGET_BYTES = 0`` is the one setting that forces
+    every byte-sized gate onto its non-broadcast branch, with the same
+    rows. The check is on the plan's own hint (or, for ``knn_exact``, on
+    the strategy), not on ``BroadcastHashJoin``: at test scale Spark's
+    ``autoBroadcastJoinThreshold`` may still broadcast a tiny side."""
+    from graph_database_application_for_recommendations_spark import plans
+
+    build, marker = _budget_gate_sites()[site]
+
+    def run():
+        df = build(spark)
+        return marker in df._jdf.queryExecution().analyzed().toString(), sorted(
+            map(tuple, df.collect())
+        )
+
+    hinted, want = run()
+    assert hinted, f"{site}: the default budget no longer takes the broadcast branch"
+    assert want, f"{site}: empty result proves nothing"
+    monkeypatch.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 0)
+    hinted, got = run()
+    assert not hinted, f"{site}: a zero budget still takes the broadcast branch"
+    assert got == want
 
 
 def test_window_guard_flags_the_reverted_antipattern(spark):

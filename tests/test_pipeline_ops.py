@@ -596,13 +596,14 @@ def test_stratified_sample_refuses_reserved_columns(spark):
         sampling.stratified_sample(df, "lang", "doc_id", 0.5)
 
 
-def test_stratified_sample_gates_strata_cardinality(spark):
+def test_stratified_sample_gates_strata_cardinality(spark, monkeypatch):
     """Round-9 VERDICT: the offsets/totals broadcasts scale with stratum
     cardinality, un-witnessed — a caller stratifying on a high-cardinality
     key (user_id) silently forced a huge broadcast. The histogram is now
     count-gated: over budget must fail LOUDLY (pointing at hash_sample),
     and the gate must not disturb the sane-stratum result."""
     import pytest
+    from graph_database_application_for_recommendations_spark import plans
     from graph_database_application_for_recommendations_spark.operators import sampling
     from pyspark.sql import functions as F
 
@@ -610,10 +611,11 @@ def test_stratified_sample_gates_strata_cardinality(spark):
         F.col("id").alias("doc_id"), F.col("id").cast("string").alias("user_id")
     )
     # per-row strata: 400 cells * 48 B > a 1 KB budget -> loud refusal
-    with pytest.raises(ValueError, match="high-cardinality.*hash_sample"):
-        sampling.stratified_sample(
-            df, "user_id", "doc_id", 0.2, seed=7, broadcast_budget_bytes=1024
-        )
+    with monkeypatch.context() as m, pytest.raises(
+        ValueError, match="high-cardinality.*hash_sample"
+    ):
+        m.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 1024)
+        sampling.stratified_sample(df, "user_id", "doc_id", 0.2, seed=7)
     # WIDE stratum values: 4 strata x <=100 buckets stays under a 40 KB
     # budget on cell count alone (<=400*48 B), but each broadcast row
     # carries the ~300-byte stratum string — the measured-payload gate
@@ -622,10 +624,11 @@ def test_stratified_sample_gates_strata_cardinality(spark):
     wide = df.withColumn(
         "lang", F.concat(F.lit("x" * 300), (F.col("doc_id") % 4).cast("string"))
     )
-    with pytest.raises(ValueError, match="too wide|high-cardinality"):
-        sampling.stratified_sample(
-            wide, "lang", "doc_id", 0.2, seed=7, broadcast_budget_bytes=40_000
-        )
+    with monkeypatch.context() as m, pytest.raises(
+        ValueError, match="too wide|high-cardinality"
+    ):
+        m.setattr(plans, "NODE_VECTOR_BUDGET_BYTES", 40_000)
+        sampling.stratified_sample(wide, "lang", "doc_id", 0.2, seed=7)
     # the same budget admits a 4-stratum column (<= 400 cells is the
     # histogram bound, but 4 strata * <=100 buckets * 48 B amply fits 256MB
     # default; prove the gated path returns the exact per-stratum counts)
