@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hints import gated_broadcast
 from ..functions.text import tokens
-from ..plans import node_vector_fits
+from ..plans import node_vector_fits, pin, release
 
 # sentencepiece-style marker. Enforced, not assumed (ADVICE r3): words
 # containing the marker are dropped from the aggregate before training —
@@ -109,15 +109,12 @@ def bpe_merges(
     whole table a deterministic function of the corpus. Each round costs
     one pair-count aggregate over the vocabulary-sized symbol table plus a
     1-row TakeOrdered collect; the symbol table is re-pinned per round
-    (``materialize``), so plans stay flat, each round's checkpoint blocks
-    are released when superseded, and the final rounds' blocks are
-    released before returning — no session-lifetime storage survives the
-    call (ADVICE r3: plain unpersist is a no-op on checkpointed frames).
+    (``plans.pin``), so plans stay flat, each round's pin is released when
+    superseded, and the final rounds' pins are released before returning
+    — no session-lifetime storage survives the call.
     Words containing the end-of-word marker are dropped (see
     ``END_OF_WORD``); the SQL oracle twin applies the same filter.
     """
-    from ..plans import release_checkpoint
-
     spark = documents.sparkSession
     words = (
         documents.select(F.explode(tokens(F.col(text_col))).alias("word"))
@@ -133,16 +130,11 @@ def bpe_merges(
     )
 
     # Each round is ONE job (the r9 shape paid three: cache-fill count +
-    # eager checkpoint + the TakeOrdered collect): the symbol table is
-    # pinned with cache + LAZY localCheckpoint — plan truncation now, with
-    # the fill and the checkpoint's block materialization riding the NEXT
-    # round's TakeOrdered collect, which is the only scheduled action.
-    def _pin(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        tmp = df.cache()
-        return tmp.localCheckpoint(eager=False), tmp
-
-    cur, cur_tmp = _pin(words.select("wc", sym.alias("sym")))
-    pins: list[tuple[DataFrame, DataFrame]] = [(cur, cur_tmp)]
+    # eager checkpoint + the TakeOrdered collect): the symbol table is a
+    # pin with no fill, so the fill and the checkpoint's blocks ride the
+    # NEXT round's TakeOrdered collect, which is the only scheduled action.
+    cur, _ = pin(words.select("wc", sym.alias("sym")))
+    prev: DataFrame | None = None
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, num_merges + 1):
         top = (
@@ -154,27 +146,23 @@ def bpe_merges(
             .collect()
         )
         # the collect materialized this round's pin (and consumed the
-        # previous round's blocks on the way) — everything older is dead
-        while len(pins) > 1:
-            stale_ck, stale_tmp = pins.pop(0)
-            stale_tmp.unpersist(blocking=False)
-            stale_ck.unpersist(blocking=False)
-            release_checkpoint(stale_ck)
+        # previous round's blocks on the way) — the previous pin is dead
+        if prev is not None:
+            release(prev)
+            prev = None
         if not top:
             break
         row = top[0]
         merges.append((rank, row["left"], row["right"], int(row["pair_count"])))
-        cur, cur_tmp = _pin(
+        prev = cur
+        cur, _ = pin(
             cur.select("wc", _apply_merge(F.col("sym"), row["left"], row["right"]).alias("sym"))
         )
-        pins.append((cur, cur_tmp))
-    # the returned merge table is driver data; all remaining symbol-table
-    # pins are dead — drop their blocks now instead of at GC (ADVICE r3:
-    # plain unpersist is a no-op on checkpointed frames)
-    for stale_ck, stale_tmp in pins:
-        stale_tmp.unpersist(blocking=False)
-        stale_ck.unpersist(blocking=False)
-        release_checkpoint(stale_ck)
+    # the returned merge table is driver data; the remaining symbol-table
+    # pins are dead — drop their blocks now instead of at GC
+    release(cur)
+    if prev is not None:
+        release(prev)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, pair_count long"
     )

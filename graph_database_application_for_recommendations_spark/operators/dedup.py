@@ -912,11 +912,7 @@ def neardup_components(
     cached before the size probe, so both paths execute the (expensive)
     candidate-generation plan exactly once instead of twice.
     """
-    from ..plans import (
-        cache_wide,
-        gate_node_vector_broadcast,
-        release_checkpoint,
-    )
+    from ..plans import cache_wide, gate_node_vector_broadcast, pin, release
 
     spark = pairs.sparkSession
     ec = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).cache()
@@ -956,15 +952,13 @@ def neardup_components(
         und.select(F.col("a").alias("doc_id"))
         .distinct()
         .select("doc_id", F.col("doc_id").alias("group_id"))
-        .cache()
     )
-    n_nodes = lc.count()
-    labels = lc.localCheckpoint(eager=False)
+    labels, (n_nodes,) = pin(lc, F.count(F.lit(1)))
     # the label table is exactly |V| rows every sweep, and neigh-min / the
     # jump table are <= |V| by construction — ONE count gates all three
     # per-sweep broadcast sides
     bc_l = gate_node_vector_broadcast(n_nodes, "CC min-label table", bytes_per_row=16)
-    prev_pin: tuple[DataFrame, ...] = (lc, labels)
+    pinned = labels
     converged = False
     for _ in range(max_iter):
         neigh = (
@@ -990,7 +984,7 @@ def neardup_components(
         # with the neighbor-min step, convergence is O(log diameter)
         # shuffles instead of O(diameter), so a path-shaped component no
         # longer exhausts max_iter and returns unconverged labels.
-        tmp = (
+        jumped = (
             stepped.join(
                 bc_l(
                     stepped.select(
@@ -1007,16 +1001,15 @@ def neardup_components(
                     "group_id"
                 ),
             )
-        ).cache()
-        # ONE job per sweep: the changed-count scalar doubles as the fill
-        changed = tmp.filter(F.col("group_id") != F.col("_old")).count()
-        new_labels = tmp.select("doc_id", "group_id").localCheckpoint(eager=False)
+        )
+        # ONE job per sweep: the changed-count scalar is the pin's fill
+        new, (changed,) = pin(
+            jumped, F.count(F.when(F.col("group_id") != F.col("_old"), 1))
+        )
         stepped.unpersist(blocking=False)
-        for df in prev_pin:
-            df.unpersist(blocking=False)
-            release_checkpoint(df)
-        prev_pin = (tmp, new_labels)
-        labels = new_labels
+        release(pinned)
+        pinned = new
+        labels = new.select("doc_id", "group_id")
         if changed == 0:
             converged = True
             break
@@ -1030,11 +1023,9 @@ def neardup_components(
             stacklevel=2,
         )
     # eager-pin the result off the final sweep's filled cache so the caller
-    # holds a self-contained checkpoint, then drop every loop pin
+    # holds a self-contained checkpoint, then drop the loop's last pin
     out = labels.localCheckpoint()
-    for df in prev_pin:
-        df.unpersist(blocking=False)
-        release_checkpoint(df)
+    release(pinned)
     und.unpersist(blocking=False)
     return out
 
@@ -1427,26 +1418,13 @@ def greedy_first_writer(
     (tiny); ``max_iters`` exhaustion raises loudly rather than returning
     a wrong prefix (the k-truss budget contract).
     """
-    from ..plans import gate_node_vector_broadcast, materialize, release_checkpoint
+    from ..plans import gate_node_vector_broadcast, materialize, pin, release
 
-    scratch: list[DataFrame] = []  # caches/lazy checkpoints to drop at exit
-
-    def _pin_lazy(df: DataFrame) -> DataFrame:
-        # cache + plan-truncating lazy checkpoint: zero scheduled jobs —
-        # blocks materialize inside whichever later job first reads them
-        tmp = df.cache()
-        out = tmp.localCheckpoint(eager=False)
-        scratch.extend((tmp, out))
-        return out
-
-    ec = edges.select("a", "b").cache()
-    ec.count()
-    edges = ec.localCheckpoint(eager=False)
-    scratch.extend((ec, edges))
-    uc = ids.select("doc_id").cache()
-    n_und = uc.count()
-    undecided = uc.localCheckpoint(eager=False)
-    scratch.extend((uc, undecided))
+    # every pin stays until exit: the kept side is a chain of per-round
+    # pins that only the final materialization reads
+    edges, _ = pin(edges.select("a", "b"), F.count(F.lit(1)))
+    undecided, (n_und,) = pin(ids.select("doc_id"), F.count(F.lit(1)))
+    pins = [edges, undecided]
     kept = ids.select("doc_id").limit(0)
     n_kept_ub = 0  # upper bound on |kept| (sum of frontier fills)
     try:
@@ -1475,10 +1453,9 @@ def greedy_first_writer(
             )
             # the round's ONLY scheduled job: fill + count the frontier
             # (also first-materializes the previous round's lazy pins)
-            fc = undecided.join(pending, "doc_id", "left_anti").cache()
-            n_frontier = fc.count()
-            frontier = fc.localCheckpoint(eager=False)
-            scratch.extend((fc, frontier))
+            frontier, (n_frontier,) = pin(
+                undecided.join(pending, "doc_id", "left_anti"), F.count(F.lit(1))
+            )
             # a frontier doc is killed iff a smaller-id KEPT neighbor exists
             # (a same-round conflict is impossible: a kept frontier neighbor
             # a < b would have made b pending, since a was undecided)
@@ -1486,12 +1463,14 @@ def greedy_first_writer(
             killed = (
                 edges.join(ka, "a", "semi").select(F.col("b").alias("doc_id")).distinct()
             )
-            kept = kept.unionByName(
-                _pin_lazy(frontier.join(killed, "doc_id", "left_anti"))
-            )
+            # kept delta and undecided: pins with no fill, zero scheduled
+            # jobs — later jobs materialize them
+            kept_delta, _ = pin(frontier.join(killed, "doc_id", "left_anti"))
+            kept = kept.unionByName(kept_delta)
             n_kept_ub += n_frontier
-            undecided = _pin_lazy(undecided.join(frontier, "doc_id", "left_anti"))
+            undecided, _ = pin(undecided.join(frontier, "doc_id", "left_anti"))
             n_und -= n_frontier
+            pins += [frontier, kept_delta, undecided]
         # the final eager pin executes the whole kept delta chain in one job
         return materialize(
             ids.select("doc_id").join(
@@ -1499,9 +1478,8 @@ def greedy_first_writer(
             ).select("doc_id", F.coalesce("keep", F.lit(False)).alias("keep"))
         )
     finally:
-        for df in scratch:
-            df.unpersist(blocking=False)
-            release_checkpoint(df)
+        for df in pins:
+            release(df)
 
 
 def ingest_neardup_decisions(
@@ -1542,7 +1520,7 @@ def ingest_neardup_decisions(
     survivor set is.
     """
     from ..functions.text import canonical_fingerprint
-    from ..plans import materialize, release_checkpoint
+    from ..plans import materialize, release
 
     inc = materialize(
         incoming.select(
@@ -1648,8 +1626,8 @@ def ingest_neardup_decisions(
         )
         return materialize(out)
     finally:
-        release_checkpoint(inc)
-        release_checkpoint(idx)
+        release(inc)
+        release(idx)
 
 
 def semantic_decontaminate(
@@ -2315,7 +2293,7 @@ def icws_est_pairs(
     theorem; verify against weighted_jaccard_pairs exactly as the set
     pipeline verifies MinHash candidates."""
     sig = icws_signatures(documents, id_col, text_col, num_hashes, shingle_n)
-    from ..plans import materialize, release_checkpoint
+    from ..plans import materialize, release
 
     sig = materialize(sig)
     try:
@@ -2359,11 +2337,9 @@ def icws_est_pairs(
         )
         out = est.filter(F.col("est_wjaccard") >= threshold)
         # materialize the result before releasing the signature pin
-        from ..plans import materialize as _mat
-
-        return _mat(out)
+        return materialize(out)
     finally:
-        release_checkpoint(sig)
+        release(sig)
 
 
 def dedup_keep_best(

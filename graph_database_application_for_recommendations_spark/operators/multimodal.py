@@ -510,7 +510,7 @@ def _hamming_pairs_words(sig: DataFrame, max_hamming: int) -> DataFrame:
     """(asset_a, asset_b, hamming) over a (asset_id, w0, w1) two-word
     signature table: byte-slice banded candidates + exact popcount —
     shared by the image and audio perceptual-hash dedup faces."""
-    from ..plans import materialize, release_checkpoint
+    from ..plans import materialize, release
 
     if not 0 <= max_hamming <= 7:
         raise ValueError("byte-band pigeonhole covers max_hamming in [0, 7]")
@@ -552,7 +552,7 @@ def _hamming_pairs_words(sig: DataFrame, max_hamming: int) -> DataFrame:
         )
         return materialize(out)
     finally:
-        release_checkpoint(sig)
+        release(sig)
 
 
 def _decode_pcm_samples(payload: bytes):

@@ -321,84 +321,6 @@ def graph_data_community(
     )
 
 
-def rating_color(rating) -> F.Column:
-    """P8 — rating→color bucketing used by the viz export
-    (reference ``recommender_community.py:101``)."""
-    c = F.col(rating) if isinstance(rating, str) else rating
-    return F.when(c <= 4, F.lit("red")).when(c <= 7, F.lit("yellow")).otherwise(F.lit("green"))
-
-
-def viz_export_knn(graph_data: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """§2.9 — the KNN neighborhood viz (reference
-    ``recommender_knn.py:82-159``): target + similar users as dots,
-    rating-colored book boxes, rating edges, PLUS user↔user similarity
-    edges with the P9 rescale ``1 + similarity*9``
-    (``recommender_knn.py:126``) so edge thickness is comparable to the
-    1-10 rating edges. Input is the ``graph_data_knn`` wide shape."""
-    t_books = graph_data.filter(F.col("t_isbn").isNotNull()).select(
-        F.col("target_id").alias("userId"),
-        F.col("t_isbn").alias("isbn"),
-        F.col("t_title").alias("title"),
-        F.col("t_rating").alias("rating"),
-    )
-    s_books = graph_data.filter(F.col("s_isbn").isNotNull()).select(
-        F.col("sim_id").alias("userId"),
-        F.col("s_isbn").alias("isbn"),
-        F.col("s_title").alias("title"),
-        F.col("s_rating").alias("rating"),
-    )
-    nodes, edges = viz_export(t_books.unionByName(s_books).distinct())
-    # similar users with no rated books still render as dots
-    sim_nodes = (
-        graph_data.filter(F.col("sim_id").isNotNull())
-        .select(
-            F.concat(F.lit("user_"), F.col("sim_id")).alias("id"),
-            F.concat(F.lit("User "), F.col("sim_id")).alias("label"),
-            F.lit("dot").alias("shape"),
-            F.lit(None).cast("string").alias("color"),
-        )
-        .distinct()
-    )
-    sim_edges = (
-        graph_data.filter(F.col("sim_id").isNotNull())
-        .select(
-            F.concat(F.lit("user_"), F.col("target_id")).alias("src"),
-            F.concat(F.lit("user_"), F.col("sim_id")).alias("dst"),
-            (F.lit(1.0) + F.col("similarity") * 9).alias("value"),
-        )
-        .distinct()
-    )
-    return (
-        nodes.unionByName(sim_nodes).distinct(),
-        edges.unionByName(sim_edges),
-    )
-
-
-def viz_export(graph_data: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """§2.9 — pyvis graph construction re-expressed as (nodes, edges)
-    DataFrames: users as dots, books as color-bucketed boxes, edge
-    thickness = rating. Rendering: ``graph_database_application_for_recommendations_spark.viz`` serializes one
-    serving-sized neighborhood to a standalone vis-network page."""
-    user_nodes = graph_data.select(
-        F.concat(F.lit("user_"), F.col("userId")).alias("id"),
-        F.concat(F.lit("User "), F.col("userId")).alias("label"),
-        F.lit("dot").alias("shape"),
-        F.lit(None).cast("string").alias("color"),
-    ).distinct()
-    book_nodes = graph_data.select(
-        F.col("isbn").alias("id"),
-        F.col("title").alias("label"),
-        F.lit("box").alias("shape"),
-        rating_color("rating").alias("color"),
-    ).distinct()
-    edges = graph_data.select(
-        F.concat(F.lit("user_"), F.col("userId")).alias("src"),
-        F.col("isbn").alias("dst"),
-        F.col("rating").cast("double").alias("value"),
-    )
-    return user_nodes.unionByName(book_nodes), edges
-
-
 def implicit_training_samples(
     ratings: DataFrame, k: int = 4, min_rating: int = 6
 ) -> DataFrame:

@@ -2,13 +2,13 @@
 
 The reference delegates these to Neo4j GDS (shared-memory, single machine);
 here they are driver-side loops over DataFrame jobs — each iteration is one
-declarative Spark job, with ``materialize`` between iterations to pin the
-round's result and truncate the logical plan (SURVEY.md §4).
+declarative Spark job, with ``materialize`` or ``pin`` between iterations
+to pin the round's result and truncate the logical plan (SURVEY.md §4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 
 
 def materialize(df: DataFrame, *, supersedes: DataFrame | None = None) -> DataFrame:
@@ -47,10 +47,51 @@ def materialize(df: DataFrame, *, supersedes: DataFrame | None = None) -> DataFr
     return out
 
 
+def pin(df: DataFrame, *fill: Column) -> tuple[DataFrame, Row | None]:
+    """Lazy round boundary, the per-round form of :func:`materialize`:
+    cache ``df``, run the one aggregate over ``fill`` on the cache when
+    given (the round's only scheduled job; its Row is returned, ``None``
+    without ``fill``, which schedules no job), and return the frame
+    lazily checkpointed off that cache.
+
+    The plan is truncated now: the returned frame's plan is one
+    ``LogicalRDD``, so the next round's analysis does not grow with the
+    round chain (3x a round on the eigenvector loop without it: 1.4 s →
+    150 s by round 6 on sf0.001). The checkpoint's blocks are filled by
+    the next job that reads the frame, from the retained cache, so no
+    separate checkpoint pass is ever scheduled. The cache comes first
+    because a bare checkpoint pass skips the codegen'd SQL path and costs
+    about 2x a cache fill (``materialize``'s measurement).
+
+    A lazy checkpoint is marked by whichever job first computes it, on
+    that job's thread, an AQE ``broadcast-exchange`` thread included: the
+    ``q_graph_bfs`` JVM lock cycle recorded in CHANGES.md (``FOUND:``) had
+    such a thread inside ``RDD.doCheckpoint`` during BFS, whose levels are
+    pins. Every lazy checkpoint in the engine outside Louvain's sweep is
+    taken by this function, so a different round boundary is a change here.
+
+    :func:`release` on the returned frame drops both its checkpoint
+    blocks and the cache behind it; a frame never released keeps both
+    until driver GC, which is how pins that back a returned result
+    outlive the call.
+    """
+    tmp = df.cache()
+    row = tmp.agg(*fill).first() if fill else None
+    out = tmp.localCheckpoint(eager=False)
+    # the cache rides on the returned object, not in a registry, so that
+    # release(out) can drop it; vars() skips DataFrame.__getattr__
+    vars(out)["_pinned_cache"] = tmp
+    return out, row
+
+
 def release(df: DataFrame) -> None:
-    """Drop ``df``'s cache entry or checkpoint blocks, whichever it holds."""
+    """Drop ``df``'s cache entry or checkpoint blocks, whichever it holds,
+    and for a :func:`pin` output the cache behind its checkpoint too."""
     df.unpersist(blocking=False)
     release_checkpoint(df)
+    cache = vars(df).get("_pinned_cache")
+    if cache is not None:
+        cache.unpersist(blocking=False)
 
 
 def release_checkpoint(df: DataFrame) -> None:

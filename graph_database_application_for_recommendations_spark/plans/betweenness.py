@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import cache_wide
+from . import cache_wide, gate_node_vector_broadcast, pin, release
 
 
 def betweenness_approx(
@@ -69,14 +69,11 @@ def betweenness_approx(
 
     # --- forward pass: multi-source BFS with path counting ---------------
     # ONE job per level (r10, guide §1.2/§2.4): the emptiness-test count
-    # doubles as the cache fill, levels are pinned with plan-truncating
-    # LAZY checkpoints (blocks ride the next level's job), and the
+    # is the pin's fill (blocks ride the next level's job), and the
     # frontier/visited join sides — (source, node) state with exact counts
     # riding the fills — take count-gated broadcasts instead of the
     # stats-blind sort-merge a LogicalRDD otherwise plans (which re-sorted
     # the edge cache every level).
-    from . import gate_node_vector_broadcast
-
     visited = sources.select(
         "source",
         F.col("source").alias("node_id"),
@@ -113,12 +110,10 @@ def betweenness_approx(
         # across ALL levels); coalesce before pinning so the accumulated
         # union doesn't collect hundreds of near-empty partitions whose
         # per-task overhead dominates the supersteps
-        tmp = nxt.coalesce(max(par // 4, 1)).cache()
-        n_new = tmp.count()
+        pinned, (n_new,) = pin(nxt.coalesce(max(par // 4, 1)), F.count(F.lit(1)))
         if n_new == 0:
-            tmp.unpersist(blocking=False)
+            release(pinned)
             break
-        pinned = tmp.localCheckpoint(eager=False)
         levels.append(pinned)
         level_counts.append(n_new)
         visited = visited.unionByName(pinned)
@@ -164,9 +159,9 @@ def betweenness_approx(
     # delta(u) = Σ_w sigma_u/sigma_w · (1 + delta(w)) over DAG successors;
     # processing levels top-down computes each node's delta exactly once.
     # ZERO scheduled jobs per level (r10): each level's contribution is
-    # pinned with a cache + plan-truncating lazy checkpoint — the caller's
-    # single action on the returned aggregate materializes the whole
-    # top-down chain in order (the walks-step discipline). The per-level
+    # pinned with no fill — the caller's single action on the returned
+    # aggregate materializes the whole top-down chain in order (the
+    # walks-step discipline). The per-level
     # join sides are level-sized with counts recorded during the forward
     # pass, so both joins take count-gated broadcasts.
     deltas: DataFrame | None = None  # (source, node_id, delta)
@@ -192,7 +187,7 @@ def betweenness_approx(
         bc_w = gate_node_vector_broadcast(
             level_counts[level], "Brandes level-delta join side", bytes_per_row=32
         )
-        contrib = (
+        contrib, _ = pin(
             dag.filter(F.col("_dw") == level)
             .join(bc_w(w_delta), ["source", "w"])
             .groupBy("source", F.col("u").alias("node_id"))
@@ -204,8 +199,6 @@ def betweenness_approx(
                 ).alias("delta")
             )
             .coalesce(max(par // 4, 1))
-            .cache()
-            .localCheckpoint(eager=False)
         )
         deltas = contrib if deltas is None else deltas.unionByName(contrib)
         # contribution rows are bounded by the DAG edges feeding the level:

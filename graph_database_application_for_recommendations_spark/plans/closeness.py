@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import cache_wide, gate_node_vector_broadcast
+from . import cache_wide, gate_node_vector_broadcast, pin, release
 
 
 def harmonic_closeness_approx(
@@ -79,15 +79,12 @@ def harmonic_closeness_approx(
             .join(bc_v(visited.select("source", "node_id")), ["source", "node_id"], "left_anti")
             .select("source", "node_id", F.lit(level).alias("dist"))
         )
-        # ONE job per level: the emptiness count fills the cache; the lazy
-        # checkpoint truncates the plan, its blocks riding the next level's
-        # job. Level caches back slices of the returned union and stay.
-        tmp = nxt.coalesce(max(par // 4, 1)).cache()
-        n_new = tmp.count()
+        # ONE job per level: the emptiness count is the pin's fill. Level
+        # pins back slices of the returned union and stay.
+        pinned, (n_new,) = pin(nxt.coalesce(max(par // 4, 1)), F.count(F.lit(1)))
         if n_new == 0:
-            tmp.unpersist(blocking=False)
+            release(pinned)
             break
-        pinned = tmp.localCheckpoint(eager=False)
         visited = visited.unionByName(pinned)
         frontier = pinned
         n_frontier = n_new

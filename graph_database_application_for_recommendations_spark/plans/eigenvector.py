@@ -21,7 +21,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import cache_wide, gate_node_vector_broadcast, release_checkpoint
+from . import cache_wide, gate_node_vector_broadcast, pin, release
 
 
 def eigenvector_centrality(
@@ -56,38 +56,25 @@ def eigenvector_centrality(
         return spark.createDataFrame([], f"node_id {id_type}, score double")
     x = nodes.select("node_id", F.lit(1.0 / math.sqrt(n)).alias("score"))
     bc = gate_node_vector_broadcast(n, "eigenvector score vector", bytes_per_row=16)
-    prev_y: DataFrame | None = None
-    prev_x: DataFrame | None = None
+    pinned: DataFrame | None = None
     for _ in range(iters):
         # ONE job per round (the r9 shape paid two): the scalar Σ_y² norm
-        # aggregate doubles as the cache-fill action for this round's sum
-        # table, and the normalized view is pinned with a LAZY
-        # localCheckpoint — the plan truncates to a LogicalRDD immediately
-        # (without truncation, analyzer/optimizer cost on the growing round
-        # chain compounds ~3x per round — measured 1.4s -> 150s by round 6
-        # on sf0.001) while the block materialization rides the NEXT
-        # round's fill job (which reads this round's cache), so no separate
-        # checkpoint pass is ever scheduled.
+        # aggregate is the round's pin fill; the normalized view reads the
+        # pinned sums, and the fill consumed the previous round's pin.
         y = (
             e.join(bc(x.withColumnRenamed("node_id", "src")), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("w") * F.col("score")).alias("_y"))
-        ).cache()
-        (norm_sq,) = y.agg(F.sum(F.col("_y") * F.col("_y"))).first()
+        )
+        y, (norm_sq,) = pin(y, F.sum(F.col("_y") * F.col("_y")))
         norm = math.sqrt(norm_sq)
         x = y.select(
             F.col("dst").alias("node_id"), (F.col("_y") / F.lit(norm)).alias("score")
-        ).localCheckpoint(eager=False)
-        # this round's fill consumed (and first materialized) the previous
-        # round's checkpoint; nothing references it or its source cache now
-        if prev_x is not None:
-            prev_x.unpersist(blocking=False)
-            release_checkpoint(prev_x)
-        if prev_y is not None:
-            prev_y.unpersist(blocking=False)
-        prev_x, prev_y = x, y
-    # the final round's cache/checkpoint stay: they back the returned
-    # scores (the caller's first action materializes the lazy checkpoint
-    # from the retained cache); bench/callers clear via the session catalog.
+        )
+        if pinned is not None:
+            release(pinned)
+        pinned = y
+    # the final round's pin stays: it backs the returned scores (the
+    # caller's first action materializes the checkpoint from its cache)
     e.unpersist(blocking=False)
     return x

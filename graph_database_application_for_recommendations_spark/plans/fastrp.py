@@ -93,7 +93,6 @@ from . import (
     materialize,
     node_vector_fits,
     release,
-    release_checkpoint,
 )
 from ..functions.hints import gated_broadcast
 
@@ -539,7 +538,7 @@ def fastrp(
                     pinned.append(acc)
             if not is_last:
                 if prev is not None:
-                    release_checkpoint(prev)
+                    release(prev)
                 prev = emb
 
     final = acc if acc is not None else emb

@@ -148,7 +148,7 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst") -> Data
     across all rounds; survivors shrink monotonically, so AQE sizes the
     semi-join broadcast from real counts after round one.
     """
-    from . import cache_wide, gate_node_vector_broadcast, release_checkpoint
+    from . import cache_wide, gate_node_vector_broadcast, pin, release
 
     spark = edges.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -163,25 +163,19 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst") -> Data
         .agg(F.count(F.lit(1)).alias("core_degree"))
         .filter(F.col("core_degree") >= k)
     )
-    prev_pin: tuple[DataFrame, DataFrame] | None = None
+    pinned: DataFrame | None = None
     prev_n: int | None = None
     while True:
-        # ONE job per round: the fixpoint count doubles as the cache-fill
-        # action (it also first-materializes the previous round's lazy
-        # checkpoint), and the lazy localCheckpoint truncates the plan with
-        # no extra pass. The survivor set is |V|-bounded with an exact
-        # count in hand, so the next round's semi-joins take a count-gated
-        # broadcast instead of the stats-blind sort-merge a LogicalRDD
-        # otherwise plans (which re-sorted the whole edge list per round).
-        tmp = cur.cache()
-        n = tmp.count()
-        cur = tmp.localCheckpoint(eager=False)
-        if prev_pin is not None:
-            p_cache, p_ck = prev_pin
-            p_cache.unpersist(blocking=False)
-            p_ck.unpersist(blocking=False)
-            release_checkpoint(p_ck)
-        prev_pin = (tmp, cur)
+        # ONE job per round: the fixpoint count is the pin's fill (it also
+        # first-materializes the previous round's pin, dead after it). The
+        # survivor set is |V|-bounded with an exact count in hand, so the
+        # next round's semi-joins take a count-gated broadcast instead of
+        # the stats-blind sort-merge a LogicalRDD otherwise plans (which
+        # re-sorted the whole edge list per round).
+        cur, (n,) = pin(cur, F.count(F.lit(1)))
+        if pinned is not None:
+            release(pinned)
+        pinned = cur
         if n == 0 or (prev_n is not None and n == prev_n):
             e.unpersist(blocking=False)
             return cur
@@ -214,14 +208,14 @@ def bfs_distances(
     Plan shape: classic frontier iteration — each level is one equi-join
     of the (small) frontier against the once-cached edge list, a
     distinct, and an anti-join against the union of previously pinned
-    frontiers. Only the per-level frontier is pinned (cache-fill count +
-    localCheckpoint, 2 jobs/round — the count doubles as the emptiness
-    test); the accumulated distance table is a lazy union of those pinned
-    levels, so it is never re-materialized and lineage stays O(1) at the
-    leaves. O(diameter) rounds; the frontier broadcast-joins once it is
-    small (AQE decides from real sizes).
+    frontiers. Only the per-level frontier is pinned (``pin``, whose fill
+    count doubles as the emptiness test: one job a level); the
+    accumulated distance table is a lazy union of those pinned levels, so
+    it is never re-materialized and lineage stays O(1) at the leaves.
+    O(diameter) rounds; the frontier broadcast-joins once it is small
+    (AQE decides from real sizes).
     """
-    from . import cache_wide, gate_node_vector_broadcast
+    from . import cache_wide, gate_node_vector_broadcast, pin, release
 
     spark = edges.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -245,16 +239,12 @@ def bfs_distances(
             .join(bc_d(dist.select("node_id")), "node_id", "left_anti")
             .select("node_id", F.lit(level).alias("dist"))
         )
-        # ONE job per level: the emptiness-test count fills the cache; the
-        # level is pinned with an EAGER-free lazy checkpoint (plan
-        # truncation now, blocks ride the next level's job). Level caches
-        # stay: each pinned level backs a slice of the returned union.
-        tmp = nxt.cache()
-        n_new = tmp.count()
+        # ONE job per level: the emptiness-test count is the pin's fill.
+        # Level pins stay: each backs a slice of the returned union.
+        pinned, (n_new,) = pin(nxt, F.count(F.lit(1)))
         if n_new == 0:
-            tmp.unpersist(blocking=False)
+            release(pinned)
             break
-        pinned = tmp.localCheckpoint(eager=False)
         dist = dist.unionByName(pinned)
         frontier = pinned.select("node_id")
         n_frontier = n_new
@@ -295,7 +285,7 @@ def random_walks(
     garbage-collected, not before — unlike the superseded intermediates
     in the training loops, these are the result, not scratch.
     """
-    from . import gate_node_vector_broadcast, materialize
+    from . import gate_node_vector_broadcast, materialize, pin
     from ..functions.text import md5_hash60
 
     u = F.concat(F.lit("u:"), F.col("user_id").cast("string"))
@@ -310,9 +300,8 @@ def random_walks(
         .select(u.alias("walk_id"))
         .distinct()
         .select("walk_id", F.col("walk_id").alias("node"))
-    ).cache()
-    n_walks = f0.count()
-    frontier = f0.localCheckpoint(eager=False)
+    )
+    frontier, (n_walks,) = pin(f0, F.count(F.lit(1)))
     # every walk advances every step (bipartite alternation guarantees a
     # neighbor), so the frontier stays exactly |walks| rows — one count
     # gates every step's broadcast
@@ -328,10 +317,9 @@ def random_walks(
         # carries one row per (partition, walk) instead of the whole
         # |walks|·degree join output into a per-walk sort. The frontier is
         # count-gate-broadcast into the edge probe, and each step is
-        # pinned lazily (cache + plan-truncating lazy checkpoint, zero
-        # scheduled jobs per step — everything materializes inside the
-        # consumer's single action, step by step).
-        nxt = (
+        # pinned with no fill (zero scheduled jobs per step — everything
+        # materializes inside the consumer's single action, step by step).
+        frontier, _ = pin(
             bc_f(frontier)
             .join(edges, F.col("node") == F.col("src"))
             .groupBy("walk_id")
@@ -339,8 +327,7 @@ def random_walks(
                 F.min(F.struct(h.alias("_h"), F.col("dst").alias("dst"))).alias("_best")
             )
             .select("walk_id", F.col("_best.dst").alias("node"))
-        ).cache()
-        frontier = nxt.localCheckpoint(eager=False)
+        )
         out = out.unionByName(
             frontier.select("walk_id", F.lit(step).alias("step"), "node")
         )
@@ -487,7 +474,7 @@ def biased_walks(
     the prev-adjacency flag, one per-walk argmin window — all
     |walks|·degree-proportional, same scale story as random_walks.
     """
-    from . import gate_node_vector_broadcast, materialize
+    from . import gate_node_vector_broadcast, materialize, pin
     from ..functions.text import md5_hash60
 
     u_node = F.concat(F.lit("u:"), F.col("user_id").cast("string"))
@@ -507,9 +494,8 @@ def biased_walks(
             F.lit(None).cast("string").alias("prev"),
             F.col("walk_id").alias("node"),
         )
-    ).cache()
-    n_walks = f0.count()
-    frontier = f0.localCheckpoint(eager=False)
+    )
+    frontier, (n_walks,) = pin(f0, F.count(F.lit(1)))
     # the frontier stays exactly |walks| rows every step (bipartite
     # alternation guarantees a neighbor) — one count gates every step
     bc_f = gate_node_vector_broadcast(n_walks, "biased-walk frontier", bytes_per_row=128)
@@ -532,10 +518,9 @@ def biased_walks(
         # old per-step row_number window, without sorting the full
         # |walks|·degree join output; ``node`` rides along as the winner's
         # predecessor. Per step: count-gated frontier broadcast into the
-        # edge probe, lazy pin (cache + plan-truncating lazy checkpoint),
-        # zero scheduled jobs — the consumer's single action materializes
-        # the steps in order.
-        nxt = (
+        # edge probe, a pin with no fill, zero scheduled jobs — the
+        # consumer's single action materializes the steps in order.
+        frontier, _ = pin(
             bc_f(frontier)
             .join(edges, F.col("node") == F.col("src"))
             .join(
@@ -558,8 +543,7 @@ def biased_walks(
                 F.col("_best.node").alias("prev"),
                 F.col("_best.dst").alias("node"),
             )
-        ).cache()
-        frontier = nxt.localCheckpoint(eager=False)
+        )
         out = out.unionByName(
             frontier.select("walk_id", F.lit(step).alias("step"), "node")
         )

@@ -15,11 +15,10 @@ zero per-round shuffles, mirroring the pagerank/eigenvector contract.
 Each half-round L2-normalizes with a scalar aggregate that doubles as
 the cache-fill action (the eigenvector fold).
 
-Like pagerank, the broadcast-vector round assumes the score vector fits
-the broadcast threshold (fine to ~10⁷ nodes per side); past that, drop
-the ``F.broadcast`` hint and the same code becomes a shuffle join on the
-cache's partitioning key, which the co-partitioned caches still serve
-without re-exchanging the edge side.
+Like pagerank, each side's score vector is broadcast under the count gate
+(``gate_node_vector_broadcast``); past it the same code becomes a shuffle
+join on the cache's partitioning key, which the co-partitioned caches
+still serve without re-exchanging the edge side.
 """
 
 from __future__ import annotations
@@ -29,7 +28,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import cache_wide, gate_node_vector_broadcast, release_checkpoint
+from . import cache_wide, gate_node_vector_broadcast, pin, release
 
 
 def hits(
@@ -67,51 +66,35 @@ def hits(
     bc_hub = gate_node_vector_broadcast(n_hubs, "HITS hub vector", bytes_per_row=48)
     bc_auth = None
     a = None
-    prev_a: tuple[DataFrame, DataFrame] | None = None
-    prev_h: tuple[DataFrame, DataFrame] | None = None
 
     def _half(edge_cache: DataFrame, vec: DataFrame, join_key: str, group_key: str, bc, prev):
         """One half-round in ONE job (the r9 shape paid two): the combined
-        count+Σ_s² aggregate is the cache-fill action for the raw sum table
-        (count feeds the first iteration's authority-side broadcast gate,
-        Σ_s² the normalizer), and the normalized view is pinned with a LAZY
-        localCheckpoint — plan truncation is immediate (without it the
-        analyzer cost on the alternating half-round chain compounds ~3x per
-        round: measured 1.4s → 150s by iteration 6 on sf0.001), while the
-        block materialization rides the NEXT half-round's fill job. ``prev``
-        is this side's previous (raw cache, out checkpoint) pair — its out
-        was first materialized by the opposite side's fill in between, so
-        both are dead by the time this side runs again. The final ``a``/``h``
-        caches stay: they back the returned rows."""
-        raw = (
+        count+Σ_s² aggregate is the pin's fill (count feeds the first
+        iteration's authority-side broadcast gate, Σ_s² the normalizer).
+        ``prev`` is this side's previous pin, first materialized by the
+        opposite side's fill in between, so dead by now. Returns the pin,
+        the normalized view over it and the count; the final pins stay:
+        they back the returned rows."""
+        raw, row = pin(
             edge_cache.join(bc(vec), join_key)
             .groupBy(group_key)
-            .agg(F.sum("_s").alias("_s"))
-        ).cache()
-        row = raw.agg(
+            .agg(F.sum("_s").alias("_s")),
             F.count(F.lit(1)).alias("_n"),
             F.sum(F.col("_s") * F.col("_s")).alias("_nsq"),
-        ).first()
-        norm = math.sqrt(row["_nsq"])
-        out = raw.select(group_key, (F.col("_s") / F.lit(norm)).alias("_s")).localCheckpoint(
-            eager=False
         )
         if prev is not None:
-            prev_raw, prev_out = prev
-            prev_raw.unpersist(blocking=False)
-            prev_out.unpersist(blocking=False)
-            release_checkpoint(prev_out)
-        return out, raw, row["_n"]
+            release(prev)
+        norm = math.sqrt(row["_nsq"])
+        return raw, raw.select(group_key, (F.col("_s") / F.lit(norm)).alias("_s")), row["_n"]
 
+    a_pin = h_pin = None
     for _ in range(iters):
-        a, a_raw, n_a = _half(e_by_auth, h, "_h", "_a", bc_hub, prev_a)
-        prev_a = (a_raw, a)
+        a_pin, a, n_a = _half(e_by_auth, h, "_h", "_a", bc_hub, a_pin)
         if bc_auth is None:
             bc_auth = gate_node_vector_broadcast(
                 n_a, "HITS authority vector", bytes_per_row=48
             )
-        h, h_raw, _ = _half(e_by_hub, a, "_a", "_h", bc_auth, prev_h)
-        prev_h = (h_raw, h)
+        h_pin, h, _ = _half(e_by_hub, a, "_a", "_h", bc_auth, h_pin)
     e_by_hub.unpersist(blocking=False)
     e_by_auth.unpersist(blocking=False)
     return (

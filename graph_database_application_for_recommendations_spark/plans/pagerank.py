@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import cache_wide, gate_node_vector_broadcast, release_checkpoint
+from . import cache_wide, gate_node_vector_broadcast, pin, release
 
 # Rounds chained lazily between materialization barriers. Each round
 # references the previous round's table exactly once (the rank vector feeds
@@ -94,7 +94,7 @@ def pagerank(
         )
         tele = F.when(in_s, F.lit((1.0 - damping) / len(sources))).otherwise(F.lit(0.0))
     bc = gate_node_vector_broadcast(n, "pagerank rank vector", bytes_per_row=16)
-    prev_pin: tuple[DataFrame, DataFrame] | None = None
+    pinned: DataFrame | None = None
     pending = 0
     for i in range(iters):
         ranks = (
@@ -109,23 +109,14 @@ def pagerank(
         pending += 1
         # pin every CHAIN_ROUNDS rounds and at the end: the chain in
         # between stays lazy (each round referenced exactly once — see
-        # CHAIN_ROUNDS). The barrier is ONE job: the count fills the
-        # block's cache (executing the chained rounds, and first
-        # materializing the previous barrier's lazy checkpoint on the way),
-        # and the LAZY localCheckpoint truncates the plan with no extra
-        # pass — its blocks materialize inside the next block's (or the
-        # caller's) first job, read from the retained cache. The previous
-        # barrier's cache/checkpoint are dead once this block is filled.
+        # CHAIN_ROUNDS). The barrier's one job is the count, which executes
+        # the chained rounds and fills the previous pin's checkpoint on the
+        # way, so that pin is dead once it returns.
         if pending == CHAIN_ROUNDS or i == iters - 1:
-            tmp = ranks.cache()
-            tmp.count()
-            ranks = tmp.localCheckpoint(eager=False)
-            if prev_pin is not None:
-                p_cache, p_ck = prev_pin
-                p_cache.unpersist(blocking=False)
-                p_ck.unpersist(blocking=False)
-                release_checkpoint(p_ck)
-            prev_pin = (tmp, ranks)
+            ranks, _ = pin(ranks, F.count(F.lit(1)))
+            if pinned is not None:
+                release(pinned)
+            pinned = ranks
             pending = 0
     trans.unpersist(blocking=False)
     return ranks

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import cache_wide, gate_node_vector_broadcast, release_checkpoint
+from . import cache_wide, gate_node_vector_broadcast, pin, release
 
 
 def sssp_weighted(
@@ -53,7 +53,7 @@ def sssp_weighted(
     # the whole cached edge list every round); past the 256 MB gate the
     # rounds fall back to the shuffle join against the _s-partitioned cache.
     n_dist = 1
-    prev_tmp: DataFrame | None = None
+    pinned = dist
     for _ in range(max_iter):
         bc = gate_node_vector_broadcast(n_dist, "SSSP distance vector", bytes_per_row=16)
         relaxed = (
@@ -64,37 +64,29 @@ def sssp_weighted(
             .agg(F.min("dist").alias("dist"))
         )
         # ONE job per round (the r9 shape paid three): the combined
-        # count/improved aggregate is the cache-fill action AND the
-        # fixpoint test, and the new distance table is pinned with a LAZY
-        # localCheckpoint — immediate plan truncation (the distance table
-        # is referenced three times per round, so an untruncated chain
-        # compounds analyzer cost exponentially), block materialization
-        # riding the next round's fill job.
+        # count/improved aggregate is the pin's fill AND the fixpoint test
+        # (the distance table is referenced three times per round, so an
+        # untruncated chain compounds analyzer cost exponentially). The
+        # fill consumed the previous round's pin, which is dead now.
         flagged = relaxed.join(
             bc(dist.select("node_id", F.col("dist").alias("_old"))), "node_id", "left"
         )
-        tmp = flagged.cache()
-        row = tmp.agg(
+        new, row = pin(
+            flagged,
             F.count(F.lit(1)).alias("_n"),
             F.sum(
                 F.when(
                     F.col("_old").isNull() | (F.col("dist") < F.col("_old")), 1
                 ).otherwise(0)
             ).alias("_improved"),
-        ).first()
-        nxt = tmp.select("node_id", "dist").localCheckpoint(eager=False)
-        # the fill above consumed (and first materialized) the previous
-        # round's checkpoint; it and its backing cache are dead now
-        if prev_tmp is not None:
-            prev_tmp.unpersist(blocking=False)
-        dist.unpersist(blocking=False)
-        release_checkpoint(dist)
-        prev_tmp = tmp
-        dist = nxt
+        )
+        release(pinned)
+        pinned = new
+        dist = new.select("node_id", "dist")
         n_dist = row["_n"]
         if row["_improved"] == 0:
             break
-    # the final round's cache stays: it backs the returned (lazily
-    # checkpointed) distance table until the caller's first action.
+    # the final round's pin stays: it backs the returned distance table
+    # until the caller's first action.
     e.unpersist(blocking=False)
     return dist.select("node_id", F.round("dist", 6).alias("dist"))

@@ -4,17 +4,12 @@ The reference renders each recommendation neighborhood with pyvis
 (``recommender/recommender_knn.py:82-159`` builds a ``Network`` of user
 dots and rating-colored book boxes; ``streamlit_app.py:99-108`` writes it
 to a temp HTML file and embeds it). pyvis is itself a thin generator of
-vis-network HTML, so the Spark-side equivalent is: ``viz_export``
-(operators/recommend.py) produces the (nodes, edges) DataFrames — the
-engine-scope, distributed part — and this module serializes ONE
-serving-sized neighborhood to a standalone vis-network page. The
-``collect()`` here is the API edge (one user's graph, like the
-reference's Bolt round-trip), never a corpus-scale action.
-
-A served page already holds its graph rows (``get_graph_data``'s dicts),
-so ``viz_records`` / ``viz_records_knn`` build the same node and edge sets
-from them in Python, as the reference builds its ``Network`` from the
-records, and the page renders with no Spark job.
+vis-network HTML, so the equivalent here is: a served page already holds
+its graph rows (``get_graph_data``'s dicts, one user's neighbourhood),
+``viz_records`` / ``viz_records_knn`` build the node and edge sets from
+them in Python, as the reference builds its ``Network`` from the records,
+and this module serializes them to a standalone vis-network page with no
+Spark job.
 
 vis-network is loaded from its public CDN at the same major version the
 reference vendors (vis-9.1.2); the page is otherwise self-contained.
@@ -24,8 +19,6 @@ from __future__ import annotations
 
 import html as _html
 import json
-
-from pyspark.sql import DataFrame
 
 
 def _script_json(obj) -> str:
@@ -71,7 +64,8 @@ _TEMPLATE = """<!DOCTYPE html>
 
 
 def _rating_color(rating) -> str:
-    """``recommend.rating_color`` on one value: a NULL rating is green."""
+    """P8, the reference's rating buckets (recommender_community.py:101):
+    red to 4, yellow to 7, else green, so a NULL rating is green."""
     if rating is not None and rating <= 4:
         return "red"
     if rating is not None and rating <= 7:
@@ -84,8 +78,9 @@ def _distinct(rows) -> list[dict]:
 
 
 def viz_records(graph_rows: list[dict]) -> tuple[list[dict], list[dict]]:
-    """``recommend.viz_export`` over rating rows (userId, isbn, title,
-    rating) given as dicts: the same distinct nodes and one edge a row."""
+    """Rating rows (userId, isbn, title, rating) given as dicts to pyvis
+    nodes and edges: users as dots, books as rating-coloured boxes (one
+    per distinct colour), one edge a row with the rating as thickness."""
     nodes = _distinct(
         [{"id": f"user_{r['userId']}", "label": f"User {r['userId']}",
           "shape": "dot", "color": None} for r in graph_rows]
@@ -101,8 +96,8 @@ def viz_records(graph_rows: list[dict]) -> tuple[list[dict], list[dict]]:
 
 
 def viz_records_knn(graph_rows: list[dict]) -> tuple[list[dict], list[dict]]:
-    """``recommend.viz_export_knn`` over ``graph_data_knn`` rows given as
-    dicts: the target's and the similar users' rated books, every similar
+    """``graph_data_knn`` rows given as dicts to pyvis nodes and edges
+    (reference ``recommender_knn.py:82-159``): the target's and the similar users' rated books, every similar
     user as a dot, and user-user edges rescaled to ``1 + similarity * 9``."""
     books = _distinct(
         [{"userId": r["target_id"], "isbn": r["t_isbn"], "title": r["t_title"],
@@ -124,16 +119,15 @@ def viz_records_knn(graph_rows: list[dict]) -> tuple[list[dict], list[dict]]:
 
 
 def render_html(
-    nodes: DataFrame | list[dict],
-    edges: DataFrame | list[dict],
+    nodes: list[dict],
+    edges: list[dict],
     title: str = "Recommendation graph",
     height: str = "600px",
 ) -> str:
-    """Render ``viz_export`` output (nodes: id/label/shape/color,
-    edges: src/dst/value), as DataFrames or as ``viz_records`` dicts, to a
-    standalone vis-network HTML page string."""
+    """Render ``viz_records`` output (nodes: id/label/shape/color,
+    edges: src/dst/value) to a standalone vis-network HTML page string."""
     vis_nodes = []
-    for r in nodes if isinstance(nodes, list) else nodes.collect():
+    for r in nodes:
         node = {"id": r["id"], "label": r["label"], "shape": r["shape"]}
         if r["color"] is not None:
             node["color"] = r["color"]
@@ -145,7 +139,7 @@ def render_html(
             "value": r["value"],
             "title": str(r["value"]),
         }
-        for r in (edges if isinstance(edges, list) else edges.collect())
+        for r in edges
     ]
     return _TEMPLATE.format(
         title=_html.escape(title),
@@ -157,8 +151,8 @@ def render_html(
 
 
 def write_html(
-    nodes: DataFrame | list[dict],
-    edges: DataFrame | list[dict],
+    nodes: list[dict],
+    edges: list[dict],
     path: str,
     title: str = "Recommendation graph",
     height: str = "600px",

@@ -105,6 +105,13 @@ _SLOW_TESTS = frozenset([
     "test_plans.py::test_hyperplane_lsh_sizing_runs_no_extra_jobs",
     "test_plans.py::test_pair_generators_leave_no_cached_tables",
     "test_plans.py::test_partition_pruning",
+    "test_plans.py::test_round_budgets_and_storage[bpe_merges]",
+    "test_plans.py::test_round_budgets_and_storage[eigenvector_centrality]",
+    "test_plans.py::test_round_budgets_and_storage[hits]",
+    "test_plans.py::test_round_budgets_and_storage[k_core]",
+    "test_plans.py::test_round_budgets_and_storage[neardup_components]",
+    "test_plans.py::test_round_budgets_and_storage[pagerank]",
+    "test_plans.py::test_round_budgets_and_storage[sssp_weighted]",
     "test_properties.py::test_asof_join_matches_bruteforce",
     "test_properties.py::test_bootstrap_ci_two_level_index_matches_naive",
     "test_properties.py::test_butterfly_capped_matches_python_replica",

@@ -96,53 +96,64 @@ def test_jsonl_roundtrip_batch_and_stream(spark, tmp_path):
     assert {(r["lang"], r["count"]) for r in streamed.collect()} == want
 
 
-def test_rating_color_buckets(spark):
-    """P8 (recommender_community.py:101)."""
-    df = spark.createDataFrame([(1,), (4,), (5,), (7,), (8,), (10,)], "r INT")
-    got = [r["c"] for r in df.select(recommend.rating_color("r").alias("c")).collect()]
-    assert got == ["red", "red", "yellow", "yellow", "green", "green"]
+def test_rating_color_buckets():
+    """P8 (recommender_community.py:101); a NULL rating falls through to
+    green, as the reference's ``else`` does."""
+    from graph_database_application_for_recommendations_spark.viz import _rating_color
+
+    got = [_rating_color(r) for r in (1, 4, 5, 7, 8, 10, None)]
+    assert got == ["red", "red", "yellow", "yellow", "green", "green", "green"]
 
 
-def test_viz_export_shapes(spark):
+def test_viz_export_shapes():
     """§2.9: nodes carry shape/color; edges carry rating thickness."""
-    gd = spark.createDataFrame(
-        [(1, "loc", 30, "i1", "t1", "a1", 9), (2, "loc", None, "i1", "t1", "a1", 3)],
-        "userId LONG, location STRING, age INT, isbn STRING, title STRING, author STRING, rating INT",
-    )
-    nodes, edges = recommend.viz_export(gd)
-    n = {r["id"]: r for r in nodes.collect()}
+    from graph_database_application_for_recommendations_spark.viz import viz_records
+
+    gd = [
+        {"userId": 1, "location": "loc", "age": 30, "isbn": "i1", "title": "t1",
+         "author": "a1", "rating": 9},
+        {"userId": 2, "location": "loc", "age": None, "isbn": "i1", "title": "t1",
+         "author": "a1", "rating": 3},
+    ]
+    nodes, edges = viz_records(gd)
+    n = {r["id"]: r for r in nodes}
     assert n["user_1"]["shape"] == "dot" and n["user_1"]["color"] is None
     # book node appears once per distinct color bucket of its ratings
     assert n["i1"]["shape"] == "box"
-    e = edges.collect()
-    assert {(r["src"], r["dst"], r["value"]) for r in e} == {
+    assert {(r["src"], r["dst"], r["value"]) for r in edges} == {
         ("user_1", "i1", 9.0),
         ("user_2", "i1", 3.0),
     }
 
 
-def test_viz_export_knn_and_html_render(spark, tmp_path):
+def _knn_row(target_id, t_isbn, t_title, t_rating, sim_id, similarity, s_isbn,
+             s_title, s_rating):
+    return dict(target_id=target_id, t_isbn=t_isbn, t_title=t_title,
+                t_rating=t_rating, sim_id=sim_id, similarity=similarity,
+                s_isbn=s_isbn, s_title=s_title, s_rating=s_rating)
+
+
+def test_viz_export_knn_and_html_render(tmp_path):
     """§2.9 KNN neighborhood viz: user-user similarity edges carry the P9
     rescale 1+9*sim (recommender_knn.py:126); the HTML adapter emits a
     self-contained vis-network page with valid embedded JSON."""
     import json
     import re
 
-    from graph_database_application_for_recommendations_spark.viz import write_html
-
-    gd = spark.createDataFrame(
-        [
-            (1, "i1", "t1", 9, 2, 0.5, "i2", "t2", 3),
-            (1, "i1", "t1", 9, 3, 0.9, None, None, None),  # bookless similar user
-        ],
-        "target_id LONG, t_isbn STRING, t_title STRING, t_rating INT,"
-        " sim_id LONG, similarity DOUBLE, s_isbn STRING, s_title STRING, s_rating INT",
+    from graph_database_application_for_recommendations_spark.viz import (
+        viz_records_knn,
+        write_html,
     )
-    nodes, edges = recommend.viz_export_knn(gd)
-    n = {r["id"]: r for r in nodes.collect()}
+
+    gd = [
+        _knn_row(1, "i1", "t1", 9, 2, 0.5, "i2", "t2", 3),
+        _knn_row(1, "i1", "t1", 9, 3, 0.9, None, None, None),  # bookless similar user
+    ]
+    nodes, edges = viz_records_knn(gd)
+    n = {r["id"]: r for r in nodes}
     assert n["user_3"]["shape"] == "dot"  # present despite having no books
     assert n["i1"]["color"] == "green" and n["i2"]["color"] == "red"
-    e = {(r["src"], r["dst"]): r["value"] for r in edges.collect()}
+    e = {(r["src"], r["dst"]): r["value"] for r in edges}
     assert e[("user_1", "user_2")] == pytest.approx(1 + 0.5 * 9)
     assert e[("user_1", "user_3")] == pytest.approx(1 + 0.9 * 9)
     assert e[("user_1", "i1")] == 9.0 and e[("user_2", "i2")] == 3.0
@@ -154,41 +165,66 @@ def test_viz_export_knn_and_html_render(spark, tmp_path):
         assert isinstance(json.loads(blob), list)  # embedded JSON is valid
 
 
-def test_viz_records_match_spark_export(spark):
+def test_viz_records_match_spark_export():
     """A served page renders from the graph rows it already holds:
-    ``viz_records`` / ``viz_records_knn`` over the rows as dicts give the
-    Spark exports' nodes and edges, duplicates included."""
+    ``viz_records`` / ``viz_records_knn`` give the node and edge multisets
+    the reference's pyvis code adds (recommender_community.py:75-115,
+    recommender_knn.py:82-159): one dot per user, one box per (book,
+    colour bucket), a NULL rating as a green box with a NULL-valued edge,
+    one rating edge per row (duplicate rows included), every similar user
+    a dot even with no books, and user-user edges valued 1 + 9·similarity."""
+    from collections import Counter
+
     from graph_database_application_for_recommendations_spark.viz import (
         viz_records,
         viz_records_knn,
     )
 
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
+    def dot(u):
+        return ("user_" + str(u), "User " + str(u), "dot", None)
 
-    def recs(dicts):
-        return sorted(tuple(d.values()) for d in dicts)
+    def multiset(dicts):
+        return Counter(tuple(d.values()) for d in dicts)
 
-    comm = spark.createDataFrame(
-        [(1, "loc", 30, "i1", "t1", "a1", 9), (2, "loc", None, "i1", "t1", "a1", 3),
-         (2, "loc", None, "i2", "t2", "a2", 6), (1, "loc", 30, "i2", "t2", "a2", 6)],
-        "userId LONG, location STRING, age INT, isbn STRING, title STRING, author STRING, rating INT",
-    )
-    knn = spark.createDataFrame(
-        [(1, "i1", "t1", 9, 2, 0.5, "i2", "t2", 3),
-         (1, "i1", "t1", 9, 2, 0.5, "i1", "t1", 9),
-         (1, "i3", "t3", 5, 2, 0.5, "i2", "t2", 3),
-         (1, "i1", "t1", 9, 3, 0.9, None, None, None),
-         (4, None, None, None, None, None, None, None, None)],
-        "target_id LONG, t_isbn STRING, t_title STRING, t_rating INT,"
-        " sim_id LONG, similarity DOUBLE, s_isbn STRING, s_title STRING, s_rating INT",
-    )
-    for gd, spark_export, records in [(comm, recommend.viz_export, viz_records),
-                                      (knn, recommend.viz_export_knn, viz_records_knn)]:
-        nodes, edges = spark_export(gd)
-        r_nodes, r_edges = records([r.asDict() for r in gd.collect()])
-        assert recs(r_nodes) == rows(nodes.select("id", "label", "shape", "color"))
-        assert recs(r_edges) == rows(edges.select("src", "dst", "value"))
+    comm = [
+        dict(userId=u, location="loc", age=a, isbn=i, title=t, author=au, rating=r)
+        for u, a, i, t, au, r in [
+            (1, 30, "i1", "t1", "a1", 9), (2, None, "i1", "t1", "a1", 3),
+            (2, None, "i2", "t2", "a2", 6), (1, 30, "i2", "t2", "a2", 6),
+            (1, 30, "i2", "t2", "a2", 6), (3, None, "i3", "t3", "a3", None),
+        ]
+    ]
+    nodes, edges = viz_records(comm)
+    assert multiset(nodes) == Counter([
+        dot(1), dot(2), dot(3),
+        ("i1", "t1", "box", "green"), ("i1", "t1", "box", "red"),
+        ("i2", "t2", "box", "yellow"), ("i3", "t3", "box", "green"),
+    ])
+    assert multiset(edges) == Counter([
+        ("user_1", "i1", 9.0), ("user_2", "i1", 3.0), ("user_2", "i2", 6.0),
+        ("user_1", "i2", 6.0), ("user_1", "i2", 6.0), ("user_3", "i3", None),
+    ])
+
+    knn = [
+        _knn_row(1, "i1", "t1", 9, 2, 0.5, "i2", "t2", 3),
+        _knn_row(1, "i1", "t1", 9, 2, 0.5, "i1", "t1", 9),
+        _knn_row(1, "i3", "t3", 5, 2, 0.5, "i2", "t2", 3),
+        _knn_row(1, "i1", "t1", 9, 3, 0.9, None, None, None),
+        _knn_row(4, None, None, None, None, None, None, None, None),
+    ]
+    nodes, edges = viz_records_knn(knn)
+    assert multiset(nodes) == Counter([
+        dot(1), dot(2), dot(3),
+        ("i1", "t1", "box", "green"), ("i3", "t3", "box", "yellow"),
+        ("i2", "t2", "box", "red"),
+    ])
+    # rating edges once per distinct (user, book, rating) row; user-user
+    # edges once per similar user
+    assert multiset(edges) == Counter([
+        ("user_1", "i1", 9.0), ("user_1", "i3", 5.0), ("user_2", "i2", 3.0),
+        ("user_2", "i1", 9.0),
+        ("user_1", "user_2", 1.0 + 0.5 * 9), ("user_1", "user_3", 1.0 + 0.9 * 9),
+    ])
 
 
 def test_csv_etl_pipeline_end_to_end(spark, tmp_path):

@@ -423,6 +423,82 @@ def test_broadcast_budget_is_single_sourced():
     )
 
 
+def test_lazy_pins_are_single_sourced():
+    """The lazy round boundary (cache, one fill aggregate, lazy
+    ``localCheckpoint``, then release of the cache and the checkpoint
+    blocks) has one implementation: ``plans.pin`` with ``plans.release``.
+    An AST walk fails on a ``localCheckpoint(eager=False)`` in any other
+    function, on a ``release_checkpoint`` call outside
+    ``plans/__init__.py`` (``plans.release`` is the drop-in that also frees
+    a pin's cache), and on an allow-list entry that no longer matches."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "graph_database_application_for_recommendations_spark",
+    )
+    home = os.path.join("plans", "__init__.py")
+    allowed = {
+        f"{home}::pin": "the one lazy round boundary",
+        os.path.join("plans", "louvain.py") + "::_local_move": (
+            "cache-free sweep checkpoint: the label table is read twice and "
+            "filled by the move count itself, with no cache behind it"
+        ),
+    }
+
+    def lazy(call) -> bool:
+        return (
+            isinstance(call.func, ast.Attribute)
+            and call.func.attr == "localCheckpoint"
+            and any(
+                k.arg == "eager" and isinstance(k.value, ast.Constant)
+                and k.value.value is False
+                for k in call.keywords
+            )
+        )
+
+    def named(call, name) -> bool:
+        f = call.func
+        return (f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)) == name
+
+    found, stray_releases = {}, []
+
+    def visit(node, rel, owner):
+        for child in ast.iter_child_nodes(node):
+            inner = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else owner
+            )
+            if isinstance(child, ast.Call):
+                if lazy(child):
+                    found.setdefault(f"{rel}::{owner}", []).append(child.lineno)
+                if named(child, "release_checkpoint") and rel != home:
+                    stray_releases.append(f"{rel}:{child.lineno}")
+            visit(child, rel, inner)
+
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        with open(path) as fh:
+            visit(ast.parse(fh.read()), rel, "<module>")
+    offenders = [
+        f"{site}:{line}" for site in sorted(set(found) - set(allowed))
+        for line in found[site]
+    ]
+    assert not offenders, (
+        f"lazy localCheckpoint outside plans.pin: {offenders} — use plans.pin"
+    )
+    assert not stray_releases, (
+        f"release_checkpoint called outside plans/__init__.py: {stray_releases} "
+        "— use plans.release"
+    )
+    assert set(allowed) <= set(found), (
+        f"stale allow-list entries: {sorted(set(allowed) - set(found))}"
+    )
+
+
 def test_no_raw_broadcast_hints_engine_wide():
     """Every broadcast hint in the engine must route through
     ``gated_broadcast`` (via ``gate_node_vector_broadcast`` for counted
@@ -990,7 +1066,6 @@ def test_driver_side_materialization_sites_are_classified():
         "registry.py::_bpe_segment_q": (1, "bounded merge table binding"),
         "registry.py::_mix_fractions_q": (1, "|sources|-bounded fractions"),
         "registry.py::_mix_unimax_q": (1, "|sources|-bounded budgets"),
-        "viz.py::render_html": (2, "API edge: bounded viz subgraph export"),
     }
     unclassified = {s: c for s, c in sites.items() if s not in allow}
     assert not unclassified, (

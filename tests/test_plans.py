@@ -655,3 +655,108 @@ def test_pipeline_arrays_path_accepts_non_canonical_isbn(spark, monkeypatch):
     assert set(got) == {1, 2, 3, 4}
     res.embeddings.unpersist(blocking=False)
     ratings.unpersist(blocking=False)
+
+
+def _ring(spark):
+    """8-node ring plus two chords, both directions, unit weights."""
+    pairs = [(i, (i + 1) % 8) for i in range(8)] + [(0, 4), (2, 6)]
+    return spark.createDataFrame(
+        [(a, b, 1.0) for a, b in pairs] + [(b, a, 1.0) for a, b in pairs],
+        "src long, dst long, weight double",
+    )
+
+
+def _path(spark, n, cols="src long, dst long"):
+    """Doubled path 0-1-…-(n-1)."""
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)] + [(i + 1, i) for i in range(n - 1)], cols
+    )
+
+
+def _round_calls(spark):
+    """name -> call(rounds) -> DataFrame, on small fixed inputs."""
+    import warnings
+
+    from graph_database_application_for_recommendations_spark.operators.bpe import bpe_merges
+    from graph_database_application_for_recommendations_spark.operators.dedup import (
+        neardup_components,
+    )
+    from graph_database_application_for_recommendations_spark.plans.eigenvector import (
+        eigenvector_centrality,
+    )
+    from graph_database_application_for_recommendations_spark.plans.graphs import k_core
+    from graph_database_application_for_recommendations_spark.plans.hits import hits
+    from graph_database_application_for_recommendations_spark.plans.pagerank import (
+        CHAIN_ROUNDS,
+        pagerank,
+    )
+    from graph_database_application_for_recommendations_spark.plans.sssp import sssp_weighted
+
+    ring = _ring(spark)
+    bip = spark.createDataFrame(
+        [(u, f"b{(u * 3 + j) % 7}") for u in range(6) for j in range(3)],
+        "user_id long, isbn string",
+    )
+    docs = spark.createDataFrame(
+        [(1, "abracadabra banana bandana"), (2, "cabana abracadabra"), (3, "banana")],
+        "doc_id long, text string",
+    )
+
+    def components(rounds):
+        with warnings.catch_warnings():  # unconverged on purpose
+            warnings.simplefilter("ignore")
+            return neardup_components(
+                _path(spark, 64, "doc_a long, doc_b long").filter("doc_a < doc_b"),
+                local_max_edges=0, max_iter=rounds,
+            )
+
+    return {
+        # a pin every CHAIN_ROUNDS iterations: one round is one barrier
+        "pagerank": lambda r: pagerank(ring, iters=CHAIN_ROUNDS * r),
+        "eigenvector_centrality": lambda r: eigenvector_centrality(ring, iters=r),
+        "hits": lambda r: hits(bip, iters=r),
+        "sssp_weighted": lambda r: sssp_weighted(
+            _path(spark, 12).withColumn("weight", F.lit(1.0)), 0, max_iter=r
+        ),
+        # k=2 peels a path's two ends a round: a 2r-node path takes r rounds
+        "k_core": lambda r: k_core(_path(spark, 2 * r), 2),
+        "neardup_components": components,
+        "bpe_merges": lambda r: bpe_merges(docs, num_merges=r),
+    }
+
+
+# name -> (Spark jobs a round, RDDs a collected result may leave in
+# storage): the figures of the hand-written round boundaries ``plans.pin``
+# replaced, at local[2] and local[4] alike
+ROUND_BUDGETS = {
+    "pagerank": (6, 2),
+    "eigenvector_centrality": (4, 2),
+    "hits": (8, 4),
+    "sssp_weighted": (6, 2),
+    "k_core": (4, 2),
+    "neardup_components": (8, 1),
+    "bpe_merges": (2, 0),
+}
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["pagerank", "eigenvector_centrality", "hits", "sssp_weighted", "k_core",
+     "neardup_components", "bpe_merges"],
+)
+def test_round_budgets_and_storage(spark, name):
+    """Every lazy round boundary costs its loop's per-round jobs and no
+    more (N+1 rounds run exactly one round's jobs more than N, result
+    collect included), and a collected result leaves no more RDDs in
+    storage than the hand-written boundaries did."""
+    per_round, residue = ROUND_BUDGETS[name]
+    call = _round_calls(spark)[name]
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    jobs, left = [], []
+    for r in (2, 3):
+        before = {i.id() for i in storage()}
+        _, n = jobs_in_group(spark, f"rounds-{name}-{r}", lambda: call(r).collect())
+        jobs.append(n)
+        left.append(len({i.id() for i in storage()} - before))
+    assert jobs[1] - jobs[0] == per_round, jobs
+    assert max(left) <= residue, left
